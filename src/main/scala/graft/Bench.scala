@@ -519,16 +519,27 @@ object Bench {
   def scalingRecord(armCores: Seq[Int], scaleN: Long,
       budgetSec: Double = ArmsBudgetSec, note: Option[String] = None)
       : String = {
-    val coreRatio = armCores.last.toDouble / armCores.head
     val (armSecs, pinned, armSamples) =
       runPinnedArms(armCores, scaleN, budgetSec)
-    val scalingEff = armSecs(0) / (coreRatio * armSecs(1))
+    renderScalingRecord(armCores, scaleN, armSecs, pinned, armSamples, note)
+  }
+
+  /** The `"scaling"` JSON object of measured arms. Free-text fields (the
+    * invalid reason, the caller's note) go through Jackson, so any
+    * character in them stays valid JSON.
+    */
+  def renderScalingRecord(armCores: Seq[Int], scaleN: Long,
+      armSecs: Seq[Double], pinned: Boolean, armSamples: Seq[ArmSample],
+      note: Option[String]): String = {
+    val scalingEff = armSecs(0) /
+      ((armCores.last.toDouble / armCores.head) * armSecs(1))
     val reasons = adjudicationReasons(armCores, scalingEff, pinned, armSamples)
     val scalingValid = reasons.isEmpty
     val invalidReasonJson =
-      if (scalingValid) "null" else "\"" + reasons.mkString("; ") + "\""
+      if (scalingValid) "null" else Json.writeValueAsString(reasons.mkString("; "))
     val samplesJson = armSamples.map(_.json).mkString("[", ",", "]")
-    val noteJson = note.map(n => s""","note":"$n"""").getOrElse("")
+    val noteJson =
+      note.map(n => s""","note":${Json.writeValueAsString(n)}""").getOrElse("")
     s"""{"cores_small":${armCores(0)},"cores_large":${armCores(1)},"n":$scaleN,"pinned":$pinned,"sec_small":${f"${armSecs(0)}%.3f"},"sec_large":${f"${armSecs(1)}%.3f"},"urls_per_sec_small":${(scaleN / armSecs(0)).toLong},"urls_per_sec_large":${(scaleN / armSecs(1)).toLong},"efficiency":${f"$scalingEff%.3f"},"valid":$scalingValid,"invalid_reason":$invalidReasonJson,"noise_bounds":{"max_steal_frac":$MaxStealFrac,"max_offarm_busy_frac":$MaxOffarmBusyFrac}$noteJson,"samples":$samplesJson}"""
   }
 
@@ -536,11 +547,41 @@ object Bench {
     * 2× its corroborating rerun was taken under contention the suite
     * bracket cannot see (the r4 record's q_json_positional read 31.6 s
     * against 1.9 s quiet — a 17× DRAM-tenancy artifact) — the row flags
-    * itself and the headline map quotes min(first, rerun). Pure so the
-    * rule stays regression-tested (ScalingTelemetrySpec).
+    * itself and the headline map quotes the faster successful run. Pure so
+    * the rule stays regression-tested (ScalingTelemetrySpec).
     */
-  def suiteSampleInflated(firstSec: Double, rerunSec: Double): Boolean =
-    rerunSec > 0 && firstSec > 2 * rerunSec
+  def suiteSampleInflated(firstSec: Option[Double],
+      rerunSec: Option[Double]): Boolean =
+    (firstSec, rerunSec) match {
+      case (Some(f), Some(r)) => f > 2 * r
+      case _ => false // a failed run is no evidence either way
+    }
+
+  /** JSON writer for the record's free-text and recall fields. */
+  val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The recall block of the bench record, rendered by Jackson: one number
+    * per [[graft.operators.TrainingOps.AnnRecalls]] key, the image
+    * headline, and the two multi-probe curves — returned as object members
+    * (no braces) so the record splices them in place. Values keep the
+    * record's 3-decimal form.
+    */
+  def recallFields(recalls: Seq[(String, Double)],
+      annCurve: Seq[(Int, Double, Long)],
+      imgCurve: Seq[(Int, Double, Long)]): String = {
+    def d3(v: Double) = new java.math.BigDecimal(f"$v%.3f")
+    val o = Json.createObjectNode()
+    recalls.foreach { case (k, v) => o.put(k, d3(v)) }
+    o.put("ann_image_recall_at_10", d3(imgCurve.head._2))
+    for ((key, curve) <- Seq("ann_recall_curve" -> annCurve,
+        "ann_image_recall_curve" -> imgCurve)) {
+      val a = o.putArray(key)
+      curve.foreach { case (p, r, c) =>
+        a.addObject().put("probes", p).put("recall", d3(r)).put("candidates", c)
+      }
+    }
+    Json.writeValueAsString(o).stripPrefix("{").stripSuffix("}")
+  }
 
   def timed[A](f: => A): (A, Double) = {
     val t0 = System.nanoTime()
@@ -722,12 +763,14 @@ object Bench {
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(_.getCollectionTime).filter(_ >= 0).sum
     }
-    case class QuerySample(sec: Double, gcMs: Long)
+    // Each run forces the whole plan through the noop sink. A run that
+    // throws is a failure, not a (fast) sample: sec = None.
+    case class QuerySample(sec: Option[Double], gcMs: Long)
     def runQuery(fn: (SparkSession, String) => DataFrame): QuerySample = {
       val g0 = gcMs
-      val (_, sec) = timed {
-        try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
-      }
+      val sec =
+        try Some(timed(force(fn(spark, sfDir)))._2)
+        catch { case scala.util.control.NonFatal(_) => None }
       spark.catalog.clearCache() // queries may persist intermediates
       QuerySample(sec, gcMs - g0)
     }
@@ -746,19 +789,20 @@ object Bench {
     // samples — then both read high and the row is honestly slow-labeled,
     // which is still strictly more evidence than one sample.
     val RerunCount = 10
-    val rerunNames = firstPass.toSeq.sortBy(-_._2.sec)
-      .take(RerunCount).map(_._1)
+    val rerunNames = firstPass.toSeq.filter(_._2.sec.isDefined)
+      .sortBy(-_._2.sec.get).take(RerunCount).map(_._1)
     val rerunSamples = rerunNames
       .map(n => n -> runQuery(SparkEntry.queries(n))).toMap
-    val results = scala.collection.mutable.LinkedHashMap[String, Double]()
-    firstPass.foreach { case (name, s) =>
-      results(name) = rerunSamples.get(name)
-        .map(r => math.min(s.sec, r.sec)).getOrElse(s.sec)
+    // headline: the minimum over the runs that succeeded; None = every run
+    // failed, recorded as null
+    val results = firstPass.map { case (name, s) =>
+      name -> (s.sec.toSeq ++ rerunSamples.get(name).flatMap(_.sec)).minOption
     }
+    def secJson(sec: Option[Double]) = sec.map(v => f"$v%.3f").getOrElse("null")
     val suiteRerunJson = rerunNames.map { name =>
       val f = firstPass(name); val r = rerunSamples(name)
       val inflated = suiteSampleInflated(f.sec, r.sec)
-      s""""$name":{"first":${f"${f.sec}%.3f"},"rerun":${f"${r.sec}%.3f"},""" +
+      s""""$name":{"first":${secJson(f.sec)},"rerun":${secJson(r.sec)},""" +
         s""""first_gc_ms":${f.gcMs},"rerun_gc_ms":${r.gcMs},""" +
         s""""inflated":$inflated}"""
     }.mkString("{", ",", "}")
@@ -771,68 +815,14 @@ object Bench {
     val suiteNoise = benchNoise(noiseJiffies0, readCpuJiffies(), noiseOwn0,
       ownCpuNanos, (System.nanoTime() - noiseT0) / 1e9)
 
-    // honesty metric for the approximate ANN path (VERDICT r1 #6): recall
-    // of the banded-LSH bucket-local top-10 vs exact brute force, measured
-    // across the multi-probe dial (1/3/5 probes per band) so the
-    // recall-vs-candidates tradeoff is a recorded curve, not a single point.
-    val annCurve = graft.operators.TrainingOps.lshRecallCurve(spark, sfDir)
-    val annRecall = annCurve.last._2 // headline stays the default (5 probes)
-    val ivfRecall = graft.operators.TrainingOps.ivfRecallAtK(spark, sfDir)
-    // same operator, same coverage, planted-cluster corpus: the measured
-    // proof that the uniform-random recall above is fixture geometry
-    val ivfRecallC = graft.operators.TrainingOps.ivfRecallClustered(spark, sfDir)
-    // Lloyd-refined centroids (r3 verdict #4), same coverage dial: the
-    // uniform number should sit ABOVE the unrefined coverage bound
-    val ivfKmRecall = graft.operators.TrainingOps.ivfKmeansRecallAtK(spark, sfDir)
-    val ivfKmRecallC =
-      graft.operators.TrainingOps.ivfKmeansRecallClustered(spark, sfDir)
-    // PQ-ADC (round 4): what ranking on 4-byte codes instead of 256-byte
-    // vectors costs in recall — the ×64-compression scale path's honesty dial
-    val pqRecall = graft.operators.TrainingOps.pqRecallAtK(spark, sfDir)
-    // ...and what the R=50 exact re-rank pass buys back over raw codes
-    val pqRerankRecall =
-      graft.operators.TrainingOps.pqRerankRecallAtK(spark, sfDir)
-    // SQ8 (8 bits/dim, global affine): the high-fidelity end of the
-    // quantization family — should sit far above PQ at the same corpus
-    val sqRecall = graft.operators.TrainingOps.sqRecallAtK(spark, sfDir)
-    // MRL prefix-then-refine: what a 16-of-64-dim coarse pass + exact
-    // re-rank recovers (the adaptive-retrieval economics dial)
-    val mrlRecall = graft.operators.TrainingOps.mrlRecallAtK(spark, sfDir)
-    // IVF-PQ composed: coarse-pruning × code-quantization recall, together
-    val ivfPqRecall = graft.operators.TrainingOps.ivfPqRecallAtK(spark, sfDir)
-    // ...and the full stack with the exact top-R refine pass behind it
-    val ivfPqRerankRecall =
-      graft.operators.TrainingOps.ivfPqRerankRecallAtK(spark, sfDir)
-    // residual IVF-PQ (r4 verdict #3): same bytes/vec, codes quantize
-    // x − c(x) and the centroid share of the score is exact — the lift
-    // over ann_ivfpq_recall_at_10 is the residual formulation's value
-    val ivfPqResRecall =
-      graft.operators.TrainingOps.ivfPqResRecallAtK(spark, sfDir)
-    val ivfPqResRerankRecall =
-      graft.operators.TrainingOps.ivfPqResRerankRecallAtK(spark, sfDir)
-    // attribution control: plain (non-residual) ADC at the residual grid —
-    // separates what the finer M×K buys from what the residual
-    // decomposition + exact centroid share buys
-    val pqFineRecall =
-      graft.operators.TrainingOps.pqFineRecallAtK(spark, sfDir)
-    // ...and the same control WITH the IVF prefilter: identical coverage
-    // and code budget as the residual path, so residual-vs-fine-grid is a
-    // one-variable comparison in the record
-    val ivfPqFineRecall =
-      graft.operators.TrainingOps.ivfPqFineRecallAtK(spark, sfDir)
-    // clustered-corpus pair: where residual encoding's theory bites
-    // (x ≈ c + small r), residual vs plain at the same grid/coverage
-    val (ivfPqResClu, ivfPqFineClu) =
-      graft.operators.TrainingOps.ivfPqResRecallClustered(spark, sfDir)
-    // Lloyd-refined residual codebook (one k-means step over the seed
-    // sample): what moving codewords to their capture means buys
-    val ivfPqResKmRecall =
-      graft.operators.TrainingOps.ivfPqResKmeansRecallAtK(spark, sfDir)
-    // image-modality retrieval (12×5-bit banded Hamming top-k) vs exact,
-    // across the Hamming-1 multi-probe dial (1/3/6 probes per band) — the
-    // image sibling of the LSH curve; headline = the default exact dial
-    val imgCurve = graft.operators.TrainingOps.imageHammingRecallCurve(spark)
-    val imgRecall = imgCurve.head._2
+    // honesty metric for every approximate ANN index: recall@10 vs the
+    // exact top-10 on the same corpus, one row per recall-table key, plus
+    // the LSH multi-probe curve (1/3/5 probes per band) and its image
+    // sibling (12×5-bit banded Hamming top-k, 1/3/6 probes per band)
+    val recallJson = recallFields(
+      graft.operators.TrainingOps.annRecalls(spark, sfDir),
+      graft.operators.TrainingOps.lshRecallCurve(spark, sfDir),
+      graft.operators.TrainingOps.imageHammingRecallCurve(spark))
 
     // Scaling arms (north rule: throughput efficiency ≥ 0.8 from N to 4N
     // cores) — driver-reproducible in ONE run, but each arm in its OWN
@@ -876,20 +866,16 @@ object Bench {
       budgetSec = math.min(600.0, ArmsBudgetSec),
       note = Some("evidence arm at driver parallelism: per-core ladder " +
         "flat 1-4 cores then shared-DRAM capped on this VM (BENCH.md " +
-        "s2) - a 4N-executor cluster brings 4x DRAM/NVMe this box does " +
+        "§2) - a 4N-executor cluster brings 4x DRAM/NVMe this box does " +
         "not, so sub-0.8 here measures the box ceiling, not the plan"))
 
     def jmap(m: scala.collection.Map[String, Double]): String =
       m.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-    val total = f"${results.values.sum}%.3f"
-    val annCurveJson = annCurve.map { case (p, r, c) =>
-      s"""{"probes":$p,"recall":${f"$r%.3f"},"candidates":$c}"""
-    }.mkString("[", ",", "]")
-    val imgCurveJson = imgCurve.map { case (p, r, c) =>
-      s"""{"probes":$p,"recall":${f"$r%.3f"},"candidates":$c}"""
-    }.mkString("[", ",", "]")
+    val total = f"${results.values.flatten.sum}%.3f"
+    val queriesJson = results.map { case (k, v) => "\"" + k + "\":" + secJson(v) }
+      .mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(results)},"sf":"$sfDir","cpus":$cpus,"frontier_n":$frontierN,"frontier_scheduled_rows":$frontierRows,"frontier_urls_per_sec":$urlsPerSec,"frontier_runs_sec":[${f"$run1Sec%.3f"},${f"$run2Sec%.3f"}],"frontier_stages":${jmap(stages)},"ann_recall_at_10":${f"$annRecall%.3f"},"ann_ivf_recall_at_10":${f"$ivfRecall%.3f"},"ann_ivf_recall_clustered":${f"$ivfRecallC%.3f"},"ann_ivf_kmeans_recall_at_10":${f"$ivfKmRecall%.3f"},"ann_ivf_kmeans_recall_clustered":${f"$ivfKmRecallC%.3f"},"ann_pq_recall_at_10":${f"$pqRecall%.3f"},"ann_pq_rerank_recall_at_10":${f"$pqRerankRecall%.3f"},"ann_sq_recall_at_10":${f"$sqRecall%.3f"},"ann_mrl_recall_at_10":${f"$mrlRecall%.3f"},"ann_ivfpq_recall_at_10":${f"$ivfPqRecall%.3f"},"ann_ivfpq_rerank_recall_at_10":${f"$ivfPqRerankRecall%.3f"},"ann_ivfpq_res_recall_at_10":${f"$ivfPqResRecall%.3f"},"ann_ivfpq_res_rerank_recall_at_10":${f"$ivfPqResRerankRecall%.3f"},"ann_pq_finegrid_recall_at_10":${f"$pqFineRecall%.3f"},"ann_ivfpq_finegrid_recall_at_10":${f"$ivfPqFineRecall%.3f"},"ann_ivfpq_res_recall_clustered":${f"$ivfPqResClu%.3f"},"ann_ivfpq_res_kmeans_recall_at_10":${f"$ivfPqResKmRecall%.3f"},"ann_ivfpq_finegrid_recall_clustered":${f"$ivfPqFineClu%.3f"},"ann_image_recall_at_10":${f"$imgRecall%.3f"},"ann_recall_curve":$annCurveJson,"ann_image_recall_curve":$imgCurveJson,"bench_noise":${suiteNoise.json},"suite_rerun":$suiteRerunJson,"stage_sec":${jmap(stageSecs)},"scaling":$scalingJson,"scaling_4_16":$scaling416Json}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$queriesJson,"sf":"$sfDir","cpus":$cpus,"frontier_n":$frontierN,"frontier_scheduled_rows":$frontierRows,"frontier_urls_per_sec":$urlsPerSec,"frontier_runs_sec":[${f"$run1Sec%.3f"},${f"$run2Sec%.3f"}],"frontier_stages":${jmap(stages)},$recallJson,"bench_noise":${suiteNoise.json},"suite_rerun":$suiteRerunJson,"stage_sec":${jmap(stageSecs)},"scaling":$scalingJson,"scaling_4_16":$scaling416Json}"""
     // build.sbt sets outputStrategy := StdoutOutput, so this line reaches
     // the driver's stdout tail UNPREFIXED (sbt's "[info] " wrapper broke
     // the driver's parse in rounds 1-2); the file copy stays as the

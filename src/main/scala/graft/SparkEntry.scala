@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{CleanOps, CrawlOps, ScanOps, SearchOps, TrainingOps}
+import graft.operators.{AnnIndex, CleanOps, CrawlOps, ScanOps, SearchOps,
+  TrainingOps}
+import graft.operators.AnnIndex._
 
 /** Driver contract — one entry per implemented operator from SURVEY.md §2,
   * each paired (where SQL-expressible) with a DuckDB oracle over the same
@@ -16,6 +18,10 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame =
     CrawlOps.dedupBootstrap(spark, "/root/testdata/sf0.001")
+
+  /** A top-k query over the embedding table: one index, planned by annTopK. */
+  private def ann(ix: AnnIndex): (SparkSession, String) => DataFrame =
+    (s, d) => TrainingOps.annTopK(s, d, ix)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- crawl/frontier query surface (SURVEY.md §2.3/§2.5/§2.6) ---
@@ -95,24 +101,28 @@ object SparkEntry {
     "q_doc_phrase_topk" -> ((s, d) => SearchOps.docPhraseTopK(s, d)),
     "q_doc_bm25_pruned_topk" -> ((s, d) => SearchOps.docBm25PrunedTopK(s, d)),
     "q_pair_caption_search" -> ((s, _) => SearchOps.captionTfidfTopK(s)),
-    "q_emb_topk" -> ((s, d) => TrainingOps.bruteForceTopK(s, d)),
+    "q_emb_topk" -> ann(AnnIndex()),
     "q_emb_lsh_buckets" -> ((s, d) => TrainingOps.lshBuckets(s, d)),
-    "q_emb_lsh_topk" -> ((s, d) => TrainingOps.lshBucketTopK(s, d)),
-    "q_emb_ivf_topk" -> ((s, d) => TrainingOps.ivfTopK(s, d)),
-    "q_emb_ivf_kmeans_topk" -> ((s, d) => TrainingOps.ivfKmeansTopK(s, d)),
-    "q_emb_pq_topk" -> ((s, d) => TrainingOps.pqTopK(s, d)),
-    "q_emb_pq_rerank_topk" -> ((s, d) => TrainingOps.pqRerankTopK(s, d)),
-    "q_emb_ivfpq_topk" -> ((s, d) => TrainingOps.ivfPqTopK(s, d)),
-    "q_emb_ivfpq_rerank_topk" -> ((s, d) => TrainingOps.ivfPqRerankTopK(s, d)),
-    "q_emb_ivfpq_res_topk" -> ((s, d) => TrainingOps.ivfPqResTopK(s, d)),
+    "q_emb_lsh_topk" -> ann(AnnIndex(Lsh())),
+    "q_emb_ivf_topk" -> ann(AnnIndex(Ivf())),
+    "q_emb_ivf_kmeans_topk" ->
+      ann(AnnIndex(Ivf(kmeansIters = TrainingOps.IvfKmeansIters))),
+    "q_emb_pq_topk" -> ann(AnnIndex(code = Pq())),
+    "q_emb_pq_rerank_topk" ->
+      ann(AnnIndex(code = Pq(), rerank = Some(TrainingOps.PqRerankR))),
+    "q_emb_ivfpq_topk" -> ann(AnnIndex(Ivf(), Pq())),
+    "q_emb_ivfpq_rerank_topk" ->
+      ann(AnnIndex(Ivf(), Pq(), Some(TrainingOps.PqRerankR))),
+    "q_emb_ivfpq_res_topk" -> ann(AnnIndex(Ivf(), ResidualPq())),
     "q_emb_ivfpq_res_rerank_topk" ->
-      ((s, d) => TrainingOps.ivfPqResRerankTopK(s, d)),
-    "q_emb_ivfpq_res_kmeans_topk" ->
-      ((s, d) => TrainingOps.ivfPqResKmeansTopK(s, d)),
+      ann(AnnIndex(Ivf(), ResidualPq(), Some(TrainingOps.PqRerankR))),
+    "q_emb_ivfpq_res_kmeans_topk" -> ann(AnnIndex(Ivf(),
+      ResidualPq(kmeansIters = TrainingOps.ResPqKmeansIters))),
     "q_emb_cosine_dups" -> ((s, d) => TrainingOps.cosineNearDups(s, d)),
     "q_emb_semdedup" -> ((s, d) => TrainingOps.semDedup(s, d)),
-    "q_emb_sq_topk" -> ((s, d) => TrainingOps.sqTopK(s, d)),
-    "q_emb_mrl_topk" -> ((s, d) => TrainingOps.mrlTopK(s, d)),
+    "q_emb_sq_topk" -> ann(AnnIndex(code = Sq8)),
+    "q_emb_mrl_topk" ->
+      ann(AnnIndex(code = Prefix, rerank = Some(TrainingOps.MrlShortlistR))),
     "q_doc_dsir" -> ((s, d) => TrainingOps.dsirScores(s, d)),
     "q_doc_cdc_chunks" -> ((s, d) => TrainingOps.cdcChunks(s, d)),
     "q_doc_hybrid_topk" -> ((s, d) => SearchOps.hybridRrfTopK(s, d)),

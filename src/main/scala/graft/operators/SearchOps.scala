@@ -421,7 +421,8 @@ object SearchOps {
     // k threaded to BOTH arms (r4 ADVICE #4): the fusion contract is
     // "two top-k lists", so the vector ranking runs at the same depth
     // as the lexical one — for any k the candidate bound stays ≤ 2k
-    val vec = TrainingOps.bruteForceTopK(spark, sfDir, k)
+    val vec = TrainingOps
+      .annTopK(TrainingOps.quantizedEmbeddings(spark, sfDir), AnnIndex(), k)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rank").as("vec_rank"))
     val fused = text.join(vec, Seq("query_id", "doc_id"), "full_outer")

@@ -1496,11 +1496,11 @@ object TrainingOps {
         (lit(60L) - col("dot")).as("hamming"), col("rank"))
   }
 
-  /** The banded candidate set of [[imageHammingTopK]], exposed (like
-    * [[lshCandidates]]) so the recall curve can report candidates-examined
-    * alongside recall.
+  /** The banded candidate set of [[imageHammingTopK]], exposed (like the
+    * LSH candidates of [[annScores]]) so the recall curve can report
+    * candidates-examined alongside recall.
     *
-    * Multi-probe (query side only, the [[lshCandidates]] shape on 5-bit
+    * Multi-probe (query side only, the LSH candidates' shape on 5-bit
     * bands): each query band probes its exact value (flip 0) plus up to 5
     * Hamming-1 neighbors in band space (flip f ⇒ bit f−1 toggled), so
     * probesPerBand ∈ 1..6 is THE recall dial. At 6 probes the pigeonhole
@@ -1705,6 +1705,9 @@ object TrainingOps {
   }
 
   // ======================================== similarity search (ANN) =====
+  //
+  // Every top-k query over the embedding table is one [[AnnIndex]] value —
+  // candidates × code × optional exact re-rank — built by [[annTopK]].
 
   val QuantScale = 1000
   val NQueryVecs = 8
@@ -1713,6 +1716,11 @@ object TrainingOps {
   /** Int-quantized embedding: exact cross-engine arithmetic. */
   def quantized(c: Column): Column =
     transform(c, x => round(x.cast("double") * QuantScale).cast("long"))
+
+  /** The quantized embedding scan (vec_id, q) every ANN plan reads. */
+  def quantizedEmbeddings(spark: SparkSession, sfDir: String): DataFrame =
+    embeddings(spark, sfDir)
+      .select(col("vec_id"), quantized(col("embedding")).as("q"))
 
   /** Exact long dot product — a native codegen'd expression
     * ([[graft.functions.LongDot]]): one allocation-free loop inlined into
@@ -1723,6 +1731,12 @@ object TrainingOps {
     */
   def intDot(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.long_dot(a, b)
+
+  /** Integer squared-L2 distance (exact cross-engine arithmetic: quantized
+    * dims ≤ ~1000 ⇒ diff² ≤ 4·10⁶, ×64 dims ≤ 2.6·10⁸ — no overflow).
+    */
+  def intL2(a: Column, b: Column): Column =
+    graft.functions.VectorFunctions.long_l2sq(a, b)
 
   /** Per-query top-k as a TWO-STAGE partial rank (r2 verdict scale caveat
     * (d)): stage 1 ranks within (query_id, subgroup = pmod(neighbor_id, P))
@@ -1749,36 +1763,13 @@ object TrainingOps {
       .select("query_id", "neighbor_id", "dot", "rank")
   }
 
-  /** Brute-force top-k: the first NQueryVecs vectors query the rest.
-    * Query side is tiny → broadcast; corpus never shuffles; the rank is
-    * the two-stage partial top-k ([[topKPerQuery]]) so no single task
-    * ever holds a query's full candidate set.
-    */
-  def bruteForceTopK(spark: SparkSession, sfDir: String,
-      k: Int = TopK): DataFrame =
-    bruteForceTopKFrom(
-      embeddings(spark, sfDir)
-        .select(col("vec_id"), quantized(col("embedding")).as("q")), k)
-
-  /** [[bruteForceTopK]] over any prepared (vec_id, q) frame. `k` is
-    * threaded (default [[TopK]]) so rank-fusion callers can keep BOTH
-    * arms at the same depth (r4 ADVICE #4).
-    */
-  def bruteForceTopKFrom(e: DataFrame, k: Int = TopK): DataFrame = {
-    val queries = broadcast(e.filter(col("vec_id") < NQueryVecs)
-      .select(col("vec_id").as("query_id"), col("q").as("qv")))
-    val corpus = e.filter(col("vec_id") >= NQueryVecs)
-      .select(col("vec_id").as("neighbor_id"), col("q").as("nv"))
-    val scored = queries.join(corpus)
-      .withColumn("dot", intDot(col("qv"), col("nv")))
-    topKPerQuery(scored, k)
-  }
+  // ------------------------------------------------------------- LSH ---
 
   val LshPlanes = 16
+  val LshBands = 4 // 4 bands × 4 planes: candidates share any 4-bit band
 
   /** Random-hyperplane LSH: 16 md5-derived hyperplanes (components in
-    * [-500, 500]), bucket = 16-bit sign signature — the scale path for ANN
-    * (bucket-local candidate sets instead of all-pairs).
+    * [-500, 500]).
     */
   def lshPlaneDf(spark: SparkSession): DataFrame =
     spark.range(0, LshPlanes.toLong).toDF("p")
@@ -1788,80 +1779,20 @@ object TrainingOps {
               concat(col("p").cast("string"), lit("_"), i.cast("string"))),
               1, 8), 16, 10).cast("long") % 1001) - 500))
 
-  def lshBuckets(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), quantized(col("embedding")).as("q"))
-    e.join(broadcast(lshPlaneDf(spark)))
+  /** The 16-bit sign signature (vec_id, bucket) of every row of a (vec_id, q)
+    * frame: bit p is set iff dot(q, plane_p) > 0. Shared by the LSH
+    * candidates, [[lshBuckets]] and [[cosineNearDups]].
+    */
+  def lshSignatures(e: DataFrame): DataFrame =
+    e.join(broadcast(lshPlaneDf(e.sparkSession)))
       .withColumn("dot", intDot(col("q"), col("plane")))
       .groupBy("vec_id")
       .agg(sum(when(col("dot") > 0,
           expr("shiftleft(1L, CAST(p AS INT))")).otherwise(0L))
         .as("bucket"))
-  }
 
-  val LshBands = 4 // 4 bands × 4 planes: candidates share any 4-bit band
-
-  /** ANN, completed as a search (VERDICT r1 #6): bucket-local top-k.
-    *
-    * The 16-bit signature is banded (4 × 4 bits, the same trick as MinHash
-    * banding) — an exact 16-bit match is too selective to recall anything,
-    * a 4-bit band match recalls vectors on the same side of 4 shared
-    * hyperplanes. Candidates = corpus vectors sharing ANY band with the
-    * query; scoring (int dot) and ranking run per bucket-local candidate
-    * set, never all-pairs. At scale the band join shuffles on
-    * (band_idx, band_val) — bounded, uniform keys — while brute force
-    * would shuffle |Q|×|C|.
-    *
-    * Output schema matches [[bruteForceTopK]] so recall@k is a direct join
-    * (measured in Bench and LshAnnSpec).
-    */
-  def lshBucketTopK(spark: SparkSession, sfDir: String,
-      probesPerBand: Int = 5): DataFrame = {
-    val cands = lshCandidates(spark, sfDir, probesPerBand)
-    // two-stage partial top-k (topKPerQuery): the r2 verdict's remaining
-    // LSH-path caveat — at real query load no task holds a query's whole
-    // bucket-local candidate set
-    topKPerQuery(cands.withColumn("dot", intDot(col("qv"), col("nv"))), TopK)
-  }
-
-  /** The bucket-local candidate set of [[lshBucketTopK]], exposed so the
-    * recall curve can report candidates-examined (the cost axis of the
-    * multi-probe dial) alongside recall.
-    */
-  def lshCandidates(spark: SparkSession, sfDir: String,
-      probesPerBand: Int): DataFrame = {
-    require(probesPerBand >= 1 && probesPerBand <= 5,
-      s"probesPerBand must be in 1..5 (exact + up to 4 Hamming-1 flips " +
-        s"of a 4-bit band), got $probesPerBand")
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), quantized(col("embedding")).as("q"))
-    val withBands = e.join(lshBuckets(spark, sfDir), Seq("vec_id"))
-      .select(col("vec_id"), col("q"), col("bucket"),
-        explode(sequence(lit(0), lit(LshBands - 1))).as("band_idx"))
-      .withColumn("band_val",
-        expr(s"shiftright(bucket, CAST(band_idx * 4 AS INT)) & 15"))
-    // multi-probe (query side only): each band probes its exact value AND
-    // up to 4 Hamming-1 neighbors in 4-bit band space — probesPerBand is
-    // THE recall dial (default 5 probes/band), costing probe-count ×
-    // candidate lookups, never a corpus rescan (the corpus side stays at
-    // 4 stored bands/vec). Measured curve: [[lshRecallCurve]] / BENCH.md.
-    val qs = withBands.filter(col("vec_id") < NQueryVecs)
-      .select(col("vec_id").as("query_id"), col("q").as("qv"),
-        col("band_idx"), col("band_val"),
-        explode(sequence(lit(0), lit(probesPerBand - 1))).as("flip"))
-      .withColumn("band_val",
-        expr("CAST(band_val ^ (CASE WHEN flip = 0 THEN 0 " +
-          "ELSE shiftleft(1, CAST(flip - 1 AS INT)) END) AS BIGINT)"))
-      .drop("flip")
-    val cs = withBands.filter(col("vec_id") >= NQueryVecs)
-      .select(col("vec_id").as("neighbor_id"), col("q").as("nv"),
-        col("band_idx").as("band_idx_c"), col("band_val").as("band_val_c"))
-    qs.join(cs,
-        col("band_idx") === col("band_idx_c") &&
-          col("band_val") === col("band_val_c"))
-      .select("query_id", "neighbor_id", "qv", "nv")
-      .dropDuplicates("query_id", "neighbor_id")
-  }
+  def lshBuckets(spark: SparkSession, sfDir: String): DataFrame =
+    lshSignatures(quantizedEmbeddings(spark, sfDir))
 
   /** Embedding-cosine near-duplicate pairs — the dedup form of the
     * similarity surface (task brief: "embedding-cosine near-dup"), distinct
@@ -1901,8 +1832,7 @@ object TrainingOps {
     */
   def cosineNearDups(spark: SparkSession, sfDir: String,
       maxBroadcastBytes: Long): DataFrame = {
-    val base = embeddings(spark, sfDir)
-      .select(col("vec_id"), quantized(col("embedding")).as("q"))
+    val base = quantizedEmbeddings(spark, sfDir)
     val twins = base.select(
       (col("vec_id") + 100000).as("vec_id"),
       transform(col("q"),
@@ -1914,13 +1844,7 @@ object TrainingOps {
     val corpusBytes = corpus.count() * CosineCorpusRowBytes
     val broadcastCorpus = corpusBytes <= maxBroadcastBytes
     // 16 hyperplane signs → 4 bands × 4 bits (same banding as the ANN path)
-    val planes = broadcast(lshPlaneDf(spark))
-    val buckets = corpus.join(planes)
-      .withColumn("dot", intDot(col("q"), col("plane")))
-      .groupBy("vec_id")
-      .agg(sum(when(col("dot") > 0,
-          expr("shiftleft(1L, CAST(p AS INT))")).otherwise(0L))
-        .as("bucket"))
+    val buckets = lshSignatures(corpus)
     // candidates carry IDS ONLY through the band self-join — the 64-long
     // arrays would multiply every banded row and every shuffled pair by
     // ~0.5 KB; they re-join after dedup (broadcast here; at corpus sizes
@@ -1984,9 +1908,8 @@ object TrainingOps {
     * them; centroids = the IVF stride sample over the base rows.
     */
   def semDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = embeddings(spark, sfDir)
+    val base = quantizedEmbeddings(spark, sfDir)
       .filter(col("vec_id") >= NQueryVecs)
-      .select(col("vec_id"), quantized(col("embedding")).as("q"))
     val twins = base.select(
       (col("vec_id") + 100000).as("vec_id"),
       transform(col("q"),
@@ -2037,45 +1960,32 @@ object TrainingOps {
         col("__dropped_by").isNull.as("kept"))
   }
 
-  /** recall@k of the LSH ANN vs brute force on the same split — the
-    * honesty metric for the approximate path (reported by Bench).
-    */
-  // ------------------------------------------------- IVF-Flat variant ---
+  // ------------------------------------------------------------- IVF ---
 
   /** IVF parameters. The centroid stride is the nlist dial: centroids are
     * the corpus vectors whose vec_id is a stride multiple — a deterministic
     * sample, which keeps the whole index SQL-expressible for the DuckDB
-    * oracle (learned k-means centroids would not be). At sf fixtures
-    * stride 31 gives nlist ≈ n/31; at real scale the caller sets the
-    * stride so nlist ≈ √n (e.g. 65k lists for 4B vectors ⇒ a ~35 MB
-    * centroid table — comfortably broadcastable), which is the standard
-    * IVF sizing. The PLAN is invariant to the dial: broadcast centroids,
-    * corpus assigned via one map-side-combined argmin, probe joins on
-    * centroid_id with the corpus side never reshuffled.
+    * oracle. At sf fixtures stride 31 gives nlist ≈ n/31; at real scale the
+    * caller sets the stride so nlist ≈ √n (e.g. 65k lists for 4B vectors ⇒
+    * a ~35 MB centroid table — comfortably broadcastable), the standard IVF
+    * sizing. The PLAN is invariant to the dial: broadcast centroids, corpus
+    * assigned via one map-side-combined argmin, probe joins on centroid_id.
     */
   val IvfCentroidStride = 31L
   val IvfNProbe = 4
 
-  /** Integer squared-L2 distance (exact cross-engine arithmetic: quantized
-    * dims ≤ ~1000 ⇒ diff² ≤ 4·10⁶, ×64 dims ≤ 2.6·10⁸ — no overflow).
+  /** Rough serialized bytes of one probe row (query_id, 64×BIGINT qv,
+    * centroid_id) — sizes the probe side's broadcast/shuffle dispatch.
     */
-  def intL2(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.long_l2sq(a, b)
+  val IvfProbeRowBytes = 600L
+  val DefaultIvfProbeMaxBroadcastBytes: Long = 256L << 20 // 256 MiB
 
-  /** The IVF coarse index: every corpus vector assigned to its nearest
-    * centroid by (L2² asc, centroid_id asc). The argmin is a
-    * `min(struct(dist, centroid_id, q))` aggregate, NOT a rank window —
-    * partial aggregation reduces the n×nlist scored pairs to n rows
-    * map-side before the one shuffle on vec_id (the IVF build cost).
-    * Ties are impossible at the struct level (centroid_id is unique), so
-    * the embedded q never participates in comparison.
+  /** Fixed Lloyd iterations — fixed so the DuckDB oracle can mirror the
+    * refinement as unrolled CTEs (a data-dependent stopping rule would not
+    * be SQL-expressible).
     */
-  def ivfAssignments(spark: SparkSession, sfDir: String,
-      centroidStride: Long = IvfCentroidStride): DataFrame =
-    ivfAssignmentsFrom(
-      embeddings(spark, sfDir)
-        .select(col("vec_id"), quantized(col("embedding")).as("q")),
-      centroidStride)
+  val IvfKmeansIters = 2
+  val EmbDim = 64
 
   /** Seed centroids: the deterministic stride sample (SQL-expressible). */
   def ivfSeedCentroids(e: DataFrame, centroidStride: Long): DataFrame =
@@ -2083,9 +1993,13 @@ object TrainingOps {
       .filter(col("vec_id") % centroidStride === 0)
       .select(col("vec_id").as("centroid_id"), col("q").as("cv"))
 
-  /** Corpus→centroid argmin assignment against ANY centroid frame
-    * (centroid_id, cv). The argmin is a `min(struct)` aggregate, never a
-    * rank window (see [[ivfAssignments]]).
+  /** The IVF coarse index: every corpus vector assigned to its nearest
+    * centroid of ANY centroid frame (centroid_id, cv) by (L2² asc,
+    * centroid_id asc). The argmin is a `min(struct(dist, centroid_id, q))`
+    * aggregate, NOT a rank window — partial aggregation reduces the n×nlist
+    * scored pairs to n rows map-side before the one shuffle on vec_id.
+    * centroid_id is unique, so the embedded q never participates in the
+    * comparison. Output (vec_id, centroid_id, q).
     */
   def ivfAssignmentsWithCents(e: DataFrame, cents: DataFrame): DataFrame =
     e.filter(col("vec_id") >= NQueryVecs)
@@ -2096,36 +2010,28 @@ object TrainingOps {
       .select(col("vec_id"), col("m.centroid_id").as("centroid_id"),
         col("m.q").as("q"))
 
-  /** [[ivfAssignments]] over any prepared (vec_id, q) frame. */
-  def ivfAssignmentsFrom(e: DataFrame, centroidStride: Long): DataFrame =
+  /** [[ivfAssignmentsWithCents]] against the seed centroids. */
+  def ivfAssignments(spark: SparkSession, sfDir: String,
+      centroidStride: Long = IvfCentroidStride): DataFrame = {
+    val e = quantizedEmbeddings(spark, sfDir)
     ivfAssignmentsWithCents(e, ivfSeedCentroids(e, centroidStride))
+  }
 
   /** Lloyd-refined centroids (r3 verdict ask #4): seed = the stride sample,
-    * then a FIXED number of k-means iterations — fixed so the DuckDB oracle
-    * can mirror the refinement as unrolled CTEs (a data-dependent stopping
-    * rule would not be SQL-expressible). Each iteration is
+    * then `iters` k-means iterations, each
     *
     *   assign:  the same `min(struct(dist, centroid_id))` argmin aggregate
-    *            as the index build (partial-aggregated map-side, one
-    *            shuffle on vec_id);
+    *            as the index build (one shuffle on vec_id);
     *   update:  per-centroid element-wise integer mean — 64 `sum` buffers
-    *            + a count per group (one aggregate, map-side combined;
-    *            the shuffle carries nlist × 65 longs), new coordinate =
-    *            floor(sum / count) with the division in double (both
-    *            engines IEEE-identical: |per-dim sum| ≤ |q|max × n ≈ 6.4e6
-    *            at the verify SF — exact in double).
+    *            + a count per group (one map-side-combined aggregate), new
+    *            coordinate = floor(sum / count) with the division in double
+    *            (IEEE-identical in both engines: |per-dim sum| ≤ 6.4e6 at
+    *            the verify SF — exact in double).
     *
-    * Centroid ids keep their seed identity (the list id is stable across
-    * refinement); a centroid that captures no vectors in an iteration
-    * drops out (standard Lloyd on sampled seeds — nlist can only shrink,
-    * and the effective-nprobe floor in [[ivfTopKFrom]] adapts in-plan).
-    * At 100 TB each iteration costs one corpus×nlist broadcast-scored
-    * argmin plus an nlist-row aggregate — the same shape (and the same
-    * plan gates) as the index build itself, ×iters.
+    * Centroid ids keep their seed identity; a centroid that captures no
+    * vectors drops out (nlist can only shrink, and the effective-nprobe
+    * floor adapts in-plan).
     */
-  val IvfKmeansIters = 2
-  val EmbDim = 64
-
   def ivfKmeansCentroidsFrom(e: DataFrame,
       centroidStride: Long = IvfCentroidStride,
       iters: Int = IvfKmeansIters): DataFrame = {
@@ -2142,172 +2048,50 @@ object TrainingOps {
     cents
   }
 
-  /** IVF-Flat top-k: queries probe their nprobe nearest centroid lists and
-    * re-rank candidates by exact int dot — the second ANN scale path next
-    * to [[lshBucketTopK]] (banded LSH recalls by hash locality, IVF by
-    * geometric partition; the probe join shuffles only on centroid_id and
-    * the final rank is the same two-stage [[topKPerQuery]]). Output schema
-    * matches [[bruteForceTopK]] so recall@k is a direct join.
-    */
-  def ivfTopK(spark: SparkSession, sfDir: String,
-      centroidStride: Long = IvfCentroidStride,
-      nprobe: Int = IvfNProbe,
-      maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes)
-      : DataFrame =
-    ivfTopKFrom(
-      embeddings(spark, sfDir)
-        .select(col("vec_id"), quantized(col("embedding")).as("q")),
-      centroidStride, nprobe, maxProbeBroadcastBytes)
+  // ------------------------------------------------------------- PQ ---
 
-  /** Rough serialized bytes of one probe row (query_id, 64×BIGINT qv,
-    * centroid_id) — sizes [[ivfTopKFrom]]'s broadcast/shuffle dispatch.
-    */
-  val IvfProbeRowBytes = 600L
-  val DefaultIvfProbeMaxBroadcastBytes: Long = 256L << 20 // 256 MiB
-
-  /** [[ivfTopK]] over any prepared (vec_id, q) frame.
-    *
-    * @param maxProbeBroadcastBytes size gate for the probe→assignments join
-    *   (r3 verdict "What's wrong" #2: a FORCED probe broadcast is a
-    *   driver-bound build side at real query load — 10^6 queries × 20
-    *   probes × 600 B is 12 GB). Below the gate the probe side broadcasts
-    *   (zero shuffle of the corpus assignments); above it the join runs
-    *   shuffle-hash co-partitioned on centroid_id — bounded fan-out keys
-    *   (each query contributes nprobe rows), the corpus side shuffles once
-    *   on the same key it was assigned by. Probe bytes are estimated from
-    *   two tiny driver scalars (centroid count × the contract query bound),
-    *   never by materializing the probe frame. Same dispatch shape as
-    *   [[cosineNearDups]]; results identical on both paths (plan-gated in
-    *   PlanQualitySpec with the threshold forced to 0).
-    */
-  def ivfTopKFrom(e: DataFrame, centroidStride: Long = IvfCentroidStride,
-      nprobe: Int = IvfNProbe,
-      maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes)
-      : DataFrame =
-    // dispatch sizing: the seed-centroid count prunes to a vec_id-only scan
-    // (q never computed)
-    ivfTopKWithCents(e, ivfSeedCentroids(e, centroidStride),
-      ivfSeedCentroids(e, centroidStride).select("centroid_id").count(),
-      nprobe, maxProbeBroadcastBytes)
-
-  /** [[ivfTopK]] with Lloyd-refined centroids ([[ivfKmeansCentroidsFrom]]).
-    * See [[ivfKmeansTopKFrom]] for how the refined centroid frame is
-    * materialized exactly once (it feeds the probe ranking, the corpus
-    * assignment AND the dispatch-sizing count — evaluated lazily, the
-    * 2-iteration refinement chain would run three times).
-    */
-  def ivfKmeansTopK(spark: SparkSession, sfDir: String,
-      centroidStride: Long = IvfCentroidStride,
-      iters: Int = IvfKmeansIters,
-      nprobe: Int = IvfNProbe,
-      maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes)
-      : DataFrame =
-    ivfKmeansTopKFrom(
-      embeddings(spark, sfDir)
-        .select(col("vec_id"), quantized(col("embedding")).as("q")),
-      centroidStride, iters, nprobe, maxProbeBroadcastBytes)
-
-  /** [[ivfKmeansTopK]] over any prepared (vec_id, q) frame.
-    *
-    * The refined centroid frame feeds the probe ranking, the corpus
-    * assignment AND the dispatch-sizing count. It is materialized ONCE to
-    * the driver rather than persisted: the centroid table is driver-scale
-    * by construction (nlist rows ≈ corpus/stride, and it is `broadcast()`
-    * into both downstream joins anyway — collecting it costs exactly what
-    * the broadcast already costs), and a session-lifetime persist here
-    * would leak one cached frame per invocation with no release hook to
-    * hand back. The REFINEMENT itself (the per-iteration argmin + mean
-    * aggregates) still runs as the distributed plan; only its nlist-row
-    * output lands on the driver.
-    */
-  def ivfKmeansTopKFrom(e: DataFrame,
-      centroidStride: Long = IvfCentroidStride,
-      iters: Int = IvfKmeansIters,
-      nprobe: Int = IvfNProbe,
-      maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes)
-      : DataFrame = {
-    val refined = ivfKmeansCentroidsFrom(e, centroidStride, iters)
-    val rows = refined.collect()
-    val spark = e.sparkSession
-    val cents = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq, 1), refined.schema)
-    ivfTopKWithCents(e, cents, rows.length.toLong, nprobe,
-      maxProbeBroadcastBytes)
-  }
-
-  /** Shared IVF top-k body over ANY centroid frame (centroid_id, cv).
-    * @param nlist the centroid count (a tiny driver scalar, sized by the
-    *   caller so the seed path can count with a pruned scan)
-    */
-  def ivfTopKWithCents(e: DataFrame, cents: DataFrame, nlist: Long,
-      nprobe: Int = IvfNProbe,
-      maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes)
-      : DataFrame = {
-    val centroids = broadcast(cents)
-    val queries = e.filter(col("vec_id") < NQueryVecs)
-      .select(col("vec_id").as("query_id"), col("q").as("qv"))
-    // the query count is the NQueryVecs contract bound
-    val effNprobe = math.max(nprobe.toLong, nlist / 8L)
-    val probeBytes = NQueryVecs.toLong * effNprobe * IvfProbeRowBytes
-    val broadcastProbes = probeBytes <= maxProbeBroadcastBytes
-    // nprobe nearest lists per query: queries × nlist is tiny (the window
-    // partitions on query_id over nlist rows, never corpus rows). The
-    // EFFECTIVE nprobe is max(nprobe, nlist/8): with stride-sampled
-    // centroids nlist grows with the corpus, and a fixed probe count
-    // would shrink coverage — and recall — as data scales (measured:
-    // 0.60 at nlist=16 vs 0.22 at nlist=160 with nprobe pinned to 4).
-    // nlist is read in-plan as a window count over the centroid rows —
-    // no driver-side count() action.
-    val probes = queries.join(centroids)
-      .withColumn("dist", intL2(col("qv"), col("cv")))
-      .withColumn("nlist",
-        count(lit(1)).over(Window.partitionBy("query_id")))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(asc("dist"), asc("centroid_id"))))
-      .filter(col("crank") <=
-        greatest(lit(nprobe.toLong), floor(col("nlist") / lit(8.0)).cast("long")))
-      .select(col("query_id"), col("qv"), col("centroid_id"))
-    val probeSide =
-      if (broadcastProbes) broadcast(probes) else probes.hint("shuffle_hash")
-    val scored = probeSide
-      .join(ivfAssignmentsWithCents(e, cents), Seq("centroid_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("qv"), col("q").as("nv"))
-      .withColumn("dot", intDot(col("qv"), col("nv")))
-    topKPerQuery(scored, TopK)
-  }
-
-  def ivfRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val ivf = ivfTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val hit = bf.join(ivf, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
-  }
-
-  // --------------------------------------- PQ (product quantization) ---
-
-  /** PQ dials: the 64-dim vector splits into M=4 subspaces of 16 dims;
-    * each subspace gets K=16 codewords (a deterministic stride sample of
-    * corpus subvectors — SQL-expressible, same design choice as the IVF
-    * seeds; k-means-refined codebooks would compose exactly like
-    * [[ivfKmeansCentroidsFrom]]). A vector encodes to M codes = 4 bytes
-    * of index payload vs 64×4 B raw floats — the ×64 memory compression
-    * is the 100 TB story: a corpus whose raw embeddings cannot fit
-    * executor memory scans as codes, with the float vectors left in cold
-    * storage for optional re-ranking.
+  /** Plain PQ grid: the 64-dim vector splits into M=4 subspaces of 16 dims,
+    * each with K=16 codewords sampled at a stride (SQL-expressible, like the
+    * IVF seeds). A vector encodes to M codes = 4 bytes vs 64×4 B raw floats
+    * — the ×64 compression that lets a corpus too big for executor memory
+    * scan as codes, with full vectors left in cold storage for re-ranking.
     */
   val PqM = 4
-  val PqSubDim = EmbDim / PqM // 16
   val PqK = 16
   val PqCodeStride = 29L // 16 codewords ⇒ max source vec_id 464 (≤ all SFs)
 
+  /** Residual-PQ grid: M=8 subspaces of 8 dims × K=61 codewords = 48 bits
+    * per vector. The finer grid is WHY the residual path recalls
+    * materially: per-subspace quantization error shrinks with K^(2/subDim)
+    * — ~6 bits over 8 dims is past the knee, while the plain 2 bits per
+    * 16 dims floor dominates everything. Stride 8 puts the first codeword
+    * source at vec_id 8, the smallest corpus id, and K=61 keeps the last one
+    * (8·61=488) inside the 492-row sf0.01 verify corpus; coprime to the
+    * centroid stride 31.
+    */
+  val ResPqM = 8
+  val ResPqK = 61
+  val ResPqCodeStride = 8L
+
+  /** Fixed Lloyd iterations for the refined residual codebook (unrolled as
+    * CTEs by the oracle, like [[IvfKmeansIters]]).
+    */
+  val ResPqKmeansIters = 1
+
+  /** Exact re-rank depth: a code keeps its top R per query and the exact
+    * int dot re-scores only those — a constant-factor exact-scoring cost for
+    * most of the recall 4-bit codes lose.
+    */
+  val PqRerankR = 50
+
+  /** MRL coarse pass: the 64-dim vectors' first 16 components, re-ranked
+    * from a shortlist of R.
+    */
+  val MrlPrefixDims = 16
+  val MrlShortlistR = 50
+
   /** Codebook (m, k, cw): codeword k of subspace m is dims
-    * [m·subDim, (m+1)·subDim) of the corpus vector with
-    * vec_id = stride·(k+1). Geometry parameterized (defaults = the plain
-    * PQ dials) so the residual variant can run a finer grid over the
-    * same machinery.
+    * [m·subDim, (m+1)·subDim) of the corpus vector with vec_id = stride·(k+1).
     */
   def pqCodebook(e: DataFrame, m: Int = PqM, k: Int = PqK,
       stride: Long = PqCodeStride): DataFrame = {
@@ -2324,9 +2108,9 @@ object TrainingOps {
 
   /** Corpus → PQ codes (vec_id, codes[M]): per-subspace argmin over the
     * broadcast codebook (min(struct) aggregate, map-side combined — the
-    * n×M×K scored pairs reduce to n×M before the shuffle), then the M
-    * codes reassemble in subspace order. Index-build cost: two uniform
-    * vec_id shuffles of (id, small-int) rows.
+    * n×M×K scored pairs reduce to n×M before the shuffle), then the M codes
+    * reassemble in subspace order. Index-build cost: two uniform vec_id
+    * shuffles of (id, small-int) rows.
     */
   def pqEncode(e: DataFrame, cbook: DataFrame, m: Int = PqM): DataFrame = {
     val subDim = EmbDim / m
@@ -2344,277 +2128,13 @@ object TrainingOps {
         transform(col("mc"), s => s("k")).as("codes"))
   }
 
-  /** PQ-ADC top-k (asymmetric distance computation, the third ANN path):
-    * each query precomputes a LUT of dot(query_sub_m, codeword[m][k]) —
-    * M×K longs — and every corpus vector scores as the sum of M lookups
-    * on its codes: adc ≈ dot(query, corpus), with NO float vector touched
-    * at scan time. Scale shape: the codes frame (4 small ints per vector)
-    * is the only corpus-sized input and it never shuffles before the
-    * two-stage rank; the LUT side is queries × (M·K) longs — broadcast at
-    * the NQueryVecs contract (at real query load the same size-gated
-    * dispatch as [[ivfTopKWithCents]] applies, and IVF composes in front
-    * as the candidate prefilter: IVF-PQ). Integer arithmetic throughout —
-    * the DuckDB oracle replays codebook/encode/LUT/score identically.
-    */
-  def pqTopK(spark: SparkSession, sfDir: String): DataFrame =
-    pqTopKFrom(
-      embeddings(spark, sfDir)
-        .select(col("vec_id"), quantized(col("embedding")).as("q")))
-
-  def pqTopKFrom(e: DataFrame): DataFrame =
-    topKPerQuery(pqAdcScores(e), TopK).withColumnRenamed("dot", "adc")
-
-  /** The raw ADC scoring stage of [[pqTopKFrom]] — every corpus code
-    * scored against every query's LUT — exposed so [[pqRerankTopKFrom]]
-    * can take a wider shortlist off the same plan.
-    */
-  def pqAdcScores(e: DataFrame, m: Int = PqM, k: Int = PqK,
-      stride: Long = PqCodeStride): DataFrame = {
-    val subDim = EmbDim / m
-    val cbook = pqCodebook(e, m, k, stride)
-    val codes = pqEncode(e, cbook, m)
-    val luts = e.filter(col("vec_id") < NQueryVecs)
-      .select(col("vec_id").as("query_id"), col("q").as("qv"))
-      .join(broadcast(cbook))
-      .withColumn("lv",
-        intDot(slice(col("qv"), col("m") * subDim + lit(1), lit(subDim)),
-          col("cw")))
-      .groupBy("query_id")
-      .agg(sort_array(collect_list(struct(col("m"), col("k"), col("lv"))))
-        .as("ml"))
-      .select(col("query_id"), transform(col("ml"), s => s("lv")).as("lut"))
-    codes.join(broadcast(luts))
-      .withColumn("dot",
-        (0 until m).map(mm =>
-          element_at(col("lut"),
-            (col("codes")(mm) + lit(mm * k + 1)).cast("int")))
-          .reduce(_ + _))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("dot"))
-  }
-
-  /** Recall@k of PLAIN (non-residual) ADC at the RESIDUAL grid — the
-    * attribution control for [[ivfPqResRecallAtK]]: how much of the
-    * residual path's lift is the finer M×K grid alone vs the residual
-    * decomposition + exact centroid share. Reported in the bench record
-    * so the claim stays attributable.
-    */
-  def pqFineRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), quantized(col("embedding")).as("q"))
-    val fine = topKPerQuery(
-      pqAdcScores(e, ResPqM, ResPqK, ResPqCodeStride), TopK)
-      .select("query_id", "neighbor_id")
-    val hit = bf.join(fine, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
-  }
-
-  /** Shortlist width for the exact re-rank stage: ADC keeps its top R per
-    * query, the exact int-dot re-scores only those R. R = 5·k trades a
-    * constant-factor exact-scoring cost for most of the recall ADC loses
-    * to 4-bit codes (measured in Bench as `ann_pq_rerank_recall_at_10`).
-    */
-  val PqRerankR = 50
-
-  /** PQ-ADC + exact re-rank — the composition the PQ path is FOR at
-    * scale: the compressed-domain scan (4-byte codes, no float vectors)
-    * produces a per-query shortlist of R candidates, and ONLY those R×|Q|
-    * rows ever touch full vectors again. Scale shape: the shortlist
-    * (query_id, neighbor_id) is tiny → broadcast INTO the corpus scan as
-    * a hash semi-join-with-payload, so the corpus never shuffles and the
-    * full-vector fetch is one narrow pass; query vectors broadcast at the
-    * NQueryVecs contract. Both ranks are the two-stage partial top-k.
-    * Output schema matches [[bruteForceTopK]] (query_id, neighbor_id,
-    * dot, rank) — recall is a direct join, and the DuckDB oracle replays
-    * shortlist → exact dot → re-rank with the same tie order.
-    */
-  def pqRerankTopK(spark: SparkSession, sfDir: String): DataFrame =
-    pqRerankTopKFrom(
-      embeddings(spark, sfDir)
-        .select(col("vec_id"), quantized(col("embedding")).as("q")))
-
-  def pqRerankTopKFrom(e: DataFrame): DataFrame =
-    exactRerank(e, topKPerQuery(pqAdcScores(e), PqRerankR))
-
-  /** IVF-PQ — the two scale paths COMPOSED, and the canonical big-corpus
-    * ANN index shape (the FAISS `IVFx,PQy` family): the IVF coarse
-    * quantizer prunes WHICH vectors are scored (only the probed lists),
-    * and PQ compresses WHAT is stored per vector (4-byte codes, not
-    * 256-byte vectors) — so the inverted lists themselves hold codes and
-    * the full-precision corpus is never read at query time at all.
-    *
-    * Index build: the centroid assignment and the PQ encode are both
-    * `groupBy(vec_id)` aggregates, so the (assignment ⋈ codes) zip is a
-    * join of two frames already hash-partitioned on vec_id — no extra
-    * exchange (plan-gated). Query: probes rank the broadcast centroids
-    * (queries × nlist, never corpus rows), each probe row carries its
-    * query's M×K LUT (the two tiny frames join before fanning out), and
-    * the probe side takes the same size-gated broadcast/shuffle-hash
-    * dispatch as [[ivfTopKWithCents]] — above the gate both sides
-    * shuffle on centroid_id, the key the lists were built on. Scoring is
-    * 4 integer LUT lookups per candidate code; ranking is the two-stage
-    * [[topKPerQuery]]. Integer arithmetic throughout; the DuckDB oracle
-    * composes the IVF CTEs in front of the PQ CTEs exactly as the plan
-    * does.
-    */
-  def ivfPqTopK(spark: SparkSession, sfDir: String,
-      centroidStride: Long = IvfCentroidStride,
-      nprobe: Int = IvfNProbe,
-      maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes)
-      : DataFrame =
-    ivfPqTopKFrom(
-      embeddings(spark, sfDir)
-        .select(col("vec_id"), quantized(col("embedding")).as("q")),
-      centroidStride, nprobe, maxProbeBroadcastBytes)
-
-  def ivfPqTopKFrom(e: DataFrame,
-      centroidStride: Long = IvfCentroidStride,
-      nprobe: Int = IvfNProbe,
-      maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes)
-      : DataFrame =
-    topKPerQuery(
-      ivfPqAdcScores(e, centroidStride, nprobe, maxProbeBroadcastBytes),
-      TopK).withColumnRenamed("dot", "adc")
-
-  /** The raw probed-list ADC scoring stage of [[ivfPqTopKFrom]], exposed so
-    * [[ivfPqRerankTopKFrom]] can take a wider shortlist off the same plan.
-    */
-  def ivfPqAdcScores(e: DataFrame,
-      centroidStride: Long = IvfCentroidStride,
-      nprobe: Int = IvfNProbe,
-      maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes,
-      pqM: Int = PqM, pqK: Int = PqK, pqStride: Long = PqCodeStride)
-      : DataFrame = {
-    val subDim = EmbDim / pqM
-    val cents = ivfSeedCentroids(e, centroidStride)
-    val nlist = cents.select("centroid_id").count()
-    val cbook = pqCodebook(e, pqM, pqK, pqStride)
-    // the inverted lists store CODES: (centroid_id, vec_id, codes[M]) —
-    // vec_id-copartitioned zip of the two index-build aggregates
-    val lists = ivfAssignmentsWithCents(e, cents)
-      .select("vec_id", "centroid_id")
-      .join(pqEncode(e, cbook, pqM), Seq("vec_id"))
-    val queries = e.filter(col("vec_id") < NQueryVecs)
-      .select(col("vec_id").as("query_id"), col("q").as("qv"))
-    val luts = queries
-      .join(broadcast(cbook))
-      .withColumn("lv",
-        intDot(slice(col("qv"), col("m") * subDim + lit(1), lit(subDim)),
-          col("cw")))
-      .groupBy("query_id")
-      .agg(sort_array(collect_list(struct(col("m"), col("k"), col("lv"))))
-        .as("ml"))
-      .select(col("query_id"), transform(col("ml"), s => s("lv")).as("lut"))
-    val effNprobe = math.max(nprobe.toLong, nlist / 8L)
-    val probeBytes = NQueryVecs.toLong * effNprobe * IvfProbeRowBytes
-    val broadcastProbes = probeBytes <= maxProbeBroadcastBytes
-    val probes = queries.join(broadcast(cents))
-      .withColumn("dist", intL2(col("qv"), col("cv")))
-      .withColumn("nlist",
-        count(lit(1)).over(Window.partitionBy("query_id")))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(asc("dist"), asc("centroid_id"))))
-      .filter(col("crank") <=
-        greatest(lit(nprobe.toLong), floor(col("nlist") / lit(8.0)).cast("long")))
-      .select(col("query_id"), col("centroid_id"))
-      // both frames are queries-sized, but the strategy must not depend on
-      // Catalyst's stat estimate (the composed rerank plan inflated it past
-      // the broadcast threshold and fell to SMJ): dispatch on the same gate
-      // as the probe join — broadcast at bounded query load, shuffle-hash
-      // on query_id above it (uniform keys, both sides ~|Q| rows)
-      .join(
-        if (broadcastProbes) broadcast(luts) else luts.hint("shuffle_hash"),
-        Seq("query_id"))
-    val probeSide =
-      if (broadcastProbes) broadcast(probes) else probes.hint("shuffle_hash")
-    probeSide.join(lists, Seq("centroid_id"))
-      .withColumn("dot",
-        (0 until pqM).map(m =>
-          element_at(col("lut"),
-            (col("codes")(m) + lit(m * pqK + 1)).cast("int")))
-          .reduce(_ + _))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("dot"))
-  }
-
-  /** Recall@k of PLAIN (non-residual) IVF-PQ at the RESIDUAL grid — the
-    * sharper attribution control next to [[pqFineRecallAtK]]: same IVF
-    * coverage, same M×K code budget, only the residual decomposition +
-    * exact centroid share differ from [[ivfPqResRecallAtK]].
-    */
-  def ivfPqFineRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), quantized(col("embedding")).as("q"))
-    val fine = topKPerQuery(
-      ivfPqAdcScores(e, pqM = ResPqM, pqK = ResPqK,
-        pqStride = ResPqCodeStride), TopK)
-      .select("query_id", "neighbor_id")
-    val hit = bf.join(fine, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
-  }
-
-  /** IVF-PQ + exact re-rank — the full production ANN stack (FAISS's
-    * `IVFx,PQy` + refine): coarse pruning bounds WHICH codes are scanned,
-    * PQ bounds their SIZE, and the exact pass touches full-precision
-    * vectors for only the ADC top-R per query. The three stages compose
-    * the plans already gated individually: probed-list ADC scan →
-    * two-stage top-R shortlist → [[exactRerank]]'s broadcast fetch-back.
-    */
-  def ivfPqRerankTopK(spark: SparkSession, sfDir: String): DataFrame =
-    ivfPqRerankTopKFrom(
-      embeddings(spark, sfDir)
-        .select(col("vec_id"), quantized(col("embedding")).as("q")))
-
-  def ivfPqRerankTopKFrom(e: DataFrame,
-      centroidStride: Long = IvfCentroidStride,
-      nprobe: Int = IvfNProbe,
-      maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes)
-      : DataFrame =
-    exactRerank(e, topKPerQuery(
-      ivfPqAdcScores(e, centroidStride, nprobe, maxProbeBroadcastBytes),
-      PqRerankR))
-
-  /** Residual-PQ code geometry: M=8 subspaces of 8 dims × K=64 codewords
-    * = 48 bits (6 B) of code payload per vector — ×42 compression against
-    * 256 B float vectors, vs the plain path's M=4×K=16 (16 bits). The
-    * finer grid is WHY the residual path recalls materially: measured at
-    * sf0.1 uniform, the residual formulation at the plain dials only buys
-    * 0.063 → 0.075 (the 2-bits-per-16-dims granularity floor dominates
-    * everything), while per-subspace quantization error shrinks with
-    * K^(2/subDim) — ~6 bits over 8 dims is past the knee. Stride 8 puts
-    * the FIRST codeword source row at vec_id 8 — the smallest corpus id
-    * (ids < NQueryVecs are queries; a stride whose first multiple falls
-    * below it silently loses codeword k=0 and misaligns the LUT) — and
-    * K=61 keeps the last one (8·61=488) inside the 492-row sf0.01 verify
-    * corpus; coprime to the centroid stride 31.
-    */
-  val ResPqM = 8
-  val ResPqSubDim = EmbDim / ResPqM // 8
-  val ResPqK = 61
-  val ResPqCodeStride = 8L
-
-  /** Fixed Lloyd iterations for the refined residual codebook — fixed so
-    * the DuckDB oracle unrolls the refinement as CTEs, exactly like
-    * [[ivfKmeansCentroidsFrom]].
-    */
-  val ResPqKmeansIters = 1
-
-  /** Per-subspace Lloyd refinement of a PQ codebook over any prepared
-    * (vec_id, q) frame — the k-means step the seed (stride-sample)
-    * codebook lacks: assign every (vector, subspace) subvector to its
-    * argmin codeword (the same `min(struct)` aggregate as the encode —
-    * map-side combined, never a window), then each codeword moves to the
-    * element-wise floor-mean of its assigned subvectors (subDim `sum`
-    * buffers + a count per (m, k) group; division in double — exact:
-    * |per-dim sum| ≤ 2000·n ≪ 2^53). Codewords that capture nothing
-    * drop (standard Lloyd on sampled seeds — K can only shrink; codes
-    * and LUTs key on the surviving (m, k) pairs either way). Each
-    * iteration costs one corpus×K broadcast-scored argmin plus a
-    * K-group aggregate — the PQ-subspace analog of
-    * [[ivfKmeansCentroidsFrom]]'s shape, same plan gates.
+  /** Per-subspace Lloyd refinement of a PQ codebook: assign every (vector,
+    * subspace) subvector to its argmin codeword (the encode's `min(struct)`
+    * aggregate), then move each codeword to the element-wise floor-mean of
+    * what it captured (subDim `sum` buffers + a count per (m, k); division
+    * in double — exact: |per-dim sum| ≤ 2000·n ≪ 2^53). A codeword that
+    * captures nothing drops, so K can only shrink; the LUT is addressed by
+    * m·K + k ([[pqLuts]]), so a dropped codeword shifts no other.
     */
   def pqKmeansCodebook(e: DataFrame, m: Int, k: Int, stride: Long,
       iters: Int): DataFrame = {
@@ -2641,114 +2161,156 @@ object TrainingOps {
     cb
   }
 
-  /** RESIDUAL IVF-PQ (r4 verdict #3) — the standard IVF-PQ formulation
-    * (Jégou et al., "Product Quantization for Nearest Neighbor Search",
-    * TPAMI 2011 §IV: encode the residual, not the vector): each corpus
-    * vector stores PQ codes of r = x − c(x), its offset FROM its assigned
-    * centroid, and the inner-product score decomposes exactly as
-    *
-    *   dot(q, x) = dot(q, c(x))  [exact — one integer dot per PROBE, not
-    *                              per candidate: constant within a list]
-    *             + dot(q, r)     [ADC over the residual codebook]
-    *
-    * so the quantization error applies only to the residual mass — the
-    * part of the vector the coarse quantizer did NOT explain — instead of
-    * the whole vector, and the codes run the finer [[ResPqM]]×[[ResPqK]]
-    * grid (see above). Attribution is MEASURED, not assumed (the
-    * finegrid control rows in the bench JSON): on the structure-free
-    * uniform fixture the grid is the lever and residual-vs-plain at the
-    * same grid is inside the 8-query noise band; on the CLUSTERED corpus
-    * (x ≈ c + small r — the data shape the formulation exists for) the
-    * residual path's win is real and recorded
-    * ([[ivfPqResRecallClustered]]). Same
-    * scale shape as the plain path — the residual subtract is one
-    * row-local `zip_with` on the assignment output, the codebook is the
-    * stride sample's RESIDUALS, probes carry one extra long (cdot), and
-    * every join keeps the size-gated broadcast/shuffle-hash dispatch.
-    * Integer arithmetic throughout; the DuckDB oracle inserts a `resid`
-    * CTE and scores `MAX(cdot) + SUM(lv)` per (query, neighbor) — exact
-    * because each vector lives in exactly one list.
-    */
-  def ivfPqResTopK(spark: SparkSession, sfDir: String,
-      centroidStride: Long = IvfCentroidStride,
-      nprobe: Int = IvfNProbe,
-      maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes)
-      : DataFrame =
-    ivfPqResTopKFrom(
-      embeddings(spark, sfDir)
-        .select(col("vec_id"), quantized(col("embedding")).as("q")),
-      centroidStride, nprobe, maxProbeBroadcastBytes)
+  // ----------------------------------------------------- the ANN plan ---
 
-  def ivfPqResTopKFrom(e: DataFrame,
-      centroidStride: Long = IvfCentroidStride,
-      nprobe: Int = IvfNProbe,
-      maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes)
-      : DataFrame =
-    topKPerQuery(
-      ivfPqResAdcScores(e, centroidStride, nprobe, maxProbeBroadcastBytes),
-      TopK).withColumnRenamed("dot", "adc")
+  /** [[annTopK]] over the quantized embedding table. */
+  def annTopK(spark: SparkSession, sfDir: String, ix: AnnIndex): DataFrame =
+    annTopK(quantizedEmbeddings(spark, sfDir), ix)
 
-  /** The probed-list residual-ADC scoring stage of [[ivfPqResTopKFrom]],
-    * exposed for the rerank composition.
+  /** Plans an ANN index over any prepared (vec_id, q) frame: the first
+    * [[NQueryVecs]] ids query the rest. Four stages:
+    *  1. candidate generation pairs each query with the corpus vectors it
+    *     scores ([[annScores]]);
+    *  2. one scoring kernel scores every pair from its code ([[kernel]]);
+    *  3. [[topKPerQuery]] keeps the top k per query, or the top R when the
+    *     index re-ranks;
+    *  4. [[exactRerank]] re-scores those R with the full vectors.
+    * Output (query_id, neighbor_id, dot, rank). A raw PQ score approximates
+    * the dot and is named `adc` instead. Integer arithmetic throughout, so
+    * the DuckDB oracle replays every stage exactly.
     */
-  def ivfPqResAdcScores(e: DataFrame,
-      centroidStride: Long = IvfCentroidStride,
-      nprobe: Int = IvfNProbe,
-      maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes,
-      refineIters: Int = 0)
-      : DataFrame = {
-    val cents = ivfSeedCentroids(e, centroidStride)
-    val nlist = cents.select("centroid_id").count()
-    // residual frame: assignment output (already carries q) ⋈ broadcast
-    // centroids, one row-local element-wise subtract — r is the only
-    // vector the PQ stages ever see
-    val resid = ivfAssignmentsWithCents(e, cents)
-      .join(broadcast(cents), Seq("centroid_id"))
-      .select(col("vec_id"), col("centroid_id"),
-        zip_with(col("q"), col("cv"), (a, b) => a - b).as("r"))
-    val residAsQ = resid.select(col("vec_id"), col("r").as("q"))
-    // codebook = the stride sample's residual subvectors, on the FINER
-    // residual grid ([[ResPqM]]×[[ResPqK]]); encode = the shared
-    // per-subspace argmin aggregate, now over residuals. refineIters > 0
-    // Lloyd-refines it ([[pqKmeansCodebook]]); the refined table is
-    // materialized ONCE to the driver (≤ M·K rows, broadcast into both
-    // downstream joins anyway — the same rationale as
-    // [[ivfKmeansTopKFrom]]: lazy, the refinement chain would run twice)
-    val cbook =
-      if (refineIters <= 0)
-        pqCodebook(residAsQ, ResPqM, ResPqK, ResPqCodeStride)
-      else {
-        val refined = pqKmeansCodebook(residAsQ, ResPqM, ResPqK,
-          ResPqCodeStride, refineIters)
-        val rows = refined.collect()
-        val spark = e.sparkSession
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
-          refined.schema)
-      }
-    val lists = resid.select("vec_id", "centroid_id")
-      .join(pqEncode(residAsQ, cbook, ResPqM), Seq("vec_id"))
+  def annTopK(e: DataFrame, ix: AnnIndex, k: Int = TopK): DataFrame = {
+    val scored = annScores(e, ix)
+    (ix.rerank, ix.code) match {
+      case (Some(r), _) => exactRerank(e, topKPerQuery(scored, r), k)
+      case (None, _: AnnIndex.PqCode) =>
+        topKPerQuery(scored, k).withColumnRenamed("dot", "adc")
+      case (None, _) => topKPerQuery(scored, k)
+    }
+  }
+
+  /** Stages 1–2 of [[annTopK]]: every candidate pair with its kernel score
+    * (query_id, neighbor_id, dot). For AllVectors the query side broadcasts
+    * into the corpus scan and the corpus never shuffles; Lsh and Ivf: see
+    * [[lshPairs]] and [[ivfPairs]].
+    */
+  def annScores(e: DataFrame, ix: AnnIndex): DataFrame = {
+    import AnnIndex._
+    require(!ix.code.isInstanceOf[ResidualPq] ||
+        ix.candidates.isInstanceOf[Ivf],
+      "residual PQ encodes x − c(x) against an IVF centroid: it needs Ivf " +
+        "candidates")
     val queries = e.filter(col("vec_id") < NQueryVecs)
-      .select(col("vec_id").as("query_id"), col("q").as("qv"))
-    val luts = queries
-      .join(broadcast(cbook))
-      .withColumn("lv",
-        intDot(
-          slice(col("qv"), col("m") * ResPqSubDim + lit(1),
-            lit(ResPqSubDim)),
-          col("cw")))
-      .groupBy("query_id")
-      .agg(sort_array(collect_list(struct(col("m"), col("k"), col("lv"))))
-        .as("ml"))
-      .select(col("query_id"), transform(col("ml"), s => s("lv")).as("lut"))
-    val effNprobe = math.max(nprobe.toLong, nlist / 8L)
-    val probeBytes = NQueryVecs.toLong * effNprobe * IvfProbeRowBytes
-    val broadcastProbes = probeBytes <= maxProbeBroadcastBytes
-    // probes carry the EXACT centroid share of the score (cdot) — one dot
-    // per (query, probed list), amortized over every candidate in it
-    val probes = queries.join(broadcast(cents))
-      .withColumn("dist", intL2(col("qv"), col("cv")))
-      .withColumn("cdot", intDot(col("qv"), col("cv")))
+      .select(col("vec_id").as("query_id"), col("q"))
+    val corpus = e.filter(col("vec_id") >= NQueryVecs)
+    val pairs = ix.candidates match {
+      case AllVectors =>
+        val code = encoder(ix.code, e, corpus, queries)
+        broadcast(code.queries(queries).select("query_id", "qv"))
+          .join(code.corpus(corpus).select("vec_id", "nv"))
+      case Lsh(probes) =>
+        lshPairs(e, probes, encoder(ix.code, e, corpus, queries))
+      case ivf: Ivf => ivfPairs(e, corpus, queries, ivf, ix.code)
+    }
+    pairs.select(col("query_id"), col("vec_id").as("neighbor_id"),
+      kernel(ix.code).as("dot"))
+  }
+
+  /** LSH candidates: a pair is a candidate when it shares a (band_idx,
+    * band_val) key, so the band join shuffles on bounded, uniform keys
+    * where brute force would shuffle |Q|×|C|. Multi-probe runs on the
+    * query side only: each band probes its value and up to 4 Hamming-1
+    * flips of it — probe count × lookups, never a corpus rescan (the
+    * corpus keeps its 4 stored bands per vector).
+    */
+  private def lshPairs(e: DataFrame, probes: Int, code: Encoder)
+      : DataFrame = {
+    require(probes >= 1 && probes <= 5,
+      s"probesPerBand must be in 1..5 (exact + up to 4 Hamming-1 flips " +
+        s"of a 4-bit band), got $probes")
+    val banded = e.join(lshSignatures(e), Seq("vec_id"))
+      .select(col("vec_id"), col("q"), col("bucket"),
+        explode(sequence(lit(0), lit(LshBands - 1))).as("band_idx"))
+      .withColumn("band_val",
+        expr("shiftright(bucket, CAST(band_idx * 4 AS INT)) & 15"))
+      .drop("bucket")
+    val qs = code.queries(banded.filter(col("vec_id") < NQueryVecs)
+        .select(col("vec_id").as("query_id"), col("q"), col("band_idx"),
+          col("band_val"),
+          explode(sequence(lit(0), lit(probes - 1))).as("flip"))
+        .withColumn("band_val",
+          expr("CAST(band_val ^ (CASE WHEN flip = 0 THEN 0 " +
+            "ELSE shiftleft(1, CAST(flip - 1 AS INT)) END) AS BIGINT)"))
+        .drop("flip"))
+      .select("query_id", "qv", "band_idx", "band_val")
+    val cs = code.corpus(banded.filter(col("vec_id") >= NQueryVecs))
+      .select(col("vec_id"), col("nv"), col("band_idx").as("band_idx_c"),
+        col("band_val").as("band_val_c"))
+    qs.join(cs, col("band_idx") === col("band_idx_c") &&
+        col("band_val") === col("band_val_c"))
+      .select("query_id", "vec_id", "qv", "nv")
+      .dropDuplicates("query_id", "vec_id")
+  }
+
+  /** IVF candidates: each query scores the lists of its probed centroids
+    * ([[ivfProbes]]); the lists are the corpus assignment
+    * ([[ivfAssignmentsWithCents]]) carrying each vector's code — for
+    * residual PQ, the code of x − c(x). Lloyd-refined centroids are
+    * [[materialized]] once: they feed the probe ranking, the assignment and
+    * the nlist count. The probe side is size-gated (r3 verdict "What's
+    * wrong" #2: a FORCED broadcast builds one in-memory table at real query
+    * load — 10^6 queries × 20 probes × 600 B is 12 GB): below the gate it
+    * broadcasts and the corpus lists never shuffle; above it both sides
+    * shuffle-hash on centroid_id, the key the lists were built on. The
+    * estimate uses two scalars known up front (nlist × the query bound),
+    * never the probe frame; results are identical on both paths.
+    */
+  private def ivfPairs(e: DataFrame, corpus: DataFrame, queries: DataFrame,
+      ivf: AnnIndex.Ivf, code: AnnIndex.Code): DataFrame = {
+    val (cents, nlist) =
+      if (ivf.kmeansIters > 0)
+        materialized(ivfKmeansCentroidsFrom(e, ivf.centroidStride,
+          ivf.kmeansIters))
+      else {
+        val seed = ivfSeedCentroids(e, ivf.centroidStride)
+        // prunes to a vec_id-only scan (q never computed)
+        (seed, seed.select("centroid_id").count())
+      }
+    val probeBytes = NQueryVecs.toLong *
+      math.max(ivf.nprobe.toLong, nlist / 8L) * IvfProbeRowBytes
+    val gate: DataFrame => DataFrame =
+      if (probeBytes <= ivf.maxProbeBroadcastBytes) broadcast(_)
+      else _.hint("shuffle_hash")
+    val assigned = ivfAssignmentsWithCents(e, cents)
+    val (source, lists) = code match {
+      case _: AnnIndex.ResidualPq =>
+        val resid = assigned.join(broadcast(cents), Seq("centroid_id"))
+          .select(col("vec_id"), col("centroid_id"),
+            zip_with(col("q"), col("cv"), (a, b) => a - b).as("q"))
+        (resid, resid)
+      case _ => (corpus, assigned)
+    }
+    val enc = encoder(code, e, source, queries, gate)
+    gate(enc.queries(ivfProbes(queries, cents, ivf.nprobe))
+        .select("query_id", "qv", "centroid_id", "cdot"))
+      .join(enc.corpus(lists).select("vec_id", "centroid_id", "nv"),
+        Seq("centroid_id"))
+  }
+
+  /** Each query's probed lists (query_id, q, centroid_id, cdot): its nearest
+    * centroids by (L2² asc, centroid_id asc), with the exact per-probe
+    * centroid dot. The window ranks queries × nlist rows, never corpus rows.
+    * The EFFECTIVE nprobe is max(nprobe, nlist/8): with stride-sampled
+    * centroids nlist grows with the corpus, and a fixed probe count would
+    * shrink coverage — and recall — as data scales (measured: 0.60 at
+    * nlist=16 vs 0.22 at nlist=160 with nprobe pinned to 4). nlist is read
+    * in-plan as a window count.
+    */
+  private def ivfProbes(queries: DataFrame, cents: DataFrame, nprobe: Int)
+      : DataFrame =
+    queries.join(broadcast(cents))
+      .withColumn("dist", intL2(col("q"), col("cv")))
+      .withColumn("cdot", intDot(col("q"), col("cv")))
       .withColumn("nlist",
         count(lit(1)).over(Window.partitionBy("query_id")))
       .withColumn("crank", row_number().over(
@@ -2756,126 +2318,117 @@ object TrainingOps {
           .orderBy(asc("dist"), asc("centroid_id"))))
       .filter(col("crank") <=
         greatest(lit(nprobe.toLong), floor(col("nlist") / lit(8.0)).cast("long")))
-      .select(col("query_id"), col("centroid_id"), col("cdot"))
-      .join(
-        if (broadcastProbes) broadcast(luts) else luts.hint("shuffle_hash"),
-        Seq("query_id"))
-    val probeSide =
-      if (broadcastProbes) broadcast(probes) else probes.hint("shuffle_hash")
-    probeSide.join(lists, Seq("centroid_id"))
-      .withColumn("dot",
-        col("cdot") + (0 until ResPqM).map(m =>
-          element_at(col("lut"),
-            (col("codes")(m) + lit(m * ResPqK + 1)).cast("int")))
-          .reduce(_ + _))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("dot"))
+      .select("query_id", "q", "centroid_id", "cdot")
+
+  /** A code's two payloads, as functions over candidate rows: `corpus` maps
+    * rows carrying (vec_id, q) to rows carrying the stored code nv, and
+    * `queries` maps rows carrying (query_id, q) to rows carrying the query
+    * side qv (a vector, or a PQ LUT).
+    */
+  private final case class Encoder(corpus: DataFrame => DataFrame,
+      queries: DataFrame => DataFrame)
+
+  /** The [[Encoder]] of a code. `source` (vec_id, q) trains and encodes PQ
+    * codes; `e` is the whole table (SQ8's affine bounds span it); `gate` is
+    * the join strategy for attaching LUTs to probe rows.
+    *  - Flat / Prefix: row-local projections.
+    *  - SQ8 (FAISS SQ8): c_d = (x_d − gmin)·255 div (gmax − gmin) with two
+    *    table-global scalars broadcast in. Queries stay full precision:
+    *    Σ q_d·dequant(c_d) = gmin·Σ q_d + step·Σ q_d·c_d, so ranking by the
+    *    integer code dot IS the dequantized ranking — no float materializes.
+    *    Every shifted component is non-negative, so Spark's `div` and
+    *    DuckDB's `//` agree.
+    *  - PQ: codes from [[pqEncode]] and LUTs from [[pqLuts]] over the seed
+    *    or [[materialized]] Lloyd-refined codebook, joined onto the rows on
+    *    their id.
+    */
+  private def encoder(code: AnnIndex.Code, e: DataFrame, source: DataFrame,
+      queries: DataFrame, gate: DataFrame => DataFrame = identity)
+      : Encoder = code match {
+    case AnnIndex.Flat =>
+      Encoder(_.withColumn("nv", col("q")), _.withColumn("qv", col("q")))
+    case AnnIndex.Prefix =>
+      val prefix = slice(col("q"), 1, MrlPrefixDims)
+      Encoder(_.withColumn("nv", prefix), _.withColumn("qv", prefix))
+    case AnnIndex.Sq8 =>
+      val bounds = broadcast(e.agg(min(array_min(col("q"))).as("gmin"),
+        max(array_max(col("q"))).as("gmax")))
+      Encoder(_.crossJoin(bounds).withColumn("nv",
+          expr("transform(q, x -> (x - gmin) * 255L div (gmax - gmin))")),
+        _.withColumn("qv", col("q")))
+    case pq: AnnIndex.PqCode =>
+      val g = pq.grid
+      val cb =
+        if (pq.kmeansIters <= 0) pqCodebook(source, g.m, g.k, g.stride)
+        else materialized(
+          pqKmeansCodebook(source, g.m, g.k, g.stride, pq.kmeansIters))._1
+      Encoder(
+        attach("vec_id",
+          pqEncode(source, cb, g.m).withColumnRenamed("codes", "nv"), identity),
+        attach("query_id", pqLuts(queries, cb, g), gate))
   }
 
-  /** Residual IVF-PQ with the Lloyd-REFINED residual codebook (oracled
-    * as q_emb_ivfpq_res_kmeans_topk): the seed codebook is a stride
-    * SAMPLE of residual subvectors — typical points, not central ones —
-    * and one k-means step moves each codeword to the floor-mean of what
-    * it actually captures, shrinking per-subspace quantization error the
-    * way [[ivfKmeansCentroidsFrom]] does for the coarse quantizer. The
-    * classic k-means SSE-monotonicity law (one step never increases the
-    * total assignment error, up to the integer-floor slack) is spec'd in
-    * ResidualPqSpec; recall measured as
-    * `ann_ivfpq_res_kmeans_recall_at_10`.
+  /** Joins a per-id payload table onto candidate rows; rows that carry
+    * nothing but (id, q) are replaced by the table outright.
     */
-  def ivfPqResKmeansTopK(spark: SparkSession, sfDir: String): DataFrame =
-    topKPerQuery(
-      ivfPqResAdcScores(
-        embeddings(spark, sfDir)
-          .select(col("vec_id"), quantized(col("embedding")).as("q")),
-        refineIters = ResPqKmeansIters),
-      TopK).withColumnRenamed("dot", "adc")
-
-  /** Recall@k of the refined-codebook residual stack vs brute force. */
-  def ivfPqResKmeansRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val ip = ivfPqResKmeansTopK(spark, sfDir)
-      .select("query_id", "neighbor_id")
-    val hit = bf.join(ip, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
+  private def attach(id: String, table: DataFrame,
+      strategy: DataFrame => DataFrame)(rows: DataFrame): DataFrame = {
+    val carried = rows.columns.filterNot(c => c == id || c == "q")
+    if (carried.isEmpty) table
+    else rows.select((id +: carried).map(col): _*).join(strategy(table), id)
   }
 
-  /** Residual IVF-PQ + exact re-rank — [[ivfPqResAdcScores]] composed
-    * with the shared [[exactRerank]] tail (the FAISS `IVFx,PQy` + refine
-    * stack over the residual encoding).
+  /** Per-query ADC lookup table (query_id, qv): lv = dot(query subvector m,
+    * codeword (m, k)) — M·K longs per query, never a corpus-sized frame —
+    * as a dense array addressed by m·K + k, never by list position: a
+    * codeword Lloyd dropped leaves its slot null (no code points at it), so
+    * every other codeword keeps its address.
     */
-  def ivfPqResRerankTopK(spark: SparkSession, sfDir: String): DataFrame =
-    ivfPqResRerankTopKFrom(
-      embeddings(spark, sfDir)
-        .select(col("vec_id"), quantized(col("embedding")).as("q")))
-
-  def ivfPqResRerankTopKFrom(e: DataFrame,
-      centroidStride: Long = IvfCentroidStride,
-      nprobe: Int = IvfNProbe,
-      maxProbeBroadcastBytes: Long = DefaultIvfProbeMaxBroadcastBytes)
-      : DataFrame =
-    exactRerank(e, topKPerQuery(
-      ivfPqResAdcScores(e, centroidStride, nprobe, maxProbeBroadcastBytes),
-      PqRerankR))
-
-  /** Recall@k of residual IVF-PQ vs exact brute force — what moving the
-    * quantization to residuals buys over [[ivfPqRecallAtK]] at the same
-    * bytes/vector.
-    */
-  def ivfPqResRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val ip = ivfPqResTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val hit = bf.join(ip, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
+  private def pqLuts(queries: DataFrame, cb: DataFrame,
+      g: AnnIndex.PqGrid): DataFrame = {
+    val subDim = EmbDim / g.m
+    queries.join(broadcast(cb))
+      .withColumn("lv",
+        intDot(slice(col("q"), col("m") * subDim + lit(1), lit(subDim)),
+          col("cw")))
+      .groupBy("query_id")
+      .agg(map_from_entries(collect_list(struct(
+        (col("m") * g.k + col("k")).cast("int"), col("lv")))).as("lm"))
+      .select(col("query_id"),
+        transform(sequence(lit(0), lit(g.m * g.k - 1)),
+          i => element_at(col("lm"), i)).as("qv"))
   }
 
-  /** Residual vs plain codes at the SAME grid on the CLUSTERED corpus —
-    * the data shape the residual formulation exists for: with real
-    * cluster structure the residual norm is a fraction of the vector
-    * norm (x ≈ c + small r), so quantizing r at the same code budget
-    * is far finer-grained than quantizing x, and the exact cdot term
-    * carries most of the score. On the uniform fixture both paths are
-    * within noise of each other (|Q|=8 resolution — recorded by the
-    * finegrid control rows); this pair is the measured demonstration
-    * that the decomposition pays exactly where its theory says.
-    * Returns (residual, plain-fine) recall@10.
+  /** The one scoring kernel, per candidate row (qv, nv, cdot). It follows
+    * the IVF-PQ split dot(q, x) = dot(q, c(x)) + dot(q, x − c(x)) (Jégou et
+    * al., "Product Quantization for Nearest Neighbor Search", TPAMI 2011
+    * §IV):
+    *  - vector codes (flat, prefix, SQ8): the integer dot of qv and nv;
+    *  - PQ (ADC): Σ_m LUT[m·K + codes[m]] — M array lookups per row, no
+    *    join, no float vector touched at scan time;
+    *  - residual PQ: the exact centroid dot of the probe (one dot per
+    *    (query, list), not per candidate) plus the residual's ADC, so the
+    *    quantization error applies only to the mass the coarse quantizer did
+    *    NOT explain.
     */
-  def ivfPqResRecallClustered(spark: SparkSession, sfDir: String)
-      : (Double, Double) = {
-    val e = clusteredCorpus(spark, sfDir)
-    val bf = bruteForceTopKFrom(e).select("query_id", "neighbor_id")
-    val total = bf.count()
-    def rec(df: DataFrame): Double = {
-      val hit = bf.join(df.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id")).count()
-      if (total == 0) 1.0 else hit.toDouble / total
-    }
-    val res = rec(ivfPqResTopKFrom(e))
-    val plainFine = rec(topKPerQuery(
-      ivfPqAdcScores(e, pqM = ResPqM, pqK = ResPqK,
-        pqStride = ResPqCodeStride), TopK))
-    (res, plainFine)
-  }
-
-  /** Recall@k of the residual stack with the exact refine pass. */
-  def ivfPqResRerankRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val ip = ivfPqResRerankTopK(spark, sfDir)
-      .select("query_id", "neighbor_id")
-    val hit = bf.join(ip, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
+  private def kernel(code: AnnIndex.Code): Column = code match {
+    case pq: AnnIndex.PqCode =>
+      val adc = (0 until pq.grid.m).map(m =>
+        element_at(col("qv"),
+          (col("nv")(m) + lit(m * pq.grid.k + 1)).cast("int")))
+        .reduce(_ + _)
+      if (pq.isInstanceOf[AnnIndex.ResidualPq]) col("cdot") + adc else adc
+    case _ => intDot(col("qv"), col("nv"))
   }
 
   /** Exact re-rank of a per-query shortlist: ONLY the shortlist rows ever
-    * touch full vectors — the (query_id, neighbor_id) frame broadcasts
-    * INTO the corpus scan (hash join, corpus never shuffles), query
-    * vectors broadcast at the NQueryVecs contract, exact int-dot, and the
-    * two-stage rank. Shared tail of [[pqRerankTopKFrom]] and
-    * [[ivfPqRerankTopKFrom]].
+    * touch full vectors — the (query_id, neighbor_id) frame broadcasts INTO
+    * the corpus scan (hash join, corpus never shuffles), query vectors
+    * broadcast at the NQueryVecs contract, exact int-dot, and the two-stage
+    * rank.
     */
-  private def exactRerank(e: DataFrame, shortlist: DataFrame): DataFrame = {
+  private def exactRerank(e: DataFrame, shortlist: DataFrame, k: Int)
+      : DataFrame = {
     val short = shortlist.select(col("query_id"), col("neighbor_id"))
     val corpus = e.filter(col("vec_id") >= NQueryVecs)
       .select(col("vec_id").as("neighbor_id"), col("q").as("nv"))
@@ -2886,61 +2439,36 @@ object TrainingOps {
       .join(broadcast(queries), Seq("query_id"))
       .withColumn("dot", intDot(col("qv"), col("nv")))
       .select(col("query_id"), col("neighbor_id"), col("dot"))
-    topKPerQuery(exact, TopK)
+    topKPerQuery(exact, k)
   }
 
-  /** Recall@k of the full IVF-PQ + re-rank stack vs exact brute force. */
-  def ivfPqRerankRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val ip = ivfPqRerankTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val hit = bf.join(ip, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
-  }
-
-  /** Recall@k of IVF-PQ vs exact brute force — coarse-pruning recall loss
-    * (IVF) × code-quantization recall loss (PQ), measured together.
+  /** A small table (≤ nlist centroids or M·K codewords) collected
+    * once and re-parallelized, with its row count. A Lloyd refinement feeds
+    * several consumers; evaluated lazily its iteration chain would run once
+    * per consumer, and a persist would leak one cached frame per call with
+    * no release hook. The table is broadcast into every consumer anyway, so
+    * collecting it costs what the broadcast costs; the refinement itself
+    * still runs as a distributed plan.
     */
-  def ivfPqRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val ip = ivfPqTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val hit = bf.join(ip, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
+  private def materialized(df: DataFrame): (DataFrame, Long) = {
+    val rows = df.collect()
+    val spark = df.sparkSession
+    (spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.toIndexedSeq, 1), df.schema),
+      rows.length.toLong)
   }
 
-  /** Recall@k of the ADC ranking vs exact brute force — the measured cost
-    * of scanning 4-byte codes instead of 256-byte vectors.
-    */
-  def pqRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val pq = pqTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val hit = bf.join(pq, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
-  }
+  // ------------------------------------------------------------ recall ---
 
-  /** Recall@k of the SQ8 code ranking vs exact — 8 bits/dim keeps the
-    * global affine ranking near-faithful (the measured contrast with
-    * PQ's 2 bits/dim at the same corpus).
+  /** recall@k: the share of the exact top-k's (query_id, neighbor_id) pairs
+    * that `approx` also returns.
     */
-  def sqRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val sq = sqTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val hit = bf.join(sq, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
-  }
-
-  /** Recall@k with the exact re-rank behind the ADC shortlist — what the
-    * R-candidate exact pass buys back vs [[pqRecallAtK]]'s raw codes.
-    */
-  def pqRerankRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val pq = pqRerankTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val hit = bf.join(pq, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
+  def recall(truth: DataFrame, approx: DataFrame): Double = {
+    val t = truth.select("query_id", "neighbor_id")
+    val total = t.count()
+    if (total == 0) 1.0
+    else t.join(approx.select("query_id", "neighbor_id"),
+      Seq("query_id", "neighbor_id")).count().toDouble / total
   }
 
   /** A deterministically CLUSTERED quantized corpus with the same row set
@@ -2948,7 +2476,8 @@ object TrainingOps {
     * coordinates are the cluster centroid (md5-derived, ±1000 quant units)
     * plus small per-vector noise (±50). True nearest neighbors are the
     * vector's own cluster members — the data shape IVF's coarse quantizer
-    * is built for, and exactly what the uniform-random fixture lacks.
+    * and residual codes are built for, and exactly what the uniform-random
+    * fixture lacks.
     */
   val ClusterCount = 32
   def clusteredCorpus(spark: SparkSession, sfDir: String): DataFrame = {
@@ -2964,57 +2493,69 @@ object TrainingOps {
       .select("vec_id", "q")
   }
 
-  /** IVF recall on the clustered corpus at the SAME coverage as
-    * [[ivfRecallAtK]] — the measured demonstration that the uniform-random
-    * recall number is a property of the fixture, not the operator: sampled
-    * centroids follow the data distribution, same-cluster vectors share a
-    * nearest centroid, and the probe finds them.
+  /** Every recorded ANN recall as (bench record key, index, on the clustered
+    * corpus?), each measured against the exact top-k of the same corpus.
+    * Bench and tools.AnnRecall both iterate this table. The controls:
+    * `finegrid` rows run plain codes at the residual grid, separating what
+    * the finer M×K buys from what the residual decomposition buys;
+    * `clustered` rows show what the uniform-random fixture hides.
     */
-  def ivfRecallClustered(spark: SparkSession, sfDir: String): Double = {
-    val e = clusteredCorpus(spark, sfDir)
-    val bf = bruteForceTopKFrom(e).select("query_id", "neighbor_id")
-    val ivf = ivfTopKFrom(e).select("query_id", "neighbor_id")
-    val hit = bf.join(ivf, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
+  lazy val AnnRecalls: Seq[(String, AnnIndex, Boolean)] = {
+    import AnnIndex._
+    val fine = Pq(ResidualGrid)
+    Seq(
+      ("ann_recall_at_10", AnnIndex(Lsh()), false),
+      ("ann_ivf_recall_at_10", AnnIndex(Ivf()), false),
+      ("ann_ivf_recall_clustered", AnnIndex(Ivf()), true),
+      ("ann_ivf_kmeans_recall_at_10",
+        AnnIndex(Ivf(kmeansIters = IvfKmeansIters)), false),
+      ("ann_ivf_kmeans_recall_clustered",
+        AnnIndex(Ivf(kmeansIters = IvfKmeansIters)), true),
+      ("ann_pq_recall_at_10", AnnIndex(code = Pq()), false),
+      ("ann_pq_rerank_recall_at_10",
+        AnnIndex(code = Pq(), rerank = Some(PqRerankR)), false),
+      ("ann_sq_recall_at_10", AnnIndex(code = Sq8), false),
+      ("ann_mrl_recall_at_10",
+        AnnIndex(code = Prefix, rerank = Some(MrlShortlistR)), false),
+      ("ann_ivfpq_recall_at_10", AnnIndex(Ivf(), Pq()), false),
+      ("ann_ivfpq_rerank_recall_at_10",
+        AnnIndex(Ivf(), Pq(), Some(PqRerankR)), false),
+      ("ann_ivfpq_res_recall_at_10", AnnIndex(Ivf(), ResidualPq()), false),
+      ("ann_ivfpq_res_rerank_recall_at_10",
+        AnnIndex(Ivf(), ResidualPq(), Some(PqRerankR)), false),
+      ("ann_pq_finegrid_recall_at_10", AnnIndex(code = fine), false),
+      ("ann_ivfpq_finegrid_recall_at_10", AnnIndex(Ivf(), fine), false),
+      ("ann_ivfpq_res_recall_clustered", AnnIndex(Ivf(), ResidualPq()), true),
+      ("ann_ivfpq_res_kmeans_recall_at_10",
+        AnnIndex(Ivf(), ResidualPq(kmeansIters = ResPqKmeansIters)), false),
+      ("ann_ivfpq_finegrid_recall_clustered", AnnIndex(Ivf(), fine), true))
   }
 
-  /** recall@k of each ANN variant vs the exact top-k on the same frame. */
-  private def recallVs(bf: DataFrame, approx: DataFrame): Double = {
-    val truth = bf.select("query_id", "neighbor_id")
-    val hit = truth
-      .join(approx.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id")).count()
-    val total = truth.count()
-    if (total == 0) 1.0 else hit.toDouble / total
+  /** Measures every [[AnnRecalls]] entry: (key, recall@[[TopK]]). */
+  def annRecalls(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
+    val corpus = Map(false -> quantizedEmbeddings(spark, sfDir),
+      true -> clusteredCorpus(spark, sfDir))
+    AnnRecalls.map { case (key, ix, clustered) =>
+      val e = corpus(clustered)
+      key -> recall(annTopK(e, AnnIndex()), annTopK(e, ix))
+    }
   }
 
-  /** IVF recall with Lloyd-refined centroids at the SAME coverage dial as
-    * [[ivfRecallAtK]] — the r3 verdict's expected lift: refinement moves
-    * sampled centroids toward local density, so fixed-coverage probes
-    * capture more of each query's true neighborhood even on the
-    * uniform-random fixture.
+  /** The LSH multi-probe dial: (probes per band, recall@k, candidate pairs
+    * scored) per point — the recall/cost curve. Each probe set contains the
+    * last, so candidates grow monotonically; a non-top-k candidate can never
+    * outrank a true top-k member under the (dot desc, id asc) order, so
+    * recall is monotone too (asserted in LshAnnSpec).
     */
-  def ivfKmeansRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), quantized(col("embedding")).as("q"))
-    recallVs(bruteForceTopKFrom(e), ivfKmeansTopKFrom(e))
-  }
-
-  /** [[ivfKmeansRecallAtK]] on the planted-cluster corpus. */
-  def ivfKmeansRecallClustered(spark: SparkSession, sfDir: String): Double = {
-    val e = clusteredCorpus(spark, sfDir)
-    recallVs(bruteForceTopKFrom(e), ivfKmeansTopKFrom(e))
-  }
-
-  def lshRecallAtK(spark: SparkSession, sfDir: String,
-      probesPerBand: Int = 5): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val lsh = lshBucketTopK(spark, sfDir, probesPerBand)
-      .select("query_id", "neighbor_id")
-    val hit = bf.join(lsh, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
+  val LshCurveProbes = Seq(1, 3, 5)
+  def lshRecallCurve(spark: SparkSession, sfDir: String)
+      : Seq[(Int, Double, Long)] = {
+    val e = quantizedEmbeddings(spark, sfDir)
+    LshCurveProbes.map { p =>
+      val ix = AnnIndex(AnnIndex.Lsh(p))
+      (p, recall(annTopK(e, AnnIndex()), annTopK(e, ix)),
+        annScores(e, ix).count())
+    }
   }
 
   // -------------------------------------------------------------------
@@ -3483,63 +3024,6 @@ object TrainingOps {
           coalesce(col("n_bigrams"), lit(0L))).as("in_distribution"))
   }
 
-  /** Recall@k vs probe count — the measured recall/cost tradeoff of the
-    * multi-probe dial. Returns (probes, recall, candidatePairs) per point;
-    * the exact top-k ground truth is computed once, and candidatePairs is
-    * the size of the bucket-local candidate set each probe level examines
-    * (the cost axis). The candidate set grows monotonically in probes
-    * (each probe set is a superset of the last), and since a non-top-k
-    * candidate can never outrank a true top-k member under the
-    * deterministic (dot desc, id asc) order, recall is monotone too —
-    * asserted in LshAnnSpec.
-    */
-  // ================================ MRL prefix-dim adaptive retrieval ==
-
-  /** Coarse-pass dimensionality for [[mrlTopK]] (the 64-dim vectors'
-    * first 16 components) and the shortlist the full-dim pass re-ranks.
-    */
-  val MrlPrefixDims = 16
-  val MrlShortlistR = 50
-
-  /** MRL-STYLE ADAPTIVE RETRIEVAL (oracled as q_emb_mrl_topk): rank the
-    * corpus by the PREFIX-dim dot (16 of 64 components — the Matryoshka
-    * representation-learning deployment pattern, Kusupati et al. 2022:
-    * embeddings trained so prefixes are themselves usable), keep a
-    * per-query shortlist of R=50, and re-rank only the shortlist with
-    * the full-dimension exact dot (the shared [[exactRerank]] tail).
-    * At 100 TB the coarse pass streams a 4×-narrower corpus (prefix
-    * columns prune at the parquet reader) and full vectors are read for
-    * R rows per query, not n — the same economics as PQ re-rank with
-    * none of the codebook machinery. Honesty note: the fixture
-    * embeddings are NOT matryoshka-trained, so the prefix is just a
-    * fixed 16-dim projection — the measured recall
-    * (ann_mrl_recall_at_10) is the floor a trained prefix improves on,
-    * and the mechanism (prefix rank → exact re-rank, never a recall
-    * loss vs the prefix ranking alone) is what the oracle certifies.
-    */
-  def mrlTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), quantized(col("embedding")).as("q"))
-    val withPref = e.withColumn("p", expr(s"slice(q, 1, $MrlPrefixDims)"))
-    val queries = broadcast(withPref.filter(col("vec_id") < NQueryVecs)
-      .select(col("vec_id").as("query_id"), col("p").as("qp")))
-    val corpus = withPref.filter(col("vec_id") >= NQueryVecs)
-      .select(col("vec_id").as("neighbor_id"), col("p").as("np"))
-    val coarse = queries.join(corpus)
-      .withColumn("dot", intDot(col("qp"), col("np")))
-    val shortlist = topKPerQuery(coarse, MrlShortlistR)
-    exactRerank(e, shortlist)
-  }
-
-  /** Recall@k of the MRL prefix-then-refine stack vs exact search. */
-  def mrlRecallAtK(spark: SparkSession, sfDir: String): Double = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val m = mrlTopK(spark, sfDir).select("query_id", "neighbor_id")
-    val hit = bf.join(m, Seq("query_id", "neighbor_id")).count()
-    val total = bf.count()
-    if (total == 0) 1.0 else hit.toDouble / total
-  }
-
   // ================================ DSIR importance resampling =========
 
   /** Hashed feature space size for [[dsirScores]] (DSIR's hashed n-gram
@@ -3689,71 +3173,5 @@ object TrainingOps {
       .withColumn("is_first",
         col("doc_id") === col("kd") && col("chunk_idx") === col("kc"))
       .select("doc_id", "chunk_idx", "chunk_hash", "n_toks", "is_first")
-  }
-
-  // ================================ scalar-quantized ANN (SQ8) ========
-
-  /** SQ8 ANN (oracled as q_emb_sq_topk): the scalar-quantization member
-    * of the compression family (FAISS SQ8 / the int8 path every vector DB
-    * ships) — 8 bits per dimension via ONE global affine map, 4×
-    * compression with far less loss than PQ's 2 bits/dim. Codes are
-    * c_d = (x_d − gmin)·255 div (gmax − gmin) with CORPUS-GLOBAL gmin /
-    * gmax (two scalars — per-dim ranges would need a 64-entry table; the
-    * global map keeps ranking exactly dequantization-faithful, see
-    * below); queries stay full-precision (asymmetric distance, the
-    * standard SQ search mode).
-    *
-    * Ranking justification: dequant(c) = gmin + c·step with step =
-    * (gmax−gmin)/255 > 0, so Σ q_d·dequant(c_d) = gmin·Σ q_d (constant
-    * per QUERY) + step·Σ q_d·c_d — ranking neighbors by the integer code
-    * dot Σ q_d·c_d is EXACTLY the dequantized ranking, no float ever
-    * materializes. All components non-negative after the shift, so
-    * Spark's `div` and DuckDB's `//` agree.
-    *
-    * Scale shape: gmin/gmax are one row-local array_min/array_max pass +
-    * a two-scalar aggregate broadcast back via crossJoin; encoding is
-    * row-local; scoring reuses the brute-force shape (query side
-    * broadcast, corpus never shuffled, two-stage partial top-k). Recall
-    * vs exact is measured in the bench (ann_sq_recall_at_10) — SQ8
-    * should sit far above PQ's 2-bit recall at the same corpus.
-    */
-  def sqTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), quantized(col("embedding")).as("q"))
-    val bounds = e.agg(
-      min(array_min(col("q"))).as("gmin"),
-      max(array_max(col("q"))).as("gmax"))
-    val coded = e.crossJoin(broadcast(bounds))
-      .select(col("vec_id"),
-        col("q"),
-        expr("transform(q, x -> (x - gmin) * 255L div (gmax - gmin))")
-          .as("code"))
-    val queries = broadcast(coded.filter(col("vec_id") < NQueryVecs)
-      .select(col("vec_id").as("query_id"), col("q").as("qv")))
-    val corpus = coded.filter(col("vec_id") >= NQueryVecs)
-      .select(col("vec_id").as("neighbor_id"), col("code").as("nc"))
-    val scored = queries.join(corpus)
-      .withColumn("dot", intDot(col("qv"), col("nc")))
-    topKPerQuery(scored, TopK)
-  }
-
-  def lshRecallCurve(spark: SparkSession, sfDir: String,
-      probes: Seq[Int] = Seq(1, 3, 5)): Seq[(Int, Double, Long)] = {
-    val bf = bruteForceTopK(spark, sfDir).select("query_id", "neighbor_id")
-      .persist()
-    val total = bf.count()
-    val curve = probes.map { p =>
-      val cands = lshCandidates(spark, sfDir, p)
-        .select("query_id", "neighbor_id", "qv", "nv").persist()
-      val nCands = cands.count()
-      val lsh = topKPerQuery(
-        cands.withColumn("dot", intDot(col("qv"), col("nv"))), TopK)
-        .select("query_id", "neighbor_id")
-      val hit = bf.join(lsh, Seq("query_id", "neighbor_id")).count()
-      cands.unpersist()
-      (p, if (total == 0) 1.0 else hit.toDouble / total, nCands)
-    }
-    bf.unpersist()
-    curve
   }
 }

@@ -4,53 +4,29 @@ import org.apache.spark.sql.SparkSession
 
 import graft.operators.TrainingOps
 
-/** Standalone ANN recall measurement: the banded-LSH multi-probe curve and
-  * the IVF-Flat recall at a given sf dir — the same numbers Bench reports,
-  * runnable without the full bench (used to tune the recall dials).
+/** Standalone ANN recall measurement: the LSH multi-probe curve and every
+  * recall-table row ([[TrainingOps.AnnRecalls]]) at a given sf dir — the
+  * same numbers Bench records, under the same keys, runnable without the
+  * full bench (used to tune the recall dials).
   *
-  * Usage: runMain graft.tools.AnnRecall [sfDir]
+  * Usage: SPARK_GRAFT_CPUS=N runMain graft.tools.AnnRecall [sfDir]
   */
 object AnnRecall {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val curve = TrainingOps.lshRecallCurve(spark, sfDir)
-    curve.foreach { case (p, r, c) =>
+    TrainingOps.lshRecallCurve(spark, sfDir).foreach { case (p, r, c) =>
       println(f"lsh probes=$p recall@10=$r%.3f candidates=$c")
     }
-    val ivf = TrainingOps.ivfRecallAtK(spark, sfDir)
-    println(f"ivf recall@10=$ivf%.3f (uniform-random corpus)")
-    val ivfC = TrainingOps.ivfRecallClustered(spark, sfDir)
-    println(f"ivf recall@10=$ivfC%.3f (planted-cluster corpus, same coverage)")
-    val km = TrainingOps.ivfKmeansRecallAtK(spark, sfDir)
-    println(f"ivf-kmeans recall@10=$km%.3f (uniform-random corpus)")
-    val kmC = TrainingOps.ivfKmeansRecallClustered(spark, sfDir)
-    println(f"ivf-kmeans recall@10=$kmC%.3f (planted-cluster corpus)")
-    val pq = TrainingOps.pqRecallAtK(spark, sfDir)
-    println(f"pq-adc recall@10=$pq%.3f (x64-compressed codes, uniform corpus)")
-    val pqR = TrainingOps.pqRerankRecallAtK(spark, sfDir)
-    println(f"pq-adc+rerank recall@10=$pqR%.3f (exact re-rank of ADC top-${TrainingOps.PqRerankR})")
-    val ivfPq = TrainingOps.ivfPqRecallAtK(spark, sfDir)
-    println(f"ivf-pq recall@10=$ivfPq%.3f (probed lists scored as codes, uniform corpus)")
-    val pqFine = TrainingOps.pqFineRecallAtK(spark, sfDir)
-    println(f"pq-adc-FINEGRID recall@10=$pqFine%.3f (plain codes at the residual M=8 K=61 grid, no IVF — attribution control)")
-    val ivfPqFine = TrainingOps.ivfPqFineRecallAtK(spark, sfDir)
-    println(f"ivf-pq-FINEGRID recall@10=$ivfPqFine%.3f (plain codes at the residual grid WITH IVF — the direct residual comparator)")
-    val ivfPqRes = TrainingOps.ivfPqResRecallAtK(spark, sfDir)
-    println(f"ivf-pq-RES recall@10=$ivfPqRes%.3f (residual codes + exact centroid dot)")
-    val ivfPqResR = TrainingOps.ivfPqResRerankRecallAtK(spark, sfDir)
-    println(f"ivf-pq-RES+rerank recall@10=$ivfPqResR%.3f")
-    val (resC, plainC) = TrainingOps.ivfPqResRecallClustered(spark, sfDir)
-    println(f"ivf-pq-RES recall@10=$resC%.3f vs plain-fine $plainC%.3f (CLUSTERED corpus, same grid/coverage)")
-    val resKm = TrainingOps.ivfPqResKmeansRecallAtK(spark, sfDir)
-    println(f"ivf-pq-RES-kmeans recall@10=$resKm%.3f (Lloyd-refined residual codebook, 1 step)")
-    val ivfPqR = TrainingOps.ivfPqRerankRecallAtK(spark, sfDir)
-    println(f"ivf-pq+rerank recall@10=$ivfPqR%.3f (full stack: coarse prune + codes + exact top-${TrainingOps.PqRerankR} refine)")
+    TrainingOps.annRecalls(spark, sfDir).foreach { case (key, r) =>
+      println(f"$key=$r%.3f")
+    }
     spark.stop()
   }
 }

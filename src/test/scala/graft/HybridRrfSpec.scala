@@ -67,7 +67,7 @@ class HybridRrfSpec extends SparkTestBase {
       .join(text, Seq("query_id", "doc_id"), "left")
       .filter(col("tr").isNull || col("tr") =!= col("text_rank"))
     assert(mismatch.isEmpty, "text_rank must echo the BM25 ranking")
-    val vec = TrainingOps.bruteForceTopK(spark, sf())
+    val vec = TrainingOps.annTopK(spark, sf(), graft.operators.AnnIndex())
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rank").as("vr"))
     val vMismatch = out.filter(col("vec_rank") > 0)

@@ -2,16 +2,27 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.TrainingOps
+import graft.operators.{AnnIndex, TrainingOps}
+import graft.operators.AnnIndex._
 
 /** The ANN scale path (bucket-local top-k) and the LSH-dedup hot-bucket
   * guard — the two VERDICT-r1 gaps in the similarity/near-dup family.
   */
 class LshAnnSpec extends SparkTestBase {
 
+  private def ann(ix: AnnIndex) = TrainingOps.annTopK(spark, sf(), ix)
+  private def e = TrainingOps.quantizedEmbeddings(spark, sf())
+  private def recallOf(ix: AnnIndex) = TrainingOps.recall(ann(AnnIndex()), ann(ix))
+  private def recallClustered(ix: AnnIndex) = {
+    val c = TrainingOps.clusteredCorpus(spark, sf())
+    TrainingOps.recall(TrainingOps.annTopK(c, AnnIndex()),
+      TrainingOps.annTopK(c, ix))
+  }
+  private val ivfKmeans = AnnIndex(Ivf(kmeansIters = TrainingOps.IvfKmeansIters))
+
   test("bucket-local top-k output shape matches brute force; exact on shared candidates") {
-    val lsh = TrainingOps.lshBucketTopK(spark, sf())
-    val bf = TrainingOps.bruteForceTopK(spark, sf())
+    val lsh = ann(AnnIndex(Lsh()))
+    val bf = ann(AnnIndex())
     assert(lsh.columns.toSeq === bf.columns.toSeq)
     // the dot products the two paths compute for the same (query, neighbor)
     // must be identical — LSH only restricts the candidate set
@@ -47,7 +58,7 @@ class LshAnnSpec extends SparkTestBase {
   }
 
   test("recall@10 vs brute force is measured and nontrivial") {
-    val r = TrainingOps.lshRecallAtK(spark, sf())
+    val r = recallOf(AnnIndex(Lsh()))
     assert(r >= 0.0 && r <= 1.0)
     // multi-probe (each band + its 4 Hamming-1 neighbors) measures 0.94
     // at sf0.01; the bar has slack for corpus drift, not for regressions
@@ -62,8 +73,8 @@ class LshAnnSpec extends SparkTestBase {
     // the coarse index is a partition: every corpus vector in exactly one list
     assert(assigned.count() === corpusN)
     assert(assigned.select("vec_id").distinct().count() === corpusN)
-    val ivf = TrainingOps.ivfTopK(spark, sf())
-    val bf = TrainingOps.bruteForceTopK(spark, sf())
+    val ivf = ann(AnnIndex(Ivf()))
+    val bf = ann(AnnIndex())
     assert(ivf.columns.toSeq === bf.columns.toSeq)
     // IVF only restricts the candidate set — shared pairs score identically
     val joined = ivf.select(col("query_id"), col("neighbor_id"),
@@ -73,15 +84,15 @@ class LshAnnSpec extends SparkTestBase {
     assert(joined.filter(col("ivf_dot") =!= col("dot")).count() === 0)
     assert(ivf.select("query_id").distinct().count() ===
       TrainingOps.NQueryVecs.toLong)
-    val r = TrainingOps.ivfRecallAtK(spark, sf())
+    val r = recallOf(AnnIndex(Ivf()))
     // nprobe=4 of ~16 lists: geometric locality must beat the ~25% random-
     // coverage floor for the probe to be doing anything
     assert(r > 0.25, f"IVF recall@10 at or below random coverage: $r%.3f")
   }
 
   test("IVF premise: clustered data at the same coverage recalls ~everything") {
-    val uniform = TrainingOps.ivfRecallAtK(spark, sf())
-    val clustered = TrainingOps.ivfRecallClustered(spark, sf())
+    val uniform = recallOf(AnnIndex(Ivf()))
+    val clustered = recallClustered(AnnIndex(Ivf()))
     // the uniform-random fixture bounds recall near probe coverage; the
     // SAME operator at the SAME coverage on planted clusters must recover
     // essentially all true neighbors (measured 1.000 at sf0.01 and sf0.1)
@@ -92,9 +103,7 @@ class LshAnnSpec extends SparkTestBase {
 
   test("Lloyd-refined IVF: still a partition with exact dots; refinement " +
       "lifts uniform-fixture recall at the same coverage") {
-    val cents = TrainingOps.ivfKmeansCentroidsFrom(
-      TrainingOps.embeddings(spark, sf())
-        .select(col("vec_id"), TrainingOps.quantized(col("embedding")).as("q")))
+    val cents = TrainingOps.ivfKmeansCentroidsFrom(e)
     // refinement keeps seed identity and can only DROP empty lists
     val seedN = TrainingOps.embeddings(spark, sf())
       .filter(col("vec_id") >= TrainingOps.NQueryVecs)
@@ -102,8 +111,8 @@ class LshAnnSpec extends SparkTestBase {
     val kN = cents.count()
     assert(kN > 0 && kN <= seedN)
 
-    val km = TrainingOps.ivfKmeansTopK(spark, sf())
-    val bf = TrainingOps.bruteForceTopK(spark, sf())
+    val km = ann(ivfKmeans)
+    val bf = ann(AnnIndex())
     assert(km.columns.toSeq === bf.columns.toSeq)
     // the refined index still only restricts the candidate set — shared
     // pairs score identically (exact dots, no quantization of scores)
@@ -120,26 +129,24 @@ class LshAnnSpec extends SparkTestBase {
     // even on the uniform-random fixture (measured 0.575 vs 0.400 at
     // sf0.01); the bar has slack for corpus drift, not for a regression
     // to the unrefined coverage bound
-    val stride = TrainingOps.ivfRecallAtK(spark, sf())
-    val refined = TrainingOps.ivfKmeansRecallAtK(spark, sf())
+    val stride = recallOf(AnnIndex(Ivf()))
+    val refined = recallOf(ivfKmeans)
     assert(refined >= stride,
       f"k-means refinement LOWERED recall: $refined%.3f < $stride%.3f")
     // planted-cluster corpus: refinement must preserve the IVF premise
-    val clustered = TrainingOps.ivfKmeansRecallClustered(spark, sf())
+    val clustered = recallClustered(ivfKmeans)
     assert(clustered >= 0.9, f"clustered recall collapsed: $clustered%.3f")
   }
 
   test("PQ re-rank: results come from the ADC shortlist, dots are exact, " +
       "and the exact pass lifts recall over raw codes") {
-    val rer = TrainingOps.pqRerankTopK(spark, sf())
-    val bf = TrainingOps.bruteForceTopK(spark, sf())
+    val rer = ann(AnnIndex(code = Pq(), rerank = Some(TrainingOps.PqRerankR)))
+    val bf = ann(AnnIndex())
     assert(rer.columns.toSeq === bf.columns.toSeq)
     // containment law: the re-rank stage only re-scores, never widens —
     // every output pair must be inside the ADC top-R shortlist
-    val e = TrainingOps.embeddings(spark, sf())
-      .select(col("vec_id"), TrainingOps.quantized(col("embedding")).as("q"))
     val short = TrainingOps.topKPerQuery(
-      TrainingOps.pqAdcScores(e), TrainingOps.PqRerankR)
+      TrainingOps.annScores(e, AnnIndex(code = Pq())), TrainingOps.PqRerankR)
       .select("query_id", "neighbor_id")
     assert(rer.select("query_id", "neighbor_id")
       .join(short, Seq("query_id", "neighbor_id"), "left_anti")
@@ -153,8 +160,9 @@ class LshAnnSpec extends SparkTestBase {
     assert(joined.filter(col("rr_dot") =!= col("dot")).count() === 0)
     // the point of the composition: exact re-ranking of the R-candidate
     // shortlist recovers recall that raw 4-bit codes lose
-    val rawRecall = TrainingOps.pqRecallAtK(spark, sf())
-    val rerRecall = TrainingOps.pqRerankRecallAtK(spark, sf())
+    val rawRecall = recallOf(AnnIndex(code = Pq()))
+    val rerRecall = recallOf(
+      AnnIndex(code = Pq(), rerank = Some(TrainingOps.PqRerankR)))
     assert(rerRecall >= rawRecall,
       f"re-rank recall $rerRecall%.3f fell below raw ADC $rawRecall%.3f")
     assert(rer.select("query_id").distinct().count() ===
@@ -163,14 +171,12 @@ class LshAnnSpec extends SparkTestBase {
 
   test("IVF-PQ: candidates come only from probed lists, ADC scores match " +
       "the flat-PQ scorer, and both dispatch paths agree") {
-    val e = TrainingOps.embeddings(spark, sf())
-      .select(col("vec_id"), TrainingOps.quantized(col("embedding")).as("q"))
-    val res = TrainingOps.ivfPqTopK(spark, sf())
+    val res = ann(AnnIndex(Ivf(), Pq()))
     // scoring-integrity law: each returned pair's adc equals the flat-PQ
     // ADC for that pair — the IVF stage only restricts the candidate set,
     // never changes the scoring (a left join that finds a NULL means
     // IVF-PQ surfaced a pair the PQ scorer can't even produce)
-    val flatAdc = TrainingOps.pqAdcScores(e)
+    val flatAdc = TrainingOps.annScores(e, AnnIndex(code = Pq()))
       .withColumnRenamed("dot", "flat_adc")
     val joined = res.select(col("query_id"), col("neighbor_id"),
         col("adc"))
@@ -186,22 +192,19 @@ class LshAnnSpec extends SparkTestBase {
       Seq("query_id", "neighbor_id", "adc", "rank"))
     // dispatch parity: probe side broadcast (default) vs shuffle-hash
     // (gate at 0) must produce the identical result set
-    val forced = TrainingOps.ivfPqTopK(spark, sf(),
-      maxProbeBroadcastBytes = 0L)
+    val forced = ann(AnnIndex(Ivf(maxProbeBroadcastBytes = 0L), Pq()))
     assert(res.collect().map(_.toSeq).toSet ===
       forced.collect().map(_.toSeq).toSet, "IVF-PQ dispatch paths disagree")
   }
 
   test("IVF-PQ + re-rank full stack: shortlist containment, exact dots, " +
       "and the refine pass never loses recall vs raw IVF-PQ") {
-    val e = TrainingOps.embeddings(spark, sf())
-      .select(col("vec_id"), TrainingOps.quantized(col("embedding")).as("q"))
-    val full = TrainingOps.ivfPqRerankTopK(spark, sf())
-    val bf = TrainingOps.bruteForceTopK(spark, sf())
+    val full = ann(AnnIndex(Ivf(), Pq(), Some(TrainingOps.PqRerankR)))
+    val bf = ann(AnnIndex())
     assert(full.columns.toSeq === bf.columns.toSeq)
     // containment: the refine stage only re-scores the IVF-PQ ADC top-R
     val short = TrainingOps.topKPerQuery(
-      TrainingOps.ivfPqAdcScores(e), TrainingOps.PqRerankR)
+      TrainingOps.annScores(e, AnnIndex(Ivf(), Pq())), TrainingOps.PqRerankR)
       .select("query_id", "neighbor_id")
     assert(full.select("query_id", "neighbor_id")
       .join(short, Seq("query_id", "neighbor_id"), "left_anti")
@@ -214,16 +217,33 @@ class LshAnnSpec extends SparkTestBase {
     assert(joined.filter(col("rr_dot") =!= col("dot")).count() === 0)
     // the refine pass can only help: candidates are fixed by the coarse+code
     // stages, and exact scoring ranks them at least as faithfully as ADC
-    val raw = TrainingOps.ivfPqRecallAtK(spark, sf())
-    val ref = TrainingOps.ivfPqRerankRecallAtK(spark, sf())
+    val raw = recallOf(AnnIndex(Ivf(), Pq()))
+    val ref = recallOf(AnnIndex(Ivf(), Pq(), Some(TrainingOps.PqRerankR)))
     assert(ref >= raw,
       f"refine pass lost recall: $ref%.3f < raw IVF-PQ $raw%.3f")
     assert(full.select("query_id").distinct().count() ===
       TrainingOps.NQueryVecs.toLong)
   }
 
+  test("composition law: every candidate generator × every code scores " +
+      "each pair it returns exactly as brute force with the same code") {
+    // candidates only restrict WHICH pairs are scored; the kernel's score
+    // for a pair depends on the code alone
+    for (code <- Seq(Flat, Prefix, Sq8, Pq());
+         cands <- Seq(Lsh(), Ivf())) {
+      val got = TrainingOps.annScores(e, AnnIndex(cands, code))
+      val all = TrainingOps.annScores(e, AnnIndex(code = code))
+        .withColumnRenamed("dot", "all_dot")
+      val joined = got.join(all, Seq("query_id", "neighbor_id"), "left")
+      assert(got.count() > 0, s"$cands × $code scored nothing")
+      assert(joined.filter(col("all_dot").isNull ||
+        col("dot") =!= col("all_dot")).isEmpty,
+        s"$cands × $code scores a pair differently from brute force")
+    }
+  }
+
   test("multi-probe dial: candidates and recall are monotone in probe count") {
-    val curve = TrainingOps.lshRecallCurve(spark, sf(), Seq(1, 3, 5))
+    val curve = TrainingOps.lshRecallCurve(spark, sf())
     val (probes, recalls, cands) = (curve.map(_._1), curve.map(_._2), curve.map(_._3))
     assert(probes === Seq(1, 3, 5))
     // each probe level's candidate set is a superset of the previous —

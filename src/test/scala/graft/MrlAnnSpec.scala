@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 
-import graft.operators.TrainingOps
+import graft.operators.{AnnIndex, TrainingOps}
 
 /** MRL prefix-then-refine retrieval laws: shortlist containment, the
   * refine-never-loses property, the recall ordering vs coarse-only
@@ -11,15 +11,15 @@ import graft.operators.TrainingOps
   */
 class MrlAnnSpec extends SparkTestBase {
 
-  private lazy val mrl = TrainingOps.mrlTopK(spark, sf()).cache()
-  private lazy val bf = TrainingOps.bruteForceTopK(spark, sf())
+  private def mrlTopK = TrainingOps.annTopK(spark, sf(), AnnIndex(
+    code = AnnIndex.Prefix, rerank = Some(TrainingOps.MrlShortlistR)))
+  private lazy val mrl = mrlTopK.cache()
+  private lazy val bf = TrainingOps.annTopK(spark, sf(), AnnIndex())
     .select("query_id", "neighbor_id").cache()
 
   /** The coarse stage replayed standalone: prefix-dim ranking. */
   private def coarseTopK(k: Int) = {
-    val e = TrainingOps.embeddings(spark, sf())
-      .select(col("vec_id"),
-        TrainingOps.quantized(col("embedding")).as("q"))
+    val e = TrainingOps.quantizedEmbeddings(spark, sf())
       .withColumn("p", expr(s"slice(q, 1, ${TrainingOps.MrlPrefixDims})"))
     val queries = broadcast(e.filter(col("vec_id") < TrainingOps.NQueryVecs)
       .select(col("vec_id").as("query_id"), col("p").as("qp")))
@@ -73,7 +73,7 @@ class MrlAnnSpec extends SparkTestBase {
 
   test("plan gate: queries and shortlist broadcast; no sort-merge join, " +
       "no cartesian") {
-    val plan = castToImpl(TrainingOps.mrlTopK(spark, sf()))
+    val plan = castToImpl(mrlTopK)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastNestedLoopJoin") ||
       plan.contains("BroadcastHashJoin"))

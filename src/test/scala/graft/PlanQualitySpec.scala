@@ -5,7 +5,8 @@ import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
-import graft.operators.{CrawlOps, ScanOps, TrainingOps}
+import graft.operators.{AnnIndex, CrawlOps, ScanOps, TrainingOps}
+import graft.operators.AnnIndex._
 
 /** Physical-plan quality gates: the 100 TB design point requires scans to
   * prune columns, small sides to broadcast, and row-local ops to stay
@@ -13,6 +14,8 @@ import graft.operators.{CrawlOps, ScanOps, TrainingOps}
   * not just slows the bench.
   */
 class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
+
+  private def ann(ix: AnnIndex) = TrainingOps.annTopK(spark, sf(), ix)
 
   private def planString(df: DataFrame): String = {
     val qe = castToImpl(df).queryExecution
@@ -66,7 +69,7 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("brute-force ANN: query side broadcast, corpus never shuffled pre-score") {
-    val p = planString(TrainingOps.bruteForceTopK(spark, sf()))
+    val p = planString(ann(AnnIndex()))
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
       "query side not broadcast:\n" + p)
     // embeddings scan reads only (vec_id, embedding) — label pruned
@@ -76,10 +79,10 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("ANN top-k rank is two-stage: subgroup partial window before the per-query window") {
     for (df <- Seq(
-        TrainingOps.bruteForceTopK(spark, sf()),
-        TrainingOps.lshBucketTopK(spark, sf()),
-        TrainingOps.ivfTopK(spark, sf()),
-        TrainingOps.pqTopK(spark, sf()),
+        ann(AnnIndex()),
+        ann(AnnIndex(Lsh())),
+        ann(AnnIndex(Ivf())),
+        ann(AnnIndex(code = Pq())),
         TrainingOps.imageHammingTopK(spark))) {
       val p = planString(df)
       // the partial stage partitions by (query_id, __subq); a regression back
@@ -102,7 +105,7 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(!p.contains("Window"), "assignment regressed to a rank window:\n" + p)
     assert(p.contains("partial_min") || p.contains("HashAggregate"),
       "no partial aggregate in assignment:\n" + p)
-    val pTop = planString(TrainingOps.ivfTopK(spark, sf()))
+    val pTop = planString(ann(AnnIndex(Ivf())))
     assert(!pTop.contains("CartesianProduct"), pTop)
     assert(!pTop.contains("SortMergeJoin"),
       "probe join fell back to SMJ (probes side should broadcast):\n" + pTop)
@@ -110,8 +113,7 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("PQ: codebook and LUT broadcast; encode argmin is an aggregate, not a window") {
     import org.apache.spark.sql.functions.col
-    val e = TrainingOps.embeddings(spark, sf())
-      .select(col("vec_id"), TrainingOps.quantized(col("embedding")).as("q"))
+    val e = TrainingOps.quantizedEmbeddings(spark, sf())
     val pEnc = planString(TrainingOps.pqEncode(e, TrainingOps.pqCodebook(e)))
     assert(pEnc.contains("BroadcastNestedLoopJoin") || pEnc.contains("BroadcastExchange"),
       "codebook not broadcast:\n" + pEnc)
@@ -120,14 +122,15 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     // would shuffle all n×M×K scored pairs (the collect_list reassembly
     // window over (vec_id, m) is NOT present either — it's an aggregate)
     assert(!pEnc.contains("Window"), "encode regressed to a rank window:\n" + pEnc)
-    val pTop = planString(TrainingOps.pqTopK(spark, sf()))
+    val pTop = planString(ann(AnnIndex(code = Pq())))
     assert(!pTop.contains("CartesianProduct"), pTop)
     assert(!pTop.contains("SortMergeJoin"),
       "ADC scan joined by SMJ (LUT side should broadcast):\n" + pTop)
     // the re-rank composition keeps the same discipline: the shortlist and
     // query vectors broadcast INTO the corpus scan — the corpus-sized side
     // must never sort-merge or shuffle for the full-vector fetch-back
-    val pRer = planString(TrainingOps.pqRerankTopK(spark, sf()))
+    val pRer = planString(
+      ann(AnnIndex(code = Pq(), rerank = Some(TrainingOps.PqRerankR))))
     assert(!pRer.contains("CartesianProduct"), pRer)
     assert(!pRer.contains("SortMergeJoin"),
       "re-rank fetch-back joined by SMJ (shortlist should broadcast):\n" + pRer)
@@ -135,7 +138,7 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("IVF-PQ: no cartesian, no rank window in the index build, and the " +
       "probe join keeps the size-gated broadcast/SHJ dispatch") {
-    val pD = planString(TrainingOps.ivfPqTopK(spark, sf()))
+    val pD = planString(ann(AnnIndex(Ivf(), Pq())))
     assert(!pD.contains("CartesianProduct"), pD)
     // the only Window nodes allowed are the probe ranking (queries × nlist)
     // and the two-stage top-k — the corpus-sized encode/assign stages must
@@ -145,8 +148,8 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       "corpus-sized rank window appeared in the IVF-PQ index build:\n" + pD)
     assert(!pD.contains("ShuffledHashJoin"),
       "default dispatch unexpectedly shuffled the probe join:\n" + pD)
-    val pF = planString(TrainingOps.ivfPqTopK(spark, sf(),
-      maxProbeBroadcastBytes = 0L))
+    val pF = planString(
+      ann(AnnIndex(Ivf(maxProbeBroadcastBytes = 0L), Pq())))
     assert(pF.contains("ShuffledHashJoin"),
       "probe join is not SHJ with the gate at 0:\n" + pF)
     // the full stack (+ exact refine) keeps the same discipline — the
@@ -155,7 +158,8 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     // allowed is the inverted-lists build zip on vec_id: both inputs are
     // groupBy(vec_id) aggregates already hash-partitioned on the key, so
     // that join is an exchange-free co-partitioned merge by construction
-    val pR = planString(TrainingOps.ivfPqRerankTopK(spark, sf()))
+    val pR = planString(
+      ann(AnnIndex(Ivf(), Pq(), Some(TrainingOps.PqRerankR))))
     assert(!pR.contains("CartesianProduct"), pR)
     assert(!pR.contains("SortMergeJoin [neighbor_id") &&
         !pR.contains("SortMergeJoin [query_id"),
@@ -170,17 +174,18 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     // vec_id zip-SMJ may legitimately finalize as SHJ) — inspect the
     // fresh plan, as every other gate does implicitly
     spark.catalog.clearCache()
-    val pD = planString(TrainingOps.ivfPqResTopK(spark, sf()))
+    val pD = planString(ann(AnnIndex(Ivf(), ResidualPq())))
     assert(!pD.contains("CartesianProduct"), pD)
     assert(!pD.contains("windowspecdefinition(vec_id"),
       "corpus-sized rank window in the residual index build:\n" + pD)
     assert(!pD.contains("ShuffledHashJoin"),
       "default dispatch unexpectedly shuffled the residual probe join:\n" + pD)
-    val pF = planString(TrainingOps.ivfPqResTopK(spark, sf(),
-      maxProbeBroadcastBytes = 0L))
+    val pF = planString(
+      ann(AnnIndex(Ivf(maxProbeBroadcastBytes = 0L), ResidualPq())))
     assert(pF.contains("ShuffledHashJoin"),
       "residual probe join is not SHJ with the gate at 0:\n" + pF)
-    val pR = planString(TrainingOps.ivfPqResRerankTopK(spark, sf()))
+    val pR = planString(
+      ann(AnnIndex(Ivf(), ResidualPq(), Some(TrainingOps.PqRerankR))))
     assert(!pR.contains("CartesianProduct"), pR)
     assert(!pR.contains("SortMergeJoin [neighbor_id") &&
         !pR.contains("SortMergeJoin [query_id"),
@@ -192,12 +197,12 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     // at real query load (10^6 queries × nprobe) the probe side outgrows
     // any broadcast; the gate must degrade to a shuffle-hash join
     // co-partitioned on centroid_id, never SMJ, never a forced broadcast
-    val forced = TrainingOps.ivfTopK(spark, sf(), maxProbeBroadcastBytes = 0L)
+    val forced = ann(AnnIndex(Ivf(maxProbeBroadcastBytes = 0L)))
     val pF = planString(forced)
     assert(pF.contains("ShuffledHashJoin"),
       "probe join is not SHJ with the gate at 0:\n" + pF)
     assert(!pF.contains("SortMergeJoin"), "probe join fell back to SMJ:\n" + pF)
-    val default = TrainingOps.ivfTopK(spark, sf())
+    val default = ann(AnnIndex(Ivf()))
     val pD = planString(default)
     assert(!pD.contains("ShuffledHashJoin"),
       "default dispatch unexpectedly shuffled the probe join:\n" + pD)
@@ -208,8 +213,7 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("IVF k-means refinement: every Lloyd iteration is aggregates over a " +
       "broadcast-scored argmin — no window, no cartesian; dispatch holds") {
-    val e = TrainingOps.embeddings(spark, sf())
-      .select(col("vec_id"), TrainingOps.quantized(col("embedding")).as("q"))
+    val e = TrainingOps.quantizedEmbeddings(spark, sf())
     val pC = planString(TrainingOps.ivfKmeansCentroidsFrom(e))
     // assign = min(struct) argmin, update = per-dim sums + count: the whole
     // refinement must plan as (broadcast join → partial agg → final agg)
@@ -221,12 +225,14 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       "centroid side not broadcast in refinement:\n" + pC)
     // the refined top-k keeps both probe-dispatch paths (same gate as the
     // stride-seeded path) with identical results
-    val forced = TrainingOps.ivfKmeansTopKFrom(e, maxProbeBroadcastBytes = 0L)
+    val forced = TrainingOps.annTopK(e, AnnIndex(Ivf(
+      kmeansIters = TrainingOps.IvfKmeansIters, maxProbeBroadcastBytes = 0L)))
     val pF = planString(forced)
     assert(pF.contains("ShuffledHashJoin"),
       "kmeans probe join not SHJ with the gate at 0:\n" + pF)
     assert(!pF.contains("SortMergeJoin"), pF)
-    val default = TrainingOps.ivfKmeansTopKFrom(e)
+    val default = TrainingOps.annTopK(e,
+      AnnIndex(Ivf(kmeansIters = TrainingOps.IvfKmeansIters)))
     val a = forced.collect().map(_.toSeq).toSet
     val b = default.collect().map(_.toSeq).toSet
     assert(a === b, "kmeans IVF dispatch paths disagree")

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 
-import graft.operators.TrainingOps
+import graft.operators.{AnnIndex, TrainingOps}
+import graft.operators.AnnIndex._
 
 /** Residual IVF-PQ laws (r4 verdict #3 — encode x − c(x), score
   * cdot + residual ADC):
@@ -25,7 +26,8 @@ import graft.operators.TrainingOps
 class ResidualPqSpec extends SparkTestBase {
   import spark.implicits._
 
-  private lazy val res = TrainingOps.ivfPqResTopK(spark, sf()).cache()
+  private def ann(ix: AnnIndex) = TrainingOps.annTopK(spark, sf(), ix)
+  private lazy val res = ann(AnnIndex(Ivf(), ResidualPq())).cache()
 
   test("result shape: every query returns exactly k contiguous ranks") {
     val k = TrainingOps.TopK
@@ -37,9 +39,8 @@ class ResidualPqSpec extends SparkTestBase {
 
   test("exact-on-codewords: a stride-sample vector reached through its " +
       "probed list scores EXACTLY its integer dot (zero residual error)") {
-    val e = TrainingOps.embeddings(spark, sf())
-      .select(col("vec_id"), TrainingOps.quantized(col("embedding")).as("q"))
-    val scored = TrainingOps.ivfPqResAdcScores(e)
+    val e = TrainingOps.quantizedEmbeddings(spark, sf())
+    val scored = TrainingOps.annScores(e, AnnIndex(Ivf(), ResidualPq()))
     val queries = e.filter(col("vec_id") < TrainingOps.NQueryVecs)
       .select(col("vec_id").as("query_id"), col("q").as("qv"))
     val corpus = e.filter(col("vec_id") >= TrainingOps.NQueryVecs)
@@ -61,14 +62,9 @@ class ResidualPqSpec extends SparkTestBase {
   test("recall@10 at the residual path's finer grid dominates the plain " +
       "coarse-grid IVF-PQ (the headline comparison; grid-vs-decomposition " +
       "attribution lives in the bench's finegrid control rows)") {
-    val bf = TrainingOps.bruteForceTopK(spark, sf())
-      .select("query_id", "neighbor_id")
-    val total = bf.count()
-    def recallOf(df: org.apache.spark.sql.DataFrame): Double =
-      bf.join(df.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id")).count().toDouble / total
-    val plain = recallOf(TrainingOps.ivfPqTopK(spark, sf()))
-    val resid = recallOf(res)
+    val bf = ann(AnnIndex())
+    val plain = TrainingOps.recall(bf, ann(AnnIndex(Ivf(), Pq())))
+    val resid = TrainingOps.recall(bf, res)
     assert(resid >= plain,
       s"residual recall $resid < coarse plain recall $plain")
   }
@@ -76,7 +72,12 @@ class ResidualPqSpec extends SparkTestBase {
   test("CLUSTERED corpus: residual codes at least match plain codes at " +
       "the SAME grid and coverage — the data shape where x ≈ c + small r " +
       "makes residual quantization finer-grained by construction") {
-    val (resC, plainC) = TrainingOps.ivfPqResRecallClustered(spark, sf())
+    val c = TrainingOps.clusteredCorpus(spark, sf())
+    val bfC = TrainingOps.annTopK(c, AnnIndex())
+    val resC = TrainingOps.recall(bfC,
+      TrainingOps.annTopK(c, AnnIndex(Ivf(), ResidualPq())))
+    val plainC = TrainingOps.recall(bfC,
+      TrainingOps.annTopK(c, AnnIndex(Ivf(), Pq(ResidualGrid))))
     assert(resC >= plainC,
       s"clustered residual recall $resC < plain-at-same-grid $plainC — " +
         "the decomposition must not lose where its theory predicts a win")
@@ -91,8 +92,8 @@ class ResidualPqSpec extends SparkTestBase {
 
   test("dispatch parity: the shuffle-hash probe path (broadcast gate 0) " +
       "returns identical rows") {
-    val shuffled = TrainingOps.ivfPqResTopK(spark, sf(),
-      maxProbeBroadcastBytes = 0L)
+    val shuffled =
+      ann(AnnIndex(Ivf(maxProbeBroadcastBytes = 0L), ResidualPq()))
     assert(res.exceptAll(shuffled).isEmpty &&
       shuffled.exceptAll(res).isEmpty,
       "broadcast and shuffle-hash dispatch diverged")
@@ -102,8 +103,7 @@ class ResidualPqSpec extends SparkTestBase {
       "increase the total per-subspace quantization error (the classic " +
       "SSE monotonicity law, with the integer-floor slack bounded)") {
     import TrainingOps._
-    val e = embeddings(spark, sf())
-      .select(col("vec_id"), quantized(col("embedding")).as("q"))
+    val e = quantizedEmbeddings(spark, sf())
     val cents = ivfSeedCentroids(e, IvfCentroidStride)
     val residAsQ = ivfAssignmentsWithCents(e, cents)
       .join(broadcast(cents), Seq("centroid_id"))
@@ -141,16 +141,74 @@ class ResidualPqSpec extends SparkTestBase {
 
   test("rerank composition: the refine pass never lowers recall below " +
       "the raw residual-ADC ranking") {
-    val bf = TrainingOps.bruteForceTopK(spark, sf())
-      .select("query_id", "neighbor_id")
-    val total = bf.count()
-    def recallOf(df: org.apache.spark.sql.DataFrame): Double =
-      bf.join(df.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id")).count().toDouble / total
-    val raw = recallOf(res)
-    val reranked = recallOf(TrainingOps.ivfPqResRerankTopK(spark, sf()))
+    val bf = ann(AnnIndex())
+    val raw = TrainingOps.recall(bf, res)
+    val reranked = TrainingOps.recall(bf, ann(AnnIndex(Ivf(), ResidualPq(),
+      Some(TrainingOps.PqRerankR))))
     assert(reranked >= raw,
       s"rerank recall $reranked < raw $raw — exact re-scoring of a " +
         "superset shortlist cannot lose hits")
+  }
+
+  test("dropped codeword: when a Lloyd step drops an (m, k) codeword, the " +
+      "kernel still scores every candidate as the oracle's (m, k)-joined " +
+      "LUT sum (ADVICE r5 #1)") {
+    import TrainingOps._
+    // vector 2·stride copies vector stride: the sources of codewords k=0 and
+    // k=1 are then identical in every subspace (same centroid, same
+    // residual), every argmin tie goes to k=0, and one Lloyd step drops
+    // (m, 1) for every m — shifting all later positions of a LUT built by
+    // position in the sorted (m, k) list
+    val base = quantizedEmbeddings(spark, sf())
+    val dup = base.filter(col("vec_id") === ResPqCodeStride)
+      .select(col("q").as("dup"))
+    val e = base.crossJoin(dup)
+      .select(col("vec_id"),
+        when(col("vec_id") === 2 * ResPqCodeStride, col("dup"))
+          .otherwise(col("q")).as("q"))
+      .cache()
+    val scored = annScores(e, AnnIndex(Ivf(), ResidualPq(kmeansIters = 1)))
+      .cache()
+
+    // the relational reference, shaped like the q_emb_ivfpq_res_kmeans_topk
+    // oracle: residuals → refined codebook → encode rows (vec_id, m, k) and
+    // LUT rows (query_id, m, k, lv) joined on (m, k), summed per pair, plus
+    // the exact centroid dot
+    val cents = ivfSeedCentroids(e, IvfCentroidStride)
+    val resid = ivfAssignmentsWithCents(e, cents)
+      .join(broadcast(cents), Seq("centroid_id"))
+      .select(col("vec_id"), col("centroid_id"), col("cv"),
+        zip_with(col("q"), col("cv"), (a, b) => a - b).as("q"))
+    val cb = pqKmeansCodebook(resid, ResPqM, ResPqK, ResPqCodeStride, 1)
+      .cache()
+    assert(cb.count() < ResPqM * ResPqK, "the fixture must drop a codeword")
+    val enc = pqEncode(resid, cb, ResPqM)
+      .select(col("vec_id").as("neighbor_id"),
+        posexplode(col("codes")).as(Seq("m", "k")))
+    val subDim = EmbDim / ResPqM
+    val queries = e.filter(col("vec_id") < NQueryVecs)
+      .select(col("vec_id").as("query_id"), col("q").as("qv"))
+    val lut = queries.crossJoin(cb)
+      .select(col("query_id"), col("m"), col("k"),
+        intDot(slice(col("qv"), col("m") * subDim + lit(1), lit(subDim)),
+          col("cw")).as("lv"))
+    val ref = scored.select("query_id", "neighbor_id")
+      .join(resid.select(col("vec_id").as("neighbor_id"), col("cv")),
+        Seq("neighbor_id"))
+      .join(queries, Seq("query_id"))
+      .withColumn("cdot", intDot(col("qv"), col("cv")))
+      .join(enc, Seq("neighbor_id"))
+      .join(lut, Seq("query_id", "m", "k"))
+      .groupBy("query_id", "neighbor_id")
+      .agg((max("cdot") + sum("lv")).as("ref"))
+    val joined = scored.join(ref, Seq("query_id", "neighbor_id"), "left")
+    assert(scored.count() > 0)
+    val broken = joined
+      .filter(col("ref").isNull || col("dot") =!= col("ref")).count()
+    assert(broken == 0L,
+      s"$broken of ${scored.count()} kernel scores diverged from the " +
+        "(m, k)-joined LUT sum")
+    Seq(scored, cb, e).foreach(_.unpersist())
+    ()
   }
 }

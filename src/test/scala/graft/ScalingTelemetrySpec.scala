@@ -216,19 +216,52 @@ class ScalingTelemetrySpec extends AnyFunSuite {
       "never flags the first sample") {
     // the four rows of the r4 record's contiguous inflated window,
     // with their quiet re-measurements (VERDICT r4 'What's wrong' #1)
-    assert(Bench.suiteSampleInflated(31.59, 1.86)) // q_json_positional
-    assert(Bench.suiteSampleInflated(22.70, 3.14)) // q_redirect_resolve
-    assert(Bench.suiteSampleInflated(5.29, 0.34))  // q_metadata_json
-    assert(Bench.suiteSampleInflated(4.55, 0.42))  // q_video_frames
+    assert(Bench.suiteSampleInflated(Some(31.59), Some(1.86))) // q_json_positional
+    assert(Bench.suiteSampleInflated(Some(22.70), Some(3.14))) // q_redirect_resolve
+    assert(Bench.suiteSampleInflated(Some(5.29), Some(0.34)))  // q_metadata_json
+    assert(Bench.suiteSampleInflated(Some(4.55), Some(0.42)))  // q_video_frames
     // quiet repeatability band (±3%) is far inside the 2× threshold
-    assert(!Bench.suiteSampleInflated(1.92, 1.86))
-    assert(!Bench.suiteSampleInflated(1.86, 1.92))
+    assert(!Bench.suiteSampleInflated(Some(1.92), Some(1.86)))
+    assert(!Bench.suiteSampleInflated(Some(1.86), Some(1.92)))
     // exactly 2× is NOT flagged (the rule is >2×, so a legitimately
     // bimodal-but-honest pair stays unflagged at the boundary)
-    assert(!Bench.suiteSampleInflated(4.0, 2.0))
-    // a failed rerun (sentinel ≤ 0) must not flag — no corroboration
+    assert(!Bench.suiteSampleInflated(Some(4.0), Some(2.0)))
+    // a failed run (no sample) must not flag — no corroboration
     // evidence exists either way
-    assert(!Bench.suiteSampleInflated(31.59, -1.0))
-    assert(!Bench.suiteSampleInflated(31.59, 0.0))
+    assert(!Bench.suiteSampleInflated(Some(31.59), None))
+    assert(!Bench.suiteSampleInflated(None, Some(1.86)))
+  }
+
+  test("scaling record: a note with a quote, a backslash and U+0001 " +
+      "round-trips through the record's JSON (ADVICE r5 #4)") {
+    val note = "quote \" backslash \\ control \u0001 end"
+    val samples = Seq(1, 4).flatMap(c => Seq(1, 2).map(r =>
+      Bench.ArmSample(c, 1, r, Some(if (c == 1) 60.0 else 17.0),
+        Some(0.0), Some(0.0))))
+    val json = Bench.renderScalingRecord(Seq(1, 4), 8000000L,
+      Seq(60.0, 17.0), pinned = true, samples, Some(note))
+    val tree = Bench.Json.readTree(json)
+    assert(tree.get("note").asText() === note)
+    assert(tree.get("samples").size() === samples.size)
+    // an invalid record's reason goes through the same writer
+    val invalid = Bench.Json.readTree(Bench.renderScalingRecord(Seq(1, 4),
+      8000000L, Seq(60.0, 17.0), pinned = false, samples, None))
+    assert(!invalid.get("valid").asBoolean())
+    assert(invalid.get("invalid_reason").asText().contains("unpinned"))
+    assert(!invalid.has("note"))
+  }
+
+  test("recall block: Jackson renders every key with the record's " +
+      "3-decimal values and both curves") {
+    val fields = Bench.recallFields(
+      Seq("ann_recall_at_10" -> 0.9375, "ann_ivf_recall_at_10" -> 1.0),
+      Seq((1, 0.325, 904L), (5, 0.9375, 3003L)), Seq((1, 0.5, 10L)))
+    assert(fields.startsWith(
+      "\"ann_recall_at_10\":0.938,\"ann_ivf_recall_at_10\":1.000,"))
+    val tree = Bench.Json.readTree("{" + fields + "}")
+    assert(tree.get("ann_image_recall_at_10").asDouble() === 0.5)
+    val curve = tree.get("ann_recall_curve")
+    assert(curve.size() === 2 && curve.get(1).get("candidates").asLong() === 3003L)
+    assert(tree.get("ann_image_recall_curve").get(0).get("probes").asInt() === 1)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 
-import graft.operators.TrainingOps
+import graft.operators.{AnnIndex, TrainingOps}
 
 /** SQ8 scalar-quantized ANN laws: code range, the two-stage rank shape,
   * recall against the exact search (8 bits/dim must sit far above PQ's
@@ -12,7 +12,9 @@ import graft.operators.TrainingOps
 class SqAnnSpec extends SparkTestBase {
   import spark.implicits._
 
-  private lazy val sq = TrainingOps.sqTopK(spark, sf()).cache()
+  private def sqTopK =
+    TrainingOps.annTopK(spark, sf(), AnnIndex(code = AnnIndex.Sq8))
+  private lazy val sq = sqTopK.cache()
 
   test("result shape: every query returns exactly k contiguous ranks " +
       "in strictly non-increasing dot order") {
@@ -30,7 +32,7 @@ class SqAnnSpec extends SparkTestBase {
 
   test("recall@10 vs exact search is high — the 8-bit code keeps " +
       "ordering fidelity coarse quantization (PQ) cannot") {
-    val bf = TrainingOps.bruteForceTopK(spark, sf())
+    val bf = TrainingOps.annTopK(spark, sf(), AnnIndex())
       .select("query_id", "neighbor_id")
     val total = bf.count()
     val hit = bf.join(sq.select("query_id", "neighbor_id"),
@@ -41,8 +43,7 @@ class SqAnnSpec extends SparkTestBase {
 
   test("codes are valid 8-bit values spanning the affine range: every " +
       "component in [0, 255], with both extremes attained corpus-wide") {
-    val e = TrainingOps.embeddings(spark, sf())
-      .select(col("vec_id"), TrainingOps.quantized(col("embedding")).as("q"))
+    val e = TrainingOps.quantizedEmbeddings(spark, sf())
     val bounds = e.agg(
       min(array_min(col("q"))).as("gmin"),
       max(array_max(col("q"))).as("gmax"))
@@ -59,7 +60,7 @@ class SqAnnSpec extends SparkTestBase {
 
   test("plan gate: corpus never shuffles — queries broadcast into the " +
       "scored join and both rank stages reuse one exchange") {
-    val plan = castToImpl(TrainingOps.sqTopK(spark, sf()))
+    val plan = castToImpl(sqTopK)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastNestedLoopJoin") ||
       plan.contains("BroadcastHashJoin"),

@@ -145,4 +145,25 @@ class UrlCanonicalizerSpec extends AnyFunSuite {
     assert(pathOf("https://news.example.com") === "/")
     assert(hostOf("https://h.com:8443/x") === "h.com")
   }
+
+  test("scheme-relative //host/path: no scheme to anchor on, so only the " +
+      "fragment strips — host case and query order stay as given") {
+    // link extraction resolves a scheme-relative href against its page's
+    // scheme; the canonicalizer alone cannot pick one
+    val u = "//News.Example.COM/a/b?z=1&utm_source=x#frag"
+    val once = canonicalize(u)
+    assert(once === "//News.Example.COM/a/b?z=1&utm_source=x")
+    assert(canonicalize(once) === once)
+  }
+
+  test("query value mixing escape case and plus-as-space: hex digits " +
+      "upper-case, '+' and an escaped '%2B' stay distinct, keys sort") {
+    val u = "https://h.com/s?q=Caf%c3%a9+au+lait%2b1&lang=fr&utm_medium=x"
+    val once = canonicalize(u)
+    assert(once === "https://h.com/s?lang=fr&q=Caf%C3%A9+au+lait%2B1")
+    assert(canonicalize(once) === once)
+    // the same value spelled with upper-case escapes is the same URL
+    assert(canonicalize(
+      "https://h.com/s?lang=fr&q=Caf%C3%A9+au+lait%2B1") === once)
+  }
 }
