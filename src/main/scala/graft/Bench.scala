@@ -583,6 +583,23 @@ object Bench {
     Json.writeValueAsString(o).stripPrefix("{").stripSuffix("}")
   }
 
+  /** The headline fields `"value":…,"failed":[…]` over the suite's
+    * per-query seconds (None = no run of that query succeeded). The value is
+    * the sum only when every query has a time; otherwise it is null and
+    * `failed` names the queries without one, because a sum that left them
+    * out would read as a faster suite.
+    */
+  def headlineFields(results: Seq[(String, Option[Double])]): String = {
+    val failed = results.collect { case (name, None) => name }
+    val o = Json.createObjectNode()
+    if (failed.isEmpty)
+      o.put("value", new java.math.BigDecimal(f"${results.flatMap(_._2).sum}%.3f"))
+    else o.putNull("value")
+    val a = o.putArray("failed")
+    failed.foreach(a.add)
+    Json.writeValueAsString(o).stripPrefix("{").stripSuffix("}")
+  }
+
   def timed[A](f: => A): (A, Double) = {
     val t0 = System.nanoTime()
     val r = f
@@ -871,11 +888,10 @@ object Bench {
 
     def jmap(m: scala.collection.Map[String, Double]): String =
       m.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-    val total = f"${results.values.flatten.sum}%.3f"
     val queriesJson = results.map { case (k, v) => "\"" + k + "\":" + secJson(v) }
       .mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$queriesJson,"sf":"$sfDir","cpus":$cpus,"frontier_n":$frontierN,"frontier_scheduled_rows":$frontierRows,"frontier_urls_per_sec":$urlsPerSec,"frontier_runs_sec":[${f"$run1Sec%.3f"},${f"$run2Sec%.3f"}],"frontier_stages":${jmap(stages)},$recallJson,"bench_noise":${suiteNoise.json},"suite_rerun":$suiteRerunJson,"stage_sec":${jmap(stageSecs)},"scaling":$scalingJson,"scaling_4_16":$scaling416Json}"""
+      s"""{"metric":"total",${headlineFields(results.toSeq)},"unit":"sec","queries":$queriesJson,"sf":"$sfDir","cpus":$cpus,"frontier_n":$frontierN,"frontier_scheduled_rows":$frontierRows,"frontier_urls_per_sec":$urlsPerSec,"frontier_runs_sec":[${f"$run1Sec%.3f"},${f"$run2Sec%.3f"}],"frontier_stages":${jmap(stages)},$recallJson,"bench_noise":${suiteNoise.json},"suite_rerun":$suiteRerunJson,"stage_sec":${jmap(stageSecs)},"scaling":$scalingJson,"scaling_4_16":$scaling416Json}"""
     // build.sbt sets outputStrategy := StdoutOutput, so this line reaches
     // the driver's stdout tail UNPREFIXED (sbt's "[info] " wrapper broke
     // the driver's parse in rounds 1-2); the file copy stays as the

@@ -64,22 +64,20 @@ object AnnIndex {
   val PlainGrid: PqGrid = PqGrid(PqM, PqK, PqCodeStride)
   val ResidualGrid: PqGrid = PqGrid(ResPqM, ResPqK, ResPqCodeStride)
 
-  /** Product-quantized codes; `kmeansIters` Lloyd steps refine the sampled
-    * codebook.
-    */
+  /** Product-quantized codes over a [[PqGrid]]. */
   sealed trait PqCode extends Code {
     def grid: PqGrid
-    def kmeansIters: Int
   }
 
   /** PQ codes of the vector itself, scored by ADC. */
-  final case class Pq(grid: PqGrid = PlainGrid, kmeansIters: Int = 0)
-      extends PqCode
+  final case class Pq(grid: PqGrid = PlainGrid) extends PqCode
 
-  /** PQ codes of the residual x − c(x) from the vector's IVF centroid,
-    * scored as the exact centroid dot plus the residual's ADC. Needs
-    * [[Ivf]] candidates.
+  /** PQ codes of the residual x − c(x) from the vector's IVF centroid, on
+    * the [[ResidualGrid]], scored as the exact centroid dot plus the
+    * residual's ADC; `kmeansIters` Lloyd steps refine the sampled
+    * codebook. Needs [[Ivf]] candidates.
     */
-  final case class ResidualPq(grid: PqGrid = ResidualGrid,
-      kmeansIters: Int = 0) extends PqCode
+  final case class ResidualPq(kmeansIters: Int = 0) extends PqCode {
+    def grid: PqGrid = ResidualGrid
+  }
 }

@@ -2206,8 +2206,8 @@ object TrainingOps {
     val pairs = ix.candidates match {
       case AllVectors =>
         val code = encoder(ix.code, e, corpus, queries)
-        broadcast(code.queries(queries).select("query_id", "qv"))
-          .join(code.corpus(corpus).select("vec_id", "nv"))
+        broadcast(code.queryTable.select("query_id", "qv"))
+          .join(code.corpusTable.select("vec_id", "nv"))
       case Lsh(probes) =>
         lshPairs(e, probes, encoder(ix.code, e, corpus, queries))
       case ivf: Ivf => ivfPairs(e, corpus, queries, ivf, ix.code)
@@ -2323,10 +2323,13 @@ object TrainingOps {
   /** A code's two payloads, as functions over candidate rows: `corpus` maps
     * rows carrying (vec_id, q) to rows carrying the stored code nv, and
     * `queries` maps rows carrying (query_id, q) to rows carrying the query
-    * side qv (a vector, or a PQ LUT).
+    * side qv (a vector, or a PQ LUT). `corpusTable` (vec_id, nv) and
+    * `queryTable` (query_id, qv) are the same payloads over the whole
+    * encoded source and query set, which brute force pairs directly.
     */
   private final case class Encoder(corpus: DataFrame => DataFrame,
-      queries: DataFrame => DataFrame)
+      queries: DataFrame => DataFrame, corpusTable: DataFrame,
+      queryTable: DataFrame)
 
   /** The [[Encoder]] of a code. `source` (vec_id, q) trains and encodes PQ
     * codes; `e` is the whole table (SQ8's affine bounds span it); `gate` is
@@ -2344,39 +2347,39 @@ object TrainingOps {
     */
   private def encoder(code: AnnIndex.Code, e: DataFrame, source: DataFrame,
       queries: DataFrame, gate: DataFrame => DataFrame = identity)
-      : Encoder = code match {
-    case AnnIndex.Flat =>
-      Encoder(_.withColumn("nv", col("q")), _.withColumn("qv", col("q")))
-    case AnnIndex.Prefix =>
-      val prefix = slice(col("q"), 1, MrlPrefixDims)
-      Encoder(_.withColumn("nv", prefix), _.withColumn("qv", prefix))
-    case AnnIndex.Sq8 =>
-      val bounds = broadcast(e.agg(min(array_min(col("q"))).as("gmin"),
-        max(array_max(col("q"))).as("gmax")))
-      Encoder(_.crossJoin(bounds).withColumn("nv",
-          expr("transform(q, x -> (x - gmin) * 255L div (gmax - gmin))")),
-        _.withColumn("qv", col("q")))
-    case pq: AnnIndex.PqCode =>
-      val g = pq.grid
-      val cb =
-        if (pq.kmeansIters <= 0) pqCodebook(source, g.m, g.k, g.stride)
-        else materialized(
-          pqKmeansCodebook(source, g.m, g.k, g.stride, pq.kmeansIters))._1
-      Encoder(
-        attach("vec_id",
-          pqEncode(source, cb, g.m).withColumnRenamed("codes", "nv"), identity),
-        attach("query_id", pqLuts(queries, cb, g), gate))
+      : Encoder = {
+    def rowLocal(nv: DataFrame => DataFrame, qv: DataFrame => DataFrame) =
+      Encoder(nv, qv, nv(source), qv(queries))
+    code match {
+      case AnnIndex.Flat =>
+        rowLocal(_.withColumn("nv", col("q")), _.withColumn("qv", col("q")))
+      case AnnIndex.Prefix =>
+        val prefix = slice(col("q"), 1, MrlPrefixDims)
+        rowLocal(_.withColumn("nv", prefix), _.withColumn("qv", prefix))
+      case AnnIndex.Sq8 =>
+        val bounds = broadcast(e.agg(min(array_min(col("q"))).as("gmin"),
+          max(array_max(col("q"))).as("gmax")))
+        rowLocal(_.crossJoin(bounds).withColumn("nv",
+            expr("transform(q, x -> (x - gmin) * 255L div (gmax - gmin))")),
+          _.withColumn("qv", col("q")))
+      case pq: AnnIndex.PqCode =>
+        val g = pq.grid
+        val cb = pq match {
+          case AnnIndex.ResidualPq(iters) if iters > 0 => materialized(
+            pqKmeansCodebook(source, g.m, g.k, g.stride, iters))._1
+          case _ => pqCodebook(source, g.m, g.k, g.stride)
+        }
+        val codes = pqEncode(source, cb, g.m).withColumnRenamed("codes", "nv")
+        val luts = pqLuts(queries, cb, g)
+        Encoder(attach("vec_id", codes, identity),
+          attach("query_id", luts, gate), codes, luts)
+    }
   }
 
-  /** Joins a per-id payload table onto candidate rows; rows that carry
-    * nothing but (id, q) are replaced by the table outright.
-    */
+  /** Joins a per-id payload table onto candidate rows in place of their q. */
   private def attach(id: String, table: DataFrame,
-      strategy: DataFrame => DataFrame)(rows: DataFrame): DataFrame = {
-    val carried = rows.columns.filterNot(c => c == id || c == "q")
-    if (carried.isEmpty) table
-    else rows.select((id +: carried).map(col): _*).join(strategy(table), id)
-  }
+      strategy: DataFrame => DataFrame)(rows: DataFrame): DataFrame =
+    rows.drop("q").join(strategy(table), id)
 
   /** Per-query ADC lookup table (query_id, qv): lv = dot(query subvector m,
     * codeword (m, k)) — M·K longs per query, never a corpus-sized frame —

@@ -251,6 +251,19 @@ class ScalingTelemetrySpec extends AnyFunSuite {
     assert(!invalid.has("note"))
   }
 
+  test("headline: a query with no successful run nulls the total and is " +
+      "named in failed, never summed as zero") {
+    val ok = Bench.Json.readTree("{" + Bench.headlineFields(
+      Seq("q_a" -> Some(1.25), "q_b" -> Some(2.5))) + "}")
+    assert(ok.get("value").asDouble() === 3.75)
+    assert(ok.get("failed").size() === 0)
+    val bad = Bench.Json.readTree("{" + Bench.headlineFields(
+      Seq("q_a" -> Some(1.25), "q_b" -> None, "q_c" -> Some(2.5))) + "}")
+    assert(bad.get("value").isNull)
+    assert(bad.get("failed").size() === 1 &&
+      bad.get("failed").get(0).asText() === "q_b")
+  }
+
   test("recall block: Jackson renders every key with the record's " +
       "3-decimal values and both curves") {
     val fields = Bench.recallFields(
