@@ -156,13 +156,11 @@ object FrontierMain {
         else {
           val imgs = imagesPath.map(spark.read.parquet(_))
             .getOrElse(Fixtures.images(spark, 2000L).toDF())
-          val checked = graft.functions.ImageOps
-            .withInvariants(t.emitted, imgs)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val (checked, release) = graft.plans.Pinned(
+            graft.functions.ImageOps.withInvariants(t.emitted, imgs))
           val bad = checked.filter(!col("caption_ok")).count()
           (checked.filter(col("caption_ok"))
-              .select(t.emitted.columns.map(col): _*), bad,
-            () => { checked.unpersist(blocking = false); () })
+              .select(t.emitted.columns.map(col): _*), bad, release)
         }
       val m = store.commit(spark, emitRows, t.stats, fetchEpoch = tick.toLong,
         errors = Some(t.errors))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.UrlFunctions._
+import graft.plans.Pinned
 import graft.politeness.Scheduler
 
 /** One crawl tick — the engine's re-expression of the reference's whole
@@ -189,11 +190,16 @@ object CrawlTick {
   }
 
   /** One tick's outputs plus an explicit cache-release hook. The tick
-    * `.cache()`s two multiply-consumed intermediates; a long-running driver
-    * looping ticks MUST call `cleanup()` after materializing (committing)
-    * the outputs, or cached blocks accumulate across ticks (ADVICE r1).
-    * [[run]] keeps the old shape for single-shot callers whose caches die
-    * with the session.
+    * caches its two multiply-consumed intermediates (the flagged listing
+    * rows and the deduped fetch rows) through [[graft.plans.Pinned]], at one
+    * partition per core: a cached plan's final stage is never coalesced by
+    * AQE, so a plain `.cache()` would keep all `spark.sql.shuffle.partitions`
+    * (200 in production) and run that many near-empty tasks in every stage
+    * that fills or reads it. A long-running driver looping ticks MUST call
+    * `cleanup()` after materializing (committing) the outputs, or cached
+    * blocks accumulate across ticks (ADVICE r1). The outputs stay usable
+    * after `cleanup()`: they recompute from lineage. [[run]] keeps the old
+    * shape for single-shot callers whose caches die with the session.
     *
     * `errors` CAPTURES the failed rows, not just their count (r2 gap #5 —
     * the reference keeps the tracebacks, main.py:342-347): one row per
@@ -217,7 +223,7 @@ object CrawlTick {
       salted: Boolean): TickResult = {
 
     val (sel, probeCleanup) = selectManaged(listings, sources, probe, robots)
-    val flagged = sel.cache()
+    val (flagged, flaggedRelease) = Pinned(sel)
 
     val fetched = fetchJoin(flagged.filter(col("selected")), pages)
 
@@ -230,13 +236,12 @@ object CrawlTick {
       .withColumn("emit", col("fetch_ok") && col("save_rank") <= col("save_cap"))
 
     // cross-source first-wins (defined semantics #2)
-    val deduped = capped
+    val (deduped, dedupedRelease) = Pinned(capped
       .withColumn("xsrc_rank",
         when(col("emit"), row_number().over(
           Window.partitionBy(col("canonical_url"), col("emit"))
             .orderBy(col("source_idx"), col("item_idx")))))
-      .withColumn("final_emit", col("emit") && col("xsrc_rank") === 1)
-      .cache()
+      .withColumn("final_emit", col("emit") && col("xsrc_rank") === 1))
 
     val emitted0 = deduped.filter(col("final_emit"))
       .withColumn("effective_delay_ms",
@@ -296,6 +301,6 @@ object CrawlTick {
           .otherwise(concat(lit("http_"), col("status"))).as("reason"))
 
     TickResult(emitted, stats, errorRows,
-      () => { flagged.unpersist(); deduped.unpersist(); probeCleanup(); () })
+      () => { flaggedRelease(); dedupedRelease(); probeCleanup() })
   }
 }

@@ -306,16 +306,15 @@ object UrlSeen {
   def filterUnseen(candidates: DataFrame, segments: DataFrame, seen: DataFrame,
       urlCol: String, nSegments: Int,
       maxBroadcastBytes: Long = DefaultMaxBroadcastSegmentBytes): DataFrame = {
-    // persist: the size probe and the collect/probe-join both consume the
-    // segments; without a materialization point the Bloom build runs twice.
+    // cached (graft.plans.Pinned): the size probe and the collect/probe-join
+    // both consume the segments; without it the Bloom build runs twice.
     // (Parquet-backed segments from FrontierStore make both passes cheap.)
-    val segsCached = segments.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (segsCached, segsRelease) = graft.plans.Pinned(segments)
     val totalBytes = segsCached
       .agg(coalesce(sum(length(col("bloom"))), lit(0L))).collect()(0).getLong(0)
     if (totalBytes <= maxBroadcastBytes) {
       val out = filterUnseenBroadcast(candidates, segsCached, seen, urlCol, nSegments)
-      segsCached.unpersist(blocking = false)
+      segsRelease()
       out
     } else {
       // stays persisted: the co-partitioned probe job still has to read it
@@ -436,15 +435,22 @@ object UrlSeen {
   }
 
   /** [[flagSeen]] plus an explicit cache-release hook (ADVICE r3): the
-    * BloomConfirm branch persists two intermediates —
+    * BloomConfirm branch caches two intermediates through
+    * [[graft.plans.Pinned]] —
     *
     *  - the flagged (candidates + __maybe) frame, because it fans out into
     *    THREE consumers (the negative branch plus the semi/anti confirm
     *    pair), which would otherwise re-run the full candidate upstream
     *    (listings join, canonicalize, robots) three times at first
     *    materialization;
-    *  - the segments frame on the co-partitioned dispatch, where the probe
-    *    job itself still reads it after the size probe.
+    *  - the segments frame, read by the size probe and then by the
+    *    broadcast collect or the co-partitioned probe job.
+    *
+    * Both are pinned at one partition per core: AQE never coalesces a
+    * cached plan's final stage, and the store's merged segments come out of
+    * a shuffle, so a plain persist would keep `spark.sql.shuffle.partitions`
+    * (200 in production) partitions of a few rows each and run that many
+    * tasks in every stage that fills or reads them.
     *
     * Long-running callers (FrontierMain's tick loop) MUST invoke the hook
     * after materializing the result, or cached blocks accumulate across
@@ -472,26 +478,32 @@ object UrlSeen {
   /** The shared two-phase (approximate prefilter + exact confirm) flag
     * plan behind BloomConfirm and CuckooConfirm — identical dispatch,
     * identical truth table; only the per-row serialized-filter probe
-    * differs.
+    * differs. With `cache` the segments and the flagged frame are
+    * [[graft.plans.Pinned]] (see [[flagSeenManaged]]); without it nothing
+    * is cached and the hook is a no-op.
     */
   private def twoPhaseFlag(candidates: DataFrame, segments: DataFrame,
       seen: DataFrame, urlCol: String, flagCol: String, nSegments: Int,
       maxBroadcastBytes: Long, cuckoo: Boolean,
       cache: Boolean = true): (DataFrame, () => Unit) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val segsCached = if (cache) segments.persist(lvl) else segments
+    val noop = () => ()
+    val (segsCached, segsRelease) =
+      if (cache) graft.plans.Pinned(segments) else (segments, noop)
     val totalBytes = segsCached
       .agg(coalesce(sum(length(col("bloom"))), lit(0L))).collect()(0).getLong(0)
-    val (flagged0, segsReleased) =
+    val flagged0 =
       if (totalBytes <= maxBroadcastBytes) {
         val out = flagMaybeBroadcast(candidates, segsCached, urlCol,
           nSegments, cuckoo)
-        if (cache) segsCached.unpersist(blocking = false)
-        (out, true)
+        // the segment bytes now live in the broadcast
+        segsRelease()
+        out
       } else
-        (flagMaybeCopartitioned(candidates, segsCached, urlCol, nSegments,
-          cuckoo), false)
-    val flagged = if (cache) flagged0.persist(lvl) else flagged0
+        // stays cached: the co-partitioned probe job still has to read it
+        flagMaybeCopartitioned(candidates, segsCached, urlCol, nSegments,
+          cuckoo)
+    val (flagged, flaggedRelease) =
+      if (cache) graft.plans.Pinned(flagged0) else (flagged0, noop)
     val neg = flagged.filter(!col("__maybe"))
       .withColumn(flagCol, lit(false)).drop("__maybe")
     val pos = flagged.filter(col("__maybe")).drop("__maybe")
@@ -501,14 +513,9 @@ object UrlSeen {
     val posNew = pos.join(seenSel, pos(urlCol) === col("__seen_url"),
       "left_anti").withColumn(flagCol, lit(false))
     val out = neg.unionByName(posSeen).unionByName(posNew)
-    val cleanup =
-      if (!cache) () => ()
-      else () => {
-        flagged.unpersist(blocking = false)
-        if (!segsReleased) segsCached.unpersist(blocking = false)
-        ()
-      }
-    (out, cleanup)
+    // unpersist is idempotent: releasing the broadcast path's segments
+    // again is a no-op
+    (out, () => { flaggedRelease(); segsRelease() })
   }
 
   /** candidates + boolean `__maybe` via the broadcast codegen probe.

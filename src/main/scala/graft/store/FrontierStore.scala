@@ -118,28 +118,42 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
        |}""".stripMargin
   }
 
-  /** JSON string-escape for manifest fields holding user data. */
+  /** JSON string-escape for manifest fields holding user data. Every
+    * control character (below U+0020) and the other Java regex line
+    * terminators (U+0085, U+2028, U+2029) are escaped, `\n` as `\n` and the
+    * rest as `\u00XX`: [[parse]] reads the one-line `file_stats` array with
+    * `.`, which stops at a raw line terminator and would drop the file's
+    * stats.
+    */
   private def esc(s: String): String =
     s.flatMap {
       case '\\' => "\\\\"
       case '"' => "\\\""
       case '\n' => "\\n"
+      case c if c < ' ' || c == '\u0085' || c == '\u2028' || c == '\u2029' =>
+        f"\\u${c.toInt}%04x"
       case c => c.toString
     }
 
   /** Inverse of [[esc]] — single left-to-right pass so `\\"` decodes to
-    * `\"` (a backslash then a quote), never to a bare quote.
+    * `\"` (a backslash then a quote), never to a bare quote. Decodes `\n`
+    * and `\uXXXX`; any other escaped char stands for itself, so manifests
+    * written before `\uXXXX` escaping (only `\\`, `\"`, `\n`) parse
+    * unchanged.
     */
   private def unesc(s: String): String = {
     val b = new StringBuilder
     var i = 0
     while (i < s.length) {
       if (s(i) == '\\' && i + 1 < s.length) {
-        b.append(s(i + 1) match {
-          case 'n' => '\n'
-          case c => c
-        })
-        i += 2
+        s(i + 1) match {
+          case 'u' if i + 5 < s.length =>
+            b.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
+            i += 6
+          case c =>
+            b.append(if (c == 'n') '\n' else c)
+            i += 2
+        }
       } else { b.append(s(i)); i += 1 }
     }
     b.toString
@@ -283,13 +297,10 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
   private def writeSeenDelta(spark: SparkSession, urls: DataFrame, id: Int,
       itemsPerSegment: Long): (String, String, Map[Int, Long]) = {
     val seenRel = s"data/seen/snap-$id"
-    val delta = urls.select(col("canonical_url"))
-      .withColumn("seg", segOf(col("canonical_url")))
-    delta
-      .repartition(col("seg"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("seg")
-      .parquet(root.resolve(seenRel).toString)
+    val segCounts = writeSegmented(
+      urls.select(col("canonical_url"))
+        .withColumn("seg", segOf(col("canonical_url"))),
+      seenRel)
 
     // per-delta Bloom segments (same hash/partitioning as the probe side);
     // built from the just-written parquet so the expensive delta plan above
@@ -300,11 +311,23 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
         "canonical_url", nSegments, itemsPerSegment, bloomFpp)
       .write.mode(SaveMode.Overwrite)
       .parquet(root.resolve(bloomRel).toString)
-
-    val segCounts = spark.read.parquet(root.resolve(seenRel).toString)
-      .groupBy("seg").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
     (seenRel, bloomRel, segCounts)
+  }
+
+  /** Writes (canonical_url, seg) rows at `rel`, hash-partitioned and
+    * dir-partitioned by frontier segment, and returns the per-segment row
+    * counts (the manifest's lineage) from the written files' parquet
+    * footers: the writer's own record, so no job re-reads the delta. A
+    * delta with no rows writes no data file and returns no counts.
+    */
+  private def writeSegmented(delta: DataFrame, rel: String): Map[Int, Long] = {
+    delta.repartition(col("seg"))
+      .write.mode(SaveMode.Overwrite)
+      .partitionBy("seg")
+      .parquet(root.resolve(rel).toString)
+    parquetFiles(rel)
+      .groupMapReduce(_.getParent.getFileName.toString.stripPrefix("seg=").toInt)(
+        footerRows)(_ + _)
   }
 
   private def writeManifest(m: Manifest): Manifest = {
@@ -330,66 +353,70 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     val parent = id - 1
 
     // error-row lineage (C5): failed fetches persist with the snapshot —
-    // written before the manifest, invisible until the manifest lands
+    // written before the manifest, invisible until the manifest lands. The
+    // frame is written once; its row count comes from the write itself
     val errorsRel = errors.flatMap { e =>
-      val persisted = e.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val n = persisted.count()
-      val rel =
-        if (n == 0L) None
-        else {
-          val r = s"data/errors/snap-$id"
-          persisted.write.mode(SaveMode.Overwrite)
-            .parquet(root.resolve(r).toString)
-          Some(r)
-        }
-      persisted.unpersist(blocking = false)
-      rel
+      val rel = s"data/errors/snap-$id"
+      if (writeCounted(e)(_.write.mode(SaveMode.Overwrite)
+          .parquet(root.resolve(rel).toString)) > 0L) Some(rel)
+      else { deleteTree(root.resolve(rel)); None }
     }
 
-    // one materialization point feeds the row-count gate, the article
-    // write and the seen delta
-    val persisted = emitted.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nRows = persisted.count()
+    // the emitted rows feed two writes (articles, then the seen delta):
+    // cached once, at one partition per core (graft.plans.Pinned); the
+    // row-count gate is the article write's own count
+    val (pinned, release) = graft.plans.Pinned(emitted)
+    val aRel = s"data/articles/snap-$id"
+    // article data: partitioned by dt (epoch-derived), clustered within
+    // partitions by (source, language) for min/max row-group skipping (O2)
+    val dt = date_format(
+      to_utc_timestamp(timestamp_seconds(lit(1735689600L) + lit(fetchEpoch) * 300),
+        "UTC"), "yyyy-MM-dd")
+    val nRows = writeCounted(pinned)(_
+      .withColumn("dt", dt)
+      .repartition(col("dt"))
+      .sortWithinPartitions("source", "language")
+      .write.mode(SaveMode.Overwrite)
+      .partitionBy("dt")
+      .parquet(root.resolve(aRel).toString))
 
+    // delta blooms must stay merge-compatible with the chain's compaction
+    // baseline → read the dial from the parent chain
+    val dial = if (parent >= 0) currentBloomItems(parent) else bloomItemsPerSegment
     val (articlesRel, seenRel, bloomRel, segCounts) =
-      if (nRows == 0L) (None, None, None, Map.empty[Int, Long])
-      else {
-        // article data: partitioned by dt (epoch-derived), clustered within
-        // partitions by (source, language) for min/max row-group skipping (O2)
-        val aRel = s"data/articles/snap-$id"
-        val dt = date_format(
-          to_utc_timestamp(timestamp_seconds(lit(1735689600L) + lit(fetchEpoch) * 300),
-            "UTC"), "yyyy-MM-dd")
-        persisted
-          .withColumn("dt", dt)
-          .repartition(col("dt"))
-          .sortWithinPartitions("source", "language")
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("dt")
-          .parquet(root.resolve(aRel).toString)
-
-        // delta blooms must stay merge-compatible with the chain's
-        // compaction baseline → read the dial from the parent chain
-        val dial =
-          if (parent >= 0) currentBloomItems(parent) else bloomItemsPerSegment
-        val (sRel, bRel, counts) = writeSeenDelta(spark, persisted, id, dial)
+      if (nRows == 0L) {
+        // an empty partitioned dir would poison later schema inference
+        deleteTree(root.resolve(aRel))
+        (None, None, None, Map.empty[Int, Long])
+      } else {
+        val (sRel, bRel, counts) = writeSeenDelta(spark, pinned, id, dial)
         (Some(aRel), Some(sRel), Some(bRel), counts)
       }
+    release()
 
     val totals = stats.agg(
       sum("new_articles"), sum("skipped"), sum("errors")).collect()(0)
     def tl(i: Int): Long = if (totals.isNullAt(i)) 0L else totals.getLong(i)
-    persisted.unpersist(blocking = false)
 
-    val dialUsed =
-      if (parent >= 0) currentBloomItems(parent) else bloomItemsPerSegment
-    writeManifest(Manifest(id, parent, KindDelta, fetchEpoch, dialUsed,
+    writeManifest(Manifest(id, parent, KindDelta, fetchEpoch, dial,
       articlesRel, seenRel, bloomRel, errorsRel, segCounts,
       tl(0), tl(1), tl(2),
       fileStats = articlesRel.map(collectFileStats).getOrElse(Nil)))
   }
+
+  /** Runs `write` over `df` under an `Observation` and returns the rows it
+    * wrote — the count is a side effect of the write, not a second job.
+    */
+  private def writeCounted(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = org.apache.spark.sql.Observation()
+    write(df.observe(obs, count(lit(1)).as("rows")))
+    obs.get("rows").asInstanceOf[Long]
+  }
+
+  private def deleteTree(dir: Path): Unit =
+    if (Files.exists(dir))
+      Files.walk(dir).sorted(Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
 
   /** Harvest per-file `source` column bounds from the parquet FOOTERS of
     * a just-written article dir — the Iceberg writer-stats step, done as
@@ -400,15 +427,9 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     */
   private def collectFileStats(rel: String)
       : Seq[FrontierStore.FileStat] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val base = root.resolve(rel)
-    Files.walk(base).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet"))
+    parquetFiles(rel)
       .map { p =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(p.toUri), conf))
+        val reader = openFooter(p)
         try {
           val blocks = reader.getFooter.getBlocks.asScala
           val rows = blocks.map(_.getRowCount).sum
@@ -439,7 +460,20 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
             if (!trustworthy || maxs.isEmpty) "" else maxs.max,
             rows)
         } finally reader.close()
-      }.toSeq.sortBy(_.path)
+      }.sortBy(_.path)
+  }
+
+  private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+
+  private def openFooter(p: Path): org.apache.parquet.hadoop.ParquetFileReader =
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(p.toUri), hadoopConf))
+
+  /** Rows in one parquet file, from its footer (no data page is read). */
+  private def footerRows(p: Path): Long = {
+    val reader = openFooter(p)
+    try reader.getRecordCount finally reader.close()
   }
 
   /** [[articles]] restricted to one source, with MANIFEST-stats file
@@ -546,22 +580,12 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     val actual = urls.select("canonical_url").distinct()
       .join(seen(spark, Some(latestId)), Seq("canonical_url"), "left_semi")
       .withColumn("seg", segOf(col("canonical_url")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = actual.count()
-    val (rel, counts) =
-      if (n == 0L) (None, Map.empty[Int, Long])
-      else {
-        val r = s"data/seen/snap-$id" // same layout/namespace as add deltas
-        actual.repartition(col("seg"))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("seg")
-          .parquet(root.resolve(r).toString)
-        val c = spark.read.parquet(root.resolve(r).toString)
-          .groupBy("seg").count().collect()
-          .map(row => row.getInt(0) -> row.getLong(1)).toMap
-        (Some(r), c)
-      }
-    actual.unpersist(blocking = false)
+    val r = s"data/seen/snap-$id" // same layout/namespace as add deltas
+    // written once; an empty retraction leaves no data dir behind
+    val counts = writeSegmented(actual, r)
+    val rel =
+      if (counts.nonEmpty) Some(r)
+      else { deleteTree(root.resolve(r)); None }
     writeManifest(Manifest(id, latestId, KindRetraction,
       manifest(latestId).fetchEpoch, currentBloomItems(latestId),
       None, rel, None, None, counts, 0L, 0L, 0L))
@@ -643,10 +667,14 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
       fileStats = collectFileStats(rel)))
   }
 
+  /** Parquet data files under a store-relative path. */
+  private def parquetFiles(rel: String): Seq[Path] =
+    Files.walk(root.resolve(rel)).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+
   /** Parquet data files under a store-relative path (manifest lineage). */
   private def parquetFileCount(rel: String): Long =
-    Files.walk(root.resolve(rel)).iterator().asScala
-      .count(_.getFileName.toString.endsWith(".parquet")).toLong
+    parquetFiles(rel).size.toLong
 
   // ------------------------------------------------------------ snapshot GC
 
@@ -714,8 +742,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
       if (Files.exists(dir)) {
         Files.walk(dir).iterator().asScala.filter(Files.isRegularFile(_))
           .foreach { p => files += 1; bytes += Files.size(p) }
-        Files.walk(dir).sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
+        deleteTree(dir)
         dirs += 1
       }
     }
@@ -768,8 +795,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
       else {
         Files.walk(snap).iterator().asScala.filter(Files.isRegularFile(_))
           .foreach { p => files += 1; bytes += Files.size(p) }
-        Files.walk(snap).sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
+        deleteTree(snap)
         dirs += 1
       }
     }
@@ -1018,10 +1044,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
         .reduce(_ unionByName _)
   }
 
-  def delete(): Unit =
-    if (Files.exists(root))
-      Files.walk(root).sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
+  def delete(): Unit = deleteTree(root)
 }
 
 object FrontierStore {

@@ -107,11 +107,11 @@ class FileStatsSpec extends SparkTestBase {
     assert(store.articlesForSource(spark, "mike").count() == 0L)
   }
 
-  test("manifest JSON escapes user data in FileStat fields: a source " +
-      "value with quotes, backslashes and brackets round-trips and the " +
-      "chain stays parseable (r4 ADVICE #2)") {
-    val store = freshStore("target/test-store-fstats6")
-    val hostile = """al"p\h]a"""
+  /** Commits 25 rows whose `source` is `hostile`, rereads the manifest from
+    * disk, and checks that the FileStat bounds round-trip and still prune.
+    */
+  private def hostileSourceRoundTrip(dir: String, hostile: String): Unit = {
+    val store = freshStore(dir)
     val m = store.commit(spark,
       spark.range(0, 25)
         .select(concat(lit("https://x.example.com/a/"),
@@ -122,6 +122,11 @@ class FileStatsSpec extends SparkTestBase {
     assert(m.fileStats.nonEmpty)
     assert(m.fileStats.forall(s =>
       s.minSource == hostile && s.maxSource == hostile))
+    // the manifest keeps one field per line: no raw control character
+    val text = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(dir, "snapshots", "snap-00000.json"))
+    assert(!text.exists(c => c < ' ' && c != '\n'),
+      "a raw control character reached the manifest")
     // reread from disk through the escaped-string parser
     val reread = store.manifest(m.snapshotId)
     assert(reread.fileStats == m.fileStats,
@@ -131,6 +136,19 @@ class FileStatsSpec extends SparkTestBase {
     assert(store.articlesForSource(spark, hostile).count() == 25L)
     val (kept, total) = store.articleFilePruning(hostile)
     assert(kept < total, "the zulu tick's files should prune away")
+  }
+
+  test("manifest JSON escapes user data in FileStat fields: a source " +
+      "value with quotes, backslashes and brackets round-trips and the " +
+      "chain stays parseable (r4 ADVICE #2)") {
+    hostileSourceRoundTrip("target/test-store-fstats6", """al"p\h]a""")
+  }
+
+  test("manifest JSON escapes control characters: a source holding every " +
+      "char U+0000–U+001F round-trips and still prunes and reads") {
+    val controls = (0 until 0x20).map(_.toChar).mkString
+    hostileSourceRoundTrip("target/test-store-fstats7",
+      s"ctl[$controls]\u0085\u2028 end")
   }
 
   test("post-compaction: the baseline carries stats, equality holds, and " +
