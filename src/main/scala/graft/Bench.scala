@@ -1,5 +1,6 @@
 package graft
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,42 +41,15 @@ object Bench {
     */
   def frontierJob(spark: SparkSession, n: Long, nHosts: Int = 1000,
       nSegments: Int = 32): DataFrame = {
-    import graft.functions.UrlFunctions._
     // Both synthetic inputs are persisted: candidates feed the two probe
     // branches (bloom-negative pass-through + confirm anti-join) and seen
     // feeds both the segment build and the confirm join — in a real tick
     // each is ONE store scan read twice with pruning; here the generation
     // chain is string-heavy, and recomputing it per consumer would charge
     // the dedup stage for fixture synthesis.
-    val cand = spark.range(0, n).toDF("uid")
-      .withColumn("host",
-        concat(lit("h"), pmod(col("uid") * 2654435761L, lit(nHosts.toLong)),
-          lit(".example.com")))
-      // realistic frontier URLs: long path, 8 query params in page order
-      // (3 tracking), fragment — the canonicalizer strips/sorts per row
-      .withColumn("raw_url",
-        concat(lit("HTTPS://WWW."), col("host"), lit("/Section/"),
-          pmod(col("uid"), lit(50L)), lit("/articles/a"), col("uid"),
-          lit("?utm_source=feed&z="), pmod(col("uid"), lit(97L)),
-          lit("&lang=en&utm_medium=rss&id="), col("uid"),
-          lit("&ref=home&utm_campaign=daily&s=1#sec")))
-      .withColumn("canonical_url", canonicalize_url(col("raw_url")))
-      // raw_url dies at canonicalization — carrying it through the persist
-      // and the politeness shuffles would double the row payload for
-      // nothing (the column-pruning discipline, applied to the fixture)
-      .select("uid", "host", "canonical_url")
+    val cand = candidateUrls(spark, n, nHosts)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // seen: every third URL (same construction → exact-parity probe)
-    val seen = spark.range(0, n, 3).toDF("uid")
-      .withColumn("host",
-        concat(lit("h"), pmod(col("uid") * 2654435761L, lit(nHosts.toLong)),
-          lit(".example.com")))
-      .withColumn("canonical_url",
-        concat(lit("https://www."), col("host"), lit("/Section/"),
-          pmod(col("uid"), lit(50L)), lit("/articles/a"), col("uid"),
-          lit("?id="), col("uid"), lit("&lang=en&ref=home&s=1&z="),
-          pmod(col("uid"), lit(97L))))
-      .select("canonical_url")
+    val seen = seenUrls(spark, n, nHosts)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val segments = graft.seen.UrlSeen.buildSegments(
       seen, "canonical_url", nSegments,
@@ -96,6 +70,42 @@ object Bench {
       orderCols = Seq(col("uid").asc))
     graft.politeness.Scheduler.assignEpochs(ranked, "host_rank", lit(1000))
   }
+
+  private def hostOf(nHosts: Int) =
+    concat(lit("h"), pmod(col("uid") * 2654435761L, lit(nHosts.toLong)),
+      lit(".example.com"))
+
+  /** `n` synthetic frontier candidates (uid, host, canonical_url): realistic
+    * raw URLs — long path, 8 query params in page order (3 tracking),
+    * fragment — that the canonicalizer strips and sorts per row. raw_url
+    * dies at canonicalization: carrying it through a persist and the
+    * politeness shuffles would double the row payload for nothing.
+    */
+  def candidateUrls(spark: SparkSession, n: Long, nHosts: Int = 1000): DataFrame = {
+    import graft.functions.UrlFunctions._
+    spark.range(0, n).toDF("uid")
+      .withColumn("host", hostOf(nHosts))
+      .withColumn("raw_url",
+        concat(lit("HTTPS://WWW."), col("host"), lit("/Section/"),
+          pmod(col("uid"), lit(50L)), lit("/articles/a"), col("uid"),
+          lit("?utm_source=feed&z="), pmod(col("uid"), lit(97L)),
+          lit("&lang=en&utm_medium=rss&id="), col("uid"),
+          lit("&ref=home&utm_campaign=daily&s=1#sec")))
+      .withColumn("canonical_url", canonicalize_url(col("raw_url")))
+      .select("uid", "host", "canonical_url")
+  }
+
+  /** The seen set for [[candidateUrls]]: every third candidate, built
+    * directly in canonical form (same construction → exact-parity probe).
+    * One column, canonical_url.
+    */
+  def seenUrls(spark: SparkSession, n: Long, nHosts: Int = 1000): DataFrame =
+    spark.range(0, n, 3).toDF("uid")
+      .withColumn("host", hostOf(nHosts))
+      .select(concat(lit("https://www."), col("host"), lit("/Section/"),
+        pmod(col("uid"), lit(50L)), lit("/articles/a"), col("uid"),
+        lit("?id="), col("uid"), lit("&lang=en&ref=home&s=1&z="),
+        pmod(col("uid"), lit(97L))).as("canonical_url"))
 
   // ------------------------------------------------- scaling telemetry ---
 
@@ -316,22 +326,28 @@ object Bench {
     reasons.toSeq
   }
 
+  /** The child's `{"metric":metric,…}` lines, read as JSON trees; a line
+    * that does not parse is skipped, so log noise and prose never count.
+    */
+  private def metricLines(out: String, metric: String): Seq[JsonNode] =
+    out.linesIterator.flatMap { l =>
+      val i = l.indexOf("{\"metric\":")
+      if (i < 0) None else scala.util.Try(Json.readTree(l.substring(i))).toOption
+    }.filter(_.path("metric").asText == metric).toSeq
+
   /** The child's per-run telemetry lines → one sample per timed run.
     * Callers fall back to a single whole-child sample (run 0) carrying the
     * parent-side bracket when the child printed no per-run lines.
     */
-  // noise fields tolerate scientific notation (a future emitter printing
-  // Double.toString instead of %.4f must not silently drop samples)
-  private val RunLine = ("""\{"metric":"scaling_run","cpus":(\d+),"run":(\d+),""" +
-    """"sec":([0-9.]+),"steal_frac":(null|[0-9.eE+-]+),""" +
-    """"offarm_busy_frac":(null|[0-9.eE+-]+)\}""").r
   def parseRuns(out: String, cores: Int, round: Int): Seq[ArmSample] =
-    RunLine.findAllMatchIn(out).collect {
-      case m if m.group(1).toInt == cores =>
-        def d(s: String) = if (s == "null") None else Some(s.toDouble)
-        ArmSample(cores, round, m.group(2).toInt,
-          Some(m.group(3).toDouble), d(m.group(4)), d(m.group(5)))
-    }.toSeq
+    metricLines(out, "scaling_run")
+      .filter(t => t.path("cpus").asInt(-1) == cores && t.path("run").isInt &&
+        t.path("sec").isNumber)
+      .map { t =>
+        def d(key: String) = Some(t.path(key)).filter(_.isNumber).map(_.asDouble)
+        ArmSample(cores, round, t.path("run").asInt, d("sec"), d("steal_frac"),
+          d("offarm_busy_frac"))
+      }
 
   def runPinnedArms(armCores: Seq[Int], n: Long,
       budgetSec: Double = ArmsBudgetSec)
@@ -399,8 +415,8 @@ object Bench {
         val out = new String(java.nio.file.Files.readAllBytes(outFile.toPath), "UTF-8")
         outFile.delete()
         val ok = finished && proc.exitValue() == 0
-        val sec = """"metric":"scaling_arm".*?"sec":([0-9.]+)""".r
-          .findFirstMatchIn(out).map(_.group(1).toDouble)
+        val sec = metricLines(out, "scaling_arm").map(_.path("sec"))
+          .find(_.isNumber).map(_.asDouble)
         if (!ok || sec.isEmpty)
           System.err.println(s"[bench] pinned arm cpus=$cores " +
             s"${if (finished) "failed" else "TIMED OUT (killed)"}:\n" +
@@ -711,25 +727,8 @@ object Bench {
     // show theirs on top of a persisted input (matching frontierJob).
     val stages = scala.collection.mutable.LinkedHashMap[String, Double]()
     locally {
-      import graft.functions.UrlFunctions._
-      val nHosts = 1000
-      def candGen = spark.range(0, frontierN).toDF("uid")
-        .withColumn("host", concat(lit("h"),
-          pmod(col("uid") * 2654435761L, lit(nHosts.toLong)), lit(".example.com")))
-        .withColumn("raw_url", concat(lit("HTTPS://WWW."), col("host"),
-          lit("/Section/"), pmod(col("uid"), lit(50L)), lit("/articles/a"),
-          col("uid"), lit("?utm_source=feed&z="), pmod(col("uid"), lit(97L)),
-          lit("&lang=en&utm_medium=rss&id="), col("uid"),
-          lit("&ref=home&utm_campaign=daily&s=1#sec")))
-        .withColumn("canonical_url", canonicalize_url(col("raw_url")))
-      def seenGen = spark.range(0, frontierN, 3).toDF("uid")
-        .withColumn("host", concat(lit("h"),
-          pmod(col("uid") * 2654435761L, lit(nHosts.toLong)), lit(".example.com")))
-        .withColumn("canonical_url", concat(lit("https://www."), col("host"),
-          lit("/Section/"), pmod(col("uid"), lit(50L)), lit("/articles/a"),
-          col("uid"), lit("?id="), col("uid"), lit("&lang=en&ref=home&s=1&z="),
-          pmod(col("uid"), lit(97L))))
-        .select("canonical_url")
+      def candGen = candidateUrls(spark, frontierN)
+      def seenGen = seenUrls(spark, frontierN)
       def stage(name: String)(df: => DataFrame): Unit = {
         force(df) // warm
         stages(name) = timed(force(df))._2

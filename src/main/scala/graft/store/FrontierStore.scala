@@ -5,6 +5,9 @@ import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.util.{DefaultPrettyPrinter, Separators}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType}
@@ -18,10 +21,14 @@ import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField
   * set (/root/reference/utils/bigquery_client.py:64-120) with:
   *
   *  - snapshot manifests `snapshots/snap-%05d.json`: snapshot id, parent id,
-  *    kind (delta | compaction), fetch epoch, per-table data paths,
-  *    per-partition lineage (frontier-segment id → row count) and the
-  *    tick's dedup counters (north rule: "resumable from checkpoint with
-  *    per-partition lineage + metrics");
+  *    kind (delta | compaction | retraction | article_compaction), fetch
+  *    epoch, per-table data paths, per-partition lineage (frontier-segment
+  *    id → row count), per-file column bounds and the tick's dedup counters
+  *    (north rule: "resumable from checkpoint with per-partition lineage +
+  *    metrics"). Manifests and `gc.json` are written and read with Jackson
+  *    (one `"key": value` per line), so user data in the bounds is escaped
+  *    by a real JSON writer; keys that older manifests lack read as their
+  *    defaults (see [[FrontierStore.Manifest]]);
   *  - data laid out per snapshot: `data/articles/snap-N/` (partitioned by
   *    `dt`, sorted within partitions by (source, language) — the analog of
   *    the reference's PARTITION BY DATE(pub_date) CLUSTER BY source,
@@ -84,132 +91,65 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
   // ------------------------------------------------------------- manifests
 
   import FrontierStore.{Manifest, KindDelta, KindCompaction, KindRetraction,
-    KindArticleCompaction}
+    KindArticleCompaction, Json, Pretty, required}
 
   private def manifestPath(id: Int): Path =
     snapsDir.resolve(f"snap-$id%05d.json")
 
+  /** The Jackson codec for one manifest: an `ObjectNode` written one
+    * `"key": value` per line, and a tree read over the same keys. Keys
+    * absent from older manifests default (`kind` → delta, the bloom dial
+    * and `files_*` → 0, `segment_counts` → empty, `file_stats` → Nil);
+    * the ids, the fetch epoch and the metrics counters are required.
+    */
   private def render(m: Manifest): String = {
-    val segs = m.segmentCounts.toSeq.sortBy(_._1)
-      .map { case (s, c) => s""""$s": $c""" }.mkString("{", ", ", "}")
-    def optStr(o: Option[String]) = o.map(p => "\"" + p + "\"").getOrElse("null")
-    // FileStat fields carry USER DATA (source values land in the bounds):
-    // escape them, or one '"' in a source name corrupts the manifest and
-    // breaks every later parse on the chain (r4 ADVICE #2)
-    val fstats = m.fileStats
-      .map(f => s"""{"path": "${esc(f.path)}", "min_source": "${esc(f.minSource)}", """ +
-        s""""max_source": "${esc(f.maxSource)}", "rows": ${f.rows}}""")
-      .mkString("[", ", ", "]")
-    s"""{
-       |  "snapshot_id": ${m.snapshotId},
-       |  "parent_id": ${m.parentId},
-       |  "kind": "${m.kind}",
-       |  "fetch_epoch": ${m.fetchEpoch},
-       |  "bloom_items_per_segment": ${m.bloomItems},
-       |  "articles_path": ${optStr(m.articlesPath)},
-       |  "seen_delta_path": ${optStr(m.seenDeltaPath)},
-       |  "bloom_path": ${optStr(m.bloomPath)},
-       |  "errors_path": ${optStr(m.errorsPath)},
-       |  "segment_counts": $segs,
-       |  "files_rewritten": ${m.filesRewritten},
-       |  "files_added": ${m.filesAdded},
-       |  "file_stats": $fstats,
-       |  "metrics": {"new_articles": ${m.newArticles}, "skipped": ${m.skipped}, "errors": ${m.errors}}
-       |}""".stripMargin
-  }
-
-  /** JSON string-escape for manifest fields holding user data. Every
-    * control character (below U+0020) and the other Java regex line
-    * terminators (U+0085, U+2028, U+2029) are escaped, `\n` as `\n` and the
-    * rest as `\u00XX`: [[parse]] reads the one-line `file_stats` array with
-    * `.`, which stops at a raw line terminator and would drop the file's
-    * stats.
-    */
-  private def esc(s: String): String =
-    s.flatMap {
-      case '\\' => "\\\\"
-      case '"' => "\\\""
-      case '\n' => "\\n"
-      case c if c < ' ' || c == '\u0085' || c == '\u2028' || c == '\u2029' =>
-        f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-  /** Inverse of [[esc]] — single left-to-right pass so `\\"` decodes to
-    * `\"` (a backslash then a quote), never to a bare quote. Decodes `\n`
-    * and `\uXXXX`; any other escaped char stands for itself, so manifests
-    * written before `\uXXXX` escaping (only `\\`, `\"`, `\n`) parse
-    * unchanged.
-    */
-  private def unesc(s: String): String = {
-    val b = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s(i) == '\\' && i + 1 < s.length) {
-        s(i + 1) match {
-          case 'u' if i + 5 < s.length =>
-            b.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
-            i += 6
-          case c =>
-            b.append(if (c == 'n') '\n' else c)
-            i += 2
-        }
-      } else { b.append(s(i)); i += 1 }
-    }
-    b.toString
+    val o = Json.createObjectNode()
+      .put("snapshot_id", m.snapshotId).put("parent_id", m.parentId)
+      .put("kind", m.kind).put("fetch_epoch", m.fetchEpoch)
+      .put("bloom_items_per_segment", m.bloomItems)
+      .put("articles_path", m.articlesPath.orNull)
+      .put("seen_delta_path", m.seenDeltaPath.orNull)
+      .put("bloom_path", m.bloomPath.orNull)
+      .put("errors_path", m.errorsPath.orNull)
+    val segs = o.putObject("segment_counts")
+    m.segmentCounts.toSeq.sortBy(_._1).foreach { case (s, c) => segs.put(s.toString, c) }
+    o.put("files_rewritten", m.filesRewritten).put("files_added", m.filesAdded)
+    val fstats = o.putArray("file_stats")
+    m.fileStats.foreach(f => fstats.addObject().put("path", f.path)
+      .put("min_source", f.minSource).put("max_source", f.maxSource)
+      .put("rows", f.rows))
+    o.putObject("metrics").put("new_articles", m.newArticles)
+      .put("skipped", m.skipped).put("errors", m.errors)
+    Pretty.writeValueAsString(o)
   }
 
   private def parse(json: String): Manifest = {
-    // minimal, dependency-free parser for the fixed manifest shape
-    def num(key: String): Long = {
-      val m = s""""$key"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(json)
-      m.map(_.group(1).toLong).getOrElse(
-        throw new IllegalStateException(s"manifest missing $key"))
-    }
-    def str(key: String): Option[String] =
-      s""""$key"\\s*:\\s*"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1))
-    val segBlock = """"segment_counts"\s*:\s*\{([^}]*)\}""".r
-      .findFirstMatchIn(json).map(_.group(1)).getOrElse("")
-    val segs = """"(\d+)"\s*:\s*(\d+)""".r.findAllMatchIn(segBlock)
-      .map(m => m.group(1).toInt -> m.group(2).toLong).toMap
-    // optional (absent in pre-r4 manifests): 0 = "constructor default"
-    def numOpt(key: String): Long =
-      s""""$key"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(json)
-        .map(_.group(1).toLong).getOrElse(0L)
-    val bloomItems = numOpt("bloom_items_per_segment")
-    // optional (absent in pre-stats manifests): per-file column bounds.
-    // The array is rendered on one line; GREEDY `.*` (no DOTALL) reaches
-    // that line's last ']' — the array close — so a ']' inside an escaped
-    // source string cannot truncate the block. Field values match escaped
-    // strings ((?:[^"\\]|\\.)*) and are unescaped — see [[esc]].
-    val fsBlock = """"file_stats"\s*:\s*\[(.*)\]""".r
-      .findFirstMatchIn(json).map(_.group(1)).getOrElse("")
-    val qs = """((?:[^"\\]|\\.)*)""" // an escaped JSON string body
-    val fileStats =
-      (s"""\\{"path":\\s*"$qs",\\s*"min_source":\\s*"$qs",\\s*""" +
-        s""""max_source":\\s*"$qs",\\s*"rows":\\s*(\\d+)\\}""").r
-        .findAllMatchIn(fsBlock)
-        .map(m => FrontierStore.FileStat(
-          unesc(m.group(1)), unesc(m.group(2)), unesc(m.group(3)),
-          m.group(4).toLong))
-        .toSeq
+    val t = Json.readTree(json)
+    def str(n: JsonNode, key: String): Option[String] =
+      Option(n.get(key)).filter(_.isTextual).map(_.asText)
+    def num(n: JsonNode, key: String): Long = required(n, key, "manifest").asLong
+    def text(n: JsonNode, key: String): String = required(n, key, "manifest").asText
+    val metrics = t.path("metrics")
     Manifest(
-      snapshotId = num("snapshot_id").toInt,
-      parentId = num("parent_id").toInt,
-      kind = str("kind").getOrElse(KindDelta),
-      fetchEpoch = num("fetch_epoch"),
-      bloomItems = bloomItems,
-      articlesPath = str("articles_path"),
-      seenDeltaPath = str("seen_delta_path"),
-      bloomPath = str("bloom_path"),
-      errorsPath = str("errors_path"),
-      segmentCounts = segs,
-      newArticles = num("new_articles"),
-      skipped = num("skipped"),
-      errors = num("errors"),
-      filesRewritten = numOpt("files_rewritten"),
-      filesAdded = numOpt("files_added"),
-      fileStats = fileStats)
+      snapshotId = num(t, "snapshot_id").toInt,
+      parentId = num(t, "parent_id").toInt,
+      kind = str(t, "kind").getOrElse(KindDelta),
+      fetchEpoch = num(t, "fetch_epoch"),
+      bloomItems = t.path("bloom_items_per_segment").asLong(0L),
+      articlesPath = str(t, "articles_path"),
+      seenDeltaPath = str(t, "seen_delta_path"),
+      bloomPath = str(t, "bloom_path"),
+      errorsPath = str(t, "errors_path"),
+      segmentCounts = t.path("segment_counts").properties().asScala
+        .map(e => e.getKey.toInt -> e.getValue.asLong).toMap,
+      newArticles = num(metrics, "new_articles"),
+      skipped = num(metrics, "skipped"),
+      errors = num(metrics, "errors"),
+      filesRewritten = t.path("files_rewritten").asLong(0L),
+      filesAdded = t.path("files_added").asLong(0L),
+      fileStats = t.path("file_stats").asScala.map(f => FrontierStore.FileStat(
+        text(f, "path"), text(f, "min_source"), text(f, "max_source"),
+        num(f, "rows"))).toSeq)
   }
 
   def snapshotIds(): Seq[Int] =
@@ -225,35 +165,39 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
 
   def latest(): Option[Manifest] = snapshotIds().lastOption.map(manifest)
 
-  /** Manifest chain from `id` back to the root (oldest first). */
-  def chain(id: Int): Seq[Manifest] = {
+  /** The newest snapshot id; throws on a store with no snapshot. */
+  private def latestId(): Int =
+    snapshotIds().lastOption.getOrElse(throw new IllegalStateException("empty store"))
+
+  /** The snapshot a read as of `asOf` (default: latest) resolves to,
+    * checked against the GC horizon.
+    */
+  private def readId(asOf: Option[Int]): Int = checkGc(asOf.getOrElse(latestId()))
+
+  /** Manifests from `id` back to the root, oldest first — or only back to
+    * the nearest snapshot of kind `baseline` (inclusive), which folds in
+    * everything older.
+    */
+  private def walk(id: Int, baseline: Option[String]): Seq[Manifest] = {
     var cur = id
     var out = List.empty[Manifest]
     while (cur >= 0) {
       val m = manifest(cur)
       out = m :: out
-      cur = m.parentId
+      cur = if (baseline.contains(m.kind)) -1 else m.parentId
     }
     out
   }
+
+  /** Manifest chain from `id` back to the root (oldest first). */
+  def chain(id: Int): Seq[Manifest] = walk(id, None)
 
   /** The chain suffix that carries the complete URL-seen state as of `id`:
     * walk back only until a compaction baseline (inclusive) — everything
     * older is folded into it. This is what makes tick-N seen reads O(1) in
     * tick count after compact().
     */
-  def seenChain(id: Int): Seq[Manifest] = {
-    var cur = id
-    var out = List.empty[Manifest]
-    var done = false
-    while (cur >= 0 && !done) {
-      val m = manifest(cur)
-      out = m :: out
-      if (m.kind == KindCompaction) done = true
-      cur = m.parentId
-    }
-    out
-  }
+  def seenChain(id: Int): Seq[Manifest] = walk(id, Some(KindCompaction))
 
   /** The chain suffix that carries the complete ARTICLE table as of `id`:
     * walk back only until an article-compaction baseline (inclusive) —
@@ -261,18 +205,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     * [[seenChain]]: after [[compactArticles]] an article read opens
     * O(post-compaction ticks) parquet roots, not O(history).
     */
-  def articleChain(id: Int): Seq[Manifest] = {
-    var cur = id
-    var out = List.empty[Manifest]
-    var done = false
-    while (cur >= 0 && !done) {
-      val m = manifest(cur)
-      out = m :: out
-      if (m.kind == KindArticleCompaction) done = true
-      cur = m.parentId
-    }
-    out
-  }
+  def articleChain(id: Int): Seq[Manifest] = walk(id, Some(KindArticleCompaction))
 
   // ----------------------------------------------------------- delta write
 
@@ -331,10 +264,18 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
   }
 
   private def writeManifest(m: Manifest): Manifest = {
-    val tmp = Files.createTempFile(snapsDir, s".snap-${m.snapshotId}", ".tmp")
-    Files.writeString(tmp, render(m))
-    Files.move(tmp, manifestPath(m.snapshotId), StandardCopyOption.ATOMIC_MOVE)
+    publish(manifestPath(m.snapshotId), s".snap-${m.snapshotId}", render(m))
     m
+  }
+
+  /** Writes `text` to a temp file (`prefix`*.tmp beside `target`) and
+    * ATOMIC_MOVEs it onto `target`: readers see the old document or the
+    * new one whole.
+    */
+  private def publish(target: Path, prefix: String, text: String): Unit = {
+    val tmp = Files.createTempFile(target.getParent, prefix, ".tmp")
+    Files.writeString(tmp, text)
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
   }
 
   // ---------------------------------------------------------------- commit
@@ -418,6 +359,16 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
       Files.walk(dir).sorted(Comparator.reverseOrder[Path]())
         .forEach(p => Files.deleteIfExists(p))
 
+  /** Deletes `tree` (a directory or one file); returns the (files, bytes)
+    * it held — the accounting both reclaim passes report.
+    */
+  private def reclaim(tree: Path): (Long, Long) = {
+    val files = Files.walk(tree).iterator().asScala.filter(Files.isRegularFile(_)).toSeq
+    val bytes = files.map(Files.size).sum
+    deleteTree(tree)
+    (files.size.toLong, bytes)
+  }
+
   /** Harvest per-file `source` column bounds from the parquet FOOTERS of
     * a just-written article dir — the Iceberg writer-stats step, done as
     * a footer post-pass (footers are a few KB each; no data pages are
@@ -490,8 +441,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     */
   def articlesForSource(spark: SparkSession, source: String,
       asOf: Option[Int] = None): DataFrame = {
-    val id = checkGc(asOf.orElse(snapshotIds().lastOption)
-      .getOrElse(throw new IllegalStateException("empty store")))
+    val id = readId(asOf)
     val ms = articleChain(id).filter(_.articlesPath.nonEmpty)
     require(ms.nonEmpty, "no article snapshots")
     val parts = ms.flatMap { m =>
@@ -524,19 +474,15 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     */
   def articleFilePruning(source: String, asOf: Option[Int] = None)
       : (Long, Long) = {
-    val id = checkGc(asOf.orElse(snapshotIds().lastOption)
-      .getOrElse(throw new IllegalStateException("empty store")))
-    val ms = articleChain(id).filter(_.articlesPath.nonEmpty)
-    val withStats = ms.filter(_.fileStats.nonEmpty)
-    val total = withStats.map(_.fileStats.size.toLong).sum +
-      ms.filter(_.fileStats.isEmpty)
-        .map(m => parquetFileCount(m.articlesPath.get)).sum
-    val kept = withStats.map(_.fileStats
-      .count(_.mayContain(source)).toLong)
-      .sum +
-      ms.filter(_.fileStats.isEmpty)
-        .map(m => parquetFileCount(m.articlesPath.get)).sum
-    (kept, total)
+    val id = readId(asOf)
+    // a stats-less (legacy) manifest keeps every file of its dir
+    val counts = articleChain(id).filter(_.articlesPath.nonEmpty).map { m =>
+      if (m.fileStats.isEmpty) {
+        val n = parquetFileCount(m.articlesPath.get)
+        (n, n)
+      } else (m.fileStats.count(_.mayContain(source)).toLong, m.fileStats.size.toLong)
+    }
+    (counts.map(_._1).sum, counts.map(_._2).sum)
   }
 
   /** Seed the store with a pre-existing seen set as snapshot 0 (the analog
@@ -574,11 +520,10 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     * land in the manifest like add deltas.
     */
   def retract(spark: SparkSession, urls: DataFrame): Manifest = {
-    val latestId = snapshotIds().lastOption
-      .getOrElse(throw new IllegalStateException("empty store"))
-    val id = latestId + 1
+    val parent = latestId()
+    val id = parent + 1
     val actual = urls.select("canonical_url").distinct()
-      .join(seen(spark, Some(latestId)), Seq("canonical_url"), "left_semi")
+      .join(seen(spark, Some(parent)), Seq("canonical_url"), "left_semi")
       .withColumn("seg", segOf(col("canonical_url")))
     val r = s"data/seen/snap-$id" // same layout/namespace as add deltas
     // written once; an empty retraction leaves no data dir behind
@@ -586,8 +531,8 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     val rel =
       if (counts.nonEmpty) Some(r)
       else { deleteTree(root.resolve(r)); None }
-    writeManifest(Manifest(id, latestId, KindRetraction,
-      manifest(latestId).fetchEpoch, currentBloomItems(latestId),
+    writeManifest(Manifest(id, parent, KindRetraction,
+      manifest(parent).fetchEpoch, currentBloomItems(parent),
       None, rel, None, None, counts, 0L, 0L, 0L))
   }
 
@@ -605,20 +550,19 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     * it from this baseline (merge compatibility).
     */
   def compact(spark: SparkSession): Manifest = {
-    val latestId = snapshotIds().lastOption
-      .getOrElse(throw new IllegalStateException("empty store"))
-    val id = latestId + 1
+    val parent = latestId()
+    val id = parent + 1
     // summed per-segment lineage of the chain being folded — no data scan
     val folded = scala.collection.mutable.Map.empty[Int, Long]
-    seenChain(latestId).foreach(_.segmentCounts.foreach { case (s, c) =>
+    seenChain(parent).foreach(_.segmentCounts.foreach { case (s, c) =>
       folded(s) = folded.getOrElse(s, 0L) + c
     })
     val maxPerSegment = if (folded.isEmpty) 0L else folded.values.max
     val dial = math.max(bloomItemsPerSegment, maxPerSegment * 2L)
-    val full = seen(spark, Some(latestId))
+    val full = seen(spark, Some(parent))
     val (seenRel, bloomRel, segCounts) = writeSeenDelta(spark, full, id, dial)
-    val parentEpoch = manifest(latestId).fetchEpoch
-    writeManifest(Manifest(id, latestId, KindCompaction, parentEpoch, dial,
+    val parentEpoch = manifest(parent).fetchEpoch
+    writeManifest(Manifest(id, parent, KindCompaction, parentEpoch, dial,
       None, Some(seenRel), Some(bloomRel), None, segCounts, 0L, 0L, 0L))
   }
 
@@ -646,22 +590,21 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     *    which walks the manifest chain as its GC root set.
     */
   def compactArticles(spark: SparkSession): Manifest = {
-    val latestId = snapshotIds().lastOption
-      .getOrElse(throw new IllegalStateException("empty store"))
-    val folded = articleChain(latestId).filter(_.articlesPath.nonEmpty)
+    val parent = latestId()
+    val folded = articleChain(parent).filter(_.articlesPath.nonEmpty)
     require(folded.nonEmpty, "no article snapshots to compact")
-    val id = latestId + 1
+    val id = parent + 1
     val rel = s"data/articles/snap-$id"
-    articlesWithTick(spark, Some(latestId))
+    articlesWithTick(spark, Some(parent))
       .repartition(col("dt"))
       .sortWithinPartitions("source", "language")
       .write.mode(SaveMode.Overwrite)
       .partitionBy("dt")
       .parquet(root.resolve(rel).toString)
     val rewritten = folded.map(m => parquetFileCount(m.articlesPath.get)).sum
-    val parentEpoch = manifest(latestId).fetchEpoch
-    writeManifest(Manifest(id, latestId, KindArticleCompaction, parentEpoch,
-      currentBloomItems(latestId), Some(rel), None, None, None,
+    val parentEpoch = manifest(parent).fetchEpoch
+    writeManifest(Manifest(id, parent, KindArticleCompaction, parentEpoch,
+      currentBloomItems(parent), Some(rel), None, None, None,
       Map.empty, 0L, 0L, 0L,
       filesRewritten = rewritten, filesAdded = parquetFileCount(rel),
       fileStats = collectFileStats(rel)))
@@ -686,10 +629,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     */
   def gcHorizon(): Int =
     if (!Files.exists(gcPath)) -1
-    else """"horizon"\s*:\s*(-?\d+)""".r
-      .findFirstMatchIn(Files.readString(gcPath))
-      .map(_.group(1).toInt)
-      .getOrElse(throw new IllegalStateException("malformed gc.json"))
+    else required(Json.readTree(Files.readString(gcPath)), "horizon", "gc.json").asInt
 
   private def checkGc(id: Int): Int = {
     val h = gcHorizon()
@@ -720,7 +660,6 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     */
   def expireSnapshots(retainFrom: Int): ExpireStats = {
     val ids = snapshotIds()
-    require(ids.nonEmpty, "empty store")
     require(ids.contains(retainFrom),
       s"retainFrom $retainFrom is not a snapshot id")
     require(retainFrom >= gcHorizon(),
@@ -734,23 +673,11 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     val live = ids.map(manifest)
     val allData: Seq[String] = live.flatMap(m =>
       m.articlesPath ++ m.seenDeltaPath ++ m.bloomPath ++ m.errorsPath)
-    var dirs = 0
-    var files = 0L
-    var bytes = 0L
-    allData.filterNot(reachable).foreach { rel =>
-      val dir = root.resolve(rel)
-      if (Files.exists(dir)) {
-        Files.walk(dir).iterator().asScala.filter(Files.isRegularFile(_))
-          .foreach { p => files += 1; bytes += Files.size(p) }
-        deleteTree(dir)
-        dirs += 1
-      }
-    }
-    val tmp = Files.createTempFile(root, ".gc", ".tmp")
-    Files.writeString(tmp, s"""{"horizon": $retainFrom}""")
-    Files.move(tmp, gcPath, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-    ExpireStats(retainFrom, dirs, files, bytes)
+    val freed = allData.filterNot(reachable).distinct.map(root.resolve(_))
+      .filter(Files.exists(_)).map(reclaim)
+    publish(gcPath, ".gc",
+      Pretty.writeValueAsString(Json.createObjectNode().put("horizon", retainFrom)))
+    ExpireStats(retainFrom, freed.size, freed.map(_._1).sum, freed.map(_._2).sum)
   }
 
   final case class OrphanStats(dirsDeleted: Int, filesDeleted: Long,
@@ -776,36 +703,23 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
       m.articlesPath ++ m.seenDeltaPath ++ m.bloomPath ++ m.errorsPath)
       .map(rel => root.resolve(rel).toAbsolutePath.normalize).toSet
     val cutoff = System.currentTimeMillis() - olderThanMs
-    var dirs = 0
-    var files = 0L
-    var bytes = 0L
-    var skipped = 0
     def newestMtime(tree: Path): Long =
       Files.walk(tree).iterator().asScala
         .map(p => Files.getLastModifiedTime(p).toMillis).max
-    for {
+    val orphanDirs = for {
       table <- Seq("articles", "seen", "bloom", "errors")
       tableDir = dataDir.resolve(table)
       if Files.isDirectory(tableDir)
       snap <- Files.list(tableDir).iterator().asScala.toSeq
       if Files.isDirectory(snap)
       if !referenced.contains(snap.toAbsolutePath.normalize)
-    } {
-      if (newestMtime(snap) > cutoff) skipped += 1
-      else {
-        Files.walk(snap).iterator().asScala.filter(Files.isRegularFile(_))
-          .foreach { p => files += 1; bytes += Files.size(p) }
-        deleteTree(snap)
-        dirs += 1
-      }
-    }
-    Files.list(snapsDir).iterator().asScala.toSeq
+    } yield snap
+    val tmpFiles = Files.list(snapsDir).iterator().asScala.toSeq
       .filter(p => p.getFileName.toString.endsWith(".tmp"))
-      .foreach { p =>
-        if (Files.getLastModifiedTime(p).toMillis > cutoff) skipped += 1
-        else { files += 1; bytes += Files.size(p); Files.delete(p) }
-      }
-    OrphanStats(dirs, files, bytes, skipped)
+    val (recent, stale) = (orphanDirs ++ tmpFiles).partition(newestMtime(_) > cutoff)
+    val dirs = stale.count(Files.isDirectory(_))
+    val freed = stale.map(reclaim)
+    OrphanStats(dirs, freed.map(_._1).sum, freed.map(_._2).sum, recent.size)
   }
 
   // ----------------------------------------------------------------- reads
@@ -825,8 +739,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     * keep the plain zero-shuffle union fast path.
     */
   def seen(spark: SparkSession, asOf: Option[Int] = None): DataFrame = {
-    val id = checkGc(asOf.orElse(snapshotIds().lastOption)
-      .getOrElse(throw new IllegalStateException("empty store")))
+    val id = readId(asOf)
     val ms = seenChain(id).filter(_.seenDeltaPath.nonEmpty)
     if (ms.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -867,8 +780,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     * small binary rows; no URL is rehashed.
     */
   def segments(spark: SparkSession, asOf: Option[Int] = None): DataFrame = {
-    val id = checkGc(asOf.orElse(snapshotIds().lastOption)
-      .getOrElse(throw new IllegalStateException("empty store")))
+    val id = readId(asOf)
     val paths = seenChain(id).flatMap(_.bloomPath)
       .map(p => root.resolve(p).toString)
     val bloomSchema = StructType(Seq(
@@ -892,8 +804,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     * Empty DataFrame when no tick captured failures.
     */
   def errors(spark: SparkSession, asOf: Option[Int] = None): DataFrame = {
-    val id = checkGc(asOf.orElse(snapshotIds().lastOption)
-      .getOrElse(throw new IllegalStateException("empty store")))
+    val id = readId(asOf)
     val paths = chain(id).flatMap(_.errorsPath)
       .map(p => root.resolve(p).toString)
     val errSchema = StructType(Seq(
@@ -925,8 +836,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     * loudly rather than coerce silently.
     */
   def articles(spark: SparkSession, asOf: Option[Int] = None): DataFrame = {
-    val id = checkGc(asOf.orElse(snapshotIds().lastOption)
-      .getOrElse(throw new IllegalStateException("empty store")))
+    val id = readId(asOf)
     val ms = articleChain(id).filter(_.articlesPath.nonEmpty)
     require(ms.nonEmpty, "no article snapshots")
     ms.map { m =>
@@ -944,8 +854,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     */
   def articlesWithTick(spark: SparkSession,
       asOf: Option[Int] = None): DataFrame = {
-    val id = checkGc(asOf.orElse(snapshotIds().lastOption)
-      .getOrElse(throw new IllegalStateException("empty store")))
+    val id = readId(asOf)
     val ms = articleChain(id).filter(_.articlesPath.nonEmpty)
     require(ms.nonEmpty, "no article snapshots")
     ms.map { m =>
@@ -1000,8 +909,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     */
   def articlesBetween(spark: SparkSession, from: Int,
       to: Option[Int] = None): DataFrame = {
-    val id = to.orElse(snapshotIds().lastOption)
-      .getOrElse(throw new IllegalStateException("empty store"))
+    val id = to.getOrElse(latestId())
     val paths = chainWindow(from, id)
       .filter(_.kind != KindArticleCompaction).flatMap(_.articlesPath)
       .map(p => root.resolve(p).toString)
@@ -1031,8 +939,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
 
   private def seenEventsBetween(spark: SparkSession, from: Int,
       to: Option[Int], kind: String): DataFrame = {
-    val id = to.orElse(snapshotIds().lastOption)
-      .getOrElse(throw new IllegalStateException("empty store"))
+    val id = to.getOrElse(latestId())
     val paths = chainWindow(from, id)
       .filter(_.kind == kind).flatMap(_.seenDeltaPath)
       .map(p => root.resolve(p).toString)
@@ -1053,13 +960,27 @@ object FrontierStore {
   val KindRetraction = "retraction" // seen-set retraction (recrawl/refresh)
   val KindArticleCompaction = "article_compaction" // small-file rewrite
 
+  // manifests and gc.json: one mapper, written `"key": value` per line
+  private val Json = new ObjectMapper()
+  private val Pretty = Json.writer(new DefaultPrettyPrinter(
+    Separators.createDefaultInstance()
+      .withObjectFieldValueSpacing(Separators.Spacing.AFTER)))
+
+  /** `key` of a metadata document, which must be present and non-null. */
+  private def required(n: JsonNode, key: String, doc: String): JsonNode = {
+    val v = n.path(key)
+    if (v.isMissingNode || v.isNull)
+      throw new IllegalStateException(s"$doc missing $key")
+    v
+  }
+
   final case class Manifest(
       snapshotId: Int,
       parentId: Int, // -1 for first
       kind: String, // delta | compaction | retraction | article_compaction
       fetchEpoch: Long,
       // expectedItemsPerSegment this snapshot's blooms were built with;
-      // 0 = the store's constructor default (pre-r4 manifests)
+      // 0 = the store's constructor default (key absent: pre-r4 manifests)
       bloomItems: Long,
       articlesPath: Option[String],
       seenDeltaPath: Option[String], // None ⇔ idle tick (zero emissions)
@@ -1071,12 +992,12 @@ object FrontierStore {
       newArticles: Long, skipped: Long, errors: Long,
       // file-set lineage of an article_compaction (Iceberg rewrite commits
       // record replaced and added data files): parquet files folded vs
-      // written. 0/0 on every other kind.
+      // written. 0/0 on every other kind, and when the keys are absent.
       filesRewritten: Long = 0L, filesAdded: Long = 0L,
       // per-data-file column bounds (Iceberg manifest-entry stats): the
       // planning-time zone map [[FrontierStore.articlesForSource]] prunes
       // with — no footer is opened for a skipped file. Empty on pre-stats
-      // manifests and non-article snapshots.
+      // manifests (no `file_stats` key) and non-article snapshots.
       fileStats: Seq[FrontierStore.FileStat] = Nil)
 
   /** Column bounds of one article data file, harvested from its parquet

@@ -12,40 +12,20 @@ import graft.Bench
   */
 object FrontierProfile {
 
-  def force(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_FRONTIER_N", "8000000").toLong
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = Bench.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    import graft.functions.UrlFunctions._
 
     def t(name: String)(df: => DataFrame): Unit = {
-      force(df) // warmup (codegen + JIT)
-      val (_, sec) = Bench.timed(force(df))
+      Bench.force(df) // warmup (codegen + JIT)
+      val (_, sec) = Bench.timed(Bench.force(df))
       println(f"[profile] $name%-28s $sec%8.2f s  (${(n / sec).toLong}%,d rows/s of n)")
     }
 
-    val nHosts = 1000
-    def cand = spark.range(0, n).toDF("uid")
-      .withColumn("host", concat(lit("h"),
-        pmod(col("uid") * 2654435761L, lit(nHosts.toLong)), lit(".example.com")))
-      .withColumn("raw_url", concat(lit("HTTPS://WWW."), col("host"),
-        lit("/Section/"), pmod(col("uid"), lit(50L)), lit("/articles/a"),
-        col("uid"), lit("?utm_source=feed&z="), pmod(col("uid"), lit(97L)),
-        lit("&lang=en&utm_medium=rss&id="), col("uid"),
-        lit("&ref=home&utm_campaign=daily&s=1#sec")))
-      .withColumn("canonical_url", canonicalize_url(col("raw_url")))
-    def seen = spark.range(0, n, 3).toDF("uid")
-      .withColumn("host", concat(lit("h"),
-        pmod(col("uid") * 2654435761L, lit(nHosts.toLong)), lit(".example.com")))
-      .withColumn("canonical_url", concat(lit("https://www."), col("host"),
-        lit("/Section/"), pmod(col("uid"), lit(50L)), lit("/articles/a"),
-        col("uid"), lit("?id="), col("uid"), lit("&lang=en&ref=home&s=1&z="),
-        pmod(col("uid"), lit(97L))))
-      .select("canonical_url")
+    def cand = Bench.candidateUrls(spark, n)
+    def seen = Bench.seenUrls(spark, n)
 
     t("gen+canonicalize")(cand)
     t("bloom build") {
