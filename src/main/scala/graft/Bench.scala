@@ -39,7 +39,7 @@ object Bench {
     * prefilter → exact confirm anti-join → salted per-host rank → epoch
     * assignment. Returns the scheduled (unseen) candidates.
     */
-  def frontierJob(spark: SparkSession, n: Long, nHosts: Int = 1000,
+  def frontierJob(spark: SparkSession, n: Long,
       nSegments: Int = 32): DataFrame = {
     // Both synthetic inputs are persisted: candidates feed the two probe
     // branches (bloom-negative pass-through + confirm anti-join) and seen
@@ -47,9 +47,9 @@ object Bench {
     // each is ONE store scan read twice with pruning; here the generation
     // chain is string-heavy, and recomputing it per consumer would charge
     // the dedup stage for fixture synthesis.
-    val cand = candidateUrls(spark, n, nHosts)
+    val cand = candidateUrls(spark, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val seen = seenUrls(spark, n, nHosts)
+    val seen = seenUrls(spark, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val segments = graft.seen.UrlSeen.buildSegments(
       seen, "canonical_url", nSegments,
@@ -71,8 +71,9 @@ object Bench {
     graft.politeness.Scheduler.assignEpochs(ranked, "host_rank", lit(1000))
   }
 
-  private def hostOf(nHosts: Int) =
-    concat(lit("h"), pmod(col("uid") * 2654435761L, lit(nHosts.toLong)),
+  private val FixtureHosts = 1000L
+  private def hostOf =
+    concat(lit("h"), pmod(col("uid") * 2654435761L, lit(FixtureHosts)),
       lit(".example.com"))
 
   /** `n` synthetic frontier candidates (uid, host, canonical_url): realistic
@@ -81,10 +82,10 @@ object Bench {
     * dies at canonicalization: carrying it through a persist and the
     * politeness shuffles would double the row payload for nothing.
     */
-  def candidateUrls(spark: SparkSession, n: Long, nHosts: Int = 1000): DataFrame = {
+  def candidateUrls(spark: SparkSession, n: Long): DataFrame = {
     import graft.functions.UrlFunctions._
     spark.range(0, n).toDF("uid")
-      .withColumn("host", hostOf(nHosts))
+      .withColumn("host", hostOf)
       .withColumn("raw_url",
         concat(lit("HTTPS://WWW."), col("host"), lit("/Section/"),
           pmod(col("uid"), lit(50L)), lit("/articles/a"), col("uid"),
@@ -99,9 +100,9 @@ object Bench {
     * directly in canonical form (same construction → exact-parity probe).
     * One column, canonical_url.
     */
-  def seenUrls(spark: SparkSession, n: Long, nHosts: Int = 1000): DataFrame =
+  def seenUrls(spark: SparkSession, n: Long): DataFrame =
     spark.range(0, n, 3).toDF("uid")
-      .withColumn("host", hostOf(nHosts))
+      .withColumn("host", hostOf)
       .select(concat(lit("https://www."), col("host"), lit("/Section/"),
         pmod(col("uid"), lit(50L)), lit("/articles/a"), col("uid"),
         lit("?id="), col("uid"), lit("&lang=en&ref=home&s=1&z="),

@@ -5,8 +5,10 @@ import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.json.JsonReadFeature
 import com.fasterxml.jackson.core.util.{DefaultPrettyPrinter, Separators}
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.json.JsonMapper
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -960,8 +962,11 @@ object FrontierStore {
   val KindRetraction = "retraction" // seen-set retraction (recrawl/refresh)
   val KindArticleCompaction = "article_compaction" // small-file rewrite
 
-  // manifests and gc.json: one mapper, written `"key": value` per line
-  private val Json = new ObjectMapper()
+  // manifests and gc.json: one mapper, written `"key": value` per line.
+  // Manifests written before control characters were escaped hold them raw
+  // inside strings, so the reader accepts them.
+  private val Json = JsonMapper.builder()
+    .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS).build()
   private val Pretty = Json.writer(new DefaultPrettyPrinter(
     Separators.createDefaultInstance()
       .withObjectFieldValueSpacing(Separators.Spacing.AFTER)))

@@ -17,14 +17,17 @@ import graft.store.FrontierStore.{FileStat, Manifest, KindArticleCompaction,
   * a pre-dial root delta (no `bloom_items_per_segment`, `files_*` or
   * `file_stats` keys), a delta whose `file_stats` source carries `\u00XX`
   * escapes, a retraction, a compaction, a delta with error lineage, an
-  * article compaction — and its `gc.json`. Every manifest must read back
-  * to the value that renderer's own parser produced.
+  * article compaction — and its `gc.json`. `legacy-store-unescaped`
+  * holds one delta as the renderer wrote it before it escaped control
+  * characters, so its `file_stats` sources carry a raw tab and a raw
+  * U+0001. Every manifest must read back to the value that renderer's own
+  * parser produced.
   */
 class LegacyManifestSpec extends AnyFunSuite {
 
-  private val fixture = Paths.get(getClass.getResource("/legacy-store").toURI)
-
-  private def copyFixture(dir: String): Path = {
+  private def copyFixture(dir: String,
+      resource: String = "/legacy-store"): Path = {
+    val fixture = Paths.get(getClass.getResource(resource).toURI)
     new FrontierStore(dir).delete()
     val root = Paths.get(dir)
     Files.walk(fixture).iterator().asScala.foreach { p =>
@@ -131,5 +134,24 @@ class LegacyManifestSpec extends AnyFunSuite {
     assert(store.manifest(4) === expected(4))
     Files.writeString(root.resolve("gc.json"), """{"retain_from": 3}""")
     intercept[IllegalStateException] { store.gcHorizon() }
+  }
+
+  test("a manifest written before control characters were escaped reads " +
+      "its raw tab and U+0001 back") {
+    val dir = "target/test-store-legacy-unescaped"
+    copyFixture(dir, "/legacy-store-unescaped")
+    val store = new FrontierStore(dir, nSegments = 4, bloomItemsPerSegment = 256L)
+    val (lo, hi) = ("tab\there\u0001 \"q\\b\nx", "zeta\u0001\tend")
+    val (a0, s0, b0) = delta(0)
+    val exp = Manifest(0, -1, KindDelta, 0L, 256L, a0, s0, b0, None,
+      Map(0 -> 3L, 1 -> 2L), 5L, 0L, 0L,
+      fileStats = Seq(FileStat(part(0, "5b0c1f3e-9d2a-4c61-a7e8-3f4d2b1c0a99"),
+        lo, hi, 5L)))
+    val got = store.manifest(0)
+    got.productElementNames.zip(got.productIterator.zip(exp.productIterator))
+      .foreach { case (field, (g, e)) => assert(g == e, s"field $field") }
+    assert(store.chain(0) === Seq(exp))
+    assert(store.articleFilePruning(lo) === ((1L, 1L)))
+    assert(store.articleFilePruning("zz") === ((0L, 1L)))
   }
 }
