@@ -1,5 +1,6 @@
 package graft
 
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.SparkSession
 
 import graft.model.Fixtures
@@ -74,6 +75,48 @@ object FrontierMain {
     args.collectFirst {
       case a if a.startsWith(s"--$name=") => a.stripPrefix(s"--$name=")
     }
+
+  // ---------------------------------------------------- stdout JSON lines
+  // one object per line, rendered by Jackson (Bench.Json)
+
+  private def line(fill: ObjectNode => Unit): String = {
+    val o = Bench.Json.createObjectNode()
+    fill(o)
+    Bench.Json.writeValueAsString(o)
+  }
+
+  /** The per-tick metrics line; `sec` keeps two decimals. */
+  def tickLine(tick: Int, m: FrontierStore.Manifest, probe: String,
+      invariantViolations: Option[Long], sec: Double): String = line { o =>
+    o.put("tick", tick).put("snapshot", m.snapshotId)
+      .put("new_articles", m.newArticles).put("skipped", m.skipped)
+      .put("errors", m.errors).put("segments", m.segmentCounts.size)
+      .put("probe", probe)
+    invariantViolations.foreach(o.put("invariant_violations", _))
+    o.put("sec", java.math.BigDecimal.valueOf(sec)
+      .setScale(2, java.math.RoundingMode.HALF_UP))
+  }
+
+  def recrawlLine(tick: Int, r: FrontierStore.Manifest): String = line(_
+    .put("recrawl_at_tick", tick).put("snapshot", r.snapshotId)
+    .put("retracted", r.segmentCounts.values.sum))
+
+  def compactionLine(c: FrontierStore.Manifest): String = line(_
+    .put("compaction", c.snapshotId).put("folded_deltas", true))
+
+  def articleCompactionLine(a: FrontierStore.Manifest): String = line(_
+    .put("article_compaction", a.snapshotId)
+    .put("files_rewritten", a.filesRewritten).put("files_added", a.filesAdded))
+
+  def expiryLine(tick: Int, e: FrontierStore#ExpireStats): String = line(_
+    .put("expire_at_tick", tick).put("horizon", e.horizon)
+    .put("data_dirs_deleted", e.dirsDeleted).put("files_deleted", e.filesDeleted)
+    .put("bytes_freed", e.bytesFreed))
+
+  def orphanSweepLine(o: FrontierStore#OrphanStats): String = line(_
+    .put("orphan_sweep", true).put("dirs_deleted", o.dirsDeleted)
+    .put("files_deleted", o.filesDeleted).put("bytes_freed", o.bytesFreed)
+    .put("skipped_recent", o.skippedRecent))
 
   def main(args: Array[String]): Unit = {
     val pos = args.filterNot(_.startsWith("--"))
@@ -167,10 +210,8 @@ object FrontierMain {
       invRelease()
       t.cleanup() // release the tick's cached intermediates (ADVICE r1)
       val sec = (System.nanoTime() - t0) / 1e9
-      val invJson =
-        if (checkInvariants) s""","invariant_violations":$nViolations""" else ""
-      println(
-        s"""{"tick":$tick,"snapshot":${m.snapshotId},"new_articles":${m.newArticles},"skipped":${m.skipped},"errors":${m.errors},"segments":${m.segmentCounts.size},"probe":"${if (exactProbe) "exact" else "bloom"}"$invJson,"sec":${f"$sec%.2f"}}""")
+      println(tickLine(tick, m, if (exactProbe) "exact" else "bloom",
+        Some(nViolations).filter(_ => checkInvariants), sec))
       if (recrawlEvery > 0 && (tick + 1) % recrawlEvery == 0) {
         import org.apache.spark.sql.functions.{col, lit}
         // age basis = the committing TICK (crawl_tick), not the per-host
@@ -183,18 +224,18 @@ object FrontierMain {
         val due = graft.politeness.Scheduler.recrawlDue(
           arts, intervals, nowEpoch = tick.toLong)
         val r = store.retract(spark, due)
-        println(s"""{"recrawl_at_tick":$tick,"snapshot":${r.snapshotId},"retracted":${r.segmentCounts.values.sum}}""")
+        println(recrawlLine(tick, r))
       }
       if (compactEvery > 0 && (tick + 1) % compactEvery == 0) {
         val c = store.compact(spark)
-        println(s"""{"compaction":${c.snapshotId},"folded_deltas":true}""")
+        println(compactionLine(c))
         // fold the article small files on the same cadence (the Iceberg
         // rewrite_data_files maintenance action); lineage = file sets
         val hasArticles = store.latest().map(_.snapshotId)
           .exists(id => store.articleChain(id).exists(_.articlesPath.nonEmpty))
         if (hasArticles) {
           val a = store.compactArticles(spark)
-          println(s"""{"article_compaction":${a.snapshotId},"files_rewritten":${a.filesRewritten},"files_added":${a.filesAdded}}""")
+          println(articleCompactionLine(a))
         }
       }
       if (expireEvery > 0 && (tick + 1) % expireEvery == 0) {
@@ -202,13 +243,13 @@ object FrontierMain {
         val retainFrom = ids.takeRight(retainLast.max(1)).head
         if (retainFrom > store.gcHorizon()) {
           val e = store.expireSnapshots(retainFrom)
-          println(s"""{"expire_at_tick":$tick,"horizon":${e.horizon},"data_dirs_deleted":${e.dirsDeleted},"files_deleted":${e.filesDeleted},"bytes_freed":${e.bytesFreed}}""")
+          println(expiryLine(tick, e))
         }
       }
     }
     gcOrphansMin.foreach { min =>
       val o = store.removeOrphanFiles(olderThanMs = min * 60_000L)
-      println(s"""{"orphan_sweep":true,"dirs_deleted":${o.dirsDeleted},"files_deleted":${o.filesDeleted},"bytes_freed":${o.bytesFreed},"skipped_recent":${o.skippedRecent}}""")
+      println(orphanSweepLine(o))
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -271,26 +271,23 @@ object CrawlTick {
         to_json(struct(col("source"), col("kind"))).as("metadata"),
         col("source_idx"), col("item_idx"))
 
-    // per-source stats (A1): new/skipped/errors
-    val skips = flagged
+    // per-source stats (A1): new/skipped/errors — one aggregation over a
+    // union of narrow counter rows: a zero row per source (every source
+    // reports, even one with no listing), one per flagged listing row and
+    // one per deduped fetch row (a cross-source loss counts skipped)
+    def counters(df: DataFrame, newArticles: Column, skipped: Column,
+        errors: Column): DataFrame =
+      df.select(col("source"), newArticles.as("new_articles"),
+        skipped.as("skipped"), errors.as("errors"))
+    def one(c: Column): Column = when(c, 1L).otherwise(0L)
+    val stats = counters(sources, lit(0L), lit(0L), lit(0L))
+      .unionByName(counters(flagged, lit(0L),
+        one(col("skip_reason").isNotNull), lit(0L)))
+      .unionByName(counters(deduped, one(col("final_emit")),
+        one(col("emit") && col("xsrc_rank") =!= 1), one(!col("fetch_ok"))))
       .groupBy("source")
-      .agg(sum(when(col("skip_reason").isNotNull, 1).otherwise(0)).as("skipped0"))
-    val fetchErrs = deduped
-      .groupBy("source")
-      .agg(
-        sum(when(!col("fetch_ok"), 1).otherwise(0)).as("errors"),
-        sum(when(col("emit") && col("xsrc_rank") =!= 1, 1).otherwise(0))
-          .as("xsrc_losses"),
-        sum(when(col("final_emit"), 1).otherwise(0)).as("new_articles"))
-    val stats = sources.select("source").distinct()
-      .join(skips, Seq("source"), "left")
-      .join(fetchErrs, Seq("source"), "left")
-      .select(
-        col("source"),
-        coalesce(col("new_articles"), lit(0L)).as("new_articles"),
-        (coalesce(col("skipped0"), lit(0L)) +
-          coalesce(col("xsrc_losses"), lit(0L))).as("skipped"),
-        coalesce(col("errors"), lit(0L)).as("errors"))
+      .agg(sum("new_articles").as("new_articles"), sum("skipped").as("skipped"),
+        sum("errors").as("errors"))
 
     // C5: error rows captured, not just counted — every claimed candidate
     // whose fetch failed (status ≠ 200 or no page row), with the reason

@@ -1,6 +1,6 @@
 package graft.seen
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.expressions.Aggregator
@@ -277,8 +277,8 @@ object UrlSeen {
 
   /** Exact unseen-filter: candidates minus seen, Bloom-accelerated.
     *
-    * Probe strategy, by total segment size (one tiny agg over nSegments
-    * rows decides):
+    * Probe strategy, by total segment size ([[dispatchSegments]], shared
+    * with the flag form):
     *
     *  - ≤ `maxBroadcastBytes`: segment bytes BROADCAST as an array and
     *    probed by a codegen'd scalar — NOT joined onto the candidate rows.
@@ -305,101 +305,71 @@ object UrlSeen {
     */
   def filterUnseen(candidates: DataFrame, segments: DataFrame, seen: DataFrame,
       urlCol: String, nSegments: Int,
-      maxBroadcastBytes: Long = DefaultMaxBroadcastSegmentBytes): DataFrame = {
-    // cached (graft.plans.Pinned): the size probe and the collect/probe-join
-    // both consume the segments; without it the Bloom build runs twice.
-    // (Parquet-backed segments from FrontierStore make both passes cheap.)
-    val (segsCached, segsRelease) = graft.plans.Pinned(segments)
-    val totalBytes = segsCached
-      .agg(coalesce(sum(length(col("bloom"))), lit(0L))).collect()(0).getLong(0)
-    if (totalBytes <= maxBroadcastBytes) {
-      val out = filterUnseenBroadcast(candidates, segsCached, seen, urlCol, nSegments)
-      segsRelease()
-      out
-    } else {
-      // stays persisted: the co-partitioned probe job still has to read it
-      filterUnseenCopartitioned(candidates, segsCached, seen, urlCol, nSegments)
+      maxBroadcastBytes: Long = DefaultMaxBroadcastSegmentBytes): DataFrame =
+    // a cached segments frame stays persisted on the co-partitioned path:
+    // the probe job still has to read it
+    dispatchSegments(segments, nSegments, maxBroadcastBytes, cache = true)._1 match {
+      case Left(segs) =>
+        unseenOf(flagMaybeBroadcast(candidates, segs, urlCol), seen, urlCol)
+      case Right(segs) =>
+        filterUnseenCopartitioned(candidates, segs, seen, urlCol, nSegments)
     }
-  }
 
-  /** Broadcast-probe path (small/medium segment sets). The broadcast is
-    * registered with the context cleaner — it is released when the returned
-    * plan's last reference is GC'd (callers running many ticks in one
-    * driver should still prefer bounded tick lifetimes).
+  /** The size dispatch behind every two-phase probe: `Left(segment array)`
+    * (indexed by seg, null = empty segment) when the segments' total bytes
+    * fit `maxBroadcastBytes`, else `Right(frame)` for the co-partitioned
+    * probe — plus the hook that releases what the dispatch cached.
     *
-    * NULL urls (ADVICE r3): xxhash64(NULL) is NULL, so the raw probe
-    * returns NULL — which both `filter(__maybe)` and `filter(!__maybe)`
-    * would silently drop. The probe is coalesced to false: a NULL url is
-    * "definitely unseen" on every variant, matching the exact anti-join
-    * (NULL never equals a seen url, so the anti-join keeps the row).
+    * A local frame (FrontierStore.segments merged on the driver) is sized
+    * from its own rows: no cache, no size job, no collect job. Any other
+    * frame is sized by one tiny aggregation over its nSegments rows; with
+    * `cache` it is [[graft.plans.Pinned]] first, because that job and the
+    * collect or probe job both read it, and the broadcast path releases it
+    * at once, since the bytes then live in the broadcast.
     */
-  def filterUnseenBroadcast(candidates: DataFrame, segments: DataFrame,
-      seen: DataFrame, urlCol: String, nSegments: Int): DataFrame = {
-    val spark = candidates.sparkSession
-    val segsArr = new Array[Array[Byte]](nSegments)
-    segments.collect().foreach { r =>
-      segsArr(r.getLong(0).toInt) = r.getAs[Array[Byte]]("bloom")
+  private def dispatchSegments(segments: DataFrame, nSegments: Int,
+      maxBroadcastBytes: Long, cache: Boolean)
+      : (Either[Array[Array[Byte]], DataFrame], () => Unit) = {
+    val noop = () => ()
+    def asArray(rows: Array[Row]): Array[Array[Byte]] = {
+      val segs = new Array[Array[Byte]](nSegments)
+      rows.foreach(r => segs(r.getLong(0).toInt) = r.getAs[Array[Byte]]("bloom"))
+      segs
     }
-    val bc = spark.sparkContext.broadcast(segsArr)
-    val probe = coalesce(Bridge.column(BloomSegmentsProbe(
-      Bridge.expression(urlHash(col(urlCol))), bc)), lit(false))
-    val flagged = candidates.withColumn("__maybe", probe)
-    // phase 1: bloom-negative → definitely unseen (no false negatives)
-    val definitelyNew = flagged.filter(!col("__maybe")).drop("__maybe")
-    // phase 2: exact confirm for bloom-positives only (true-seen + FPP mass)
-    definitelyNew.unionByName(confirmJoin(
-      flagged.filter(col("__maybe")).drop("__maybe"), seen, urlCol))
+    if (segments.isLocal) {
+      val rows = segments.collect()
+      val totalBytes = rows.iterator
+        .map(r => Option(r.getAs[Array[Byte]]("bloom")).fold(0L)(_.length.toLong)).sum
+      (if (totalBytes <= maxBroadcastBytes) Left(asArray(rows)) else Right(segments), noop)
+    } else {
+      val (segs, release) = if (cache) graft.plans.Pinned(segments) else (segments, noop)
+      val totalBytes = segs
+        .agg(coalesce(sum(length(col("bloom"))), lit(0L))).collect()(0).getLong(0)
+      if (totalBytes <= maxBroadcastBytes) {
+        val arr = asArray(segs.collect())
+        release()
+        (Left(arr), noop)
+      } else (Right(segs), release)
+    }
   }
 
-  /** Co-partitioned probe — the 10^10-scale path (VERDICT r1 #2).
-    *
-    * Both sides are repartitioned into `nSegments` partitions by their
-    * segment id (same single-column hash partitioning ⇒ identical
-    * seg→partition mapping), then zipped partition-wise: each task loads
-    * the few segment byte-arrays that hash to its partition ONCE into a
-    * map and streams its candidate split through them. Segment bytes never
-    * enter a per-row join output and never touch the driver; peak memory
-    * per task = its own segments (~36 MB each at the design point).
-    *
-    * The zip leaves whole-stage codegen for one stage (row-level RDD zip);
-    * that is the price of streaming multi-GB filter state, and only the
-    * probe stage pays it — phases before/after stay columnar.
+  /** Bloom-negative rows, plus the Bloom-positive ones the exact confirm
+    * join finds unseen, of a `__maybe`-flagged candidate frame.
+    */
+  private def unseenOf(flagged: DataFrame, seen: DataFrame, urlCol: String): DataFrame =
+    // phase 1: bloom-negative → definitely unseen (no false negatives)
+    flagged.filter(!col("__maybe")).drop("__maybe")
+      // phase 2: exact confirm for bloom-positives only (true-seen + FPP mass)
+      .unionByName(confirmJoin(flagged.filter(col("__maybe")).drop("__maybe"),
+        seen, urlCol))
+
+  /** Co-partitioned probe — the 10^10-scale path (VERDICT r1 #2): the
+    * zip probe of [[flagMaybeCopartitioned]], then the exact confirm.
     */
   def filterUnseenCopartitioned(candidates: DataFrame, segments: DataFrame,
-      seen: DataFrame, urlCol: String, nSegments: Int): DataFrame = {
-    val spark = candidates.sparkSession
-    val cand = candidates
-      .withColumn("__h", urlHash(col(urlCol)))
-      .withColumn("__seg", segmentOf(col("__h"), nSegments))
-      .repartition(nSegments, col("__seg"))
-    val segs = segments
-      .select(col("seg").cast("long").as("seg"), col("bloom"))
-      .repartition(nSegments, col("seg"))
-    val schema = cand.schema.add("__maybe", BooleanType, nullable = false)
-    val hIdx = cand.schema.fieldIndex("__h")
-    val flaggedRdd = cand.rdd.zipPartitions(segs.rdd) { (candIt, segIt) =>
-      val blooms = scala.collection.mutable.LongMap[Array[Byte]]()
-      segIt.foreach(r => blooms(r.getLong(0)) = r.getAs[Array[Byte]](1))
-      candIt.map { r =>
-        // NULL url ⇒ NULL hash ⇒ definitely unseen (ADVICE r3: matches the
-        // exact anti-join truth table; getLong on the null would NPE)
-        val maybe = !r.isNullAt(hIdx) && {
-          val h = r.getLong(hIdx)
-          blooms.get(pmodLong(h, nSegments)) match {
-            case Some(b) => BloomFilter.mightContainSerialized(b, h)
-            case None => false // empty segment ⇒ definitely unseen
-          }
-        }
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ maybe)
-      }
-    }
-    val flagged = spark.createDataFrame(flaggedRdd, schema)
-    val definitelyNew = flagged.filter(!col("__maybe"))
-      .drop("__maybe", "__h", "__seg")
-    definitelyNew.unionByName(confirmJoin(
-      flagged.filter(col("__maybe")).drop("__maybe", "__h", "__seg"),
-      seen, urlCol))
-  }
+      seen: DataFrame, urlCol: String, nSegments: Int): DataFrame =
+    unseenOf(flagMaybeCopartitioned(candidates, segments, urlCol, nSegments),
+      seen, urlCol)
 
   def pmodLong(h: Long, n: Int): Long = ((h % n) + n) % n
 
@@ -421,8 +391,8 @@ object UrlSeen {
     // Plan-pure form: NO persists (the managed variant's caches would leak
     // here — this wrapper has no release hook to hand back, so it must not
     // acquire anything). The price is recomputation: the candidate upstream
-    // evaluates up to 3× (neg + semi + anti) and the segment frame twice
-    // (size probe + probe job). One-shot callers (single queries, specs)
+    // evaluates up to 3× (neg + semi + anti) and a non-local segment frame
+    // twice (size job + probe job). One-shot callers (single queries, specs)
     // absorb that; loops (FrontierMain ticks) must use [[flagSeenManaged]].
     case SeenProbe.Exact(_) =>
       flagSeenManaged(candidates, probe, urlCol, flagCol)._1
@@ -443,12 +413,14 @@ object UrlSeen {
     *    pair), which would otherwise re-run the full candidate upstream
     *    (listings join, canonicalize, robots) three times at first
     *    materialization;
-    *  - the segments frame, read by the size probe and then by the
-    *    broadcast collect or the co-partitioned probe job.
+    *  - a segments frame that is not local, read by the size job and then
+    *    by the broadcast collect or the co-partitioned probe job. A local
+    *    one (the store's driver-merged blooms) is neither cached nor read
+    *    by a job ([[dispatchSegments]]).
     *
     * Both are pinned at one partition per core: AQE never coalesces a
-    * cached plan's final stage, and the store's merged segments come out of
-    * a shuffle, so a plain persist would keep `spark.sql.shuffle.partitions`
+    * cached plan's final stage, and a distributed segment merge comes out
+    * of a shuffle, so a plain persist would keep `spark.sql.shuffle.partitions`
     * (200 in production) partitions of a few rows each and run that many
     * tasks in every stage that fills or reads them.
     *
@@ -486,24 +458,15 @@ object UrlSeen {
       seen: DataFrame, urlCol: String, flagCol: String, nSegments: Int,
       maxBroadcastBytes: Long, cuckoo: Boolean,
       cache: Boolean = true): (DataFrame, () => Unit) = {
-    val noop = () => ()
-    val (segsCached, segsRelease) =
-      if (cache) graft.plans.Pinned(segments) else (segments, noop)
-    val totalBytes = segsCached
-      .agg(coalesce(sum(length(col("bloom"))), lit(0L))).collect()(0).getLong(0)
-    val flagged0 =
-      if (totalBytes <= maxBroadcastBytes) {
-        val out = flagMaybeBroadcast(candidates, segsCached, urlCol,
-          nSegments, cuckoo)
-        // the segment bytes now live in the broadcast
-        segsRelease()
-        out
-      } else
-        // stays cached: the co-partitioned probe job still has to read it
-        flagMaybeCopartitioned(candidates, segsCached, urlCol, nSegments,
-          cuckoo)
+    val (side, segsRelease) =
+      dispatchSegments(segments, nSegments, maxBroadcastBytes, cache)
+    val flagged0 = side match {
+      case Left(segs) => flagMaybeBroadcast(candidates, segs, urlCol, cuckoo)
+      case Right(segs) =>
+        flagMaybeCopartitioned(candidates, segs, urlCol, nSegments, cuckoo)
+    }
     val (flagged, flaggedRelease) =
-      if (cache) graft.plans.Pinned(flagged0) else (flagged0, noop)
+      if (cache) graft.plans.Pinned(flagged0) else (flagged0, () => ())
     val neg = flagged.filter(!col("__maybe"))
       .withColumn(flagCol, lit(false)).drop("__maybe")
     val pos = flagged.filter(col("__maybe")).drop("__maybe")
@@ -513,22 +476,24 @@ object UrlSeen {
     val posNew = pos.join(seenSel, pos(urlCol) === col("__seen_url"),
       "left_anti").withColumn(flagCol, lit(false))
     val out = neg.unionByName(posSeen).unionByName(posNew)
-    // unpersist is idempotent: releasing the broadcast path's segments
-    // again is a no-op
     (out, () => { flaggedRelease(); segsRelease() })
   }
 
-  /** candidates + boolean `__maybe` via the broadcast codegen probe.
-    * NULL urls probe to false (see [[filterUnseenBroadcast]]).
+  /** candidates + boolean `__maybe` via the broadcast codegen probe over
+    * `segs` (indexed by seg; null = empty segment = definitely unseen).
+    *
+    * The broadcast is registered with the context cleaner — it is released
+    * when the returned plan's last reference is GC'd.
+    *
+    * NULL urls (ADVICE r3): xxhash64(NULL) is NULL, so the raw probe
+    * returns NULL — which both `filter(__maybe)` and `filter(!__maybe)`
+    * would silently drop. The probe is coalesced to false: a NULL url is
+    * "definitely unseen" on every variant, matching the exact anti-join
+    * (NULL never equals a seen url, so the anti-join keeps the row).
     */
-  private def flagMaybeBroadcast(candidates: DataFrame, segments: DataFrame,
-      urlCol: String, nSegments: Int, cuckoo: Boolean = false): DataFrame = {
-    val spark = candidates.sparkSession
-    val segsArr = new Array[Array[Byte]](nSegments)
-    segments.collect().foreach { r =>
-      segsArr(r.getLong(0).toInt) = r.getAs[Array[Byte]]("bloom")
-    }
-    val bc = spark.sparkContext.broadcast(segsArr)
+  private def flagMaybeBroadcast(candidates: DataFrame, segs: Array[Array[Byte]],
+      urlCol: String, cuckoo: Boolean = false): DataFrame = {
+    val bc = candidates.sparkSession.sparkContext.broadcast(segs)
     val hashExpr = Bridge.expression(urlHash(col(urlCol)))
     val rawProbe =
       if (cuckoo) Bridge.column(CuckooSegmentsProbe(hashExpr, bc))
@@ -538,6 +503,18 @@ object UrlSeen {
 
   /** candidates + `__maybe` via the co-partitioned zip probe (10^10 path —
     * no driver collect, segment bytes stream once per task).
+    *
+    * Both sides are repartitioned into `nSegments` partitions by their
+    * segment id (same single-column hash partitioning ⇒ identical
+    * seg→partition mapping), then zipped partition-wise: each task loads
+    * the few segment byte-arrays that hash to its partition ONCE into a
+    * map and streams its candidate split through them. Segment bytes never
+    * enter a per-row join output and never touch the driver; peak memory
+    * per task = its own segments (~36 MB each at the design point).
+    *
+    * The zip leaves whole-stage codegen for one stage (row-level RDD zip);
+    * that is the price of streaming multi-GB filter state, and only the
+    * probe stage pays it — phases before/after stay columnar.
     */
   private def flagMaybeCopartitioned(candidates: DataFrame, segments: DataFrame,
       urlCol: String, nSegments: Int, cuckoo: Boolean = false): DataFrame = {
@@ -555,7 +532,8 @@ object UrlSeen {
       val blooms = scala.collection.mutable.LongMap[Array[Byte]]()
       segIt.foreach(r => blooms(r.getLong(0)) = r.getAs[Array[Byte]](1))
       candIt.map { r =>
-        // NULL url ⇒ NULL hash ⇒ definitely unseen (ADVICE r3)
+        // NULL url ⇒ NULL hash ⇒ definitely unseen (ADVICE r3: matches the
+        // exact anti-join truth table; getLong on the null would NPE)
         val maybe = !r.isNullAt(hIdx) && {
           val h = r.getLong(hIdx)
           blooms.get(pmodLong(h, nSegments)) match {

@@ -10,9 +10,10 @@ import com.fasterxml.jackson.core.util.{DefaultPrettyPrinter, Separators}
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.json.JsonMapper
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType,
+  StructField, StructType}
 
 /** Snapshot-committed frontier/article store — Iceberg *semantics* over
   * partitioned Parquet (SURVEY.md §7.0: no Iceberg runtime jar in
@@ -58,6 +59,11 @@ import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField
   * Time-travel: any read takes an optional snapshot id; the manifest chain
   * (parent pointers) gives the file set as of that snapshot.
   *
+  * Store metadata is served without Spark jobs where it can be: seen and
+  * bloom reads carry their known schemas (no inference scan), and
+  * [[segments]] merges the chain's blooms on the driver while their files
+  * fit the probe's broadcast budget.
+  *
   * == Bloom dial math (the 10^10 design point) ==
   *
   * Per-segment Bloom size follows BloomFilter.create: at FPP 1e-6,
@@ -93,7 +99,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
   // ------------------------------------------------------------- manifests
 
   import FrontierStore.{Manifest, KindDelta, KindCompaction, KindRetraction,
-    KindArticleCompaction, Json, Pretty, required}
+    KindArticleCompaction, Json, Pretty, required, SeenDeltaSchema, BloomSchema}
 
   private def manifestPath(id: Int): Path =
     snapsDir.resolve(f"snap-$id%05d.json")
@@ -241,8 +247,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     // built from the just-written parquet so the expensive delta plan above
     // is not recomputed
     val bloomRel = s"data/bloom/snap-$id"
-    graft.seen.UrlSeen.buildSegments(
-        spark.read.parquet(root.resolve(seenRel).toString),
+    graft.seen.UrlSeen.buildSegments(seenDelta(spark, seenRel),
         "canonical_url", nSegments, itemsPerSegment, bloomFpp)
       .write.mode(SaveMode.Overwrite)
       .parquet(root.resolve(bloomRel).toString)
@@ -726,8 +731,16 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
 
   // ----------------------------------------------------------------- reads
 
-  private val seenSchema = StructType(Seq(
-    StructField("canonical_url", StringType)))
+  /** One seen-delta dir (`seg=N` subdirs) read with its known schema: no
+    * inference job opens a footer before the plan runs.
+    */
+  private def seenDelta(spark: SparkSession, rel: String): DataFrame =
+    spark.read.schema(SeenDeltaSchema).parquet(root.resolve(rel).toString)
+      .select("canonical_url")
+
+  private def emptySeen(spark: SparkSession): DataFrame =
+    spark.createDataFrame(java.util.List.of[Row](), SeenDeltaSchema)
+      .select("canonical_url")
 
   /** URL-seen state as of snapshot `asOf` (default: latest): union of the
     * seen deltas back to the nearest compaction baseline. One column
@@ -743,19 +756,14 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
   def seen(spark: SparkSession, asOf: Option[Int] = None): DataFrame = {
     val id = readId(asOf)
     val ms = seenChain(id).filter(_.seenDeltaPath.nonEmpty)
-    if (ms.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        seenSchema)
+    if (ms.isEmpty) emptySeen(spark)
     else if (!ms.exists(_.kind == KindRetraction))
       // one read per snapshot dir, unioned: each dir is its own partitioned
       // root (seg=N subdirs), so a single multi-path read would mis-infer
-      ms.map(m => spark.read
-          .parquet(root.resolve(m.seenDeltaPath.get).toString)
-          .select("canonical_url"))
-        .reduce(_ unionByName _)
+      ms.map(m => seenDelta(spark, m.seenDeltaPath.get)).reduce(_ unionByName _)
     else {
       val events = ms.map { m =>
-        spark.read.parquet(root.resolve(m.seenDeltaPath.get).toString)
+        seenDelta(spark, m.seenDeltaPath.get)
           .select(col("canonical_url"),
             lit(m.snapshotId).as("__snap"),
             lit(m.kind != KindRetraction).as("__add"))
@@ -775,28 +783,101 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
   def seenDeltaPaths(id: Int): Seq[String] =
     seenChain(id).flatMap(_.seenDeltaPath).map(p => root.resolve(p).toString)
 
-  /** OR-merged Bloom segments as of `asOf` — ready for
+  /** OR-merged Bloom segments as of `asOf` (seg, bloom) — ready for
     * UrlSeen.filterUnseen, bitwise identical to rebuilding from the full
     * seen set (Bloom bit-union = key-union; equality asserted in
-    * FrontierStoreSpec). Cost: read nSegments × (deltas since compaction)
-    * small binary rows; no URL is rehashed.
+    * FrontierStoreSpec). No URL is rehashed.
+    *
+    * While the chain's bloom files (sized from disk, no scan) fit
+    * `UrlSeen.DefaultMaxBroadcastSegmentBytes`, the merge runs on the driver
+    * and the result is a local frame: UrlSeen sizes and broadcasts it with
+    * no Spark job. The merged bytes are memoized per chain
+    * ([[mergedOnDriver]]), so a looping driver reads each delta's bloom
+    * file once. Above that budget the merge is distributed, at one
+    * partition per segment.
     */
-  def segments(spark: SparkSession, asOf: Option[Int] = None): DataFrame = {
-    val id = readId(asOf)
-    val paths = seenChain(id).flatMap(_.bloomPath)
-      .map(p => root.resolve(p).toString)
-    val bloomSchema = StructType(Seq(
-      StructField("seg", LongType), StructField("bloom", BinaryType)))
-    if (paths.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], bloomSchema)
-    val all = paths.map(p => spark.read.parquet(p)).reduce(_ unionByName _)
+  def segments(spark: SparkSession, asOf: Option[Int] = None): DataFrame =
+    segmentsWithin(spark, asOf, graft.seen.UrlSeen.DefaultMaxBroadcastSegmentBytes)
+
+  /** [[segments]] with the driver-merge budget `localBytes`. */
+  private[graft] def segmentsWithin(spark: SparkSession, asOf: Option[Int],
+      localBytes: Long): DataFrame = {
+    val chain = seenChain(readId(asOf)).filter(_.bloomPath.nonEmpty)
+      .map(m => m.snapshotId -> parquetFiles(m.bloomPath.get))
+    if (chain.flatMap(_._2).map(Files.size).sum <= localBytes)
+      spark.createDataFrame(
+        mergedOnDriver(chain).toSeq.sortBy(_._1)
+          .map { case (seg, bloom) => Row(seg, bloom) }.asJava,
+        BloomSchema)
+    else mergedDistributed(spark, chain.flatMap(_._2))
+  }
+
+  // the last chain segments() merged on the driver: its bloom-bearing
+  // snapshot ids (baseline first) and the merged bytes per segment
+  private var bloomMemo: (Seq[Int], Map[Long, Array[Byte]]) = (Nil, Map.empty)
+
+  /** Bloom-bearing snapshot ids of the chain the memo serves. */
+  private[graft] def memoizedBloomChain: Seq[Int] = synchronized(bloomMemo._1)
+
+  /** The chain's per-delta blooms OR-merged per segment on the driver. A
+    * chain that extends the memoized one (same baseline, more deltas)
+    * merges only its new deltas into the memo; any other chain (a new
+    * baseline, a time-travel read) is merged from scratch. The memo then
+    * serves this chain alone, so it never holds more than one chain's
+    * segments.
+    */
+  private def mergedOnDriver(chain: Seq[(Int, Seq[Path])]): Map[Long, Array[Byte]] =
+    synchronized {
+      val ids = chain.map(_._1)
+      val (memoIds, memoSegs) = bloomMemo
+      val (from, todo) =
+        if (memoIds.nonEmpty && ids.startsWith(memoIds)) (memoSegs, chain.drop(memoIds.size))
+        else (Map.empty[Long, Array[Byte]], chain)
+      val merged = todo.flatMap(_._2).flatMap(bloomRows).foldLeft(from) {
+        case (acc, (seg, bloom)) => acc.updated(seg,
+          acc.get(seg).fold(bloom)(graft.seen.BloomFilter.mergeSerialized(_, bloom)))
+      }
+      bloomMemo = (ids, merged)
+      merged
+    }
+
+  /** The (seg, bloom) rows of one bloom parquet file, read on the driver
+    * through the same footer reader as [[collectFileStats]].
+    */
+  private def bloomRows(p: Path): Seq[(Long, Array[Byte])] = {
+    val reader = openFooter(p)
+    try {
+      val schema = reader.getFooter.getFileMetaData.getSchema
+      val seg = schema.getFieldIndex("seg")
+      val bloom = schema.getFieldIndex("bloom")
+      val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)
+      Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null)
+        .flatMap { pages =>
+          val records = io.getRecordReader(pages,
+            new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(schema))
+          Iterator.fill(pages.getRowCount.toInt)(records.read())
+        }
+        .map(g => (g.getLong(seg, 0), g.getBinary(bloom, 0).getBytes))
+        .toList
+    } finally reader.close()
+  }
+
+  /** The merge for bloom files above the driver budget: their rows
+    * repartitioned by segment into `nSegments` partitions, each task
+    * OR-merging the rows of its own segments.
+    */
+  private def mergedDistributed(spark: SparkSession, files: Seq[Path]): DataFrame = {
     import spark.implicits._
-    all.select(col("seg").cast("long"), col("bloom")).as[(Long, Array[Byte])]
-      .groupByKey(_._1)
-      .mapGroups { (seg, it) =>
-        val merged = it.map(_._2).reduce(graft.seen.BloomFilter.mergeSerialized)
-        (seg, merged)
+    spark.read.schema(BloomSchema).parquet(files.map(_.toString): _*)
+      .repartition(nSegments, col("seg"))
+      .as[(Long, Array[Byte])]
+      .mapPartitions { it =>
+        val merged = scala.collection.mutable.LongMap.empty[Array[Byte]]
+        it.foreach { case (seg, bloom) =>
+          merged(seg) = merged.get(seg)
+            .fold(bloom)(graft.seen.BloomFilter.mergeSerialized(_, bloom))
+        }
+        merged.iterator
       }
       .toDF("seg", "bloom")
   }
@@ -942,18 +1023,15 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
   private def seenEventsBetween(spark: SparkSession, from: Int,
       to: Option[Int], kind: String): DataFrame = {
     val id = to.getOrElse(latestId())
-    val paths = chainWindow(from, id)
-      .filter(_.kind == kind).flatMap(_.seenDeltaPath)
-      .map(p => root.resolve(p).toString)
-    if (paths.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], seenSchema)
-    else
-      paths.map(p => spark.read.parquet(p).select("canonical_url"))
-        .reduce(_ unionByName _)
+    val rels = chainWindow(from, id).filter(_.kind == kind).flatMap(_.seenDeltaPath)
+    if (rels.isEmpty) emptySeen(spark)
+    else rels.map(seenDelta(spark, _)).reduce(_ unionByName _)
   }
 
-  def delete(): Unit = deleteTree(root)
+  def delete(): Unit = {
+    synchronized { bloomMemo = (Nil, Map.empty) }
+    deleteTree(root)
+  }
 }
 
 object FrontierStore {
@@ -970,6 +1048,14 @@ object FrontierStore {
   private val Pretty = Json.writer(new DefaultPrettyPrinter(
     Separators.createDefaultInstance()
       .withObjectFieldValueSpacing(Separators.Spacing.AFTER)))
+
+  /** A seen-delta dir: the URL column plus the `seg=N` partition column. */
+  private val SeenDeltaSchema = StructType(Seq(
+    StructField("canonical_url", StringType), StructField("seg", IntegerType)))
+
+  /** A bloom dir, and the frame [[FrontierStore.segments]] returns. */
+  private val BloomSchema = StructType(Seq(
+    StructField("seg", LongType), StructField("bloom", BinaryType)))
 
   /** `key` of a metadata document, which must be present and non-null. */
   private def required(n: JsonNode, key: String, doc: String): JsonNode = {

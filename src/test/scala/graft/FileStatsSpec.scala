@@ -35,7 +35,7 @@ class FileStatsSpec extends SparkTestBase {
     assert(m.fileStats.forall(s =>
       s.minSource == "alpha" && s.maxSource == "alpha" && s.rows > 0))
     assert(m.fileStats.map(_.rows).sum == 50L)
-    // reread from disk: the regex parser restores the same stats
+    // reread from disk: the manifest reader restores the same stats
     val reread = store.manifest(m.snapshotId)
     assert(reread.fileStats == m.fileStats)
   }

@@ -752,4 +752,74 @@ class FrontierStoreSpec extends SparkTestBase {
       .map(r => r.getString(0) -> Option(r.getString(1))).toMap
     assert(folded === before)
   }
+
+  test("driver-served segments equal the OR of the chain's bloom files read " +
+      "through Spark — latest, time travel, retract, compact, expiry on a " +
+      "fresh instance, above budget — and the memo keeps one chain") {
+    import spark.implicits._
+    val dir = "target/test-store-bloom-memo"
+    new FrontierStore(dir).delete()
+    val store = new FrontierStore(dir).init()
+    store.initSeen(spark,
+      Fixtures.urlSeenSeed(spark, nSources, Fixtures.DefaultPreSeen)
+        .toDF().select("canonical_url"))
+    val sources = Fixtures.sourceSpecs(nSources).toDF()
+    val robots = Fixtures.robots(nSources).toDF()
+    def tick(t: Int): Unit = {
+      val r = CrawlTick.runTick(spark,
+        Fixtures.listItemsAt(spark, nSources, itemsPerSource, t).toDF(),
+        sources, store.seen(spark), robots,
+        Fixtures.pageStore(spark, nSources, maxTick = t).toDF())
+      store.commit(spark, r.emitted, r.stats, fetchEpoch = t.toLong)
+      r.cleanup()
+    }
+    def bytes(rows: Array[org.apache.spark.sql.Row]): Map[Long, Seq[Byte]] =
+      rows.map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bloom").toSeq).toMap
+    // the truth: every bloom file of the chain read by Spark, OR-merged
+    def viaSpark(s: FrontierStore, id: Int): Map[Long, Seq[Byte]] =
+      bytes(s.seenChain(id).flatMap(_.bloomPath)
+        .map(p => spark.read.parquet(s"$dir/$p").select(col("seg").cast("long"), col("bloom")))
+        .reduce(_ unionByName _)
+        .groupByKey(_.getLong(0))
+        .mapGroups((seg, rows) => seg -> rows.map(_.getAs[Array[Byte]](1))
+          .reduce(graft.seen.BloomFilter.mergeSerialized))
+        .toDF("seg", "bloom").collect())
+    def bloomIds(s: FrontierStore, id: Int): Seq[Int] =
+      s.seenChain(id).filter(_.bloomPath.nonEmpty).map(_.snapshotId)
+    def check(s: FrontierStore, asOf: Option[Int] = None): Unit = {
+      val id = asOf.getOrElse(s.snapshotIds().last)
+      val segs = s.segments(spark, asOf)
+      assert(segs.isLocal, s"segments($asOf) is not served from the driver")
+      val got = bytes(segs.collect())
+      assert(got.nonEmpty && got === viaSpark(s, id), s"segments($asOf) bytes differ")
+      // the memo serves exactly this chain: no delta outside it is kept
+      assert(s.memoizedBloomChain === bloomIds(s, id))
+    }
+
+    for (t <- 0 until 3) { tick(t); check(store) }
+    assert(store.memoizedBloomChain.size === 4, "the memo extends per delta")
+    check(store, Some(1)) // time travel after a newer read warmed the memo
+    check(store)
+
+    store.retract(spark, store.seen(spark).limit(5))
+    check(store)
+    val c = store.compact(spark)
+    check(store)
+    assert(store.memoizedBloomChain === Seq(c.snapshotId))
+    tick(3)
+    check(store)
+    store.expireSnapshots(c.snapshotId)
+    val fresh = new FrontierStore(dir)
+    assert(fresh.memoizedBloomChain.isEmpty)
+    check(fresh)
+
+    // above the local budget the merge is distributed, one partition per
+    // segment, with the same bytes and no memo
+    val distributed = new FrontierStore(dir)
+    val segs = distributed.segmentsWithin(spark, None, localBytes = 0L)
+    assert(!segs.isLocal)
+    assert(segs.rdd.getNumPartitions === distributed.nSegments)
+    assert(bytes(segs.collect()) === viaSpark(distributed, distributed.snapshotIds().last))
+    assert(distributed.memoizedBloomChain.isEmpty)
+  }
 }

@@ -18,7 +18,7 @@ import graft.store.FrontierStore
   * partitions, where a cached frame's 200-partition trap cannot show;
   * this spec runs one production-shaped tick (store-fed Bloom probe,
   * salted politeness, commit with error rows) at the production default
-  * of 200.
+  * of 200, and counts the Spark jobs of each phase of such a tick.
   */
 class TickPartitionsSpec extends SparkTestBase {
 
@@ -83,6 +83,65 @@ class TickPartitionsSpec extends SparkTestBase {
       assert(statTotals.getLong(1) === m.errors)
       assert(store.errors(spark).count() === m.errors)
       assert(store.articles(spark).count() === m.newArticles)
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.conf.set(key, prev)
+    }
+  }
+
+  test("at 200 shuffle partitions a store-fed tick reads the store's " +
+      "metadata and dispatches its probe with no Spark job, and tick + " +
+      "commit launch fewer than 44 jobs") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    val phaseKey = "graft.spec.phase"
+    val jobsByPhase = mutable.Map.empty[String, Int].withDefaultValue(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val phase = Option(e.properties).flatMap(p =>
+          Option(p.getProperty(phaseKey))).getOrElse("none")
+        jobsByPhase.synchronized { jobsByPhase(phase) += 1 }
+      }
+    }
+    def phase[A](name: String)(body: => A): A = {
+      sc.setLocalProperty(phaseKey, name)
+      try body finally sc.setLocalProperty(phaseKey, null)
+    }
+    val dir = "target/test-store-tick-jobs"
+    new FrontierStore(dir).delete()
+    spark.conf.set(key, "200")
+    try {
+      val store = new FrontierStore(dir).init()
+      store.initSeen(spark,
+        Fixtures.urlSeenSeed(spark, nSources, Fixtures.DefaultPreSeen)
+          .toDF().select("canonical_url"))
+      val listings = Fixtures.listItemsAt(spark, nSources, 24, tick = 0).toDF()
+      val sources = Fixtures.sourceSpecs(nSources).toDF()
+      val robots = Fixtures.robots(nSources).toDF()
+      val pages = Fixtures.pageStore(spark, nSources, maxTick = 0).toDF()
+
+      ListenerBusAccess.drain(sc)
+      sc.addSparkListener(listener)
+      val segs = phase("store.segments")(store.segments(spark))
+      val seen = phase("store.seen")(store.seen(spark))
+      // runTick is lazy except for the probe's size dispatch
+      val t = phase("probe.dispatch")(CrawlTick.runTick(spark, listings,
+        sources, SeenProbe.BloomConfirm(segs, seen, store.nSegments), robots,
+        pages, salted = true))
+      val m = phase("store.commit")(store.commit(spark, t.emitted, t.stats,
+        fetchEpoch = 0L, errors = Some(t.errors)))
+      t.cleanup()
+      ListenerBusAccess.drain(sc)
+      sc.removeSparkListener(listener)
+
+      val jobs = jobsByPhase.synchronized(jobsByPhase.toMap)
+      info(s"jobs per phase: $jobs")
+      assert(m.newArticles > 0, "the fixture tick must commit articles")
+      for (p <- Seq("store.segments", "store.seen", "probe.dispatch"))
+        assert(jobs.getOrElse(p, 0) === 0, s"$p launched Spark jobs: $jobs")
+      assert(jobs.values.sum < 44, s"tick + commit jobs: $jobs")
     } finally {
       sc.removeSparkListener(listener)
       spark.conf.set(key, prev)
