@@ -61,8 +61,8 @@ import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType
   *
   * Store metadata is served without Spark jobs where it can be: seen and
   * bloom reads carry their known schemas (no inference scan), and
-  * [[segments]] merges the chain's blooms on the driver while their files
-  * fit the probe's broadcast budget.
+  * [[segments]] merges the chain's blooms on the driver while their
+  * uncompressed bytes fit the probe's broadcast budget.
   *
   * == Bloom dial math (the 10^10 design point) ==
   *
@@ -99,7 +99,8 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
   // ------------------------------------------------------------- manifests
 
   import FrontierStore.{Manifest, KindDelta, KindCompaction, KindRetraction,
-    KindArticleCompaction, Json, Pretty, required, SeenDeltaSchema, BloomSchema}
+    KindArticleCompaction, Json, Pretty, required, SeenDeltaSchema, BloomSchema,
+    orInto}
 
   private def manifestPath(id: Int): Path =
     snapsDir.resolve(f"snap-$id%05d.json")
@@ -423,10 +424,14 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
 
   private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
 
+  // the read options come from the loaded conf: without them, every open
+  // builds a fresh Hadoop Configuration and re-parses its XML resources,
+  // which costs far more than reading the footer
   private def openFooter(p: Path): org.apache.parquet.hadoop.ParquetFileReader =
     org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toUri), hadoopConf))
+        new org.apache.hadoop.fs.Path(p.toUri), hadoopConf),
+      org.apache.parquet.HadoopReadOptions.builder(hadoopConf).build())
 
   /** Rows in one parquet file, from its footer (no data page is read). */
   private def footerRows(p: Path): Long = {
@@ -788,13 +793,14 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     * seen set (Bloom bit-union = key-union; equality asserted in
     * FrontierStoreSpec). No URL is rehashed.
     *
-    * While the chain's bloom files (sized from disk, no scan) fit
-    * `UrlSeen.DefaultMaxBroadcastSegmentBytes`, the merge runs on the driver
-    * and the result is a local frame: UrlSeen sizes and broadcasts it with
-    * no Spark job. The merged bytes are memoized per chain
-    * ([[mergedOnDriver]]), so a looping driver reads each delta's bloom
-    * file once. Above that budget the merge is distributed, at one
-    * partition per segment.
+    * While the chain's bloom files fit `UrlSeen.DefaultMaxBroadcastSegmentBytes`
+    * in memory — their uncompressed bytes, summed from the footers with no
+    * data page read — the merge runs on the driver, one file at a time, and
+    * the result is a local frame: UrlSeen sizes and broadcasts it with no
+    * Spark job. Compressed file sizes would not do: a delta bloom is sized
+    * by the dial, not by its few URLs, so it is mostly zero bits and
+    * compresses far below its size in memory. Above the budget the merge is
+    * distributed, at one partition per segment.
     */
   def segments(spark: SparkSession, asOf: Option[Int] = None): DataFrame =
     segmentsWithin(spark, asOf, graft.seen.UrlSeen.DefaultMaxBroadcastSegmentBytes)
@@ -802,49 +808,36 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
   /** [[segments]] with the driver-merge budget `localBytes`. */
   private[graft] def segmentsWithin(spark: SparkSession, asOf: Option[Int],
       localBytes: Long): DataFrame = {
-    val chain = seenChain(readId(asOf)).filter(_.bloomPath.nonEmpty)
-      .map(m => m.snapshotId -> parquetFiles(m.bloomPath.get))
-    if (chain.flatMap(_._2).map(Files.size).sum <= localBytes)
+    val files = seenChain(readId(asOf)).flatMap(_.bloomPath).flatMap(parquetFiles)
+    if (files.map(uncompressedBytes).sum <= localBytes)
       spark.createDataFrame(
-        mergedOnDriver(chain).toSeq.sortBy(_._1)
-          .map { case (seg, bloom) => Row(seg, bloom) }.asJava,
+        mergedOnDriver(files).map { case (seg, bloom) => Row(seg, bloom) }.asJava,
         BloomSchema)
-    else mergedDistributed(spark, chain.flatMap(_._2))
+    else mergedDistributed(spark, files)
   }
 
-  // the last chain segments() merged on the driver: its bloom-bearing
-  // snapshot ids (baseline first) and the merged bytes per segment
-  private var bloomMemo: (Seq[Int], Map[Long, Array[Byte]]) = (Nil, Map.empty)
+  /** Bytes of one parquet file's column chunks before compression. */
+  private def uncompressedBytes(p: Path): Long = {
+    val reader = openFooter(p)
+    try reader.getFooter.getBlocks.asScala
+      .flatMap(_.getColumns.asScala).map(_.getTotalUncompressedSize).sum
+    finally reader.close()
+  }
 
-  /** Bloom-bearing snapshot ids of the chain the memo serves. */
-  private[graft] def memoizedBloomChain: Seq[Int] = synchronized(bloomMemo._1)
-
-  /** The chain's per-delta blooms OR-merged per segment on the driver. A
-    * chain that extends the memoized one (same baseline, more deltas)
-    * merges only its new deltas into the memo; any other chain (a new
-    * baseline, a time-travel read) is merged from scratch. The memo then
-    * serves this chain alone, so it never holds more than one chain's
-    * segments.
+  /** The bloom files OR-merged per segment on the driver, sorted by
+    * segment. Files are read one after another, so the peak is the merged
+    * set plus one row group.
     */
-  private def mergedOnDriver(chain: Seq[(Int, Seq[Path])]): Map[Long, Array[Byte]] =
-    synchronized {
-      val ids = chain.map(_._1)
-      val (memoIds, memoSegs) = bloomMemo
-      val (from, todo) =
-        if (memoIds.nonEmpty && ids.startsWith(memoIds)) (memoSegs, chain.drop(memoIds.size))
-        else (Map.empty[Long, Array[Byte]], chain)
-      val merged = todo.flatMap(_._2).flatMap(bloomRows).foldLeft(from) {
-        case (acc, (seg, bloom)) => acc.updated(seg,
-          acc.get(seg).fold(bloom)(graft.seen.BloomFilter.mergeSerialized(_, bloom)))
-      }
-      bloomMemo = (ids, merged)
-      merged
-    }
+  private def mergedOnDriver(files: Seq[Path]): Seq[(Long, Array[Byte])] = {
+    val merged = scala.collection.mutable.LongMap.empty[Array[Byte]]
+    files.foreach(p => foreachBloomRow(p)(orInto(merged)))
+    merged.toSeq.sortBy(_._1)
+  }
 
-  /** The (seg, bloom) rows of one bloom parquet file, read on the driver
-    * through the same footer reader as [[collectFileStats]].
+  /** Feeds the (seg, bloom) rows of one bloom parquet file to `f`, read on
+    * the driver through the same footer reader as [[collectFileStats]].
     */
-  private def bloomRows(p: Path): Seq[(Long, Array[Byte])] = {
+  private def foreachBloomRow(p: Path)(f: (Long, Array[Byte]) => Unit): Unit = {
     val reader = openFooter(p)
     try {
       val schema = reader.getFooter.getFileMetaData.getSchema
@@ -852,13 +845,14 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
       val bloom = schema.getFieldIndex("bloom")
       val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)
       Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null)
-        .flatMap { pages =>
+        .foreach { pages =>
           val records = io.getRecordReader(pages,
             new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(schema))
-          Iterator.fill(pages.getRowCount.toInt)(records.read())
+          for (_ <- 0L until pages.getRowCount) {
+            val g = records.read()
+            f(g.getLong(seg, 0), g.getBinary(bloom, 0).getBytes)
+          }
         }
-        .map(g => (g.getLong(seg, 0), g.getBinary(bloom, 0).getBytes))
-        .toList
     } finally reader.close()
   }
 
@@ -873,10 +867,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         val merged = scala.collection.mutable.LongMap.empty[Array[Byte]]
-        it.foreach { case (seg, bloom) =>
-          merged(seg) = merged.get(seg)
-            .fold(bloom)(graft.seen.BloomFilter.mergeSerialized(_, bloom))
-        }
+        it.foreach { case (seg, bloom) => orInto(merged)(seg, bloom) }
         merged.iterator
       }
       .toDF("seg", "bloom")
@@ -1028,10 +1019,7 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     else rels.map(seenDelta(spark, _)).reduce(_ unionByName _)
   }
 
-  def delete(): Unit = {
-    synchronized { bloomMemo = (Nil, Map.empty) }
-    deleteTree(root)
-  }
+  def delete(): Unit = deleteTree(root)
 }
 
 object FrontierStore {
@@ -1056,6 +1044,11 @@ object FrontierStore {
   /** A bloom dir, and the frame [[FrontierStore.segments]] returns. */
   private val BloomSchema = StructType(Seq(
     StructField("seg", LongType), StructField("bloom", BinaryType)))
+
+  /** OR-merges one (seg, bloom) row into `merged`'s bloom for its segment. */
+  private def orInto(merged: scala.collection.mutable.LongMap[Array[Byte]])(
+      seg: Long, bloom: Array[Byte]): Unit =
+    merged(seg) = merged.get(seg).fold(bloom)(graft.seen.BloomFilter.mergeSerialized(_, bloom))
 
   /** `key` of a metadata document, which must be present and non-null. */
   private def required(n: JsonNode, key: String, doc: String): JsonNode = {

@@ -755,9 +755,9 @@ class FrontierStoreSpec extends SparkTestBase {
 
   test("driver-served segments equal the OR of the chain's bloom files read " +
       "through Spark — latest, time travel, retract, compact, expiry on a " +
-      "fresh instance, above budget — and the memo keeps one chain") {
+      "fresh instance, above budget") {
     import spark.implicits._
-    val dir = "target/test-store-bloom-memo"
+    val dir = "target/test-store-bloom-driver"
     new FrontierStore(dir).delete()
     val store = new FrontierStore(dir).init()
     store.initSeen(spark,
@@ -784,42 +784,65 @@ class FrontierStoreSpec extends SparkTestBase {
         .mapGroups((seg, rows) => seg -> rows.map(_.getAs[Array[Byte]](1))
           .reduce(graft.seen.BloomFilter.mergeSerialized))
         .toDF("seg", "bloom").collect())
-    def bloomIds(s: FrontierStore, id: Int): Seq[Int] =
-      s.seenChain(id).filter(_.bloomPath.nonEmpty).map(_.snapshotId)
     def check(s: FrontierStore, asOf: Option[Int] = None): Unit = {
       val id = asOf.getOrElse(s.snapshotIds().last)
       val segs = s.segments(spark, asOf)
       assert(segs.isLocal, s"segments($asOf) is not served from the driver")
       val got = bytes(segs.collect())
       assert(got.nonEmpty && got === viaSpark(s, id), s"segments($asOf) bytes differ")
-      // the memo serves exactly this chain: no delta outside it is kept
-      assert(s.memoizedBloomChain === bloomIds(s, id))
     }
 
     for (t <- 0 until 3) { tick(t); check(store) }
-    assert(store.memoizedBloomChain.size === 4, "the memo extends per delta")
-    check(store, Some(1)) // time travel after a newer read warmed the memo
+    check(store, Some(1)) // time travel after a newer read
     check(store)
 
     store.retract(spark, store.seen(spark).limit(5))
     check(store)
     val c = store.compact(spark)
     check(store)
-    assert(store.memoizedBloomChain === Seq(c.snapshotId))
     tick(3)
     check(store)
     store.expireSnapshots(c.snapshotId)
-    val fresh = new FrontierStore(dir)
-    assert(fresh.memoizedBloomChain.isEmpty)
-    check(fresh)
+    check(new FrontierStore(dir))
 
     // above the local budget the merge is distributed, one partition per
-    // segment, with the same bytes and no memo
+    // segment, with the same bytes
     val distributed = new FrontierStore(dir)
     val segs = distributed.segmentsWithin(spark, None, localBytes = 0L)
     assert(!segs.isLocal)
     assert(segs.rdd.getNumPartitions === distributed.nSegments)
     assert(bytes(segs.collect()) === viaSpark(distributed, distributed.snapshotIds().last))
-    assert(distributed.memoizedBloomChain.isEmpty)
+  }
+
+  test("segments sizes its driver merge by the blooms' bytes in memory, not " +
+      "by their compressed files") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val dir = "target/test-store-bloom-budget"
+    new FrontierStore(dir).delete()
+    val store = new FrontierStore(dir).init()
+    // a few URLs in blooms sized by the dial: mostly zero bits, which the
+    // parquet codec shrinks far below their size in memory
+    store.initSeen(spark, Seq("https://a.example/1", "https://b.example/2")
+      .toDF("canonical_url"))
+    val files = store.seenChain(0).flatMap(_.bloomPath).flatMap { rel =>
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, rel))
+      try s.iterator.asScala.filter(_.toString.endsWith(".parquet")).toList
+      finally s.close()
+    }
+    val onDisk = files.map(java.nio.file.Files.size).sum
+    val inMemory = spark.read.parquet(files.map(_.toString): _*)
+      .agg(sum(length(col("bloom")))).collect()(0).getLong(0)
+    assert(onDisk * 2 < inMemory, s"blooms: $onDisk B on disk, $inMemory B in memory")
+
+    // a budget the files fit on disk but the blooms exceed in memory
+    val over = store.segmentsWithin(spark, None, localBytes = inMemory - 1)
+    assert(!over.isLocal, "blooms above the budget in memory were merged on the driver")
+    val local = store.segments(spark)
+    assert(local.isLocal)
+    def bytes(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Byte]] =
+      df.collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bloom").toSeq).toMap
+    assert(bytes(over) === bytes(local))
+    store.delete()
   }
 }
