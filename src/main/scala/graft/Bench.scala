@@ -1,6 +1,8 @@
 package graft
 
 import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
+import com.fasterxml.jackson.databind.util.RawValue
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -142,12 +144,13 @@ object Bench {
     // it into a "valid" verdict.
     def quiet: Boolean = stealFrac.exists(_ <= MaxStealFrac) &&
       offBusyFrac.exists(_ <= MaxOffarmBusyFrac)
-    def json: String = {
-      def d(o: Option[Double]) = o.map(v => f"$v%.4f").getOrElse("null")
-      s"""{"cores":$cores,"round":$round,"run":$run,"sec":${d(sec.map(s => (s * 1000).round / 1000.0))},""" +
-        s""""steal_frac":${d(stealFrac)},"offarm_busy_frac":${d(offBusyFrac)},""" +
-        s""""quiet":$quiet}"""
-    }
+    def node: ObjectNode = Json.createObjectNode()
+      .put("cores", cores).put("round", round).put("run", run)
+      .put("sec", dec(sec.map(s => (s * 1000).round / 1000.0), 4))
+      .put("steal_frac", dec(stealFrac, 4))
+      .put("offarm_busy_frac", dec(offBusyFrac, 4))
+      .put("quiet", quiet)
+    def json: String = Json.writeValueAsString(node)
   }
 
   /** Per-cpu jiffies from /proc/stat: cpu index → [user, nice, system,
@@ -541,9 +544,9 @@ object Bench {
     renderScalingRecord(armCores, scaleN, armSecs, pinned, armSamples, note)
   }
 
-  /** The `"scaling"` JSON object of measured arms. Free-text fields (the
-    * invalid reason, the caller's note) go through Jackson, so any
-    * character in them stays valid JSON.
+  /** The `"scaling"` JSON object of measured arms, rendered by Jackson, so
+    * any character in its free-text fields (the invalid reason, the
+    * caller's note) stays valid JSON.
     */
   def renderScalingRecord(armCores: Seq[Int], scaleN: Long,
       armSecs: Seq[Double], pinned: Boolean, armSamples: Seq[ArmSample],
@@ -552,12 +555,23 @@ object Bench {
       ((armCores.last.toDouble / armCores.head) * armSecs(1))
     val reasons = adjudicationReasons(armCores, scalingEff, pinned, armSamples)
     val scalingValid = reasons.isEmpty
-    val invalidReasonJson =
-      if (scalingValid) "null" else Json.writeValueAsString(reasons.mkString("; "))
-    val samplesJson = armSamples.map(_.json).mkString("[", ",", "]")
-    val noteJson =
-      note.map(n => s""","note":${Json.writeValueAsString(n)}""").getOrElse("")
-    s"""{"cores_small":${armCores(0)},"cores_large":${armCores(1)},"n":$scaleN,"pinned":$pinned,"sec_small":${f"${armSecs(0)}%.3f"},"sec_large":${f"${armSecs(1)}%.3f"},"urls_per_sec_small":${(scaleN / armSecs(0)).toLong},"urls_per_sec_large":${(scaleN / armSecs(1)).toLong},"efficiency":${f"$scalingEff%.3f"},"valid":$scalingValid,"invalid_reason":$invalidReasonJson,"noise_bounds":{"max_steal_frac":$MaxStealFrac,"max_offarm_busy_frac":$MaxOffarmBusyFrac}$noteJson,"samples":$samplesJson}"""
+    val o = Json.createObjectNode()
+      .put("cores_small", armCores(0)).put("cores_large", armCores(1))
+      .put("n", scaleN).put("pinned", pinned)
+      .put("sec_small", dec(Some(armSecs(0)), 3))
+      .put("sec_large", dec(Some(armSecs(1)), 3))
+      .put("urls_per_sec_small", (scaleN / armSecs(0)).toLong)
+      .put("urls_per_sec_large", (scaleN / armSecs(1)).toLong)
+      .put("efficiency", dec(Some(scalingEff), 3))
+      .put("valid", scalingValid)
+      .put("invalid_reason",
+        if (scalingValid) null else reasons.mkString("; "))
+    o.putObject("noise_bounds").put("max_steal_frac", MaxStealFrac)
+      .put("max_offarm_busy_frac", MaxOffarmBusyFrac)
+    note.foreach(o.put("note", _))
+    val samples = o.putArray("samples")
+    armSamples.foreach(s => samples.add(s.node))
+    Json.writeValueAsString(o)
   }
 
   /** Suite-phase inflation rule (r4 verdict #1): a first sample more than
@@ -574,19 +588,26 @@ object Bench {
       case _ => false // a failed run is no evidence either way
     }
 
-  /** JSON writer for the record's free-text and recall fields. */
+  /** JSON writer for the bench record. */
   val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** A record number: `v` rounded half-up to `places` decimals, as a JSON
+    * decimal (`.`-separated whatever the default locale; the `f`
+    * interpolator follows it). None and non-finite values render as null.
+    */
+  private def dec(v: Option[Double], places: Int): java.math.BigDecimal =
+    v.filter(_.isFinite).map(java.math.BigDecimal.valueOf(_)
+      .setScale(places, java.math.RoundingMode.HALF_UP)).orNull
 
   /** The recall block of the bench record, rendered by Jackson: one number
     * per [[graft.operators.TrainingOps.AnnRecalls]] key, the image
-    * headline, and the two multi-probe curves — returned as object members
-    * (no braces) so the record splices them in place. Values keep the
-    * record's 3-decimal form.
+    * headline, and the two multi-probe curves — the record adds these
+    * members to its own object. Values keep the record's 3-decimal form.
     */
   def recallFields(recalls: Seq[(String, Double)],
       annCurve: Seq[(Int, Double, Long)],
-      imgCurve: Seq[(Int, Double, Long)]): String = {
-    def d3(v: Double) = new java.math.BigDecimal(f"$v%.3f")
+      imgCurve: Seq[(Int, Double, Long)]): ObjectNode = {
+    def d3(v: Double) = dec(Some(v), 3)
     val o = Json.createObjectNode()
     recalls.foreach { case (k, v) => o.put(k, d3(v)) }
     o.put("ann_image_recall_at_10", d3(imgCurve.head._2))
@@ -597,24 +618,22 @@ object Bench {
         a.addObject().put("probes", p).put("recall", d3(r)).put("candidates", c)
       }
     }
-    Json.writeValueAsString(o).stripPrefix("{").stripSuffix("}")
+    o
   }
 
-  /** The headline fields `"value":…,"failed":[…]` over the suite's
+  /** The headline members `"value":…,"failed":[…]` over the suite's
     * per-query seconds (None = no run of that query succeeded). The value is
     * the sum only when every query has a time; otherwise it is null and
     * `failed` names the queries without one, because a sum that left them
     * out would read as a faster suite.
     */
-  def headlineFields(results: Seq[(String, Option[Double])]): String = {
+  def headlineFields(results: Seq[(String, Option[Double])]): ObjectNode = {
     val failed = results.collect { case (name, None) => name }
-    val o = Json.createObjectNode()
-    if (failed.isEmpty)
-      o.put("value", new java.math.BigDecimal(f"${results.flatMap(_._2).sum}%.3f"))
-    else o.putNull("value")
+    val o = Json.createObjectNode().put("value",
+      if (failed.isEmpty) dec(Some(results.flatMap(_._2).sum), 3) else null)
     val a = o.putArray("failed")
     failed.foreach(a.add)
-    Json.writeValueAsString(o).stripPrefix("{").stripSuffix("}")
+    o
   }
 
   def timed[A](f: => A): (A, Double) = {
@@ -638,12 +657,12 @@ object Bench {
       busyFrac: Option[Double], ownCpuFrac: Double) {
     def externalBusyFrac: Option[Double] =
       busyFrac.map(b => math.max(0.0, b - ownCpuFrac))
-    def json: String = {
-      def o(v: Option[Double]) = v.map(x => f"$x%.4f").getOrElse("null")
-      s"""{"wall_sec":${f"$wallSec%.1f"},"steal_frac":${o(stealFrac)},""" +
-        s""""busy_frac":${o(busyFrac)},"own_cpu_frac":${f"$ownCpuFrac%.4f"},""" +
-        s""""external_busy_frac":${o(externalBusyFrac)}}"""
-    }
+    def node: ObjectNode = Json.createObjectNode()
+      .put("wall_sec", dec(Some(wallSec), 1))
+      .put("steal_frac", dec(stealFrac, 4)).put("busy_frac", dec(busyFrac, 4))
+      .put("own_cpu_frac", dec(Some(ownCpuFrac), 4))
+      .put("external_busy_frac", dec(externalBusyFrac, 4))
+    def json: String = Json.writeValueAsString(node)
   }
 
   private def ownCpuNanos: Long =
@@ -815,14 +834,14 @@ object Bench {
     val results = firstPass.map { case (name, s) =>
       name -> (s.sec.toSeq ++ rerunSamples.get(name).flatMap(_.sec)).minOption
     }
-    def secJson(sec: Option[Double]) = sec.map(v => f"$v%.3f").getOrElse("null")
-    val suiteRerunJson = rerunNames.map { name =>
+    val suiteRerun = Json.createObjectNode()
+    rerunNames.foreach { name =>
       val f = firstPass(name); val r = rerunSamples(name)
-      val inflated = suiteSampleInflated(f.sec, r.sec)
-      s""""$name":{"first":${secJson(f.sec)},"rerun":${secJson(r.sec)},""" +
-        s""""first_gc_ms":${f.gcMs},"rerun_gc_ms":${r.gcMs},""" +
-        s""""inflated":$inflated}"""
-    }.mkString("{", ",", "}")
+      suiteRerun.putObject(name).put("first", dec(f.sec, 3))
+        .put("rerun", dec(r.sec, 3))
+        .put("first_gc_ms", f.gcMs).put("rerun_gc_ms", r.gcMs)
+        .put("inflated", suiteSampleInflated(f.sec, r.sec))
+    }
     // stages are NOT queries: the queries map is exactly the oracled
     // surface (1:1 with CORRECTNESS — r4 verdict #2); one-time index
     // builds and the frontier headline land here instead
@@ -836,7 +855,7 @@ object Bench {
     // exact top-10 on the same corpus, one row per recall-table key, plus
     // the LSH multi-probe curve (1/3/5 probes per band) and its image
     // sibling (12×5-bit banded Hamming top-k, 1/3/6 probes per band)
-    val recallJson = recallFields(
+    val recalls = recallFields(
       graft.operators.TrainingOps.annRecalls(spark, sfDir),
       graft.operators.TrainingOps.lshRecallCurve(spark, sfDir),
       graft.operators.TrainingOps.imageHammingRecallCurve(spark))
@@ -886,12 +905,31 @@ object Bench {
         "§2) - a 4N-executor cluster brings 4x DRAM/NVMe this box does " +
         "not, so sub-0.8 here measures the box ceiling, not the plan"))
 
-    def jmap(m: scala.collection.Map[String, Double]): String =
-      m.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-    val queriesJson = results.map { case (k, v) => "\"" + k + "\":" + secJson(v) }
-      .mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"total",${headlineFields(results.toSeq)},"unit":"sec","queries":$queriesJson,"sf":"$sfDir","cpus":$cpus,"frontier_n":$frontierN,"frontier_scheduled_rows":$frontierRows,"frontier_urls_per_sec":$urlsPerSec,"frontier_runs_sec":[${f"$run1Sec%.3f"},${f"$run2Sec%.3f"}],"frontier_stages":${jmap(stages)},$recallJson,"bench_noise":${suiteNoise.json},"suite_rerun":$suiteRerunJson,"stage_sec":${jmap(stageSecs)},"scaling":$scalingJson,"scaling_4_16":$scaling416Json}"""
+    def jmap(m: scala.collection.Map[String, Option[Double]]): ObjectNode = {
+      val o = Json.createObjectNode()
+      m.foreach { case (k, v) => o.put(k, dec(v, 3)) }
+      o
+    }
+    def secs(m: scala.collection.Map[String, Double]) = jmap(m.map {
+      case (k, v) => k -> Some(v) })
+    val head = Json.createObjectNode().put("metric", "total")
+    head.setAll[ObjectNode](headlineFields(results.toSeq))
+    head.put("unit", "sec").set[ObjectNode]("queries", jmap(results))
+      .put("sf", sfDir)
+    cpus.toIntOption.fold(head.put("cpus", cpus))(head.put("cpus", _))
+    head.put("frontier_n", frontierN)
+      .put("frontier_scheduled_rows", frontierRows)
+      .put("frontier_urls_per_sec", urlsPerSec)
+    head.putArray("frontier_runs_sec").add(dec(Some(run1Sec), 3))
+      .add(dec(Some(run2Sec), 3))
+    head.set[ObjectNode]("frontier_stages", secs(stages))
+      .setAll[ObjectNode](recalls)
+    head.set[ObjectNode]("bench_noise", suiteNoise.node)
+      .set[ObjectNode]("suite_rerun", suiteRerun)
+      .set[ObjectNode]("stage_sec", secs(stageSecs))
+      .putRawValue("scaling", new RawValue(scalingJson))
+      .putRawValue("scaling_4_16", new RawValue(scaling416Json))
+    val line = Json.writeValueAsString(head)
     // build.sbt sets outputStrategy := StdoutOutput, so this line reaches
     // the driver's stdout tail UNPREFIXED (sbt's "[info] " wrapper broke
     // the driver's parse in rounds 1-2); the file copy stays as the

@@ -71,6 +71,13 @@ import graft.store.FrontierStore
   */
 object FrontierMain {
 
+  /** Entries in Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, a static conf, default 100). A
+    * tick compiles more distinct classes than 100, so at the default every
+    * tick in one JVM compiles them again; 2000 holds a tick's set.
+    */
+  val CodegenCacheEntries = 2000
+
   private def flag(args: Array[String], name: String): Option[String] =
     args.collectFirst {
       case a if a.startsWith(s"--$name=") => a.stripPrefix(s"--$name=")
@@ -144,6 +151,7 @@ object FrontierMain {
     val builder = SparkSession.builder()
       .appName("graft-frontier")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
     val spark = (if (sys.props.get("spark.master").isEmpty)
         builder.master("local[*]") else builder)
       .getOrCreate()

@@ -499,14 +499,14 @@ object TrainingOps {
           .reduce(_ + _).as("simhash"))
   }
 
-  /** The shared banding kernel behind every fingerprint near-dup operator
-    * (text [[simhashNearDups]], image [[phashNearDups]], audio
-    * [[audioZcrNearDups]] — one implementation, three modalities): split
-    * each `nBands × bandBits`-bit print into band keys, self-join on
-    * (band, band_val) equality — the LSH step; a pair within Hamming
-    * distance ≤ nBands − 1 has its differing bits in ≤ nBands − 1 bands,
-    * so at least one band matches exactly (pigeonhole) and banding is
-    * LOSSLESS at that radius — then verify candidates with the exact
+  /** The fingerprint near-dup operator behind text [[simhashNearDups]],
+    * image [[phashNearDups]] and audio [[audioZcrNearDups]]: split each
+    * `nBands × bandBits`-bit print into band keys and self-join them
+    * ([[BandJoin.selfJoin]], no hot-bucket guard) — the LSH step; a pair
+    * within Hamming distance ≤ nBands − 1 has its differing bits in
+    * ≤ nBands − 1 bands, so at least one band matches exactly
+    * (pigeonhole) and banding is LOSSLESS at that radius — then verify
+    * candidates with the exact
     * `bit_count(xor)` distance and flag `is_dup` at `radius`. Candidates
     * beyond `radius` are reported with their distance but not flagged.
     *
@@ -525,24 +525,12 @@ object TrainingOps {
     */
   def bandedNearDups(prints: DataFrame, idCol: String, fpCol: String,
       idA: String, idB: String, nBands: Int, bandBits: Int,
-      radius: Int): DataFrame = {
-    val bands = prints
-      .select(col(idCol).as("__id"), col(fpCol).as("__fp"),
-        explode(sequence(lit(0), lit(nBands - 1))).as("band"))
-      .withColumn("band_val",
-        expr(s"shiftright(__fp, CAST(band * $bandBits AS INT))" +
-          s" & ${(1 << bandBits) - 1}"))
-    val a = bands.select(col("band"), col("band_val"),
-      col("__id").as(idA), col("__fp").as("__fp_a"))
-    val b = bands.select(col("band").as("band_b"), col("band_val").as("val_b"),
-      col("__id").as(idB), col("__fp").as("__fp_b"))
-    a.join(b, col("band") === col("band_b") &&
-        col("band_val") === col("val_b") && col(idA) < col(idB))
-      .select(idA, idB, "__fp_a", "__fp_b").distinct()
+      radius: Int): DataFrame =
+    BandJoin.selfJoin(BandJoin.bands(prints.select(col(idCol),
+        col(fpCol).as("__fp")), "__fp", nBands, bandBits), idCol, idA, idB)
       .select(col(idA), col(idB),
         expr("CAST(bit_count(__fp_a ^ __fp_b) AS BIGINT)").as("hamming"))
       .withColumn("is_dup", col("hamming") <= radius)
-  }
 
   /** SimHash near-duplicate pairs (the dedup-family entry the signatures
     * feed): [[bandedNearDups]] over the 60-bit signatures — 4×15-bit
@@ -971,33 +959,23 @@ object TrainingOps {
   def lshCandidatePairs(spark: SparkSession, sfDir: String): DataFrame =
     candidatePairsFromSigs(lshBandSignatures(spark, sfDir))
 
-  /** Bucketed self-join over (band, band_sig) with a hot-bucket guard.
-    * The signature side reads from the parquet-cached minhash chain, so the
+  /** Bucketed self-join over (band, band_sig) with the hot-bucket guard
+    * ([[BandJoin.selfJoin]]): distinct (doc_a, doc_b), doc_a < doc_b. The
+    * signature side reads from the parquet-cached minhash chain, so the
     * two join sides and the count pass are three cheap scans, not three
     * recomputes of the chain.
     */
   def candidatePairsFromSigs(sigs: DataFrame,
-      maxBucketSize: Long = MaxLshBucketSize): DataFrame = {
-    val counts = sigs.groupBy("band", "band_sig")
-      .agg(count(lit(1)).as("__sz"))
-    val hot = counts.filter(col("__sz") > maxBucketSize)
-    val nHot = hot.agg(coalesce(sum("__sz"), lit(0L))).collect()(0).getLong(0)
-    if (nHot > 0)
-      // skew guard engaged: quadratic blowup averted, mass disclosed (a
-      // silent cap would read as full coverage — VERDICT r1 quality note)
-      System.err.println(
-        s"[graft] LSH hot-bucket guard: dropped $nHot signature rows in " +
-          s"buckets over $maxBucketSize; pairs within them are not generated")
-    val cool = sigs.join(hot.select("band", "band_sig"),
-      Seq("band", "band_sig"), "left_anti")
-    val a = cool.select(col("band"), col("band_sig"), col("doc_id").as("doc_a"))
-    val b = cool.select(col("band").as("band_b"), col("band_sig").as("sig_b"),
-      col("doc_id").as("doc_b"))
-    a.join(b, col("band") === col("band_b") &&
-        col("band_sig") === col("sig_b") && col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-      .distinct()
-  }
+      maxBucketSize: Long = MaxLshBucketSize): DataFrame =
+    BandJoin.selfJoin(sigBands(sigs, "doc_id"), "doc_id", "doc_a", "doc_b",
+      maxBucketSize)
+
+  /** A (doc_id, band, band_sig) signature frame as [[BandJoin]] bands, its
+    * doc id renamed to `id`.
+    */
+  private[graft] def sigBands(sigs: DataFrame, id: String): DataFrame =
+    sigs.select(col("doc_id").as(id), col("band"),
+      col("band_sig").as("band_val"))
 
   /** Exact n-gram Jaccard verification of the LSH candidates (the
     * confirm phase — keeps the near-dup result exact, mirroring the
@@ -1009,25 +987,7 @@ object TrainingOps {
     // — all four read the parquet cache, so no in-query persist is needed
     // (and nothing leaks into the session cache across queries)
     val sh = shingles(spark, sfDir)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val pairs = lshCandidatePairs(spark, sfDir)
-    val inter = pairs
-      .join(sh.select(col("doc_id").as("doc_a"), col("shh")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("shh")), Seq("doc_b", "shh"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("inter"))
-    pairs
-      .join(inter, Seq("doc_a", "doc_b"), "left")
-      .withColumn("inter", coalesce(col("inter"), lit(0L)))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("size_a")),
-        Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("size_b")),
-        Seq("doc_b"))
-      .select(
-        col("doc_a"), col("doc_b"), col("inter"),
-        col("size_a"), col("size_b"),
-        (col("inter") * 10 >=
-          (col("size_a") + col("size_b") - col("inter")) * 6).as("is_dup"))
+    BandJoin.jaccard(lshCandidatePairs(spark, sfDir), "doc_a", "doc_b", sh, sh)
   }
 
   /** Document-frequency cap for containment candidate seeding: only
@@ -1207,35 +1167,15 @@ object TrainingOps {
   def incrementalPairVerdicts(spark: SparkSession, sfDir: String,
       maxBroadcastBytes: Long = DefaultCosineMaxBroadcastBytes): DataFrame = {
     val sigs = lshBandSignatures(spark, sfDir)
-    val batchSigs = sigs.filter(isIncrementalBatch)
-      .select(col("band"), col("band_sig"), col("doc_id").as("batch_id"))
-    val indexSigs = sigs.filter(!isIncrementalBatch)
-      .select(col("band"), col("band_sig"), col("doc_id").as("corpus_id"))
+    val batchSigs = sigBands(sigs.filter(isIncrementalBatch), "batch_id")
     // one cheap count over the cached signature parquet sizes the dispatch
-    val batchBytes = batchSigs.count() * IncrSigRowBytes
-    val probeSide =
-      if (batchBytes <= maxBroadcastBytes) broadcast(batchSigs)
-      else batchSigs.hint("shuffle_hash")
-    val cand = indexSigs.join(probeSide, Seq("band", "band_sig"))
-      .select("batch_id", "corpus_id").distinct()
+    val cand = BandJoin.probe(batchSigs,
+      sigBands(sigs.filter(!isIncrementalBatch), "corpus_id"), "batch_id",
+      "corpus_id", BandJoin.sizeGate(batchSigs.count() * IncrSigRowBytes,
+        maxBroadcastBytes))
     val sh = shingles(spark, sfDir)
-    val bsh = sh.filter(isIncrementalBatch)
-      .select(col("doc_id").as("batch_id"), col("shh"))
-    val ish = sh.filter(!isIncrementalBatch)
-      .select(col("doc_id").as("corpus_id"), col("shh"))
-    val inter = cand
-      .join(bsh, Seq("batch_id"))
-      .join(ish, Seq("corpus_id", "shh"))
-      .groupBy("batch_id", "corpus_id").agg(count(lit(1)).as("inter"))
-    val bsz = bsh.groupBy("batch_id").agg(count(lit(1)).as("size_b"))
-    val isz = ish.groupBy("corpus_id").agg(count(lit(1)).as("size_i"))
-    cand
-      .join(inter, Seq("batch_id", "corpus_id"), "left")
-      .withColumn("inter", coalesce(col("inter"), lit(0L)))
-      .join(bsz, Seq("batch_id"))
-      .join(isz, Seq("corpus_id"))
-      .withColumn("is_dup", col("inter") * 10 >=
-        (col("size_b") + col("size_i") - col("inter")) * 6)
+    BandJoin.jaccard(cand, "batch_id", "corpus_id",
+      sh.filter(isIncrementalBatch), sh.filter(!isIncrementalBatch))
   }
 
   /** Connected components over the verified near-dup pair graph —
@@ -1272,9 +1212,9 @@ object TrainingOps {
     * star forest ⇔ every src has exactly one edge AND no src appears as a
     * dst. Both operators preserve the component partition and the
     * large→small orientation, so a star's center is its component minimum —
-    * the same fixpoint as min-label propagation (equality with
-    * [[dupClustersByDoubling]] is property-tested in DupClustersSpec, and
-    * the full chain is oracled vs DuckDB's recursive CTE).
+    * the same fixpoint as min-label propagation (equality with a
+    * driver-side union-find is property-tested in DupClustersSpec, and the
+    * full chain is oracled vs DuckDB's recursive CTE).
     *
     * Deterministic: the fixpoint is the component minimum regardless of
     * schedule. The driver loop carries only two tiny convergence scalars
@@ -1351,83 +1291,6 @@ object TrainingOps {
     val rootLabels = edges.select(col("dst").as("doc_id")).distinct()
       .withColumn("label", col("doc_id"))
     (leafLabels.unionByName(rootLabels).select(
-      col("doc_id"), col("label").as("cluster_id"),
-      (col("doc_id") === col("label")).as("is_keeper")), pass)
-  }
-
-  /** Min-label propagation WITH POINTER DOUBLING (r2 asks: "change
-    * detection inside the propagation pass" + ADVICE "doubling-style
-    * propagation so convergence is O(log diameter)"). Kept as the
-    * readable alternative formulation, property-tested equal to the
-    * star-contraction default — its per-pass cost carries the FULL edge
-    * set every pass, which [[dupClustersFromPairs]] contracts instead:
-    *
-    *  - each pass does ONE edge⨝labels propagation (per-node min over
-    *    neighbors) and ONE labels⨝labels shortcut (label ← label's label —
-    *    valid because labels are always node ids of the same component,
-    *    and monotonically non-increasing). The combination converges in
-    *    O(log diameter) passes where plain propagation needs O(diameter) —
-    *    proof-tested on a 64-node path graph (DupClustersSpec);
-    *  - change detection is IN-PASS: the old label rides along the
-    *    propagation frame, so the per-pass `count()` action (the loop's
-    *    only driver value) reads the already-persisted pass output instead
-    *    of paying a labels⨝next join — r2's "What's wrong" #3 halved;
-    *  - non-convergence is LOUD (ADVICE r2): a component with diameter
-    *    > 2^maxPasses would silently mislabel — throw instead.
-    *
-    * Deterministic: the fixpoint is the component minimum regardless of
-    * schedule. At 10^10 scale every per-pass operator is a uniform-key
-    * shuffle (doc ids); the driver never holds data, only a change count.
-    */
-  def dupClustersByDoubling(dup: DataFrame, maxPasses: Int = 25)
-      : (DataFrame, Int) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val fwd = dup.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    val edges = fwd
-      .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .persist(lvl)
-    // eager localCheckpoint per pass TRUNCATES LINEAGE: each pass references
-    // its predecessor twice (propagation + shortcut self-join), so a plain
-    // persist chain grows the logical plan ~4× per pass — the analyzer/AQE
-    // plan-string work alone OOMs past ~7 passes. Checkpointing pins each
-    // pass's result as a materialized leaf; plan size stays O(1) in passes.
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("label", col("doc_id"))
-      .localCheckpoint()
-    var converged = false
-    var pass = 0
-    while (!converged && pass < maxPasses) {
-      // propagation: per-node min over neighbor labels (old label kept)
-      val prop = edges.join(labels, col("src") === col("doc_id"))
-        .groupBy(col("dst")).agg(min("label").as("nlabel"))
-      val stepped = labels.as("l")
-        .join(prop, col("doc_id") === col("dst"), "left")
-        .select(col("doc_id"), col("l.label").as("old"),
-          least(col("l.label"), coalesce(col("nlabel"), col("l.label")))
-            .as("mid"))
-        .persist(lvl)
-      // shortcut (pointer doubling): label ← label's label
-      val next = stepped.as("s")
-        .join(stepped.select(col("doc_id").as("__ld"), col("mid").as("__lmid")),
-          col("s.mid") === col("__ld"), "left")
-        .select(col("s.doc_id").as("doc_id"), col("s.old").as("old"),
-          least(col("s.mid"), coalesce(col("__lmid"), col("s.mid")))
-            .as("label"))
-        .localCheckpoint() // eager — materializes the pass
-      val changes = next.filter(col("label") =!= col("old")).count()
-      stepped.unpersist(blocking = false)
-      labels = next
-      converged = changes == 0
-      pass += 1
-    }
-    edges.unpersist(blocking = false)
-    if (!converged)
-      throw new IllegalStateException(
-        s"dupClusters did not converge in $maxPasses passes — component " +
-          "diameter exceeds 2^passes; raise maxPasses")
-    // the final labels stay cached — they back the returned plan (lineage
-    // re-runs the whole propagation if dropped before consumption)
-    (labels.select(
       col("doc_id"), col("label").as("cluster_id"),
       (col("doc_id") === col("label")).as("is_keeper")), pass)
   }
@@ -1513,33 +1376,16 @@ object TrainingOps {
     */
   def imageHammingCandidates(spark: SparkSession, nImages: Long,
       probesPerBand: Int): DataFrame = {
-    require(probesPerBand >= 1 && probesPerBand <= ImgTopKBandBits + 1,
-      s"probesPerBand must be in 1..${ImgTopKBandBits + 1} (exact + up to " +
-        s"$ImgTopKBandBits Hamming-1 flips of a $ImgTopKBandBits-bit " +
-        s"band), got $probesPerBand")
-    val base = graft.model.Fixtures.imagePhashes(spark, nImages)
+    val bands = BandJoin.bands(graft.model.Fixtures.imagePhashes(spark, nImages)
       .select(substring(col("image_id"), 5, 8).cast("long").as("num"),
-        col("phash").bitwiseAND(lit((1L << 60) - 1)).as("ph"))
-    val bands = base
-      .select(col("num"), col("ph"),
-        explode(sequence(lit(0), lit(ImgTopKBands - 1))).as("band"))
-      .withColumn("band_val",
-        expr(s"shiftright(ph, CAST(band * $ImgTopKBandBits AS INT))" +
-          s" & ${(1 << ImgTopKBandBits) - 1}"))
-    val qs = bands.filter(col("num") < NQueryVecs)
-      .select(col("num").as("query_id"), col("ph").as("qph"),
-        col("band"), col("band_val"),
-        explode(sequence(lit(0), lit(probesPerBand - 1))).as("flip"))
-      .withColumn("band_val",
-        expr("CAST(band_val ^ (CASE WHEN flip = 0 THEN 0 " +
-          "ELSE shiftleft(1, CAST(flip - 1 AS INT)) END) AS BIGINT)"))
-      .drop("flip")
-    val cs = bands.filter(col("num") >= NQueryVecs)
-      .select(col("num").as("neighbor_id"), col("ph").as("nph"),
-        col("band").as("band_b"), col("band_val").as("val_b"))
-    qs.join(cs, col("band") === col("band_b") &&
-        col("band_val") === col("val_b"))
-      .select("query_id", "qph", "neighbor_id", "nph").distinct()
+        col("phash").bitwiseAND(lit((1L << 60) - 1)).as("ph")),
+      "ph", ImgTopKBands, ImgTopKBandBits)
+    def side(id: String, ph: String) =
+      bands.withColumnRenamed("num", id).withColumnRenamed("ph", ph)
+    BandJoin.probe(BandJoin.multiProbe(side("query_id", "qph")
+        .filter(col("query_id") < NQueryVecs), probesPerBand, ImgTopKBandBits),
+      side("neighbor_id", "nph").filter(col("neighbor_id") >= NQueryVecs),
+      "query_id", "neighbor_id")
   }
 
   /** Recall@k vs probe count for the image Hamming top-k — the image
@@ -1841,35 +1687,20 @@ object TrainingOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // one cheap count sizes the dispatch (the corpus is consumed by the
     // bucket build + both verify sides anyway — the persist pays for itself)
-    val corpusBytes = corpus.count() * CosineCorpusRowBytes
-    val broadcastCorpus = corpusBytes <= maxBroadcastBytes
-    // 16 hyperplane signs → 4 bands × 4 bits (same banding as the ANN path)
-    val buckets = lshSignatures(corpus)
+    val gate = BandJoin.sizeGate(corpus.count() * CosineCorpusRowBytes,
+      maxBroadcastBytes)
+    // 16 hyperplane signs → 4 bands × 4 bits (same banding as the ANN path);
     // candidates carry IDS ONLY through the band self-join — the 64-long
     // arrays would multiply every banded row and every shuffled pair by
     // ~0.5 KB; they re-join after dedup (broadcast here; at corpus sizes
     // past broadcast, a shuffle join co-partitioned on vec_id)
-    val bands = buckets
-      .select(col("vec_id"), col("bucket"),
-        explode(sequence(lit(0), lit(LshBands - 1))).as("band"))
-      .withColumn("band_val",
-        expr("shiftright(bucket, CAST(band * 4 AS INT)) & 15"))
-      .drop("bucket")
-    val a = bands.select(col("band"), col("band_val"),
-      col("vec_id").as("vec_a"))
-    val b = bands.select(col("band").as("band_b"), col("band_val").as("val_b"),
-      col("vec_id").as("vec_b"))
-    val cand = a.join(b, col("band") === col("band_b") &&
-        col("band_val") === col("val_b") && col("vec_a") < col("vec_b"))
-      .select("vec_a", "vec_b").distinct()
-    val sideA = corpus.select(col("vec_id").as("vec_a"), col("q").as("qa"))
-    val sideB = corpus.select(col("vec_id").as("vec_b"), col("q").as("qb"))
-    val (ja, jb) =
-      if (broadcastCorpus) (broadcast(sideA), broadcast(sideB))
-      else (sideA.hint("shuffle_hash"), sideB.hint("shuffle_hash"))
-    cand
-      .join(ja, Seq("vec_a"))
-      .join(jb, Seq("vec_b"))
+    BandJoin.selfJoin(BandJoin.bands(lshSignatures(corpus), "bucket",
+        LshBands, LshPlanes / LshBands).drop("bucket"),
+        "vec_id", "vec_a", "vec_b")
+      .join(gate(corpus.select(col("vec_id").as("vec_a"), col("q").as("qa"))),
+        Seq("vec_a"))
+      .join(gate(corpus.select(col("vec_id").as("vec_b"), col("q").as("qb"))),
+        Seq("vec_b"))
       .withColumn("dot", intDot(col("qa"), col("qb")))
       .withColumn("na2", intDot(col("qa"), col("qa")))
       .withColumn("nb2", intDot(col("qb"), col("qb")))
@@ -2216,40 +2047,24 @@ object TrainingOps {
       kernel(ix.code).as("dot"))
   }
 
-  /** LSH candidates: a pair is a candidate when it shares a (band_idx,
-    * band_val) key, so the band join shuffles on bounded, uniform keys
-    * where brute force would shuffle |Q|×|C|. Multi-probe runs on the
-    * query side only: each band probes its value and up to 4 Hamming-1
-    * flips of it — probe count × lookups, never a corpus rescan (the
-    * corpus keeps its 4 stored bands per vector).
+  /** LSH candidates: a [[BandJoin.probe]] of the query vectors' 4-bit
+    * bands, each with up to 4 Hamming-1 flips ([[BandJoin.multiProbe]]),
+    * against the corpus's 4 stored bands per vector — bounded, uniform
+    * band keys where brute force would shuffle |Q|×|C|.
     */
   private def lshPairs(e: DataFrame, probes: Int, code: Encoder)
       : DataFrame = {
-    require(probes >= 1 && probes <= 5,
-      s"probesPerBand must be in 1..5 (exact + up to 4 Hamming-1 flips " +
-        s"of a 4-bit band), got $probes")
-    val banded = e.join(lshSignatures(e), Seq("vec_id"))
-      .select(col("vec_id"), col("q"), col("bucket"),
-        explode(sequence(lit(0), lit(LshBands - 1))).as("band_idx"))
-      .withColumn("band_val",
-        expr("shiftright(bucket, CAST(band_idx * 4 AS INT)) & 15"))
-      .drop("bucket")
-    val qs = code.queries(banded.filter(col("vec_id") < NQueryVecs)
-        .select(col("vec_id").as("query_id"), col("q"), col("band_idx"),
-          col("band_val"),
-          explode(sequence(lit(0), lit(probes - 1))).as("flip"))
-        .withColumn("band_val",
-          expr("CAST(band_val ^ (CASE WHEN flip = 0 THEN 0 " +
-            "ELSE shiftleft(1, CAST(flip - 1 AS INT)) END) AS BIGINT)"))
-        .drop("flip"))
-      .select("query_id", "qv", "band_idx", "band_val")
-    val cs = code.corpus(banded.filter(col("vec_id") >= NQueryVecs))
-      .select(col("vec_id"), col("nv"), col("band_idx").as("band_idx_c"),
-        col("band_val").as("band_val_c"))
-    qs.join(cs, col("band_idx") === col("band_idx_c") &&
-        col("band_val") === col("band_val_c"))
-      .select("query_id", "vec_id", "qv", "nv")
-      .dropDuplicates("query_id", "vec_id")
+    val banded = BandJoin.bands(e.join(lshSignatures(e), Seq("vec_id")),
+      "bucket", LshBands, LshPlanes / LshBands).drop("bucket")
+    BandJoin.probe(
+      code.queries(BandJoin.multiProbe(
+          banded.filter(col("vec_id") < NQueryVecs)
+            .withColumnRenamed("vec_id", "query_id"),
+          probes, LshPlanes / LshBands))
+        .select("query_id", "qv", "band", "band_val"),
+      code.corpus(banded.filter(col("vec_id") >= NQueryVecs))
+        .select("vec_id", "nv", "band", "band_val"),
+      "query_id", "vec_id")
   }
 
   /** IVF candidates: each query scores the lists of its probed centroids
@@ -2278,9 +2093,7 @@ object TrainingOps {
       }
     val probeBytes = NQueryVecs.toLong *
       math.max(ivf.nprobe.toLong, nlist / 8L) * IvfProbeRowBytes
-    val gate: DataFrame => DataFrame =
-      if (probeBytes <= ivf.maxProbeBroadcastBytes) broadcast(_)
-      else _.hint("shuffle_hash")
+    val gate = BandJoin.sizeGate(probeBytes, ivf.maxProbeBroadcastBytes)
     val assigned = ivfAssignmentsWithCents(e, cents)
     val (source, lists) = code match {
       case _: AnnIndex.ResidualPq =>

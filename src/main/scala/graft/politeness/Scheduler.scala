@@ -159,7 +159,7 @@ object Scheduler {
     * 10^6 in-links combine, they don't hot-spot. K is fixed (default 3),
     * so the plan is K unrolled join+agg stages — no driver loop over
     * collected data; `localCheckpoint` per round keeps the lineage O(1)
-    * like [[graft.operators.TrainingOps.dupClusters]]' doubling passes.
+    * like [[graft.operators.TrainingOps.dupClusters]]' contraction passes.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 3): DataFrame = {

@@ -306,9 +306,10 @@ object UrlSeen {
   def filterUnseen(candidates: DataFrame, segments: DataFrame, seen: DataFrame,
       urlCol: String, nSegments: Int,
       maxBroadcastBytes: Long = DefaultMaxBroadcastSegmentBytes): DataFrame =
-    // a cached segments frame stays persisted on the co-partitioned path:
-    // the probe job still has to read it
-    dispatchSegments(segments, nSegments, maxBroadcastBytes, cache = true)._1 match {
+    // plan-pure like flagSeen: this form returns no release hook, so it
+    // must not persist the segments it sizes
+    dispatchSegments(segments, nSegments, maxBroadcastBytes,
+        cache = false)._1 match {
       case Left(segs) =>
         unseenOf(flagMaybeBroadcast(candidates, segs, urlCol), seen, urlCol)
       case Right(segs) =>

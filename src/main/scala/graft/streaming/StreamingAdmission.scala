@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.operators.TrainingOps
+import graft.operators.{BandJoin, TrainingOps}
 
 /** Streaming corpus admission: the training-data counterpart of the
   * streaming frontier — a stream of crawled documents is admitted against
@@ -68,58 +68,26 @@ object StreamingAdmission {
     val bsig = TrainingOps.bandSignaturesOf(
         TrainingOps.minhashSignaturesOf(bsh))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val bsz = bsh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
 
     // ---- intra-batch keep-first near-dup (batch-bounded work) ----------
-    val intraPairs = TrainingOps.candidatePairsFromSigs(bsig)
-    val intraInter = intraPairs
-      .join(bsh.select(col("doc_id").as("doc_a"), col("shh")), Seq("doc_a"))
-      .join(bsh.select(col("doc_id").as("doc_b"), col("shh")),
-        Seq("doc_b", "shh"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
-    val intraDrop = intraPairs
-      .join(intraInter, Seq("doc_a", "doc_b"), "left")
-      .withColumn("inter", coalesce(col("inter"), lit(0L)))
-      .join(bsz.select(col("doc_id").as("doc_a"), col("sz").as("size_a")),
-        Seq("doc_a"))
-      .join(bsz.select(col("doc_id").as("doc_b"), col("sz").as("size_b")),
-        Seq("doc_b"))
-      .filter(col("inter") * 10 >=
-        (col("size_a") + col("size_b") - col("inter")) * 6)
+    val intraDrop = BandJoin.jaccard(TrainingOps.candidatePairsFromSigs(bsig),
+        "doc_a", "doc_b", bsh, bsh)
+      .filter(col("is_dup"))
       .groupBy(col("doc_b").as("doc_id"))
       .agg(min("doc_a").as("intra_dropped_by"))
 
     // ---- index probe: batch ⋈ index on (band, band_sig) ----------------
-    val isigs = indexSigs.select(col("band"), col("band_sig"),
-      col("doc_id").as("corpus_id"))
-    val batchSide = bsig.select(col("band"), col("band_sig"),
-      col("doc_id").as("batch_id"))
-    val batchBytes = batchSide.count() * TrainingOps.IncrSigRowBytes
-    val probeSide =
-      if (batchBytes <= maxBroadcastBytes) broadcast(batchSide)
-      else batchSide.hint("shuffle_hash")
-    val cand = isigs.join(probeSide, Seq("band", "band_sig"))
-      .select("batch_id", "corpus_id").distinct()
+    val batchSide = TrainingOps.sigBands(bsig, "batch_id")
+    val cand = BandJoin.probe(batchSide,
+        TrainingOps.sigBands(indexSigs, "corpus_id"), "batch_id", "corpus_id",
+        BandJoin.sizeGate(batchSide.count() * TrainingOps.IncrSigRowBytes,
+          maxBroadcastBytes))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // index shingles touched ONLY for candidate corpus docs
-    val candIds = cand.select(col("corpus_id")).distinct()
-    val ish = indexSh.join(broadcast(candIds),
-        indexSh("doc_id") === candIds("corpus_id"))
-      .select(indexSh("doc_id").as("corpus_id"), col("shh"))
-    val isz = ish.groupBy("corpus_id").agg(count(lit(1)).as("size_i"))
-    val inter = cand
-      .join(bsh.select(col("doc_id").as("batch_id"), col("shh")),
-        Seq("batch_id"))
-      .join(ish, Seq("corpus_id", "shh"))
-      .groupBy("batch_id", "corpus_id").agg(count(lit(1)).as("inter"))
-    val pairVerdicts = cand
-      .join(inter, Seq("batch_id", "corpus_id"), "left")
-      .withColumn("inter", coalesce(col("inter"), lit(0L)))
-      .join(bsz.select(col("doc_id").as("batch_id"), col("sz").as("size_b")),
-        Seq("batch_id"))
-      .join(isz, Seq("corpus_id"))
-      .withColumn("is_dup", col("inter") * 10 >=
-        (col("size_b") + col("size_i") - col("inter")) * 6)
+    val ish = indexSh.join(
+      broadcast(cand.select(col("corpus_id").as("doc_id")).distinct()),
+      Seq("doc_id"), "left_semi")
+    val pairVerdicts = BandJoin.jaccard(cand, "batch_id", "corpus_id", bsh, ish)
     val agg = pairVerdicts.groupBy("batch_id").agg(
       count(lit(1)).as("n_candidates"),
       sum(when(col("is_dup"), 1L).otherwise(0L)).as("n_dup_matches"),

@@ -253,12 +253,13 @@ class ScalingTelemetrySpec extends AnyFunSuite {
 
   test("headline: a query with no successful run nulls the total and is " +
       "named in failed, never summed as zero") {
-    val ok = Bench.Json.readTree("{" + Bench.headlineFields(
-      Seq("q_a" -> Some(1.25), "q_b" -> Some(2.5))) + "}")
+    val ok = Bench.Json.readTree(Bench.Json.writeValueAsString(
+      Bench.headlineFields(Seq("q_a" -> Some(1.25), "q_b" -> Some(2.5)))))
     assert(ok.get("value").asDouble() === 3.75)
     assert(ok.get("failed").size() === 0)
-    val bad = Bench.Json.readTree("{" + Bench.headlineFields(
-      Seq("q_a" -> Some(1.25), "q_b" -> None, "q_c" -> Some(2.5))) + "}")
+    val bad = Bench.Json.readTree(Bench.Json.writeValueAsString(
+      Bench.headlineFields(Seq("q_a" -> Some(1.25), "q_b" -> None,
+        "q_c" -> Some(2.5)))))
     assert(bad.get("value").isNull)
     assert(bad.get("failed").size() === 1 &&
       bad.get("failed").get(0).asText() === "q_b")
@@ -266,15 +267,40 @@ class ScalingTelemetrySpec extends AnyFunSuite {
 
   test("recall block: Jackson renders every key with the record's " +
       "3-decimal values and both curves") {
-    val fields = Bench.recallFields(
+    val fields = Bench.Json.writeValueAsString(Bench.recallFields(
       Seq("ann_recall_at_10" -> 0.9375, "ann_ivf_recall_at_10" -> 1.0),
-      Seq((1, 0.325, 904L), (5, 0.9375, 3003L)), Seq((1, 0.5, 10L)))
+      Seq((1, 0.325, 904L), (5, 0.9375, 3003L)), Seq((1, 0.5, 10L))))
     assert(fields.startsWith(
-      "\"ann_recall_at_10\":0.938,\"ann_ivf_recall_at_10\":1.000,"))
-    val tree = Bench.Json.readTree("{" + fields + "}")
+      "{\"ann_recall_at_10\":0.938,\"ann_ivf_recall_at_10\":1.000,"))
+    val tree = Bench.Json.readTree(fields)
     assert(tree.get("ann_image_recall_at_10").asDouble() === 0.5)
     val curve = tree.get("ann_recall_curve")
     assert(curve.size() === 2 && curve.get(1).get("candidates").asLong() === 3003L)
     assert(tree.get("ann_image_recall_curve").get(0).get("probes").asInt() === 1)
+  }
+
+  test("every record renders '.' decimals and parses as JSON under a " +
+      "comma-decimal default locale") {
+    val prev = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      val sample = Bench.ArmSample(1, 1, 1, Some(72.65), Some(0.0003), None)
+      val noise = Bench.benchNoise(None, None, 0L, 0L, 12.34)
+      val scaling = Bench.renderScalingRecord(Seq(1, 4), 8000000L,
+        Seq(60.5, 17.25), pinned = true, Seq(sample), None)
+      val recall = Bench.Json.writeValueAsString(Bench.recallFields(
+        Seq("ann_recall_at_10" -> 0.9375), Seq((1, 0.5, 10L)),
+        Seq((1, 0.5, 10L))))
+      val headline = Bench.Json.writeValueAsString(
+        Bench.headlineFields(Seq("q_a" -> Some(1.25))))
+      val trees = Seq(sample.json, noise.json, scaling, recall, headline)
+        .map(Bench.Json.readTree)
+      assert(trees(0).get("sec").asDouble() === 72.65)
+      assert(trees(1).get("wall_sec").asDouble() === 12.3)
+      assert(trees(2).get("sec_small").asDouble() === 60.5 &&
+        trees(2).get("samples").get(0).get("steal_frac").asDouble() === 0.0003)
+      assert(trees(3).get("ann_recall_at_10").asDouble() === 0.938)
+      assert(trees(4).get("value").asDouble() === 1.25)
+    } finally java.util.Locale.setDefault(prev)
   }
 }

@@ -54,6 +54,25 @@ class UrlSeenSpec extends SparkTestBase {
     assert(got.forall(_ % 3 != 0))
   }
 
+  test("filterUnseen over a distributed segments frame persists nothing " +
+      "on the co-partitioned path") {
+    // filterUnseen hands back no release hook, so whatever it cached would
+    // stay persisted for the rest of the session
+    val all = spark.range(0, 2000)
+      .select(concat(lit("https://h"), (col("id") % 7).cast("string"),
+        lit(".example.com/a/"), col("id").cast("string")).as("url"),
+        col("id"))
+    val seen = all.filter(col("id") % 3 === 0).select("url")
+    val segments = UrlSeen.buildSegments(seen, "url", 4,
+      expectedItemsPerSegment = 1000, fpp = 1e-4)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val got = UrlSeen.filterUnseen(all, segments, seen, "url", 4,
+      maxBroadcastBytes = 0L).select("id").as[Long].collect()
+    assert(got.length === 2000 - 667)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"filterUnseen left RDDs persisted: $leaked")
+  }
+
   test("partitioned segment build equals the Aggregator formulation bitwise") {
     val seen = spark.range(0, 5000)
       .select(concat(lit("https://h"), (col("id") % 13).cast("string"),
