@@ -17,7 +17,7 @@ import graft.store.FrontierStore
   *   target/scala-2.13/newscrawlerspark_2.13-0.1.0.jar \
   *   <storeDir> [nSources] [nTicks] [--salted] [--compact-every=K] \
   *   [--listings=<parquet>] [--pages=<parquet>] [--sources=<parquet>] \
-  *   [--robots=<parquet>] [--exact-probe] \
+  *   [--robots=<parquet>] \
   *   [--recrawl-every=K] [--refresh-interval=N] \
   *   [--check-invariants] [--images=<parquet>] \
   *   [--expire-every=K] [--retain-last=R] [--gc-orphans=graceMinutes]
@@ -30,12 +30,11 @@ import graft.store.FrontierStore
   * rebuilt from URLs), and every tick commits atomically before the next
   * starts. Kill it anywhere; the next run continues from the last manifest.
   *
-  * The seen probe is the PRODUCTION path by default: the tick routes
-  * through `SeenProbe.BloomConfirm(store.segments, store.seen)` — the
+  * The seen probe is the PRODUCTION path: the tick routes through
+  * `SeenProbe.BloomConfirm(store.segments, store.seen)` — the
   * size-dispatched two-phase plan (broadcast probe for small segment sets,
   * co-partitioned zip-probe at the 10^10 design point), fed by the store's
-  * persisted per-delta blooms. `--exact-probe` forces the plain join
-  * (debug / tiny stores).
+  * persisted per-delta blooms.
   *
   * Inputs default to the deterministic fixtures; `--listings=`/`--pages=`
   * (and optionally `--sources=`/`--robots=`) point the SAME pipeline at
@@ -93,12 +92,11 @@ object FrontierMain {
   }
 
   /** The per-tick metrics line; `sec` keeps two decimals. */
-  def tickLine(tick: Int, m: FrontierStore.Manifest, probe: String,
+  def tickLine(tick: Int, m: FrontierStore.Manifest,
       invariantViolations: Option[Long], sec: Double): String = line { o =>
     o.put("tick", tick).put("snapshot", m.snapshotId)
       .put("new_articles", m.newArticles).put("skipped", m.skipped)
       .put("errors", m.errors).put("segments", m.segmentCounts.size)
-      .put("probe", probe)
     invariantViolations.foreach(o.put("invariant_violations", _))
     o.put("sec", java.math.BigDecimal.valueOf(sec)
       .setScale(2, java.math.RoundingMode.HALF_UP))
@@ -131,7 +129,6 @@ object FrontierMain {
     val nSources = pos.lift(1).map(_.toInt).getOrElse(20)
     val nTicks = pos.lift(2).map(_.toInt).getOrElse(2)
     val salted = args.contains("--salted")
-    val exactProbe = args.contains("--exact-probe")
     val compactEvery = flag(args, "compact-every").map(_.toInt).getOrElse(0)
     val recrawlEvery = flag(args, "recrawl-every").map(_.toInt).getOrElse(0)
     val refreshInterval = flag(args, "refresh-interval").map(_.toLong)
@@ -188,10 +185,8 @@ object FrontierMain {
       }.getOrElse(Fixtures.listItemsAt(spark, nSources, 30, tick).toDF())
       val pages = pagesPath.map(spark.read.parquet(_))
         .getOrElse(Fixtures.pageStore(spark, nSources, maxTick = tick).toDF())
-      val probe: SeenProbe =
-        if (exactProbe) SeenProbe.Exact(store.seen(spark))
-        else SeenProbe.BloomConfirm(
-          store.segments(spark), store.seen(spark), store.nSegments)
+      val probe = SeenProbe.BloomConfirm(
+        store.segments(spark), store.seen(spark), store.nSegments)
       val t = CrawlTick.runTick(spark, listings, sources, probe,
         robots, pages, salted)
       // per-row invariant enforcement AT the sink (north rule: pairs are
@@ -218,8 +213,8 @@ object FrontierMain {
       invRelease()
       t.cleanup() // release the tick's cached intermediates (ADVICE r1)
       val sec = (System.nanoTime() - t0) / 1e9
-      println(tickLine(tick, m, if (exactProbe) "exact" else "bloom",
-        Some(nViolations).filter(_ => checkInvariants), sec))
+      println(tickLine(tick, m, Some(nViolations).filter(_ => checkInvariants),
+        sec))
       if (recrawlEvery > 0 && (tick + 1) % recrawlEvery == 0) {
         import org.apache.spark.sql.functions.{col, lit}
         // age basis = the committing TICK (crawl_tick), not the per-host

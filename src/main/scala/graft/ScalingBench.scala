@@ -1,5 +1,7 @@
 package graft
 
+import com.fasterxml.jackson.databind.node.ObjectNode
+
 /** Scaling-efficiency evidence for the north rule ("throughput scaling
   * efficiency ≥ 0.8 from N to 4N executors").
   *
@@ -27,6 +29,17 @@ object ScalingBench {
       case _ => None
     }
 
+  /** One JSON line, rendered by Jackson: '.' decimals whatever the locale. */
+  private def line(fill: ObjectNode => ObjectNode): String =
+    Bench.Json.writeValueAsString(fill(Bench.Json.createObjectNode()))
+
+  /** One timed run's telemetry line — what [[Bench.parseRuns]] reads back. */
+  def runLine(cpus: Int, run: Int, sec: Double, steal: Option[Double],
+      offBusy: Option[Double]): String =
+    line(_.put("metric", "scaling_run").put("cpus", cpus).put("run", run)
+      .put("sec", Bench.dec(Some(sec), 3)).put("steal_frac", Bench.dec(steal, 4))
+      .put("offarm_busy_frac", Bench.dec(offBusy, 4)))
+
   def arm(cpus: Int, frontierN: Long): Double = {
     val spark = Bench.session(cpus.toString)
     spark.sparkContext.setLogLevel("WARN")
@@ -53,9 +66,7 @@ object ScalingBench {
         case (Some(b), Some(a), Some(set)) => Bench.cpuNoise(b, a, set)
         case _ => (None, None)
       }
-      def d(o: Option[Double]) = o.map(v => f"$v%.4f").getOrElse("null")
-      println(f"""{"metric":"scaling_run","cpus":$cpus,"run":$i,"sec":$s%.3f,""" +
-        s""""steal_frac":${d(steal)},"offarm_busy_frac":${d(offBusy)}}""")
+      println(runLine(cpus, i, s, steal, offBusy))
       s
     }
     spark.stop()
@@ -73,7 +84,9 @@ object ScalingBench {
     sys.env.get("SPARK_GRAFT_ARM").foreach { a =>
       val cpus = a.toInt
       val sec = arm(cpus, frontierN)
-      println(f"""{"metric":"scaling_arm","cpus":$cpus,"sec":$sec%.2f,"frontier_n":$frontierN,"urls_per_sec":${(frontierN / sec).toLong}}""")
+      println(line(_.put("metric", "scaling_arm").put("cpus", cpus)
+        .put("sec", Bench.dec(Some(sec), 2)).put("frontier_n", frontierN)
+        .put("urls_per_sec", (frontierN / sec).toLong)))
       return
     }
 
@@ -82,6 +95,12 @@ object ScalingBench {
     val thrSmall = frontierN / tSmall
     val thrLarge = frontierN / tLarge
     val efficiency = (thrLarge / thrSmall) / (nLarge.toDouble / nSmall)
-    println(f"""{"metric":"scaling_efficiency","value":$efficiency%.3f,"unit":"ratio","frontier_n":$frontierN,"cpus_small":$nSmall,"cpus_large":$nLarge,"sec_small":$tSmall%.2f,"sec_large":$tLarge%.2f,"urls_per_sec_small":${thrSmall.toLong},"urls_per_sec_large":${thrLarge.toLong}}""")
+    println(line(_.put("metric", "scaling_efficiency")
+      .put("value", Bench.dec(Some(efficiency), 3)).put("unit", "ratio")
+      .put("frontier_n", frontierN).put("cpus_small", nSmall)
+      .put("cpus_large", nLarge).put("sec_small", Bench.dec(Some(tSmall), 2))
+      .put("sec_large", Bench.dec(Some(tLarge), 2))
+      .put("urls_per_sec_small", thrSmall.toLong)
+      .put("urls_per_sec_large", thrLarge.toLong)))
   }
 }

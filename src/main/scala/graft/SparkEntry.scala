@@ -174,13 +174,13 @@ object SparkEntry {
       val segments = graft.seen.UrlSeen.buildSegments(
         seen, "canonical_url", nSegments = 16,
         expectedItemsPerSegment = 4096L)
-      graft.pipeline.CrawlTick.run(s,
+      graft.pipeline.CrawlTick.runTick(s,
         Fixtures.listItemsAt(s, nSources, 30, tick = 0).toDF(),
         { import s.implicits._; Fixtures.sourceSpecs(nSources).toDF() },
         graft.seen.SeenProbe.BloomConfirm(segments, seen, 16),
         { import s.implicits._; Fixtures.robots(nSources).toDF() },
         Fixtures.pageStore(s, nSources, maxTick = 0).toDF(),
-        salted = true)._1
+        salted = true).emitted
     }),
     "q_image_meta" -> ((s, _) =>
       graft.functions.ImageOps.decodeMeta(

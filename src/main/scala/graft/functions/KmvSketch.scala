@@ -69,8 +69,8 @@ object KmvSketch {
 }
 
 /** [[KmvSketch]] as a typed Aggregator (`functions.udaf` → planned as a
-  * TypedImperativeAggregate, same shape as UrlSeen.BloomAggregator):
-  * partial sketches build map-side, only k-long arrays cross the shuffle.
+  * TypedImperativeAggregate): partial sketches build map-side, only
+  * k-long arrays cross the shuffle.
   */
 final class KmvAggregator(k: Int)
     extends Aggregator[Long, KmvSketch, Array[Long]] {

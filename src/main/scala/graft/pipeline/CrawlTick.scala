@@ -60,13 +60,13 @@ import graft.politeness.Scheduler
   *    cardinality is the fan-out unit; the heavy per-host politeness window
   *    uses the salted two-stage rank (Scheduler.saltedHostRank) so one
   *    mega-host never lands in one task;
-  *  - the snapshot-seen probe is strategy-dispatched ([[graft.seen.SeenProbe]]):
-  *    SeenProbe.Exact is a plain left join (small scale / oracle parity);
-  *    SeenProbe.BloomConfirm routes through UrlSeen.flagSeen — Bloom-segment
-  *    prefilter (broadcast ≤ 1 GiB of segments, co-partitioned zip-probe
-  *    above, no driver collect) + exact confirm — the path FrontierMain
-  *    feeds from the store's persisted per-delta blooms. All variants
-  *    produce the identical truth table;
+  *  - the snapshot-seen probe is UrlSeen.flagSeenManaged's one plan, a
+  *    prefilter then an exact confirm, whatever the [[graft.seen.SeenProbe]]:
+  *    SeenProbe.Exact has no prefilter (small scale / oracle parity);
+  *    SeenProbe.BloomConfirm prefilters on Bloom segments (broadcast
+  *    ≤ 1 GiB of segments, co-partitioned zip-probe above, no driver
+  *    collect) — the path FrontierMain feeds from the store's persisted
+  *    per-delta blooms. All variants produce the identical truth table;
   *  - the fetch/page join carries narrow columns only (canonical_url,
   *    image_id, caption); image bytes are joined at the sink, never
   *    shuffled through the pipeline (SURVEY.md §7.4.6);
@@ -77,7 +77,10 @@ object CrawlTick {
 
   val EpochMillis = 300000L // 5-min ticks, reference cadence (setup_scheduler.sh:15)
 
-  /** Columns: the full tick plan, pre-fetch.
+  /** Columns: the full tick plan, pre-fetch, plus the probe's cache-release
+    * hook (ADVICE r3): the probe persists intermediates that the caller
+    * must release after the outputs materialize — [[runTick]] folds the
+    * hook into [[TickResult.cleanup]].
     *
     * @param listings  (source, page_idx, item_idx, url, title, ...)
     * @param sources   SourceSpec rows (tiny → broadcast)
@@ -87,15 +90,6 @@ object CrawlTick {
     *                  co-partitioned probe + exact confirm). All variants
     *                  produce the identical truth table.
     * @param robots    (host, path_prefix, allow, crawl_delay_ms) (tiny → broadcast)
-    */
-  def select(listings: DataFrame, sources: DataFrame, probe: graft.seen.SeenProbe,
-      robots: DataFrame): DataFrame =
-    selectManaged(listings, sources, probe, robots)._1
-
-  /** [[select]] plus the probe's cache-release hook (ADVICE r3): BloomConfirm
-    * probes persist intermediates that a tick loop must release after the
-    * outputs materialize — [[runTick]] folds the hook into
-    * [[TickResult.cleanup]]. One-shot callers may use the plain [[select]].
     */
   def selectManaged(listings: DataFrame, sources: DataFrame,
       probe: graft.seen.SeenProbe, robots: DataFrame)
@@ -152,43 +146,6 @@ object CrawlTick {
     (out, probeCleanup)
   }
 
-  /** Legacy shape: exact-join probe over the snapshot DataFrame. */
-  def select(listings: DataFrame, sources: DataFrame, seenSnapshot: DataFrame,
-      robots: DataFrame): DataFrame =
-    select(listings, sources, graft.seen.SeenProbe.Exact(seenSnapshot), robots)
-
-  /** selected rows × page store → fetched rows + per-source error counts.
-    * pages carries only narrow columns (no bytes) — see scale notes.
-    */
-  def fetchJoin(selected: DataFrame, pages: DataFrame): DataFrame =
-    selected.join(
-      pages.select(col("canonical_url"), col("image_id"),
-        col("caption"), col("status")),
-      Seq("canonical_url"), "left")
-      .withColumn("fetch_ok", coalesce(col("status") === 200, lit(false)))
-
-  /** Full tick: returns (emitted DataFrame in CrawlResult shape + stats cols,
-    * per-source stats DataFrame).
-    *
-    * @param salted use the salted two-stage host rank (scale path) instead
-    *               of the single-window rank — identical output, proven in
-    *               PolitenessSpec
-    */
-  def run(spark: SparkSession, listings: DataFrame, sources: DataFrame,
-      seenSnapshot: DataFrame, robots: DataFrame, pages: DataFrame,
-      salted: Boolean = false): (DataFrame, DataFrame) = {
-    val t = runTick(spark, listings, sources, seenSnapshot, robots, pages, salted)
-    (t.emitted, t.stats)
-  }
-
-  /** [[run]] with an explicit probe strategy (scale path). */
-  def run(spark: SparkSession, listings: DataFrame, sources: DataFrame,
-      probe: graft.seen.SeenProbe, robots: DataFrame, pages: DataFrame,
-      salted: Boolean): (DataFrame, DataFrame) = {
-    val t = runTick(spark, listings, sources, probe, robots, pages, salted)
-    (t.emitted, t.stats)
-  }
-
   /** One tick's outputs plus an explicit cache-release hook. The tick
     * caches its two multiply-consumed intermediates (the flagged listing
     * rows and the deduped fetch rows) through [[graft.plans.Pinned]], at one
@@ -198,8 +155,9 @@ object CrawlTick {
     * that fills or reads it. A long-running driver looping ticks MUST call
     * `cleanup()` after materializing (committing) the outputs, or cached
     * blocks accumulate across ticks (ADVICE r1). The outputs stay usable
-    * after `cleanup()`: they recompute from lineage. [[run]] keeps the old
-    * shape for single-shot callers whose caches die with the session.
+    * after `cleanup()`: they recompute from lineage, so a single-shot
+    * caller whose caches die with the session may take `emitted`/`stats`
+    * alone.
     *
     * `errors` CAPTURES the failed rows, not just their count (r2 gap #5 —
     * the reference keeps the tracebacks, main.py:342-347): one row per
@@ -209,23 +167,26 @@ object CrawlTick {
   final case class TickResult(emitted: DataFrame, stats: DataFrame,
       errors: DataFrame, cleanup: () => Unit)
 
-  def runTick(spark: SparkSession, listings: DataFrame, sources: DataFrame,
-      seenSnapshot: DataFrame, robots: DataFrame, pages: DataFrame,
-      salted: Boolean = false): TickResult =
-    runTick(spark, listings, sources,
-      graft.seen.SeenProbe.Exact(seenSnapshot), robots, pages, salted)
-
-  /** [[runTick]] with an explicit probe strategy — the production
-    * composition (FrontierMain routes store.segments() through here).
+  /** The full tick — the production composition (FrontierMain routes
+    * store.segments() through here).
+    *
+    * @param salted use the salted two-stage host rank (scale path) instead
+    *               of the single-window rank — identical output, proven in
+    *               PolitenessSpec
     */
   def runTick(spark: SparkSession, listings: DataFrame, sources: DataFrame,
       probe: graft.seen.SeenProbe, robots: DataFrame, pages: DataFrame,
-      salted: Boolean): TickResult = {
+      salted: Boolean = false): TickResult = {
 
     val (sel, probeCleanup) = selectManaged(listings, sources, probe, robots)
     val (flagged, flaggedRelease) = Pinned(sel)
 
-    val fetched = fetchJoin(flagged.filter(col("selected")), pages)
+    // fetch join: pages carries only narrow columns (no bytes) — see scale
+    // notes; gate (f): status ≠ 200 or no page row fails the fetch
+    val fetched = flagged.filter(col("selected"))
+      .join(pages.select(col("canonical_url"), col("image_id"),
+        col("caption"), col("status")), Seq("canonical_url"), "left")
+      .withColumn("fetch_ok", coalesce(col("status") === 200, lit(false)))
 
     // gate (g): save_cap over fetch-ok rows, per source, in list order
     val capped = fetched

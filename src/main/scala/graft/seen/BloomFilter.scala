@@ -107,7 +107,8 @@ object BloomFilter {
   }
 
   /** Probe without materializing the word array — used by the codegen'd
-    * might_contain expression; reads bits straight from the byte form.
+    * segment probe (UrlSeen.probeSegments); reads bits straight from the
+    * byte form.
     */
   def mightContainSerialized(bytes: Array[Byte], key: Long): Boolean = {
     val bb = java.nio.ByteBuffer.wrap(bytes)

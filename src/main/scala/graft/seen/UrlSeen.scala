@@ -1,9 +1,8 @@
 package graft.seen
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{BooleanType, DataType}
@@ -31,38 +30,26 @@ object UrlSeen {
 
   def urlHash(url: Column): Column = xxhash64(url)
 
+  /** The segment of a url hash, `pmod(hash, nSegments)`: the one segment
+    * function behind the segment builds, both probes and FrontierStore's
+    * on-disk `seg` partitions.
+    */
   def segmentOf(urlHashCol: Column, nSegments: Int): Column =
     pmod(urlHashCol, lit(nSegments.toLong))
 
-  // ----------------------------------------------------------- aggregator
-
-  /** Builds one Bloom segment from the url-hash column of a group.
-    * A typed Aggregator registered via functions.udaf → planned as a
-    * TypedImperativeAggregate (ObjectHashAggregate keeps the filter as a
-    * live object per group; bytes are only materialized at output).
-    */
-  final class BloomAggregator(expectedItems: Long, fpp: Double)
-      extends Aggregator[Long, BloomFilter, Array[Byte]] {
-    override def zero: BloomFilter = BloomFilter.create(expectedItems, fpp)
-    override def reduce(b: BloomFilter, key: Long): BloomFilter = { b.put(key); b }
-    override def merge(a: BloomFilter, b: BloomFilter): BloomFilter =
-      a.mergeInPlace(b)
-    override def finish(b: BloomFilter): Array[Byte] = b.serialize()
-    override def bufferEncoder: Encoder[BloomFilter] =
-      Encoders.javaSerialization[BloomFilter]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
+  /** [[segmentOf]] for one hash on the JVM side (same value). */
+  def segmentOf(h: Long, nSegments: Int): Int =
+    java.lang.Math.floorMod(h, nSegments.toLong).toInt
 
   /** seen(url strings) → (seg, bloom bytes), one row per segment.
     *
     * Physical strategy: ONE shuffle of (seg, hash) pairs (16 bytes/row)
     * repartitioned by segment, then a streaming per-partition build — each
     * task allocates only the filters for its own segments and serializes
-    * each exactly once. (The typed-Aggregator formulation
-    * [[buildSegmentsAgg]] instead materializes one partial filter per
-    * segment per MAP partition and java-serializes every partial through
-    * the shuffle — at 36 MB per 10^7-entry segment that is the build-side
-    * bottleneck; this path avoids it.)
+    * each exactly once. (An aggregate over the segment would instead
+    * materialize one partial filter per segment per MAP partition and push
+    * every partial through the shuffle — at 36 MB per 10^7-entry segment
+    * that is the build-side bottleneck; this path avoids it.)
     */
   def buildSegments(seen: DataFrame, urlCol: String, nSegments: Int,
       expectedItemsPerSegment: Long, fpp: Double = DefaultFpp): DataFrame = {
@@ -172,98 +159,39 @@ object UrlSeen {
       .toDF("seg", "bloom")
   }
 
-  /** Declarative alternative: typed Aggregator planned as an
-    * ObjectHashAggregate — correct at any scale but shuffles java-serialized
-    * partial filters; kept for the aggregation-surface demonstration and
-    * property-tested equal to [[buildSegments]].
-    */
-  def buildSegmentsAgg(seen: DataFrame, urlCol: String, nSegments: Int,
-      expectedItemsPerSegment: Long, fpp: Double = DefaultFpp): DataFrame = {
-    val bloomAgg = udaf(new BloomAggregator(expectedItemsPerSegment, fpp))
-    val h = urlHash(col(urlCol))
-    seen
-      .select(segmentOf(h, nSegments).as("seg"), h.as("url_hash"))
-      .groupBy("seg")
-      .agg(bloomAgg(col("url_hash")).as("bloom"))
-  }
-
   // ------------------------------------------------------------ probe expr
 
-  /** might_contain(bloomBytes, hash) — codegen'd static call, probing the
-    * serialized form directly (no deserialization per row).
+  /** The serialized-filter probe over a segment array indexed by seg (null
+    * slot = empty segment = definitely unseen): Bloom bytes, or cuckoo
+    * bytes with `cuckoo`. Static — called by the codegen'd
+    * [[SegmentsProbe]] and by the co-partitioned zip probe alike.
     */
-  case class BloomMightContain(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = BooleanType
-    override def nullSafeEval(bytes: Any, key: Any): Any =
-      BloomFilter.mightContainSerialized(
-        bytes.asInstanceOf[Array[Byte]], key.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (b, k) =>
-        s"graft.seen.BloomFilter.mightContainSerialized($b, $k)")
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): BloomMightContain =
-      copy(left = newLeft, right = newRight)
-  }
-
-  def might_contain(bloom: Column, key: Column): Column =
-    Bridge.column(BloomMightContain(Bridge.expression(bloom), Bridge.expression(key)))
-
-  /** Probe helper over the broadcast segment array (null slot = empty
-    * segment = definitely unseen). Static — inlined by codegen.
-    */
-  def probeSegments(segs: Array[Array[Byte]], h: Long): Boolean = {
-    val n = segs.length
-    val seg = (((h % n) + n) % n).toInt
-    val b = segs(seg)
-    b != null && BloomFilter.mightContainSerialized(b, h)
+  def probeSegments(segs: Array[Array[Byte]], h: Long,
+      cuckoo: Boolean = false): Boolean = {
+    val b = segs(segmentOf(h, segs.length))
+    b != null && (if (cuckoo) CuckooFilter.mightContainSerialized(b, h)
+      else BloomFilter.mightContainSerialized(b, h))
   }
 
   /** Codegen'd probe over broadcast segments: no per-row boxing, no UDF
     * serialization boundary — the broadcast is materialized once per task
     * into a mutable member and probed with a static call inside the
-    * whole-stage-codegen span.
+    * whole-stage-codegen span. The filter kind is fixed per expression.
     */
-  case class BloomSegmentsProbe(child: Expression,
-      bc: org.apache.spark.broadcast.Broadcast[Array[Array[Byte]]])
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  case class SegmentsProbe(child: Expression,
+      bc: org.apache.spark.broadcast.Broadcast[Array[Array[Byte]]],
+      cuckoo: Boolean) extends UnaryExpression {
     override def dataType: DataType = BooleanType
     override def nullSafeEval(h: Any): Any =
-      probeSegments(bc.value, h.asInstanceOf[Long])
+      probeSegments(bc.value, h.asInstanceOf[Long], cuckoo)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val bcRef = ctx.addReferenceObj("bloomSegsBc", bc)
-      val segsVar = ctx.addMutableState("byte[][]", "bloomSegs",
+      val bcRef = ctx.addReferenceObj("segsBc", bc)
+      val segsVar = ctx.addMutableState("byte[][]", "segs",
         v => s"$v = (byte[][]) ((org.apache.spark.broadcast.Broadcast) $bcRef).value();")
       defineCodeGen(ctx, ev, h =>
-        s"graft.seen.UrlSeen.probeSegments($segsVar, $h)")
+        s"graft.seen.UrlSeen.probeSegments($segsVar, $h, $cuckoo)")
     }
-    override protected def withNewChildInternal(c: Expression): BloomSegmentsProbe =
-      copy(child = c)
-  }
-
-  /** [[probeSegments]] for cuckoo-filter segment bytes. */
-  def probeCuckooSegments(segs: Array[Array[Byte]], h: Long): Boolean = {
-    val n = segs.length
-    val seg = (((h % n) + n) % n).toInt
-    val b = segs(seg)
-    b != null && CuckooFilter.mightContainSerialized(b, h)
-  }
-
-  /** [[BloomSegmentsProbe]] for cuckoo segments — same codegen shape. */
-  case class CuckooSegmentsProbe(child: Expression,
-      bc: org.apache.spark.broadcast.Broadcast[Array[Array[Byte]]])
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    override def dataType: DataType = BooleanType
-    override def nullSafeEval(h: Any): Any =
-      probeCuckooSegments(bc.value, h.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val bcRef = ctx.addReferenceObj("cuckooSegsBc", bc)
-      val segsVar = ctx.addMutableState("byte[][]", "cuckooSegs",
-        v => s"$v = (byte[][]) ((org.apache.spark.broadcast.Broadcast) $bcRef).value();")
-      defineCodeGen(ctx, ev, h =>
-        s"graft.seen.UrlSeen.probeCuckooSegments($segsVar, $h)")
-    }
-    override protected def withNewChildInternal(c: Expression): CuckooSegmentsProbe =
+    override protected def withNewChildInternal(c: Expression): SegmentsProbe =
       copy(child = c)
   }
 
@@ -271,14 +199,18 @@ object UrlSeen {
 
   /** Max total serialized segment bytes the broadcast probe will accept.
     * Above it (e.g. the 10^10 design point: 1000 × 36 MB = 36 GB) the
-    * probe dispatches to [[filterUnseenCopartitioned]] automatically.
+    * probe dispatches to the co-partitioned zip probe automatically; a
+    * budget of 0 forces that path.
     */
   val DefaultMaxBroadcastSegmentBytes: Long = 1L << 30 // 1 GiB
 
-  /** Exact unseen-filter: candidates minus seen, Bloom-accelerated.
+  /** Exact unseen-filter: candidates minus seen, Bloom-accelerated — the
+    * [[flagSeen]] plan under a BloomConfirm probe, filtered on its flag.
+    * Catalyst folds the filter into the three-way union: the confirmed-seen
+    * (left-semi) branch becomes an empty relation and drops out, leaving
+    * the Bloom-negative rows plus the left-anti confirm of the positives.
     *
-    * Probe strategy, by total segment size ([[dispatchSegments]], shared
-    * with the flag form):
+    * Probe strategy, by total segment size ([[dispatchSegments]]):
     *
     *  - ≤ `maxBroadcastBytes`: segment bytes BROADCAST as an array and
     *    probed by a codegen'd scalar — NOT joined onto the candidate rows.
@@ -287,7 +219,7 @@ object UrlSeen {
     *    copies terabytes. The broadcast ships each segment once per
     *    executor.)
     *  - above it (10^10 design point: 1000 × 36 MB segments, > any sane
-    *    broadcast): [[filterUnseenCopartitioned]] — both sides partitioned
+    *    broadcast): the co-partitioned zip probe — both sides partitioned
     *    by the SAME pmod(xxhash64(url), nSeg), each task materializes only
     *    its own segments' bytes once and streams its candidate split
     *    through them. FrontierStore persists segment blooms in exactly
@@ -306,17 +238,18 @@ object UrlSeen {
   def filterUnseen(candidates: DataFrame, segments: DataFrame, seen: DataFrame,
       urlCol: String, nSegments: Int,
       maxBroadcastBytes: Long = DefaultMaxBroadcastSegmentBytes): DataFrame =
-    // plan-pure like flagSeen: this form returns no release hook, so it
-    // must not persist the segments it sizes
-    dispatchSegments(segments, nSegments, maxBroadcastBytes,
-        cache = false)._1 match {
-      case Left(segs) =>
-        unseenOf(flagMaybeBroadcast(candidates, segs, urlCol), seen, urlCol)
-      case Right(segs) =>
-        filterUnseenCopartitioned(candidates, segs, seen, urlCol, nSegments)
-    }
+    flagSeen(candidates,
+        SeenProbe.BloomConfirm(segments, seen, nSegments, maxBroadcastBytes),
+        urlCol, "__seen")
+      .filter(!col("__seen")).drop("__seen")
 
-  /** The size dispatch behind every two-phase probe: `Left(segment array)`
+  /** Exact-only path (small scale / oracle parity): plain left-anti join. */
+  def filterUnseenExact(candidates: DataFrame, seen: DataFrame,
+      urlCol: String): DataFrame =
+    candidates.join(seen.select(col(urlCol).as("__seen_url")),
+      candidates(urlCol) === col("__seen_url"), "left_anti")
+
+  /** The size dispatch behind every prefiltered probe: `Left(segment array)`
     * (indexed by seg, null = empty segment) when the segments' total bytes
     * fit `maxBroadcastBytes`, else `Right(frame)` for the co-partitioned
     * probe — plus the hook that releases what the dispatch cached.
@@ -354,26 +287,6 @@ object UrlSeen {
     }
   }
 
-  /** Bloom-negative rows, plus the Bloom-positive ones the exact confirm
-    * join finds unseen, of a `__maybe`-flagged candidate frame.
-    */
-  private def unseenOf(flagged: DataFrame, seen: DataFrame, urlCol: String): DataFrame =
-    // phase 1: bloom-negative → definitely unseen (no false negatives)
-    flagged.filter(!col("__maybe")).drop("__maybe")
-      // phase 2: exact confirm for bloom-positives only (true-seen + FPP mass)
-      .unionByName(confirmJoin(flagged.filter(col("__maybe")).drop("__maybe"),
-        seen, urlCol))
-
-  /** Co-partitioned probe — the 10^10-scale path (VERDICT r1 #2): the
-    * zip probe of [[flagMaybeCopartitioned]], then the exact confirm.
-    */
-  def filterUnseenCopartitioned(candidates: DataFrame, segments: DataFrame,
-      seen: DataFrame, urlCol: String, nSegments: Int): DataFrame =
-    unseenOf(flagMaybeCopartitioned(candidates, segments, urlCol, nSegments),
-      seen, urlCol)
-
-  def pmodLong(h: Long, n: Int): Long = ((h % n) + n) % n
-
   // ------------------------------------------------------------- flag form
 
   /** FLAG (not filter) form of the two-phase probe — what the crawl tick
@@ -381,33 +294,19 @@ object UrlSeen {
     * "url ∈ seen". (The tick cannot filter: stop-at-first-seen and the
     * skipped-counter semantics consume the seen rows too.)
     *
-    * Same physical dispatch as [[filterUnseen]]: Bloom-negative rows
-    * short-circuit to false without ever touching the confirm join;
-    * Bloom-positive rows are confirmed with a dup-safe left-semi/anti pair
-    * against the true seen table (shuffle-hash, uniform url keys). Exact at
-    * any FPP.
+    * Plan-pure: NO persists (there is no release hook to hand back, so it
+    * must not acquire anything). The price is recomputation: the candidate
+    * upstream evaluates up to 3× (neg + semi + anti) and a non-local
+    * segment frame twice (size job + probe job). One-shot callers (single
+    * queries, specs) absorb that; loops (FrontierMain ticks) must use
+    * [[flagSeenManaged]].
     */
   def flagSeen(candidates: DataFrame, probe: SeenProbe, urlCol: String,
-      flagCol: String): DataFrame = probe match {
-    // Plan-pure form: NO persists (the managed variant's caches would leak
-    // here — this wrapper has no release hook to hand back, so it must not
-    // acquire anything). The price is recomputation: the candidate upstream
-    // evaluates up to 3× (neg + semi + anti) and a non-local segment frame
-    // twice (size job + probe job). One-shot callers (single queries, specs)
-    // absorb that; loops (FrontierMain ticks) must use [[flagSeenManaged]].
-    case SeenProbe.Exact(_) =>
-      flagSeenManaged(candidates, probe, urlCol, flagCol)._1
-    case SeenProbe.BloomConfirm(segments, seen, nSegments, maxBroadcastBytes) =>
-      twoPhaseFlag(candidates, segments, seen, urlCol, flagCol, nSegments,
-        maxBroadcastBytes, cuckoo = false, cache = false)._1
-    case SeenProbe.CuckooConfirm(segments, seen, nSegments, maxBroadcastBytes) =>
-      twoPhaseFlag(candidates, segments, seen, urlCol, flagCol, nSegments,
-        maxBroadcastBytes, cuckoo = true, cache = false)._1
-  }
+      flagCol: String): DataFrame =
+    twoPhaseFlag(candidates, probe, urlCol, flagCol, cache = false)._1
 
   /** [[flagSeen]] plus an explicit cache-release hook (ADVICE r3): the
-    * BloomConfirm branch caches two intermediates through
-    * [[graft.plans.Pinned]] —
+    * plan caches two intermediates through [[graft.plans.Pinned]] —
     *
     *  - the flagged (candidates + __maybe) frame, because it fans out into
     *    THREE consumers (the negative branch plus the semi/anti confirm
@@ -427,61 +326,51 @@ object UrlSeen {
     *
     * Long-running callers (FrontierMain's tick loop) MUST invoke the hook
     * after materializing the result, or cached blocks accumulate across
-    * ticks; CrawlTick threads it into TickResult.cleanup. Exact probes
-    * return a no-op hook.
+    * ticks; CrawlTick threads it into TickResult.cleanup.
     */
   def flagSeenManaged(candidates: DataFrame, probe: SeenProbe, urlCol: String,
-      flagCol: String): (DataFrame, () => Unit) = probe match {
-    case SeenProbe.Exact(seen) =>
-      val seenSel = seen.select(col(urlCol).as("__seen_url"))
-        .withColumn("__s", lit(true))
-      val out = candidates
-        .join(seenSel, candidates(urlCol) === col("__seen_url"), "left")
-        .withColumn(flagCol, coalesce(col("__s"), lit(false)))
-        .drop("__seen_url", "__s")
-      (out, () => ())
-    case SeenProbe.BloomConfirm(segments, seen, nSegments, maxBroadcastBytes) =>
-      twoPhaseFlag(candidates, segments, seen, urlCol, flagCol, nSegments,
-        maxBroadcastBytes, cuckoo = false)
-    case SeenProbe.CuckooConfirm(segments, seen, nSegments, maxBroadcastBytes) =>
-      twoPhaseFlag(candidates, segments, seen, urlCol, flagCol, nSegments,
-        maxBroadcastBytes, cuckoo = true)
-  }
+      flagCol: String): (DataFrame, () => Unit) =
+    twoPhaseFlag(candidates, probe, urlCol, flagCol, cache = true)
 
-  /** The shared two-phase (approximate prefilter + exact confirm) flag
-    * plan behind BloomConfirm and CuckooConfirm — identical dispatch,
-    * identical truth table; only the per-row serialized-filter probe
-    * differs. With `cache` the segments and the flagged frame are
+  /** The one seen-probe plan: a prefilter sets `__maybe`, then a dup-safe
+    * left-semi/left-anti pair confirms the maybe rows against the true seen
+    * table (shuffle-hash: uniform url keys, no sort, no driver-side build
+    * of a multi-million-row side); `__maybe = false` rows short-circuit to
+    * unseen. The probe picks the prefilter: Bloom or cuckoo segments
+    * ([[flagMaybe]]), or none for Exact (`__maybe = true` on every row).
+    * Exact at any FPP, and a seen table that repeats a url never repeats
+    * a candidate row. With `cache` the segments and the flagged frame are
     * [[graft.plans.Pinned]] (see [[flagSeenManaged]]); without it nothing
     * is cached and the hook is a no-op.
     */
-  private def twoPhaseFlag(candidates: DataFrame, segments: DataFrame,
-      seen: DataFrame, urlCol: String, flagCol: String, nSegments: Int,
-      maxBroadcastBytes: Long, cuckoo: Boolean,
-      cache: Boolean = true): (DataFrame, () => Unit) = {
-    val (side, segsRelease) =
-      dispatchSegments(segments, nSegments, maxBroadcastBytes, cache)
-    val flagged0 = side match {
-      case Left(segs) => flagMaybeBroadcast(candidates, segs, urlCol, cuckoo)
-      case Right(segs) =>
-        flagMaybeCopartitioned(candidates, segs, urlCol, nSegments, cuckoo)
+  private def twoPhaseFlag(candidates: DataFrame, probe: SeenProbe,
+      urlCol: String, flagCol: String,
+      cache: Boolean): (DataFrame, () => Unit) = {
+    val noop = () => ()
+    val (flagged0, segsRelease) = probe match {
+      case SeenProbe.Exact(_) => (candidates.withColumn("__maybe", lit(true)), noop)
+      case SeenProbe.BloomConfirm(segs, _, n, maxBytes) =>
+        flagMaybe(candidates, segs, urlCol, n, maxBytes, cuckoo = false, cache)
+      case SeenProbe.CuckooConfirm(segs, _, n, maxBytes) =>
+        flagMaybe(candidates, segs, urlCol, n, maxBytes, cuckoo = true, cache)
     }
     val (flagged, flaggedRelease) =
-      if (cache) graft.plans.Pinned(flagged0) else (flagged0, () => ())
+      if (cache) graft.plans.Pinned(flagged0) else (flagged0, noop)
     val neg = flagged.filter(!col("__maybe"))
       .withColumn(flagCol, lit(false)).drop("__maybe")
     val pos = flagged.filter(col("__maybe")).drop("__maybe")
-    val seenSel = seen.select(col(urlCol).as("__seen_url")).hint("shuffle_hash")
-    val posSeen = pos.join(seenSel, pos(urlCol) === col("__seen_url"),
-      "left_semi").withColumn(flagCol, lit(true))
-    val posNew = pos.join(seenSel, pos(urlCol) === col("__seen_url"),
-      "left_anti").withColumn(flagCol, lit(false))
-    val out = neg.unionByName(posSeen).unionByName(posNew)
+    val seenSel = probe.seen.select(col(urlCol).as("__seen_url")).hint("shuffle_hash")
+    def confirm(how: String, seenFlag: Boolean) =
+      pos.join(seenSel, pos(urlCol) === col("__seen_url"), how)
+        .withColumn(flagCol, lit(seenFlag))
+    val out = neg.unionByName(confirm("left_semi", seenFlag = true))
+      .unionByName(confirm("left_anti", seenFlag = false))
     (out, () => { flaggedRelease(); segsRelease() })
   }
 
-  /** candidates + boolean `__maybe` via the broadcast codegen probe over
-    * `segs` (indexed by seg; null = empty segment = definitely unseen).
+  /** candidates + boolean `__maybe` from the serialized-filter segments,
+    * size-dispatched ([[dispatchSegments]]) between the broadcast
+    * [[SegmentsProbe]] and the co-partitioned zip probe.
     *
     * The broadcast is registered with the context cleaner — it is released
     * when the returned plan's last reference is GC'd.
@@ -492,14 +381,20 @@ object UrlSeen {
     * "definitely unseen" on every variant, matching the exact anti-join
     * (NULL never equals a seen url, so the anti-join keeps the row).
     */
-  private def flagMaybeBroadcast(candidates: DataFrame, segs: Array[Array[Byte]],
-      urlCol: String, cuckoo: Boolean = false): DataFrame = {
-    val bc = candidates.sparkSession.sparkContext.broadcast(segs)
-    val hashExpr = Bridge.expression(urlHash(col(urlCol)))
-    val rawProbe =
-      if (cuckoo) Bridge.column(CuckooSegmentsProbe(hashExpr, bc))
-      else Bridge.column(BloomSegmentsProbe(hashExpr, bc))
-    candidates.withColumn("__maybe", coalesce(rawProbe, lit(false)))
+  private def flagMaybe(candidates: DataFrame, segments: DataFrame,
+      urlCol: String, nSegments: Int, maxBroadcastBytes: Long, cuckoo: Boolean,
+      cache: Boolean): (DataFrame, () => Unit) = {
+    val (side, release) =
+      dispatchSegments(segments, nSegments, maxBroadcastBytes, cache)
+    val flagged = side match {
+      case Left(segs) =>
+        val bc = candidates.sparkSession.sparkContext.broadcast(segs)
+        val probe = SegmentsProbe(Bridge.expression(urlHash(col(urlCol))), bc, cuckoo)
+        candidates.withColumn("__maybe", coalesce(Bridge.column(probe), lit(false)))
+      case Right(segs) =>
+        flagMaybeCopartitioned(candidates, segs, urlCol, nSegments, cuckoo)
+    }
+    (flagged, release)
   }
 
   /** candidates + `__maybe` via the co-partitioned zip probe (10^10 path —
@@ -509,17 +404,17 @@ object UrlSeen {
     * segment id (same single-column hash partitioning ⇒ identical
     * seg→partition mapping), then zipped partition-wise: each task loads
     * the few segment byte-arrays that hash to its partition ONCE into a
-    * map and streams its candidate split through them. Segment bytes never
-    * enter a per-row join output and never touch the driver; peak memory
-    * per task = its own segments (~36 MB each at the design point).
+    * seg-indexed array and streams its candidate split through
+    * [[probeSegments]]. Segment bytes never enter a per-row join output and
+    * never touch the driver; peak memory per task = its own segments
+    * (~36 MB each at the design point).
     *
     * The zip leaves whole-stage codegen for one stage (row-level RDD zip);
     * that is the price of streaming multi-GB filter state, and only the
     * probe stage pays it — phases before/after stay columnar.
     */
   private def flagMaybeCopartitioned(candidates: DataFrame, segments: DataFrame,
-      urlCol: String, nSegments: Int, cuckoo: Boolean = false): DataFrame = {
-    val spark = candidates.sparkSession
+      urlCol: String, nSegments: Int, cuckoo: Boolean): DataFrame = {
     val cand = candidates
       .withColumn("__h", urlHash(col(urlCol)))
       .withColumn("__seg", segmentOf(col("__h"), nSegments))
@@ -530,50 +425,24 @@ object UrlSeen {
     val schema = cand.schema.add("__maybe", BooleanType, nullable = false)
     val hIdx = cand.schema.fieldIndex("__h")
     val flaggedRdd = cand.rdd.zipPartitions(segs.rdd) { (candIt, segIt) =>
-      val blooms = scala.collection.mutable.LongMap[Array[Byte]]()
-      segIt.foreach(r => blooms(r.getLong(0)) = r.getAs[Array[Byte]](1))
-      candIt.map { r =>
-        // NULL url ⇒ NULL hash ⇒ definitely unseen (ADVICE r3: matches the
-        // exact anti-join truth table; getLong on the null would NPE)
-        val maybe = !r.isNullAt(hIdx) && {
-          val h = r.getLong(hIdx)
-          blooms.get(pmodLong(h, nSegments)) match {
-            case Some(b) =>
-              if (cuckoo) CuckooFilter.mightContainSerialized(b, h)
-              else BloomFilter.mightContainSerialized(b, h)
-            case None => false
-          }
-        }
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ maybe)
-      }
+      val local = new Array[Array[Byte]](nSegments)
+      segIt.foreach(r => local(r.getLong(0).toInt) = r.getAs[Array[Byte]](1))
+      // NULL url ⇒ NULL hash ⇒ definitely unseen (ADVICE r3: matches the
+      // exact anti-join truth table; getLong on the null would NPE)
+      candIt.map(r => Row.fromSeq(r.toSeq :+
+        (!r.isNullAt(hIdx) && probeSegments(local, r.getLong(hIdx), cuckoo))))
     }
-    spark.createDataFrame(flaggedRdd, schema).drop("__h", "__seg")
+    candidates.sparkSession.createDataFrame(flaggedRdd, schema).drop("__h", "__seg")
   }
-
-  /** Exact confirm: left-anti vs the true seen table. Pinned to
-    * shuffle-hash — keys are uniform url hashes (no skew), SHJ avoids both
-    * the sort of SMJ and AQE's occasional driver-side broadcast conversion
-    * of a multi-million-row build side.
-    */
-  private def confirmJoin(maybeSeen: DataFrame, seen: DataFrame,
-      urlCol: String): DataFrame =
-    maybeSeen.join(
-      seen.select(col(urlCol).as("__seen_url")).hint("shuffle_hash"),
-      maybeSeen(urlCol) === col("__seen_url"), "left_anti")
-
-  /** Exact-only path (small scale / oracle parity): plain left-anti join. */
-  def filterUnseenExact(candidates: DataFrame, seen: DataFrame,
-      urlCol: String): DataFrame =
-    candidates.join(seen.select(col(urlCol).as("__seen_url")),
-      candidates(urlCol) === col("__seen_url"), "left_anti")
 }
 
 /** How a pipeline stage probes the URL-seen state. Closes the r2 gap
   * ("the flagship tick never uses the scale seen-probe"): CrawlTick takes a
   * SeenProbe, so the production composition routes through the same
-  * size-dispatched two-phase plan the 10^10 design point needs, while small
-  * fixtures/oracle runs keep the plain join. Results are EXACT on every
-  * variant — the Bloom only bounds the confirm join's input.
+  * size-dispatched two-phase plan the 10^10 design point needs. Every
+  * variant runs that one plan ([[UrlSeen.flagSeen]]) and differs only in
+  * its prefilter; results are EXACT on every variant — the filter only
+  * bounds the confirm join's input.
   */
 sealed trait SeenProbe {
   /** The exact seen table (one column: the canonical URL). */
@@ -581,7 +450,9 @@ sealed trait SeenProbe {
 }
 
 object SeenProbe {
-  /** Plain left join vs the full seen table — small scale / oracle parity. */
+  /** No prefilter: every row goes to the exact confirm — small scale /
+    * oracle parity.
+    */
   final case class Exact(seen: DataFrame) extends SeenProbe
 
   /** Bloom-segment prefilter + exact confirm; dispatches broadcast-probe vs

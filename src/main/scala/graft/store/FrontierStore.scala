@@ -218,8 +218,8 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
 
   // ----------------------------------------------------------- delta write
 
-  private def segOf(c: org.apache.spark.sql.Column) =
-    pmod(xxhash64(c), lit(nSegments.toLong)).cast("int")
+  private def segOf(c: org.apache.spark.sql.Column) = graft.seen.UrlSeen
+    .segmentOf(graft.seen.UrlSeen.urlHash(c), nSegments).cast("int")
 
   /** The Bloom dial in force for new snapshots on the chain ending at `id`:
     * the nearest compaction baseline's recorded dial, else the constructor

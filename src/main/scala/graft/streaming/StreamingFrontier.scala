@@ -48,7 +48,7 @@ object StreamingFrontier {
     listings.toDF()
       .withColumn("canonical_url", canonicalize_url(col("url")))
       .withColumn("url_hash", xxhash64(col("canonical_url")))
-      .withColumn("seg", pmod(col("url_hash"), lit(nSegments.toLong)))
+      .withColumn("seg", graft.seen.UrlSeen.segmentOf(col("url_hash"), nSegments))
       .select("canonical_url", "source", "item_idx", "url_hash", "seg")
       .as[Candidate]
   }
@@ -244,7 +244,7 @@ object StreamingFrontier {
       .withColumn("effective_delay_ms",
         greatest(col("crawl_delay_ms"), col("robots_delay_ms")).cast("long"))
       .withColumn("url_hash", xxhash64(col("canonical_url")))
-      .withColumn("seg", pmod(col("url_hash"), lit(nSegments.toLong)))
+      .withColumn("seg", graft.seen.UrlSeen.segmentOf(col("url_hash"), nSegments))
       .select("host", "canonical_url", "source", "source_idx", "item_idx",
         "effective_delay_ms", "url_hash", "seg")
       .as[GatedCand]

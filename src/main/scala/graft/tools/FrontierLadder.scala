@@ -31,9 +31,13 @@ object FrontierLadder {
       val best = math.min(s1, s2)
       val thr = (n / best).toLong
       println(f"[ladder] n=$n%d best=$best%.2fs urls_per_sec=$thr%d")
-      s"""{"n":$n,"best_sec":${f"$best%.3f"},"urls_per_sec":$thr}"""
+      Bench.Json.createObjectNode().put("n", n)
+        .put("best_sec", Bench.dec(Some(best), 3)).put("urls_per_sec", thr)
     }
-    println(s"""{"frontier_ladder":[${rows.mkString(",")}]}""")
+    val ladder = Bench.Json.createObjectNode()
+    val arr = ladder.putArray("frontier_ladder")
+    rows.foreach(r => arr.add(r))
+    println(Bench.Json.writeValueAsString(ladder))
     spark.stop()
   }
 }

@@ -45,8 +45,8 @@ object FrontierProfile {
     }
     t("filterUnseen (copart)") {
       // the 10^10-scale path forced regardless of segment size
-      graft.seen.UrlSeen.filterUnseenCopartitioned(
-        cand, segments, seen, "canonical_url", 32)
+      graft.seen.UrlSeen.filterUnseen(cand, segments, seen, "canonical_url", 32,
+        maxBroadcastBytes = 0L)
     }
     val unseen = graft.seen.UrlSeen
       .filterUnseen(cand, segments, seen, "canonical_url", 32)

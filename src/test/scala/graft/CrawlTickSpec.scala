@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.Fixtures
 import graft.pipeline.{CrawlTick, RefSimulator}
+import graft.seen.SeenProbe
 
 /** North-rule criterion: the Spark CrawlTick plan must reproduce the
   * sequential reference-simulator's crawl ordering, URL-seen set and
@@ -33,17 +34,17 @@ class CrawlTickSpec extends SparkTestBase {
     import spark.implicits._
     val (listingsDs, sources, robots, pagesDs, seenDs) = fx
     val seenDf = seenDs.toDF().select("canonical_url")
-    val probe: graft.seen.SeenProbe = probeMode match {
-      case "exact" => graft.seen.SeenProbe.Exact(seenDf)
+    val probe: SeenProbe = probeMode match {
+      case "exact" => SeenProbe.Exact(seenDf)
       case m =>
         val segs = graft.seen.UrlSeen.buildSegments(
           seenDf, "canonical_url", 8, expectedItemsPerSegment = 4096L)
-        graft.seen.SeenProbe.BloomConfirm(segs, seenDf, 8,
+        SeenProbe.BloomConfirm(segs, seenDf, 8,
           maxBroadcastBytes =
             if (m == "bloom-copart") 0L
             else graft.seen.UrlSeen.DefaultMaxBroadcastSegmentBytes)
     }
-    val (emitted, stats) = CrawlTick.run(
+    val t = CrawlTick.runTick(
       spark,
       listingsDs.toDF(),
       sources.toDF(),
@@ -51,6 +52,7 @@ class CrawlTickSpec extends SparkTestBase {
       robots.toDF(),
       pagesDs.toDF(),
       salted = salted)
+    val (emitted, stats) = (t.emitted, t.stats)
 
     val sim = RefSimulator.run(
       listingsDs.collect().toSeq,
@@ -122,7 +124,8 @@ class CrawlTickSpec extends SparkTestBase {
     import spark.implicits._
     val (listingsDs, sources, robots, pagesDs, seenDs) = fx
     val t = CrawlTick.runTick(spark, listingsDs.toDF(), sources.toDF(),
-      seenDs.toDF().select("canonical_url"), robots.toDF(), pagesDs.toDF())
+      SeenProbe.Exact(seenDs.toDF().select("canonical_url")), robots.toDF(),
+      pagesDs.toDF())
     val errRows = t.errors.collect()
     val statTotal = t.stats.agg(sum("errors")).collect()(0).getLong(0)
     assert(errRows.length.toLong === statTotal,
@@ -155,9 +158,9 @@ class CrawlTickSpec extends SparkTestBase {
     val pagesDs = Fixtures.pageStore(spark, n, maxTick = 0)
     val seenDs = Fixtures.urlSeenSeed(spark, n, 8)
 
-    val (emitted, _) = CrawlTick.run(spark, listingsDs.toDF(), sources.toDF(),
-      seenDs.toDF().select("canonical_url"), robots.toDF(), pagesDs.toDF(),
-      salted = true)
+    val emitted = CrawlTick.runTick(spark, listingsDs.toDF(), sources.toDF(),
+      SeenProbe.Exact(seenDs.toDF().select("canonical_url")), robots.toDF(),
+      pagesDs.toDF(), salted = true).emitted
     val sim = RefSimulator.run(listingsDs.collect().toSeq, sources,
       seenDs.collect().map(_.canonical_url).toSet, robots,
       pagesDs.collect().map(p => p.canonical_url -> p).toMap)

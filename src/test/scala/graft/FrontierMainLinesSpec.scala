@@ -21,17 +21,17 @@ class FrontierMainLinesSpec extends AnyFunSuite {
   }
 
   test("tick line: counters, probe, optional invariant count, sec") {
-    val t = parse(FrontierMain.tickLine(3, m, "bloom", None, 1.234))
+    val t = parse(FrontierMain.tickLine(3, m, None, 1.234))
     assert(t.get("tick").asInt === 3 && t.get("snapshot").asInt === 7)
     assert(t.get("new_articles").asLong === 11L && t.get("skipped").asLong === 4L &&
       t.get("errors").asLong === 1L && t.get("segments").asInt === 2)
-    assert(t.get("probe").asText === "bloom")
+    // every tick probes the store's blooms: no per-line probe key
+    assert(!t.has("probe"))
     assert(!t.has("invariant_violations"))
     assert(t.get("sec").isNumber && t.get("sec").decimalValue ===
       new java.math.BigDecimal("1.23"))
-    val checked = parse(FrontierMain.tickLine(3, m, "exact", Some(5L), 0.0))
+    val checked = parse(FrontierMain.tickLine(3, m, Some(5L), 0.0))
     assert(checked.get("invariant_violations").asLong === 5L)
-    assert(checked.get("probe").asText === "exact")
   }
 
   test("recrawl, compaction, article compaction, expiry and orphan-sweep lines") {

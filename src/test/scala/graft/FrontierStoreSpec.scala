@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.Fixtures
 import graft.pipeline.{CrawlTick, RefSimulator}
+import graft.seen.SeenProbe
 import graft.store.FrontierStore
 
 /** Resumability (north rule): tick 0 → commit → REOPEN the store → tick 1
@@ -37,14 +38,14 @@ class FrontierStoreSpec extends SparkTestBase {
     val store0 = new FrontierStore(storeDir).init()
     store0.initSeen(spark, seed.toDF())
     val t0 = CrawlTick.runTick(spark, l0.toDF(), sources.toDF(),
-      store0.seen(spark), robots.toDF(), pages.toDF())
+      SeenProbe.Exact(store0.seen(spark)), robots.toDF(), pages.toDF())
     val (e0, s0) = (t0.emitted, t0.stats)
     store0.commit(spark, e0, s0, fetchEpoch = 0L)
     t0.cleanup()
 
     val store1 = new FrontierStore(storeDir) // fresh handle: resume path
     val t1 = CrawlTick.runTick(spark, l1.toDF(), sources.toDF(),
-      store1.seen(spark), robots.toDF(), pages.toDF())
+      SeenProbe.Exact(store1.seen(spark)), robots.toDF(), pages.toDF())
     val (e1, s1) = (t1.emitted, t1.stats)
     store1.commit(spark, e1, s1, fetchEpoch = 1L)
     t1.cleanup()
@@ -105,7 +106,7 @@ class FrontierStoreSpec extends SparkTestBase {
         .toDF().select("canonical_url"))
     val (l0, sources, robots, pages) = fixtures(0)
     val t = CrawlTick.runTick(spark, l0.toDF(), sources.toDF(),
-      store.seen(spark), robots.toDF(), pages.toDF())
+      SeenProbe.Exact(store.seen(spark)), robots.toDF(), pages.toDF())
     val m = store.commit(spark, t.emitted, t.stats, fetchEpoch = 0L,
       errors = Some(t.errors))
     t.cleanup()
@@ -249,7 +250,7 @@ class FrontierStoreSpec extends SparkTestBase {
       val listings = Fixtures.listItemsAt(spark, nSources, itemsPerSource, tick).toDF()
       val pages = Fixtures.pageStore(spark, nSources, maxTick = tick).toDF()
       val t = CrawlTick.runTick(spark, listings, sources,
-        store.seen(spark), robots, pages)
+        SeenProbe.Exact(store.seen(spark)), robots, pages)
       val m = store.commit(spark, t.emitted, t.stats, fetchEpoch = tick.toLong)
       t.cleanup()
       // seen state grows by exactly the emitted (all-unseen, cross-source
@@ -282,7 +283,7 @@ class FrontierStoreSpec extends SparkTestBase {
         .toDF().select("canonical_url"))
     val (l0, sources, robots, pages) = fixtures(0)
     val t = CrawlTick.runTick(spark, l0.toDF(), sources.toDF(),
-      store.seen(spark), robots.toDF(), pages.toDF())
+      SeenProbe.Exact(store.seen(spark)), robots.toDF(), pages.toDF())
     store.commit(spark, t.emitted, t.stats, fetchEpoch = 0L)
     t.cleanup()
 
@@ -355,7 +356,7 @@ class FrontierStoreSpec extends SparkTestBase {
       val listings = Fixtures.listItemsAt(spark, nSources, itemsPerSource, tick).toDF()
       val pages = Fixtures.pageStore(spark, nSources, maxTick = tick).toDF()
       val t = CrawlTick.runTick(spark, listings, sources,
-        store.seen(spark), robots, pages)
+        SeenProbe.Exact(store.seen(spark)), robots, pages)
       store.commit(spark, t.emitted, t.stats, fetchEpoch = tick.toLong)
       t.cleanup()
       if (tick == 1) store.compact(spark) // boundary INSIDE the window
@@ -421,11 +422,11 @@ class FrontierStoreSpec extends SparkTestBase {
       // (OR-merged across however many deltas the compaction cadence left)
       // prefilter, exact snapshot confirms
       val tB = CrawlTick.runTick(spark, listings, sources,
-        graft.seen.SeenProbe.BloomConfirm(
+        SeenProbe.BloomConfirm(
           storeB.segments(spark), storeB.seen(spark), storeB.nSegments),
         robots, pages, salted = false)
       val tE = CrawlTick.runTick(spark, listings, sources,
-        storeE.seen(spark), robots, pages)
+        SeenProbe.Exact(storeE.seen(spark)), robots, pages)
       val emitB = tB.emitted.select("canonical_url", "emit_idx")
       val emitE = tE.emitted.select("canonical_url", "emit_idx")
       assert(emitB.exceptAll(emitE).count() === 0 &&
@@ -483,7 +484,7 @@ class FrontierStoreSpec extends SparkTestBase {
         Fixtures.listItemsAt(spark, nSources, itemsPerSource, t).toDF()
       val pages = Fixtures.pageStore(spark, nSources, maxTick = t).toDF()
       val r = CrawlTick.runTick(spark, listings, sources,
-        store.seen(spark), robots, pages)
+        SeenProbe.Exact(store.seen(spark)), robots, pages)
       store.commit(spark, r.emitted, r.stats, fetchEpoch = t.toLong)
       r.cleanup()
     }
@@ -554,7 +555,7 @@ class FrontierStoreSpec extends SparkTestBase {
         Fixtures.listItemsAt(spark, nSources, itemsPerSource, t).toDF()
       val pages = Fixtures.pageStore(spark, nSources, maxTick = t).toDF()
       val r = CrawlTick.runTick(spark, listings, sources,
-        store.seen(spark), robots, pages)
+        SeenProbe.Exact(store.seen(spark)), robots, pages)
       store.commit(spark, r.emitted, r.stats, fetchEpoch = t.toLong)
       r.cleanup()
     }
@@ -608,7 +609,7 @@ class FrontierStoreSpec extends SparkTestBase {
       Fixtures.listItemsAt(spark, nSources, itemsPerSource, 3).toDF()
     val pages = Fixtures.pageStore(spark, nSources, maxTick = 3).toDF()
     val r = CrawlTick.runTick(spark, listings, sources,
-      store.seen(spark), robots, pages)
+      SeenProbe.Exact(store.seen(spark)), robots, pages)
     store.commit(spark, r.emitted, r.stats, fetchEpoch = 3L)
     r.cleanup()
     val win = urlSet(store.articlesBetween(spark, horizon))
@@ -634,7 +635,7 @@ class FrontierStoreSpec extends SparkTestBase {
         Fixtures.listItemsAt(spark, nSources, itemsPerSource, t).toDF()
       val pages = Fixtures.pageStore(spark, nSources, maxTick = t).toDF()
       val r = CrawlTick.runTick(spark, listings, sources,
-        store.seen(spark), robots, pages)
+        SeenProbe.Exact(store.seen(spark)), robots, pages)
       store.commit(spark, r.emitted, r.stats, fetchEpoch = t.toLong)
       r.cleanup()
     }
@@ -687,7 +688,7 @@ class FrontierStoreSpec extends SparkTestBase {
       Fixtures.listItemsAt(spark, nSources, itemsPerSource, 2).toDF()
     val pages = Fixtures.pageStore(spark, nSources, maxTick = 2).toDF()
     val r = CrawlTick.runTick(spark, listings, sources,
-      store.seen(spark), robots, pages)
+      SeenProbe.Exact(store.seen(spark)), robots, pages)
     store.commit(spark, r.emitted, r.stats, fetchEpoch = 2L)
     r.cleanup()
     assert(urlSet(store.articles(spark)).size > artsBefore.size)
@@ -711,7 +712,7 @@ class FrontierStoreSpec extends SparkTestBase {
         Fixtures.listItemsAt(spark, nSources, itemsPerSource, t).toDF()
       val pages = Fixtures.pageStore(spark, nSources, maxTick = t).toDF()
       val r = CrawlTick.runTick(spark, listings, sources,
-        store.seen(spark), robots, pages)
+        SeenProbe.Exact(store.seen(spark)), robots, pages)
       val emitted =
         if (evolve) r.emitted.withColumn("crawler_version", lit("v2"))
         else r.emitted
@@ -768,7 +769,7 @@ class FrontierStoreSpec extends SparkTestBase {
     def tick(t: Int): Unit = {
       val r = CrawlTick.runTick(spark,
         Fixtures.listItemsAt(spark, nSources, itemsPerSource, t).toDF(),
-        sources, store.seen(spark), robots,
+        sources, SeenProbe.Exact(store.seen(spark)), robots,
         Fixtures.pageStore(spark, nSources, maxTick = t).toDF())
       store.commit(spark, r.emitted, r.stats, fetchEpoch = t.toLong)
       r.cleanup()

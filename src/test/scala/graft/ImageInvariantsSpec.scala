@@ -85,12 +85,13 @@ class ImageInvariantsSpec extends SparkTestBase {
     import spark.implicits._
     val nSources = 10
     val listings = Fixtures.listItemsAt(spark, nSources, 20, tick = 0)
-    val (emitted, _) = CrawlTick.run(spark,
+    val emitted = CrawlTick.runTick(spark,
       listings.toDF(),
       Fixtures.sourceSpecs(nSources).toDF(),
-      Fixtures.urlSeenSeed(spark, nSources, 4).toDF().select("canonical_url"),
+      graft.seen.SeenProbe.Exact(
+        Fixtures.urlSeenSeed(spark, nSources, 4).toDF().select("canonical_url")),
       Fixtures.robots(nSources).toDF(),
-      Fixtures.pageStore(spark, nSources, maxTick = 0).toDF())
+      Fixtures.pageStore(spark, nSources, maxTick = 0).toDF()).emitted
 
     val images = Fixtures.images(spark, 1000L)
     val refs = images.map(d => (d.image_id,

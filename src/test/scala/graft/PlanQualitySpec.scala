@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, concat, lit}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 import graft.operators.{AnnIndex, CrawlOps, ScanOps, TrainingOps}
@@ -371,7 +371,16 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val segs = graft.seen.UrlSeen.buildSegments(
       seen, "canonical_url", 4, expectedItemsPerSegment = 4096L)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val copart = graft.pipeline.CrawlTick.select(listings, sources,
+    segs.count() // the case's own cache is in place before the snapshot
+    // the probe's caches come back through the hook: once it runs, nothing
+    // the dispatch persisted stays persisted
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def assertNoLeak(path: String): Unit = {
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"$path dispatch left RDDs persisted: $leaked")
+    }
+    val (copart, releaseCo) = graft.pipeline.CrawlTick.selectManaged(listings,
+      sources,
       graft.seen.SeenProbe.BloomConfirm(segs, seen, 4, maxBroadcastBytes = 0L),
       robots)
     val pCo = planString(copart)
@@ -379,12 +388,36 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     // pass through the driver (no addReferenceObj'd broadcast probe)
     assert(pCo.contains("ExistingRDD"),
       "co-partitioned probe path not engaged at threshold 0:\n" + pCo)
-    val bcast = graft.pipeline.CrawlTick.select(listings, sources,
-      graft.seen.SeenProbe.BloomConfirm(segs, seen, 4), robots)
+    releaseCo()
+    assertNoLeak("co-partitioned")
+    val (bcast, releaseBc) = graft.pipeline.CrawlTick.selectManaged(listings,
+      sources, graft.seen.SeenProbe.BloomConfirm(segs, seen, 4), robots)
     val pBc = planString(bcast)
     assert(!pBc.contains("ExistingRDD"),
       "broadcast dispatch unexpectedly took the RDD zip path:\n" + pBc)
+    releaseBc()
+    assertNoLeak("broadcast")
     segs.unpersist()
+  }
+
+  test("filterUnseen is the flag plan plus a filter: no left-semi join on " +
+      "the broadcast or the co-partitioned path") {
+    val all = spark.range(0, 2000)
+      .select(concat(lit("https://h"), (col("id") % 7).cast("string"),
+        lit(".example.com/a/"), col("id").cast("string")).as("url"),
+        col("id"))
+    val seen = all.filter(col("id") % 3 === 0).select("url")
+    val segs = graft.seen.UrlSeen.buildSegments(seen, "url", 4,
+      expectedItemsPerSegment = 1000L)
+    for (maxBytes <- Seq(graft.seen.UrlSeen.DefaultMaxBroadcastSegmentBytes, 0L)) {
+      val unseen = graft.seen.UrlSeen.filterUnseen(all, segs, seen, "url", 4,
+        maxBroadcastBytes = maxBytes)
+      unseen.collect() // the executed (final adaptive) plan
+      val p = planString(unseen)
+      assert(p.contains("LeftAnti"), s"no confirm anti-join at $maxBytes:\n" + p)
+      assert(!p.contains("LeftSemi"),
+        s"the confirmed-seen branch survived at $maxBytes:\n" + p)
+    }
   }
 
   test("mojibake repair and fallback chain are shuffle-free single scans") {

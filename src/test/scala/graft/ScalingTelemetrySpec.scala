@@ -301,6 +301,10 @@ class ScalingTelemetrySpec extends AnyFunSuite {
         trees(2).get("samples").get(0).get("steal_frac").asDouble() === 0.0003)
       assert(trees(3).get("ann_recall_at_10").asDouble() === 0.938)
       assert(trees(4).get("value").asDouble() === 1.25)
+      // a child's per-run line comes back through the parent's reader
+      val runs = Bench.parseRuns(
+        ScalingBench.runLine(4, 2, 60.02, Some(0.0003), None), 4, 1)
+      assert(runs === Seq(Bench.ArmSample(4, 1, 2, Some(60.02), Some(0.0003), None)))
     } finally java.util.Locale.setDefault(prev)
   }
 }

@@ -255,12 +255,12 @@ class StreamingFrontierSpec extends SparkTestBase {
     // --- batch ground truth: two chained CrawlTick.runTick ticks ---
     val emptySeen = Seq.empty[String].toDF("canonical_url")
     val t0 = pipeline.CrawlTick.runTick(spark, ticks(0).toDF(), sources,
-      emptySeen, robots, pages)
+      graft.seen.SeenProbe.Exact(emptySeen), robots, pages)
     val emit0 = t0.emitted.select("canonical_url", "host", "source",
       "source_idx", "item_idx", "fetch_epoch").collect().toSeq
     val seen0 = emit0.map(_.getString(0)).toDF("canonical_url")
     val t1 = pipeline.CrawlTick.runTick(spark, ticks(1).toDF(), sources,
-      seen0, robots, pages)
+      graft.seen.SeenProbe.Exact(seen0), robots, pages)
     val emit1 = t1.emitted.select("canonical_url", "host", "source",
       "source_idx", "item_idx", "fetch_epoch").collect().toSeq
     t0.cleanup(); t1.cleanup()
@@ -472,12 +472,12 @@ class StreamingFrontierSpec extends SparkTestBase {
     // --- batch ground truth: two chained CrawlTick.runTick ticks ---
     val emptySeen = Seq.empty[String].toDF("canonical_url")
     val t0 = pipeline.CrawlTick.runTick(spark, ticks(0).toDF(), sources,
-      emptySeen, robots, pages)
+      graft.seen.SeenProbe.Exact(emptySeen), robots, pages)
     val emit0 = t0.emitted.select("canonical_url", "host", "source",
       "source_idx", "item_idx", "fetch_epoch").collect().toSeq
     val seen0 = emit0.map(_.getString(0)).toDF("canonical_url")
     val t1 = pipeline.CrawlTick.runTick(spark, ticks(1).toDF(), sources,
-      seen0, robots, pages)
+      graft.seen.SeenProbe.Exact(seen0), robots, pages)
     val emit1 = t1.emitted.select("canonical_url", "host", "source",
       "source_idx", "item_idx", "fetch_epoch").collect().toSeq
     t0.cleanup(); t1.cleanup()

@@ -77,13 +77,18 @@ class UrlSeenSpec extends SparkTestBase {
     val seen = spark.range(0, 5000)
       .select(concat(lit("https://h"), (col("id") % 13).cast("string"),
         lit(".example.com/a/"), col("id").cast("string")).as("url"))
-    def collectSegs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bloom"))
-        .sortBy(_._1)
-    val fast = collectSegs(UrlSeen.buildSegments(seen, "url", 4, 2000, 1e-4))
-    val agg = collectSegs(UrlSeen.buildSegmentsAgg(seen, "url", 4, 2000, 1e-4))
-    assert(fast.map(_._1).toSeq === agg.map(_._1).toSeq)
-    fast.zip(agg).foreach { case ((s, a), (_, b)) =>
+    val fast = UrlSeen.buildSegments(seen, "url", 4, 2000, 1e-4).collect()
+      .map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bloom")).sortBy(_._1)
+    // the same hashes folded into one filter per segment on the driver
+    val byDriver = seen.select(xxhash64(col("url"))).as[Long].collect()
+      .groupBy(h => UrlSeen.segmentOf(h, 4).toLong).toSeq.sortBy(_._1)
+      .map { case (seg, hs) =>
+        val bf = BloomFilter.create(2000, 1e-4)
+        hs.foreach(bf.put)
+        seg -> bf.serialize()
+      }
+    assert(fast.map(_._1).toSeq === byDriver.map(_._1))
+    fast.zip(byDriver).foreach { case ((s, a), (_, b)) =>
       assert(java.util.Arrays.equals(a, b), s"segment $s bytes differ")
     }
   }
@@ -99,17 +104,14 @@ class UrlSeenSpec extends SparkTestBase {
     val segments = UrlSeen.buildSegments(seen, "url", nSeg,
       expectedItemsPerSegment = 2000, fpp = 1e-4)
     val expected = UrlSeen.filterUnseenExact(candidates, seen, "url")
-      .select("id").as[Long].collect().sorted
+      .select("id").as[Long].collect().sorted.toSeq
     // force the co-partitioned dispatch via a zero broadcast budget
-    val viaDispatch = UrlSeen.filterUnseen(candidates, segments, seen, "url",
-        nSeg, maxBroadcastBytes = 0L)
-      .select("id").as[Long].collect().sorted
-    assert(viaDispatch.toSeq === expected.toSeq)
-    // direct call, schema preserved
-    val direct = UrlSeen.filterUnseenCopartitioned(
-      candidates, segments, seen, "url", nSeg)
-    assert(direct.columns.toSeq === Seq("url", "id"))
-    assert(direct.select("id").as[Long].collect().sorted.toSeq === expected.toSeq)
+    val copart = UrlSeen.filterUnseen(candidates, segments, seen, "url",
+      nSeg, maxBroadcastBytes = 0L)
+    assert(copart.columns.toSeq === Seq("url", "id"), "schema not preserved")
+    assert(copart.select("id").as[Long].collect().sorted.toSeq === expected)
+    val bcast = UrlSeen.filterUnseen(candidates, segments, seen, "url", nSeg)
+    assert(bcast.select("id").as[Long].collect().sorted.toSeq === expected)
   }
 
   test("co-partitioned probe with empty + missing segments stays exact") {
@@ -121,8 +123,8 @@ class UrlSeenSpec extends SparkTestBase {
       .select(concat(lit("https://s.com/"), col("id").cast("string")).as("url"),
         col("id"))
     val segments = UrlSeen.buildSegments(seen, "url", 16, 100, 1e-4)
-    val got = UrlSeen.filterUnseenCopartitioned(
-      candidates, segments, seen, "url", 16)
+    val got = UrlSeen.filterUnseen(candidates, segments, seen, "url", 16,
+      maxBroadcastBytes = 0L)
     assert(got.count() === 3960)
   }
 
@@ -135,33 +137,39 @@ class UrlSeenSpec extends SparkTestBase {
           .otherwise(concat(lit("https://h"), (col("id") % 11).cast("string"),
             lit(".example.com/a/"), col("id").cast("string"))).as("url"),
         col("id"))
-    val seen = all.filter(col("id") % 3 === 0 && col("url").isNotNull)
+    // each seen url once, then twice (a seen table built from a raw crawl
+    // log may repeat a url): no variant may repeat or drop a candidate row
+    val seen1 = all.filter(col("id") % 3 === 0 && col("url").isNotNull)
       .select("url")
-    val segments = UrlSeen.buildSegments(seen, "url", 4, 1000, 1e-4)
-      .persist()
-    def table(probe: graft.seen.SeenProbe): Map[Long, Boolean] =
-      UrlSeen.flagSeen(all, probe, "url", "seen_flag")
-        .select("id", "seen_flag").collect()
-        .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    val exact = table(graft.seen.SeenProbe.Exact(seen))
-    val bloomBc = table(graft.seen.SeenProbe.BloomConfirm(segments, seen, 4))
-    val bloomCo = table(graft.seen.SeenProbe.BloomConfirm(segments, seen, 4,
-      maxBroadcastBytes = 0L))
-    val cuckooSegs = UrlSeen.buildCuckooSegments(seen, "url", 4, 1000)
-      .persist()
-    val cuckooBc = table(graft.seen.SeenProbe.CuckooConfirm(cuckooSegs, seen, 4))
-    val cuckooCo = table(graft.seen.SeenProbe.CuckooConfirm(cuckooSegs, seen, 4,
-      maxBroadcastBytes = 0L))
-    segments.unpersist()
-    cuckooSegs.unpersist()
-    assert(exact.size === 2000, "Exact variant dropped rows")
-    assert(bloomBc === exact, "broadcast Bloom probe truth table diverges")
-    assert(bloomCo === exact, "co-partitioned Bloom probe truth table diverges")
-    assert(cuckooBc === exact, "broadcast cuckoo probe truth table diverges")
-    assert(cuckooCo === exact, "co-partitioned cuckoo probe truth table diverges")
-    // NULL urls present, kept, and flagged unseen on the reference variant
-    val nullIds = (0L until 2000L by 100L).toSet
-    assert(nullIds.forall(id => exact(id) == false))
+    val expected = (0L until 2000L)
+      .map(id => id -> (id % 3 == 0 && id % 100 != 0)).toMap
+    for ((seen, copies) <- Seq(seen1 -> 1, seen1.union(seen1) -> 2)) {
+      val segments = UrlSeen.buildSegments(seen, "url", 4, 1000, 1e-4)
+        .persist()
+      val cuckooSegs = UrlSeen.buildCuckooSegments(seen, "url", 4, 1000)
+        .persist()
+      val variants = Seq(
+        "exact" -> graft.seen.SeenProbe.Exact(seen),
+        "broadcast Bloom" -> graft.seen.SeenProbe.BloomConfirm(segments, seen, 4),
+        "co-partitioned Bloom" -> graft.seen.SeenProbe.BloomConfirm(segments,
+          seen, 4, maxBroadcastBytes = 0L),
+        "broadcast cuckoo" ->
+          graft.seen.SeenProbe.CuckooConfirm(cuckooSegs, seen, 4),
+        "co-partitioned cuckoo" -> graft.seen.SeenProbe.CuckooConfirm(
+          cuckooSegs, seen, 4, maxBroadcastBytes = 0L))
+      for ((name, probe) <- variants) {
+        val rows = UrlSeen.flagSeen(all, probe, "url", "seen_flag")
+          .select("id", "seen_flag").collect()
+          .map(r => r.getLong(0) -> r.getBoolean(1))
+        assert(rows.length === 2000,
+          s"$name probe, seen x$copies: ${rows.length} rows, not 2000")
+        // NULL urls present, kept, and flagged unseen on every variant
+        assert(rows.toMap === expected,
+          s"$name probe, seen x$copies: truth table diverges")
+      }
+      segments.unpersist()
+      cuckooSegs.unpersist()
+    }
   }
 
   test("cuckoo filter: membership, serialized-probe equality, FPP bound, " +
@@ -230,7 +238,8 @@ class UrlSeenSpec extends SparkTestBase {
     val retractedHashes = retract
       .select(org.apache.spark.sql.functions.xxhash64(col("url")))
       .collect().map(_.getLong(0))
-    assert(retractedHashes.forall(h => !UrlSeen.probeCuckooSegments(segArr, h)),
+    assert(retractedHashes.forall(h =>
+        !UrlSeen.probeSegments(segArr, h, cuckoo = true)),
       "prefilter still fires for a retracted url")
     Seq(seen0, segs0, seen1, segs1).foreach(_.unpersist())
   }
