@@ -56,8 +56,12 @@ import graft.politeness.Scheduler
   * dependency entirely; no iteration, no collect.
   *
   * == Scale notes (100 TB / 10^10-frontier design point) ==
-  *  - windows partition by (source, canonical) and (source) — source
-  *    cardinality is the fan-out unit; the heavy per-host politeness window
+  *  - one exchange by source serves every per-source window ((source,
+  *    canonical) occurrence rank, source stop index, source save cap): the
+  *    fetch join broadcasts pages, which keeps that partitioning; source
+  *    cardinality is the fan-out unit. The cross-source rank is the one
+  *    exchange by canonical URL, and its output is the one frame the tick
+  *    caches (see [[TickResult]]); the heavy per-host politeness window
   *    uses the salted two-stage rank (Scheduler.saltedHostRank) so one
   *    mega-host never lands in one task;
   *  - the snapshot-seen probe is UrlSeen.flagSeenManaged's one plan, a
@@ -90,6 +94,11 @@ object CrawlTick {
     *                  co-partitioned probe + exact confirm). All variants
     *                  produce the identical truth table.
     * @param robots    (host, path_prefix, allow, crawl_delay_ms) (tiny → broadcast)
+    *
+    * The probed rows are hash-partitioned by source once; the occurrence
+    * rank's (source, canonical) window and the stop index's source window
+    * both run on that one exchange, and so does [[runTick]]'s save-cap
+    * window downstream of its broadcast fetch join.
     */
   def selectManaged(listings: DataFrame, sources: DataFrame,
       probe: graft.seen.SeenProbe, robots: DataFrame)
@@ -114,8 +123,11 @@ object CrawlTick {
 
     val eligible = col("ok_title") && col("allowed")
 
-    // occurrence rank among ELIGIBLE rows of (source, canonical): gate (d)
+    // occurrence rank among ELIGIBLE rows of (source, canonical): gate (d).
+    // One exchange by source serves both per-source windows (this one and
+    // stop_idx): hash partitioning on source clusters every finer key
     val flagged = probed
+      .repartition(col("source"))
       .withColumn("occ_rank",
         when(eligible, row_number().over(
           Window.partitionBy(col("source"), col("canonical_url"),
@@ -147,17 +159,18 @@ object CrawlTick {
   }
 
   /** One tick's outputs plus an explicit cache-release hook. The tick
-    * caches its two multiply-consumed intermediates (the flagged listing
-    * rows and the deduped fetch rows) through [[graft.plans.Pinned]], at one
-    * partition per core: a cached plan's final stage is never coalesced by
-    * AQE, so a plain `.cache()` would keep all `spark.sql.shuffle.partitions`
-    * (200 in production) and run that many near-empty tasks in every stage
-    * that fills or reads it. A long-running driver looping ticks MUST call
-    * `cleanup()` after materializing (committing) the outputs, or cached
-    * blocks accumulate across ticks (ADVICE r1). The outputs stay usable
-    * after `cleanup()`: they recompute from lineage, so a single-shot
-    * caller whose caches die with the session may take `emitted`/`stats`
-    * alone.
+    * caches one multiply-consumed intermediate, the tick frame (every
+    * considered listing row after the fetch join and the cross-source rank;
+    * `emitted`, `stats` and `errors` all read it), through
+    * [[graft.plans.Pinned]], at one partition per core: a cached plan's
+    * final stage is never coalesced by AQE, so a plain `.cache()` would
+    * keep all `spark.sql.shuffle.partitions` (200 in production) and run
+    * that many near-empty tasks in every stage that fills or reads it. A
+    * long-running driver looping ticks MUST call `cleanup()` after
+    * materializing (committing) the outputs, or cached blocks accumulate
+    * across ticks (ADVICE r1). The outputs stay usable after `cleanup()`:
+    * they recompute from lineage, so a single-shot caller whose caches die
+    * with the session may take `emitted`/`stats` alone.
     *
     * `errors` CAPTURES the failed rows, not just their count (r2 gap #5 —
     * the reference keeps the tracebacks, main.py:342-347): one row per
@@ -179,14 +192,21 @@ object CrawlTick {
       salted: Boolean = false): TickResult = {
 
     val (sel, probeCleanup) = selectManaged(listings, sources, probe, robots)
-    val (flagged, flaggedRelease) = Pinned(sel)
 
-    // fetch join: pages carries only narrow columns (no bytes) — see scale
-    // notes; gate (f): status ≠ 200 or no page row fails the fetch
-    val fetched = flagged.filter(col("selected"))
-      .join(pages.select(col("canonical_url"), col("image_id"),
-        col("caption"), col("status")), Seq("canonical_url"), "left")
-      .withColumn("fetch_ok", coalesce(col("status") === 200, lit(false)))
+    // fetch join over every listing row, matching selected rows only, so
+    // the rows keep selectManaged's source partitioning through a
+    // broadcast pages join and the save-cap window below adds no exchange.
+    // pages carries only narrow columns (no bytes) — see scale notes. A
+    // pages side too big to broadcast shuffles every listing row here, not
+    // only the selected ones. Gate (f): status ≠ 200 or no page row fails
+    // the fetch
+    val fetched = sel
+      .join(pages.select(col("canonical_url").as("__page_url"),
+          col("image_id"), col("caption"), col("status")),
+        col("canonical_url") === col("__page_url") && col("selected"), "left")
+      .drop("__page_url")
+      .withColumn("fetch_ok",
+        col("selected") && coalesce(col("status") === 200, lit(false)))
 
     // gate (g): save_cap over fetch-ok rows, per source, in list order
     val capped = fetched
@@ -196,15 +216,16 @@ object CrawlTick {
             .orderBy(col("item_idx")))))
       .withColumn("emit", col("fetch_ok") && col("save_rank") <= col("save_cap"))
 
-    // cross-source first-wins (defined semantics #2)
-    val (deduped, dedupedRelease) = Pinned(capped
+    // cross-source first-wins (defined semantics #2); the result — one row
+    // per considered listing row — is the tick frame every output reads
+    val (tickRows, tickRowsRelease) = Pinned(capped
       .withColumn("xsrc_rank",
         when(col("emit"), row_number().over(
           Window.partitionBy(col("canonical_url"), col("emit"))
             .orderBy(col("source_idx"), col("item_idx")))))
       .withColumn("final_emit", col("emit") && col("xsrc_rank") === 1))
 
-    val emitted0 = deduped.filter(col("final_emit"))
+    val emitted0 = tickRows.filter(col("final_emit"))
       .withColumn("effective_delay_ms",
         greatest(col("crawl_delay_ms"), col("robots_delay_ms")))
       .withColumn("emit_idx",
@@ -234,31 +255,30 @@ object CrawlTick {
 
     // per-source stats (A1): new/skipped/errors — one aggregation over a
     // union of narrow counter rows: a zero row per source (every source
-    // reports, even one with no listing), one per flagged listing row and
-    // one per deduped fetch row (a cross-source loss counts skipped)
-    def counters(df: DataFrame, newArticles: Column, skipped: Column,
-        errors: Column): DataFrame =
-      df.select(col("source"), newArticles.as("new_articles"),
-        skipped.as("skipped"), errors.as("errors"))
+    // reports, even one with no listing) and one per tick-frame row (a
+    // cross-source loss counts skipped)
+    val claimedFailed = col("selected") && !col("fetch_ok")
     def one(c: Column): Column = when(c, 1L).otherwise(0L)
-    val stats = counters(sources, lit(0L), lit(0L), lit(0L))
-      .unionByName(counters(flagged, lit(0L),
-        one(col("skip_reason").isNotNull), lit(0L)))
-      .unionByName(counters(deduped, one(col("final_emit")),
-        one(col("emit") && col("xsrc_rank") =!= 1), one(!col("fetch_ok"))))
+    val stats = sources.select(col("source"), lit(0L).as("new_articles"),
+        lit(0L).as("skipped"), lit(0L).as("errors"))
+      .unionByName(tickRows.select(col("source"),
+        one(col("final_emit")).as("new_articles"),
+        (one(col("skip_reason").isNotNull) +
+          one(col("emit") && col("xsrc_rank") =!= 1)).as("skipped"),
+        one(claimedFailed).as("errors")))
       .groupBy("source")
       .agg(sum("new_articles").as("new_articles"), sum("skipped").as("skipped"),
         sum("errors").as("errors"))
 
     // C5: error rows captured, not just counted — every claimed candidate
     // whose fetch failed (status ≠ 200 or no page row), with the reason
-    val errorRows = deduped.filter(!col("fetch_ok"))
+    val errorRows = tickRows.filter(claimedFailed)
       .select(
         col("canonical_url"), col("source"), col("item_idx"),
         when(col("status").isNull, lit("missing_page"))
           .otherwise(concat(lit("http_"), col("status"))).as("reason"))
 
     TickResult(emitted, stats, errorRows,
-      () => { flaggedRelease(); dedupedRelease(); probeCleanup() })
+      () => { tickRowsRelease(); probeCleanup() })
   }
 }

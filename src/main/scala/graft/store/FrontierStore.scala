@@ -311,17 +311,17 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
       else { deleteTree(root.resolve(rel)); None }
     }
 
-    // the emitted rows feed two writes (articles, then the seen delta):
-    // cached once, at one partition per core (graft.plans.Pinned); the
-    // row-count gate is the article write's own count
-    val (pinned, release) = graft.plans.Pinned(emitted)
+    // the emitted rows are evaluated once, by the article write; the seen
+    // delta reads their canonical URLs back from the files just written
+    // (schema given, so no inference job), and the row-count gate is the
+    // article write's own count
     val aRel = s"data/articles/snap-$id"
     // article data: partitioned by dt (epoch-derived), clustered within
     // partitions by (source, language) for min/max row-group skipping (O2)
     val dt = date_format(
       to_utc_timestamp(timestamp_seconds(lit(1735689600L) + lit(fetchEpoch) * 300),
         "UTC"), "yyyy-MM-dd")
-    val nRows = writeCounted(pinned)(_
+    val nRows = writeCounted(emitted)(_
       .withColumn("dt", dt)
       .repartition(col("dt"))
       .sortWithinPartitions("source", "language")
@@ -338,10 +338,11 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
         deleteTree(root.resolve(aRel))
         (None, None, None, Map.empty[Int, Long])
       } else {
-        val (sRel, bRel, counts) = writeSeenDelta(spark, pinned, id, dial)
+        val written = spark.read.schema("canonical_url string")
+          .parquet(root.resolve(aRel).toString)
+        val (sRel, bRel, counts) = writeSeenDelta(spark, written, id, dial)
         (Some(aRel), Some(sRel), Some(bRel), counts)
       }
-    release()
 
     val totals = stats.agg(
       sum("new_articles"), sum("skipped"), sum("errors")).collect()(0)

@@ -121,6 +121,36 @@ class FrontierStoreSpec extends SparkTestBase {
     assert(new FrontierStore(dir).errors(spark).count() === m.errors)
   }
 
+  test("commit evaluates the emitted rows once, and the seen delta is " +
+      "exactly the committed article URLs") {
+    import spark.implicits._
+    val dir = "target/test-store-emit-once"
+    new FrontierStore(dir).delete()
+    val store = new FrontierStore(dir).init()
+    store.initSeen(spark,
+      Fixtures.urlSeenSeed(spark, nSources, Fixtures.DefaultPreSeen)
+        .toDF().select("canonical_url"))
+    val (l0, sources, robots, pages) = fixtures(0)
+    val t = CrawlTick.runTick(spark, l0.toDF(), sources.toDF(),
+      SeenProbe.Exact(store.seen(spark)), robots.toDF(), pages.toDF())
+    // every evaluation of an emitted row bumps the accumulator once
+    val evaluated = spark.sparkContext.longAccumulator("emitted rows evaluated")
+    val counted = udf { (url: String) => evaluated.add(1L); url }
+      .asNondeterministic()
+    val m = store.commit(spark,
+      t.emitted.withColumn("canonical_url", counted(col("canonical_url"))),
+      t.stats, fetchEpoch = 0L)
+    t.cleanup()
+
+    assert(m.newArticles > 0, "the fixture tick must commit articles")
+    assert(evaluated.value === m.newArticles)
+    def urls(rel: Option[String]) = spark.read.parquet(s"$dir/${rel.get}")
+      .select("canonical_url").as[String].collect().sorted.toSeq
+    val articleUrls = urls(m.articlesPath)
+    assert(articleUrls.size.toLong === m.newArticles)
+    assert(urls(m.seenDeltaPath) === articleUrls)
+  }
+
   test("per-delta blooms OR-merge bitwise-equal to a full-seen rebuild") {
     val store = new FrontierStore(storeDir)
     val merged = store.segments(spark)

@@ -3,9 +3,11 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageSubmitted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated,
+  SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.RDDBlockId
 
 import graft.model.Fixtures
 import graft.pipeline.CrawlTick
@@ -18,26 +20,28 @@ import graft.store.FrontierStore
   * partitions, where a cached frame's 200-partition trap cannot show;
   * this spec runs one production-shaped tick (store-fed Bloom probe,
   * salted politeness, commit with error rows) at the production default
-  * of 200, and counts the Spark jobs of each phase of such a tick.
+  * of 200, counts the Spark jobs of each phase of such a tick, and counts
+  * the frames it caches.
   */
 class TickPartitionsSpec extends SparkTestBase {
 
   private val nSources = 12
 
-  test("at 200 shuffle partitions a tick + commit runs no 200-task stage, " +
-      "its outputs still collect after cleanup, and it leaves no cached RDD") {
+  /** One store-fed tick's inputs, over a fresh store at `dir` seeded like
+    * FrontierMain's first tick.
+    */
+  private final case class TickInputs(store: FrontierStore,
+      listings: DataFrame, sources: DataFrame, robots: DataFrame,
+      pages: DataFrame)
+
+  /** Runs `body` over fresh [[TickInputs]] at 200 shuffle partitions, with
+    * `listener` removed and the partition setting restored afterwards.
+    */
+  private def atProductionPartitions(dir: String, listener: SparkListener)(
+      body: TickInputs => Unit): Unit = {
     import spark.implicits._
-    val sc = spark.sparkContext
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    val stageTasks = mutable.ArrayBuffer.empty[Int]
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        stageTasks.synchronized { stageTasks += e.stageInfo.numTasks }
-    }
-    val dir = "target/test-store-tick-partitions"
     new FrontierStore(dir).delete()
     spark.conf.set(key, "200")
     try {
@@ -45,10 +49,29 @@ class TickPartitionsSpec extends SparkTestBase {
       store.initSeen(spark,
         Fixtures.urlSeenSeed(spark, nSources, Fixtures.DefaultPreSeen)
           .toDF().select("canonical_url"))
-      val listings = Fixtures.listItemsAt(spark, nSources, 24, tick = 0).toDF()
-      val sources = Fixtures.sourceSpecs(nSources).toDF()
-      val robots = Fixtures.robots(nSources).toDF()
-      val pages = Fixtures.pageStore(spark, nSources, maxTick = 0).toDF()
+      body(TickInputs(store,
+        Fixtures.listItemsAt(spark, nSources, 24, tick = 0).toDF(),
+        Fixtures.sourceSpecs(nSources).toDF(),
+        Fixtures.robots(nSources).toDF(),
+        Fixtures.pageStore(spark, nSources, maxTick = 0).toDF()))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.set(key, prev)
+    }
+  }
+
+  test("at 200 shuffle partitions a tick + commit runs no 200-task stage, " +
+      "its outputs still collect after cleanup, and it leaves no cached RDD") {
+    val sc = spark.sparkContext
+    val stageTasks = mutable.ArrayBuffer.empty[Int]
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stageTasks.synchronized { stageTasks += e.stageInfo.numTasks }
+    }
+    atProductionPartitions("target/test-store-tick-partitions", listener) { in =>
+      import in._
       val cachedBefore = sc.getPersistentRDDs.keySet
 
       ListenerBusAccess.drain(sc)
@@ -83,19 +106,46 @@ class TickPartitionsSpec extends SparkTestBase {
       assert(statTotals.getLong(1) === m.errors)
       assert(store.errors(spark).count() === m.errors)
       assert(store.articles(spark).count() === m.newArticles)
-    } finally {
+    }
+  }
+
+  test("a tick caches two frames (the probe's flagged rows and the tick " +
+      "frame) and its commit caches none") {
+    val sc = spark.sparkContext
+    val cachedRdds = mutable.Set.empty[Int]
+    val listener = new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        e.blockUpdatedInfo.blockId match {
+          case RDDBlockId(rddId, _) => cachedRdds.synchronized { cachedRdds += rddId }
+          case _ =>
+        }
+    }
+    atProductionPartitions("target/test-store-tick-pins", listener) { in =>
+      import in._
+      val segs = store.segments(spark)
+      val seen = store.seen(spark)
+      ListenerBusAccess.drain(sc)
+      sc.addSparkListener(listener)
+      val t = CrawlTick.runTick(spark, listings, sources,
+        SeenProbe.BloomConfirm(segs, seen, store.nSegments), robots, pages,
+        salted = true)
+      val m = store.commit(spark, t.emitted, t.stats, fetchEpoch = 0L,
+        errors = Some(t.errors))
+      ListenerBusAccess.drain(sc)
       sc.removeSparkListener(listener)
-      spark.conf.set(key, prev)
+      t.cleanup()
+
+      val pinned = cachedRdds.synchronized(cachedRdds.toSet)
+      info(s"cached RDDs from runTick through commit: ${pinned.toSeq.sorted}")
+      assert(m.newArticles > 0, "the fixture tick must commit articles")
+      assert(pinned.size <= 2, s"cached RDDs: ${pinned.toSeq.sorted}")
     }
   }
 
   test("at 200 shuffle partitions a store-fed tick reads the store's " +
       "metadata and dispatches its probe with no Spark job, and tick + " +
-      "commit launch at most 32 jobs") {
-    import spark.implicits._
+      "commit launch at most 28 jobs") {
     val sc = spark.sparkContext
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
     val phaseKey = "graft.spec.phase"
     val jobsByPhase = mutable.Map.empty[String, Int].withDefaultValue(0)
     val listener = new SparkListener {
@@ -109,19 +159,8 @@ class TickPartitionsSpec extends SparkTestBase {
       sc.setLocalProperty(phaseKey, name)
       try body finally sc.setLocalProperty(phaseKey, null)
     }
-    val dir = "target/test-store-tick-jobs"
-    new FrontierStore(dir).delete()
-    spark.conf.set(key, "200")
-    try {
-      val store = new FrontierStore(dir).init()
-      store.initSeen(spark,
-        Fixtures.urlSeenSeed(spark, nSources, Fixtures.DefaultPreSeen)
-          .toDF().select("canonical_url"))
-      val listings = Fixtures.listItemsAt(spark, nSources, 24, tick = 0).toDF()
-      val sources = Fixtures.sourceSpecs(nSources).toDF()
-      val robots = Fixtures.robots(nSources).toDF()
-      val pages = Fixtures.pageStore(spark, nSources, maxTick = 0).toDF()
-
+    atProductionPartitions("target/test-store-tick-jobs", listener) { in =>
+      import in._
       ListenerBusAccess.drain(sc)
       sc.addSparkListener(listener)
       val segs = phase("store.segments")(store.segments(spark))
@@ -141,10 +180,7 @@ class TickPartitionsSpec extends SparkTestBase {
       assert(m.newArticles > 0, "the fixture tick must commit articles")
       for (p <- Seq("store.segments", "store.seen", "probe.dispatch"))
         assert(jobs.getOrElse(p, 0) === 0, s"$p launched Spark jobs: $jobs")
-      assert(jobs.values.sum <= 32, s"tick + commit jobs: $jobs")
-    } finally {
-      sc.removeSparkListener(listener)
-      spark.conf.set(key, prev)
+      assert(jobs.values.sum <= 28, s"tick + commit jobs: $jobs")
     }
   }
 }
