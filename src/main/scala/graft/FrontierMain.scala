@@ -1,7 +1,9 @@
 package graft
 
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.model.Fixtures
 import graft.pipeline.CrawlTick
@@ -42,6 +44,10 @@ import graft.store.FrontierStore
   * schemas — the lifecycle demo runs over user data, not only fixtures.
   * External listings are read per tick with a `tick` partition-pruning
   * filter when a `tick` column exists.
+  *
+  * Each tick is one call of [[tick]]; [[streamTicks]] runs the same call
+  * on each micro-batch of a streaming listing source, so a stream is a
+  * trigger of the one tick over the one seen set, not a second crawler.
   *
   * One JSON metrics line per tick on stdout (snapshot id, rows, dedup
   * counters, wall seconds) — the structured-metrics contract.
@@ -123,6 +129,68 @@ object FrontierMain {
     .put("files_deleted", o.filesDeleted).put("bytes_freed", o.bytesFreed)
     .put("skipped_recent", o.skippedRecent))
 
+  /** The next tick's fetch epoch: one past the latest snapshot's. */
+  private def nextEpoch(store: FrontierStore): Long =
+    store.latest().fold(0L)(m => (m.fetchEpoch + 1).max(0L))
+
+  /** One tick: the seen probe over the store's blooms → `runTick` → with
+    * `images`, the caption-invariant gate → `commit` → release. Returns
+    * the manifest and, with `images`, the count of rows the gate dropped.
+    */
+  def tick(spark: SparkSession, store: FrontierStore, listings: DataFrame,
+      sources: DataFrame, robots: DataFrame, pages: DataFrame,
+      fetchEpoch: Long, salted: Boolean, images: Option[DataFrame],
+      stream: Option[(String, Long)] = None)
+      : (FrontierStore.Manifest, Option[Long]) = {
+    val probe = SeenProbe.BloomConfirm(
+      store.segments(spark), store.seen(spark), store.nSegments)
+    val t = CrawlTick.runTick(spark, listings, sources, probe,
+      robots, pages, salted)
+    // per-row invariant enforcement AT the sink (north rule: pairs are
+    // written WITH the invariant): caption equality vs the image table;
+    // violating rows are excluded from the commit and counted. The PSNR
+    // leg needs reference bytes, which exist only where a reference
+    // render does (ImageInvariantsSpec) — the caption gate is the
+    // store-path contract.
+    val (emitRows, nViolations, invRelease) = images match {
+      case None => (t.emitted, None, () => ())
+      case Some(imgs) =>
+        val (checked, release) = graft.plans.Pinned(
+          graft.functions.ImageOps.withInvariants(t.emitted, imgs))
+        val bad = checked.filter(!col("caption_ok")).count()
+        (checked.filter(col("caption_ok"))
+            .select(t.emitted.columns.map(col): _*), Some(bad), release)
+    }
+    val m = store.commit(spark, emitRows, t.stats, fetchEpoch,
+      errors = Some(t.errors), stream = stream)
+    invRelease()
+    t.cleanup() // release the tick's cached intermediates (ADVICE r1)
+    (m, nViolations)
+  }
+
+  /** Runs `tick` on each micro-batch of the streaming `listings`, at the
+    * store's next fetch epoch: streamed and batch ticks share one epoch
+    * sequence and one seen set. Each snapshot records the query id and
+    * batch id, and a batch the store already holds for this query (a
+    * replay after a restart) is skipped. The store must hold its seen
+    * seed (`initSeen`) first.
+    */
+  def streamTicks(listings: DataFrame, store: FrontierStore,
+      sources: DataFrame, robots: DataFrame, pages: DataFrame,
+      checkpointDir: String, salted: Boolean = false): StreamingQuery =
+    listings.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val spark = batch.sparkSession
+        // the query's id, kept in the checkpoint across restarts
+        val queryId = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+        if (!store.lastStreamBatch(queryId).exists(_ >= batchId))
+          tick(spark, store, batch, sources, robots, pages, nextEpoch(store),
+            salted, None, Some(queryId -> batchId))
+        ()
+      }
+      .start()
+
   def main(args: Array[String]): Unit = {
     val pos = args.filterNot(_.startsWith("--"))
     val storeDir = pos.headOption.getOrElse("target/frontier-store")
@@ -159,19 +227,18 @@ object FrontierMain {
     import spark.implicits._
 
     val store = new FrontierStore(storeDir).init()
-    val startTick: Int = store.latest() match {
-      case None =>
-        store.initSeen(spark,
-          Fixtures.urlSeenSeed(spark, nSources, Fixtures.DefaultPreSeen)
-            .toDF().select("canonical_url"))
-        0
-      case Some(m) => (m.fetchEpoch + 1).toInt.max(0)
-    }
+    if (store.latest().isEmpty)
+      store.initSeen(spark,
+        Fixtures.urlSeenSeed(spark, nSources, Fixtures.DefaultPreSeen)
+          .toDF().select("canonical_url"))
+    val startTick = nextEpoch(store).toInt
 
     val sources = sourcesPath.map(spark.read.parquet(_))
       .getOrElse(Fixtures.sourceSpecs(nSources).toDF())
     val robots = robotsPath.map(spark.read.parquet(_))
       .getOrElse(Fixtures.robots(nSources).toDF())
+    val images = Option.when(checkInvariants)(imagesPath.map(spark.read.parquet(_))
+      .getOrElse(Fixtures.images(spark, 2000L).toDF()))
 
     (startTick until startTick + nTicks).foreach { tick =>
       val t0 = System.nanoTime()
@@ -179,44 +246,17 @@ object FrontierMain {
         val df = spark.read.parquet(p)
         // external multi-tick listing dumps carry a `tick` column; prune it
         if (df.columns.contains("tick"))
-          df.filter(org.apache.spark.sql.functions.col("tick") === tick)
-            .drop("tick")
+          df.filter(col("tick") === tick).drop("tick")
         else df
       }.getOrElse(Fixtures.listItemsAt(spark, nSources, 30, tick).toDF())
       val pages = pagesPath.map(spark.read.parquet(_))
         .getOrElse(Fixtures.pageStore(spark, nSources, maxTick = tick).toDF())
-      val probe = SeenProbe.BloomConfirm(
-        store.segments(spark), store.seen(spark), store.nSegments)
-      val t = CrawlTick.runTick(spark, listings, sources, probe,
-        robots, pages, salted)
-      // per-row invariant enforcement AT the sink (north rule: pairs are
-      // written WITH the invariant): caption equality vs the image table;
-      // violating rows are excluded from the commit and counted. The PSNR
-      // leg needs reference bytes, which exist only where a reference
-      // render does (ImageInvariantsSpec) — the caption gate is the
-      // store-path contract.
-      import org.apache.spark.sql.functions.col
-      val (emitRows, nViolations, invRelease) =
-        if (!checkInvariants)
-          (t.emitted, 0L, () => ())
-        else {
-          val imgs = imagesPath.map(spark.read.parquet(_))
-            .getOrElse(Fixtures.images(spark, 2000L).toDF())
-          val (checked, release) = graft.plans.Pinned(
-            graft.functions.ImageOps.withInvariants(t.emitted, imgs))
-          val bad = checked.filter(!col("caption_ok")).count()
-          (checked.filter(col("caption_ok"))
-              .select(t.emitted.columns.map(col): _*), bad, release)
-        }
-      val m = store.commit(spark, emitRows, t.stats, fetchEpoch = tick.toLong,
-        errors = Some(t.errors))
-      invRelease()
-      t.cleanup() // release the tick's cached intermediates (ADVICE r1)
+      val (m, nViolations) = FrontierMain.tick(spark, store, listings,
+        sources, robots, pages, tick.toLong, salted, images)
       val sec = (System.nanoTime() - t0) / 1e9
-      println(tickLine(tick, m, Some(nViolations).filter(_ => checkInvariants),
-        sec))
+      println(tickLine(tick, m, nViolations, sec))
       if (recrawlEvery > 0 && (tick + 1) % recrawlEvery == 0) {
-        import org.apache.spark.sql.functions.{col, lit}
+        import org.apache.spark.sql.functions.lit
         // age basis = the committing TICK (crawl_tick), not the per-host
         // politeness slot the rows' own fetch_epoch column carries
         val arts = store.articlesWithTick(spark)

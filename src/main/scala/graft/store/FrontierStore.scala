@@ -108,7 +108,8 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
   /** The Jackson codec for one manifest: an `ObjectNode` written one
     * `"key": value` per line, and a tree read over the same keys. Keys
     * absent from older manifests default (`kind` → delta, the bloom dial
-    * and `files_*` → 0, `segment_counts` → empty, `file_stats` → Nil);
+    * and `files_*` → 0, `segment_counts` → empty, `file_stats` → Nil,
+    * `stream` → None);
     * the ids, the fetch epoch and the metrics counters are required.
     */
   private def render(m: Manifest): String = {
@@ -129,6 +130,8 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
       .put("rows", f.rows))
     o.putObject("metrics").put("new_articles", m.newArticles)
       .put("skipped", m.skipped).put("errors", m.errors)
+    m.stream.foreach { case (q, b) =>
+      o.putObject("stream").put("query_id", q).put("batch_id", b) }
     Pretty.writeValueAsString(o)
   }
 
@@ -158,7 +161,9 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
       filesAdded = t.path("files_added").asLong(0L),
       fileStats = t.path("file_stats").asScala.map(f => FrontierStore.FileStat(
         text(f, "path"), text(f, "min_source"), text(f, "max_source"),
-        num(f, "rows"))).toSeq)
+        num(f, "rows"))).toSeq,
+      stream = Option(t.get("stream")).filter(_.isObject)
+        .map(s => (text(s, "query_id"), num(s, "batch_id"))))
   }
 
   def snapshotIds(): Seq[Int] =
@@ -173,6 +178,13 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     parse(Files.readString(manifestPath(id)))
 
   def latest(): Option[Manifest] = snapshotIds().lastOption.map(manifest)
+
+  /** The batch id of the newest snapshot committed by streaming query
+    * `queryId`, scanning manifests newest-first; None if it committed none.
+    */
+  def lastStreamBatch(queryId: String): Option[Long] =
+    snapshotIds().reverseIterator.map(manifest).flatMap(_.stream)
+      .collectFirst { case (q, b) if q == queryId => b }
 
   /** The newest snapshot id; throws on a store with no snapshot. */
   private def latestId(): Int =
@@ -294,9 +306,12 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     *                 source, language; a `dt` partition column is derived
     *                 from fetchEpoch — deterministic, no wall clock)
     * @param stats    per-source (new_articles, skipped, errors)
+    * @param stream   (query id, batch id) of the streaming micro-batch this
+    *                 snapshot commits, recorded so a replay can skip it
     */
   def commit(spark: SparkSession, emitted: DataFrame, stats: DataFrame,
-      fetchEpoch: Long, errors: Option[DataFrame] = None): Manifest = {
+      fetchEpoch: Long, errors: Option[DataFrame] = None,
+      stream: Option[(String, Long)] = None): Manifest = {
     init()
     val id = snapshotIds().lastOption.map(_ + 1).getOrElse(0)
     val parent = id - 1
@@ -351,7 +366,8 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     writeManifest(Manifest(id, parent, KindDelta, fetchEpoch, dial,
       articlesRel, seenRel, bloomRel, errorsRel, segCounts,
       tl(0), tl(1), tl(2),
-      fileStats = articlesRel.map(collectFileStats).getOrElse(Nil)))
+      fileStats = articlesRel.map(collectFileStats).getOrElse(Nil),
+      stream = stream))
   }
 
   /** Runs `write` over `df` under an `Observation` and returns the rows it
@@ -1083,7 +1099,10 @@ object FrontierStore {
       // planning-time zone map [[FrontierStore.articlesForSource]] prunes
       // with — no footer is opened for a skipped file. Empty on pre-stats
       // manifests (no `file_stats` key) and non-article snapshots.
-      fileStats: Seq[FrontierStore.FileStat] = Nil)
+      fileStats: Seq[FrontierStore.FileStat] = Nil,
+      // (query id, batch id) of the streaming micro-batch a delta commits;
+      // None for batch ticks, other kinds, and when the key is absent
+      stream: Option[(String, Long)] = None)
 
   /** Column bounds of one article data file, harvested from its parquet
     * FOOTER statistics at commit time (the same min/max the row-group

@@ -10,13 +10,14 @@ import org.apache.spark.sql.streaming.OutputMode
 import graft.operators.{BandJoin, TrainingOps}
 
 /** Streaming corpus admission: the training-data counterpart of the
-  * streaming frontier — a stream of crawled documents is admitted against
-  * the PERSISTED near-dup index (the daily-increment operation of
-  * `TrainingOps.incrementalDedup`, run per micro-batch), and each batch's
-  * ADMITTED documents extend the index for every later batch. The index
-  * is never rebuilt and never self-joined: the only pair generation per
-  * batch is batch ⋈ index on (band, band_sig) plus the batch's own
-  * intra-batch pairs (bounded by the batch, not the corpus).
+  * streamed crawl tick (`FrontierMain.streamTicks`) — a stream of crawled
+  * documents is admitted against the PERSISTED near-dup index (the
+  * daily-increment operation of `TrainingOps.incrementalDedup`, run per
+  * micro-batch), and each batch's ADMITTED documents extend the index for
+  * every later batch. The index is never rebuilt and never self-joined:
+  * the only pair generation per batch is batch ⋈ index on (band, band_sig)
+  * plus the batch's own intra-batch pairs (bounded by the batch, not the
+  * corpus).
   *
   * Cross-batch exactly-once: Structured Streaming replays the last
   * un-checkpointed batch after a kill, so the sink is idempotent via a

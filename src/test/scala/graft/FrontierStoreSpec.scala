@@ -190,6 +190,29 @@ class FrontierStoreSpec extends SparkTestBase {
     assert(store.segments(spark).count() === 16)
   }
 
+  test("a manifest recording its stream batch reads back equal") {
+    import spark.implicits._
+    val dir = "target/test-store-stream-key"
+    val store = new FrontierStore(dir)
+    store.delete()
+    store.init().initSeen(spark, Seq("https://a.example/0").toDF("canonical_url"))
+    val emitted = Seq(("https://a.example/1", "src-000", "en"))
+      .toDF("canonical_url", "source", "language")
+    val stats = Seq(("src-000", 1L, 0L, 0L))
+      .toDF("source", "new_articles", "skipped", "errors")
+    val m = store.commit(spark, emitted, stats, fetchEpoch = 0L,
+      stream = Some("query-a" -> 7L))
+    assert(m.stream === Some("query-a" -> 7L))
+    assert(store.manifest(1) === m)
+    assert(java.nio.file.Files.readString(
+        java.nio.file.Paths.get(dir, "snapshots", "snap-00001.json"))
+      .replaceAll("\\s", "")
+      .contains("\"stream\":{\"query_id\":\"query-a\",\"batch_id\":7}"))
+    assert(store.manifest(0).stream === None)
+    assert(store.lastStreamBatch("query-a") === Some(7L))
+    assert(store.lastStreamBatch("query-b") === None)
+  }
+
   test("compact(): one-delta reads, content identical, blooms preserved") {
     val store = new FrontierStore(storeDir)
     val preSeen = store.seen(spark).collect().map(_.getString(0)).toSet
