@@ -9,7 +9,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.model.{DedupPolicy, Fixtures, ListItem, SourceSpec}
+import graft.functions.UrlCanonicalizer.canonicalize
+import graft.model.{DedupPolicy, Fixtures, ListItem, RobotsRule, SourceSpec}
+import graft.pipeline.CrawlTick
+import graft.seen.SeenProbe
 import graft.store.FrontierStore
 
 /** A stream is a trigger of the one tick: each micro-batch of
@@ -88,6 +91,71 @@ class StreamingFrontierSpec extends SparkTestBase {
     }
   }
 
+  /** Sources with no list or save cap and no stop policy. */
+  private def openSources(delayMs: Int): DataFrame =
+    (0 until nSources).map(i => SourceSpec(f"src-$i%03d", i,
+      DedupPolicy.SkipAndContinue, list_cap = 1000000, save_cap = 1000000,
+      crawl_delay_ms = delayMs, language = "en", kind = 1)).toDF()
+
+  private def noRobots: DataFrame = Seq.empty[RobotsRule].toDF()
+
+  /** A fetchable page for every URL the listings hold. */
+  private def okPages(ticks: Seq[Seq[ListItem]]): DataFrame =
+    ticks.flatten.map(li => canonicalize(li.url)).distinct
+      .map(c => (c, s"img-$c", s"cap-$c", 200))
+      .toDF("canonical_url", "image_id", "caption", "status")
+
+  private def titled(li: ListItem): ListItem =
+    if (li.title.isEmpty) li.copy(title = "t") else li
+
+  private def seedUrls: Set[String] =
+    Fixtures.urlSeenSeed(spark, nSources, Fixtures.DefaultPreSeen)
+      .map(_.canonical_url).collect().toSet
+
+  private val emitCols =
+    Seq("canonical_url", "host", "source", "emit_idx", "fetch_epoch")
+
+  /** Ground truth for a chain of streamed batches: `CrawlTick.runTick` per
+    * tick over an exact seen set (the seed plus every earlier tick's
+    * emits). Each tick's emitted rows and its per-source new articles.
+    */
+  private def runTickChain(ticks: Seq[Seq[ListItem]], srcs: DataFrame,
+      rbts: DataFrame, pgs: DataFrame): Seq[(Set[Row], Map[String, Long])] = {
+    var seen = seedUrls
+    ticks.map { l =>
+      val t = CrawlTick.runTick(spark, l.toDF(), srcs,
+        SeenProbe.Exact(seen.toSeq.toDF("canonical_url")), rbts, pgs)
+      val emitted = rows(t.emitted.select(emitCols.map(col): _*))
+      val stats = t.stats.select("source", "new_articles").as[(String, Long)]
+        .collect().toMap.filter(_._2 > 0L)
+      t.cleanup()
+      seen ++= emitted.map(_.getAs[String]("canonical_url"))
+      (emitted, stats)
+    }
+  }
+
+  /** Snapshot `i + 1` holds exactly tick `i`'s emitted rows and per-source
+    * counts, and the seen set ends as the seed plus every emit.
+    */
+  private def assertMatchesTicks(store: FrontierStore,
+      want: Seq[(Set[Row], Map[String, Long])]): Unit = {
+    assert(store.snapshotIds() === (0 to want.size))
+    want.zipWithIndex.foreach { case ((emitted, stats), i) =>
+      val delta = store.articlesBetween(spark, i, Some(i + 1))
+      assert(rows(delta.select(emitCols.map(col): _*)) === emitted,
+        s"snapshot ${i + 1} differs from tick $i's emits")
+      assert(delta.groupBy("source").count().as[(String, Long)].collect()
+        .toMap === stats, s"snapshot ${i + 1}'s per-source counts differ")
+      assert(store.manifest(i + 1).newArticles === stats.values.sum)
+      assert(store.manifest(i + 1).fetchEpoch === i.toLong)
+    }
+    val urls = store.articles(spark).select("canonical_url").as[String]
+      .collect()
+    assert(urls.length === urls.distinct.length, "a URL committed twice")
+    assert(store.seen(spark).as[String].collect().toSet ===
+      seedUrls ++ want.flatMap(_._1.map(_.getAs[String]("canonical_url"))))
+  }
+
   /** Deletes batch `n`'s entry in the checkpoint's commit log: a restart
     * then replays batch `n`, as after a kill between the store commit and
     * Spark's own.
@@ -95,6 +163,94 @@ class StreamingFrontierSpec extends SparkTestBase {
   private def dropCommitLog(ckpt: String, n: Long): Unit =
     Seq(s"$n", s".$n.crc").foreach(f =>
       Files.deleteIfExists(Paths.get(ckpt, "commits", f)))
+
+  test("stateful dedup emits each canonical URL once across micro-batches") {
+    // open sources, no robots rules, every page fetchable and no blank
+    // titles: the seen set is the only gate, so the stream commits exactly
+    // the distinct canonical URLs of both batches that the seed lacks.
+    // Tick 0's and tick 1's listings overlap on their tails
+    val batches = (0 to 1).map(t =>
+      Fixtures.listItemsAt(spark, nSources, 20, tick = t).collect().toSeq
+        .map(titled))
+    val (store, ckpt) = seeded("dedup")
+    val input = MemoryStream[ListItem]
+    val q = FrontierMain.streamTicks(input.toDF(), store, openSources(0),
+      noRobots, okPages(batches), ckpt)
+    try batches.foreach(feed(q, input, _)) finally q.stop()
+
+    val all = store.articles(spark).select("canonical_url").as[String]
+      .collect()
+    assert(all.length === all.distinct.length, "duplicate emission")
+    assert(all.toSet === batches.flatten.map(li => canonicalize(li.url))
+      .toSet -- seedUrls)
+    val Seq(n0, n1) = Seq(1, 2).map(store.manifest(_).newArticles)
+    assert(n0 > 0L && n0 + n1 === all.length.toLong)
+    assert(n1 > 0L, "batch 1 committed nothing")
+    assert(n1 < batches(1).size, "batch 1 saw no dedup against the seen set")
+    assert(store.manifest(2).skipped > 0L)
+  }
+
+  test("composed streaming tick: dedup → politeness → store in ONE query " +
+      "≡ two batch CrawlTick ticks; kill/resume exactly-once") {
+    // open sources, no robots rules, every page fetchable and no blank
+    // titles leave dedup and per-host pacing as the tick's work; a 75000
+    // ms delay on a 300000 ms epoch is 4 fetches per host per epoch
+    val ticks = (0 to 1).map(t =>
+      Fixtures.listItemsAt(spark, nSources, 14, tick = t).collect().toSeq
+        .map(titled))
+    val srcs = openSources(75000)
+    val pgs = okPages(ticks)
+    val want = runTickChain(ticks, srcs, noRobots, pgs)
+    assert(want.exists(_._1.exists(_.getAs[Long]("fetch_epoch") > 0L)),
+      "no host paced past its first epoch")
+
+    val (store, ckpt) = seeded("composed")
+    val input = MemoryStream[ListItem]
+    val q1 = FrontierMain.streamTicks(input.toDF(), store, srcs, noRobots,
+      pgs, ckpt)
+    feed(q1, input, ticks(0))
+    q1.stop() // the kill: the next query resumes from the checkpoint
+    val q2 = FrontierMain.streamTicks(input.toDF(), store, srcs, noRobots,
+      pgs, ckpt)
+    feed(q2, input, ticks(1))
+    q2.stop()
+
+    assertMatchesTicks(store, want)
+    assert(Seq(1, 2).map(store.manifest(_).stream) ===
+      Seq(0L, 1L).map(b => Some(q1.id.toString -> b)))
+  }
+
+  test("gated composed tick: batch gates IN-STREAM on raw skewed fixtures " +
+      "(blank titles, robots, list_cap, per-row delays) ≡ two batch ticks") {
+    // raw listings (blank titles, /private paths, source 4's mega host);
+    // even sources' 100 ms delay is below every robots "/" delay, odd
+    // sources' 75000 ms is above it
+    val srcs = (0 until nSources).map(i => SourceSpec(f"src-$i%03d", i,
+      DedupPolicy.SkipAndContinue, list_cap = 10, save_cap = 1000000,
+      crawl_delay_ms = if (i % 2 == 0) 100 else 75000,
+      language = "en", kind = 1)).toDF()
+    val ticks = (0 to 1).map(t =>
+      Fixtures.listItemsAt(spark, nSources, 14, tick = t).collect().toSeq)
+    val pgs = okPages(ticks)
+    val want = runTickChain(ticks, srcs, robots, pgs)
+    assert(want.forall(_._1.nonEmpty))
+    // the gates drop rows the seen set would let through
+    assert(want(0)._1.size <
+      (ticks(0).map(li => canonicalize(li.url)).toSet -- seedUrls).size)
+
+    val (store, ckpt) = seeded("gated")
+    val input = MemoryStream[ListItem]
+    val q1 = FrontierMain.streamTicks(input.toDF(), store, srcs, robots, pgs,
+      ckpt)
+    feed(q1, input, ticks(0))
+    q1.stop()
+    val q2 = FrontierMain.streamTicks(input.toDF(), store, srcs, robots, pgs,
+      ckpt)
+    feed(q2, input, ticks(1))
+    q2.stop()
+
+    assertMatchesTicks(store, want)
+  }
 
   test("stream-to-store: micro-batches commit snapshots ≡ batch dedup chain, " +
       "resume-after-kill via checkpoint is exactly-once") {
@@ -183,9 +339,7 @@ class StreamingFrontierSpec extends SparkTestBase {
       "occurrence, ≡ the store's retract → recrawl chain") {
     // no list or save cap and no stop policy, so a re-listing reaches
     // every retracted URL
-    val open = (0 until nSources).map(i => SourceSpec(f"src-$i%03d", i,
-      DedupPolicy.SkipAndContinue, list_cap = 1000000, save_cap = 1000000,
-      crawl_delay_ms = 0, language = "en", kind = 1)).toDF()
+    val open = openSources(0)
     val batch = listings(0)
     val (store, ckpt) = seeded("c")
     val input = MemoryStream[ListItem]
