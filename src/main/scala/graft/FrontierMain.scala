@@ -28,15 +28,16 @@ import graft.store.FrontierStore
   * Each invocation RESUMES from the store's latest snapshot (north rule:
   * "resumable from checkpoint with per-partition lineage + metrics"): the
   * start tick is the last committed fetch epoch + 1, the URL-seen state is
-  * read back from the snapshot chain (per-delta Blooms OR-merged, never
-  * rebuilt from URLs), and every tick commits atomically before the next
-  * starts. Kill it anywhere; the next run continues from the last manifest.
+  * read back from the snapshot chain (baseline blooms plus delta rows,
+  * OR-merged; the history is never rebuilt from URLs), and every tick
+  * commits atomically before the next starts. Kill it anywhere; the next
+  * run continues from the last manifest.
   *
   * The seen probe is the PRODUCTION path: the tick routes through
   * `SeenProbe.BloomConfirm(store.segments, store.seen)` — the
   * size-dispatched two-phase plan (broadcast probe for small segment sets,
   * co-partitioned zip-probe at the 10^10 design point), fed by the store's
-  * persisted per-delta blooms.
+  * baseline blooms plus delta rows.
   *
   * Inputs default to the deterministic fixtures; `--listings=`/`--pages=`
   * (and optionally `--sources=`/`--robots=`) point the SAME pipeline at

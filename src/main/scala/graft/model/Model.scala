@@ -156,21 +156,3 @@ final case class CrawlResult(
     language: String,
     metadata: String // JSON string (reference P12, create_bigquery_table.sql:24)
 )
-
-/** A captured fetch failure (reference keeps tracebacks, main.py:342-347;
-  * we keep the row + reason — SURVEY §2.9 C5's errors Dataset).
-  */
-final case class FetchError(
-    canonical_url: String,
-    source: String,
-    item_idx: Int,
-    reason: String
-)
-
-/** Per-source run stats (reference: scrapers/base_scraper.py:31). */
-final case class SourceStats(
-    source: String,
-    new_articles: Long,
-    skipped: Long,
-    errors: Long
-)

@@ -69,8 +69,9 @@ import graft.politeness.Scheduler
   *    SeenProbe.Exact has no prefilter (small scale / oracle parity);
   *    SeenProbe.BloomConfirm prefilters on Bloom segments (broadcast
   *    ≤ 1 GiB of segments, co-partitioned zip-probe above, no driver
-  *    collect) — the path FrontierMain feeds from the store's persisted
-  *    per-delta blooms. All variants produce the identical truth table;
+  *    collect) — the path FrontierMain feeds from the store's baseline
+  *    blooms plus delta rows. All variants produce the identical truth
+  *    table;
   *  - the fetch/page join carries narrow columns only (canonical_url,
   *    image_id, caption); image bytes are joined at the sink, never
   *    shuffled through the pipeline (SURVEY.md §7.4.6);

@@ -70,12 +70,21 @@ object BloomFilter {
     * ~36 MB each, co-partitioned with the candidate stream.
     */
   def create(expectedItems: Long, fpp: Double): BloomFilter = {
+    val numBits = bitsFor(expectedItems, fpp)
+    val numHashes = math.max(1,
+      math.round(numBits.toDouble / expectedItems * math.log(2)).toInt)
+    new BloomFilter(numBits, numHashes, new Array[Long]((numBits + 63) >>> 6))
+  }
+
+  /** The length of [[create]]'s filter serialized, with nothing allocated. */
+  def serializedSize(expectedItems: Long, fpp: Double): Long =
+    8L + ((bitsFor(expectedItems, fpp) + 63L) >>> 6) * 8L
+
+  private def bitsFor(expectedItems: Long, fpp: Double): Int = {
     require(expectedItems > 0 && fpp > 0 && fpp < 1)
     val ln2 = math.log(2)
     val mReal = -expectedItems * math.log(fpp) / (ln2 * ln2)
-    val numBits = math.min(mReal.ceil.toLong, Int.MaxValue.toLong - 64).toInt
-    val numHashes = math.max(1, math.round(numBits.toDouble / expectedItems * ln2).toInt)
-    new BloomFilter(numBits, numHashes, new Array[Long]((numBits + 63) >>> 6))
+    math.min(mReal.ceil.toLong, Int.MaxValue.toLong - 64).toInt
   }
 
   def deserialize(bytes: Array[Byte]): BloomFilter = {
@@ -90,10 +99,10 @@ object BloomFilter {
 
   /** OR-merge two serialized filters without object materialization: after
     * the 8-byte (numBits, numHashes) header check, bit-union is plain byte
-    * OR. Used by FrontierStore's per-delta bloom merge — bit-union of
-    * per-delta filters over the same parameters equals the filter built
-    * from the unioned key set (order-free), so incremental maintenance is
-    * exact w.r.t. the full rebuild.
+    * OR. Used by FrontierStore's segment merge — bit-union of filters
+    * over the same parameters equals the filter built from the unioned key
+    * set (order-free), so incremental maintenance is exact w.r.t. the full
+    * rebuild.
     */
   def mergeSerialized(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
     require(a.length == b.length &&

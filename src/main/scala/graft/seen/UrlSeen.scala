@@ -1,11 +1,13 @@
 package graft.seen
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression,
+  XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Partitioned URL-seen state — the scale path for the reference's
   * in-memory `set[str]` link cache (utils/bigquery_client.py:46,115-120).
@@ -28,7 +30,16 @@ object UrlSeen {
 
   val DefaultFpp = 1e-6
 
+  /** Spark's xxhash64 (seed 42) of a url column. */
   def urlHash(url: Column): Column = xxhash64(url)
+
+  /** [[urlHash]] for one url on the JVM side (same value, through the
+    * expression's own interpreted hash): what a driver-side build hashes,
+    * so its bits and segments match the distributed build. A null url
+    * hashes to the seed, as it does in the column form.
+    */
+  def urlHash(url: String): Long =
+    XxHash64Function.hash(UTF8String.fromString(url), StringType, 42L)
 
   /** The segment of a url hash, `pmod(hash, nSegments)`: the one segment
     * function behind the segment builds, both probes and FrontierStore's
@@ -60,15 +71,22 @@ object UrlSeen {
       .select(segmentOf(h, nSegments).as("seg"), h.as("url_hash"))
       .as[(Long, Long)]
       .repartition(nSegments, col("seg"))
-      .mapPartitions { it =>
-        val blooms = scala.collection.mutable.LongMap[BloomFilter]()
-        it.foreach { case (seg, hash) =>
-          blooms.getOrElseUpdate(seg,
-            BloomFilter.create(expectedItemsPerSegment, fpp)).put(hash)
-        }
-        blooms.iterator.map { case (seg, b) => (seg, b.serialize()) }
-      }
+      .mapPartitions(bloomSegments(_, expectedItemsPerSegment, fpp))
       .toDF("seg", "bloom")
+  }
+
+  /** (seg, url hash) pairs → one serialized Bloom filter per segment
+    * present: the per-partition step of [[buildSegments]], also run on
+    * the driver over rows whose bytes must equal that build's.
+    */
+  def bloomSegments(it: Iterator[(Long, Long)], expectedItemsPerSegment: Long,
+      fpp: Double): Iterator[(Long, Array[Byte])] = {
+    val blooms = scala.collection.mutable.LongMap[BloomFilter]()
+    it.foreach { case (seg, hash) =>
+      blooms.getOrElseUpdate(seg,
+        BloomFilter.create(expectedItemsPerSegment, fpp)).put(hash)
+    }
+    blooms.iterator.map { case (seg, b) => (seg, b.serialize()) }
   }
 
   /** [[buildSegments]] with cuckoo-filter segments (same (seg, bloom)
@@ -222,9 +240,9 @@ object UrlSeen {
     *    broadcast): the co-partitioned zip probe — both sides partitioned
     *    by the SAME pmod(xxhash64(url), nSeg), each task materializes only
     *    its own segments' bytes once and streams its candidate split
-    *    through them. FrontierStore persists segment blooms in exactly
-    *    this layout (`data/bloom/snap-K/`), so at scale the segment side
-    *    is a parquet scan, not a rebuild.
+    *    through them. FrontierStore persists its baseline blooms in
+    *    exactly this layout (`data/bloom/snap-K/`), so at scale the
+    *    segment side is mostly a parquet scan, not a rebuild.
     *
     * Either way the result is EXACT: phase 2 confirm-joins the
     * Bloom-positive remainder against the true seen table (shuffle-hash,
@@ -457,8 +475,8 @@ object SeenProbe {
 
   /** Bloom-segment prefilter + exact confirm; dispatches broadcast-probe vs
     * co-partitioned zip-probe on total segment bytes (UrlSeen.flagSeen).
-    * `segments` is FrontierStore.segments() at scale — persisted per-delta
-    * blooms OR-merged, never rebuilt from URLs.
+    * `segments` is FrontierStore.segments() at scale — baseline blooms
+    * plus delta rows, OR-merged; the history is never rebuilt from URLs.
     */
   final case class BloomConfirm(segments: DataFrame, seen: DataFrame,
       nSegments: Int,

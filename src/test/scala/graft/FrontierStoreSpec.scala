@@ -829,15 +829,25 @@ class FrontierStoreSpec extends SparkTestBase {
     }
     def bytes(rows: Array[org.apache.spark.sql.Row]): Map[Long, Seq[Byte]] =
       rows.map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bloom").toSeq).toMap
-    // the truth: every bloom file of the chain read by Spark, OR-merged
-    def viaSpark(s: FrontierStore, id: Int): Map[Long, Seq[Byte]] =
-      bytes(s.seenChain(id).flatMap(_.bloomPath)
+    // the truth: every bloom file of the chain read by Spark, and
+    // UrlSeen.buildSegments over each bloom-less add delta's rows read by
+    // Spark at the dial its manifest records, OR-merged. A tick's commit
+    // writes no bloom file, so its delta's filters come from its rows
+    def viaSpark(s: FrontierStore, id: Int): Map[Long, Seq[Byte]] = {
+      val chain = s.seenChain(id)
+      val files = chain.flatMap(_.bloomPath)
         .map(p => spark.read.parquet(s"$dir/$p").select(col("seg").cast("long"), col("bloom")))
-        .reduce(_ unionByName _)
+      val built = chain
+        .filter(m => m.kind == FrontierStore.KindDelta && m.bloomPath.isEmpty)
+        .flatMap(m => m.seenDeltaPath.map(p => graft.seen.UrlSeen.buildSegments(
+          spark.read.parquet(s"$dir/$p"), "canonical_url", s.nSegments,
+          m.bloomItems, 1e-6)))
+      bytes((files ++ built).reduce(_ unionByName _)
         .groupByKey(_.getLong(0))
         .mapGroups((seg, rows) => seg -> rows.map(_.getAs[Array[Byte]](1))
           .reduce(graft.seen.BloomFilter.mergeSerialized))
         .toDF("seg", "bloom").collect())
+    }
     def check(s: FrontierStore, asOf: Option[Int] = None): Unit = {
       val id = asOf.getOrElse(s.snapshotIds().last)
       val segs = s.segments(spark, asOf)
@@ -897,6 +907,118 @@ class FrontierStoreSpec extends SparkTestBase {
     def bytes(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Byte]] =
       df.collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bloom").toSeq).toMap
     assert(bytes(over) === bytes(local))
+    store.delete()
+  }
+  test("segments over a mixed chain — snapshot 0's bloom, a delta committed " +
+      "with a bloom file, then row-only deltas — equal a full-seen rebuild, " +
+      "on the driver and distributed") {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    val dir = "target/test-store-bloom-mixed"
+    new FrontierStore(dir).delete()
+    val store = new FrontierStore(dir).init()
+    def urls(lo: Int, hi: Int) = spark.range(lo, hi)
+      .select(concat(lit("https://mixed.example.com/p/"), col("id").cast("string"))
+        .as("canonical_url"))
+    store.initSeen(spark, urls(0, 300))
+    // snapshot 1 as a commit wrote it before ticks stopped writing bloom
+    // files: the seen delta by segment, its bloom dir, and a manifest
+    // naming both
+    val mid = urls(300, 400)
+    val seg = graft.seen.UrlSeen.segmentOf(
+      graft.seen.UrlSeen.urlHash(col("canonical_url")), 16).cast("int")
+    mid.withColumn("seg", seg).repartition(col("seg"))
+      .write.partitionBy("seg").parquet(s"$dir/data/seen/snap-1")
+    graft.seen.UrlSeen.buildSegments(mid, "canonical_url", 16, 100000L, 1e-6)
+      .write.parquet(s"$dir/data/bloom/snap-1")
+    val counts = mid.groupBy(seg.as("seg")).count().collect()
+      .map(r => s""""${r.getInt(0)}": ${r.getLong(1)}""").mkString(", ")
+    Files.writeString(Paths.get(dir, "snapshots", "snap-00001.json"),
+      s"""{"snapshot_id": 1, "parent_id": 0, "kind": "delta",
+         |"fetch_epoch": 0, "bloom_items_per_segment": 100000,
+         |"articles_path": null, "seen_delta_path": "data/seen/snap-1",
+         |"bloom_path": "data/bloom/snap-1", "errors_path": null,
+         |"segment_counts": {$counts}, "files_rewritten": 0, "files_added": 0,
+         |"file_stats": [],
+         |"metrics": {"new_articles": 100, "skipped": 0, "errors": 0}}""".stripMargin)
+    for ((lo, hi) <- Seq((400, 450), (450, 520))) {
+      val n = (hi - lo).toLong
+      store.commit(spark, urls(lo, hi)
+          .withColumn("source", lit("s0")).withColumn("language", lit("und")),
+        Seq(("s0", n, 0L, 0L)).toDF("source", "new_articles", "skipped", "errors"),
+        fetchEpoch = lo.toLong)
+    }
+    assert(store.seenChain(3).map(_.bloomPath.nonEmpty) ===
+      Seq(true, true, false, false))
+    assert(store.seen(spark).count() === 520L)
+
+    def bytes(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Byte]] =
+      df.collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bloom").toSeq).toMap
+    val rebuilt = bytes(graft.seen.UrlSeen.buildSegments(
+      store.seen(spark), "canonical_url", 16, 100000L, 1e-6))
+    val local = store.segments(spark)
+    assert(local.isLocal)
+    assert(bytes(local) === rebuilt)
+    val distributed = store.segmentsWithin(spark, None, localBytes = 0L)
+    assert(!distributed.isLocal)
+    assert(bytes(distributed) === rebuilt)
+    store.delete()
+  }
+
+  test("a commit writes no bloom dir and one seen file per segment: seen is " +
+      "the article URLs, counts are the footers' rows, and a commit run " +
+      "again over a crashed attempt's debris adds no rows") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val dir = "target/test-store-commit-layout"
+    val store = new FrontierStore(dir)
+    store.delete()
+    val emitted = (0 until 60).map(i => (s"https://layout.example/$i", "src-000", "en"))
+      .toDF("canonical_url", "source", "language")
+    val stats = Seq(("src-000", 60L, 0L, 0L))
+      .toDF("source", "new_articles", "skipped", "errors")
+    def list(d: Path): Seq[Path] = {
+      val s = Files.list(d)
+      try s.iterator.asScala.toList.sortBy(_.toString) finally s.close()
+    }
+    def footerRows(f: Path): Long = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toUri),
+          new org.apache.hadoop.conf.Configuration()))
+      try r.getRecordCount finally r.close()
+    }
+    def urlSet(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select("canonical_url").as[String].collect().sorted.toSeq
+    def checkLayout(m: FrontierStore.Manifest): Unit = {
+      assert(!Files.exists(Paths.get(dir, "data", "bloom", s"snap-${m.snapshotId}")))
+      assert(m.bloomPath.isEmpty)
+      val segDirs = list(Paths.get(dir, m.seenDeltaPath.get))
+      assert(segDirs.nonEmpty)
+      segDirs.foreach(d => assert(list(d).size === 1, s"$d holds ${list(d)}"))
+      val footers = segDirs.map(d =>
+        d.getFileName.toString.stripPrefix("seg=").toInt -> footerRows(list(d).head)).toMap
+      assert(m.segmentCounts === footers)
+      val seen = urlSet(store.seen(spark))
+      assert(seen === urlSet(store.articles(spark)))
+      assert(seen === urlSet(emitted))
+    }
+
+    val m = store.commit(spark, emitted, stats, fetchEpoch = 0L)
+    checkLayout(m)
+    // a crashed attempt at snapshot 0: its data written, its manifest not,
+    // and more debris under the seen delta than the writer left
+    Files.delete(Paths.get(dir, "snapshots", "snap-00000.json"))
+    Seq("https://debris.example/x").toDF("canonical_url")
+      .write.parquet(s"$dir/data/seen/snap-0/seg=99")
+    val firstSeg = list(Paths.get(dir, "data", "seen", "snap-0")).head
+    Seq("https://debris.example/y").toDF("canonical_url")
+      .write.mode("append").parquet(firstSeg.toString)
+    val again = store.commit(spark, emitted, stats, fetchEpoch = 0L)
+    assert(again.snapshotId === 0)
+    checkLayout(again)
+    assert(again.segmentCounts === m.segmentCounts)
     store.delete()
   }
 }

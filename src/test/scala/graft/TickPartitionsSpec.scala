@@ -144,7 +144,7 @@ class TickPartitionsSpec extends SparkTestBase {
 
   test("at 200 shuffle partitions a store-fed tick reads the store's " +
       "metadata and dispatches its probe with no Spark job, and tick + " +
-      "commit launch at most 28 jobs") {
+      "commit launch at most 23 jobs") {
     val sc = spark.sparkContext
     val phaseKey = "graft.spec.phase"
     val jobsByPhase = mutable.Map.empty[String, Int].withDefaultValue(0)
@@ -180,7 +180,7 @@ class TickPartitionsSpec extends SparkTestBase {
       assert(m.newArticles > 0, "the fixture tick must commit articles")
       for (p <- Seq("store.segments", "store.seen", "probe.dispatch"))
         assert(jobs.getOrElse(p, 0) === 0, s"$p launched Spark jobs: $jobs")
-      assert(jobs.values.sum <= 28, s"tick + commit jobs: $jobs")
+      assert(jobs.values.sum <= 23, s"tick + commit jobs: $jobs")
     }
   }
 }
