@@ -353,8 +353,7 @@ object Bench {
           d("offarm_busy_frac"))
       }
 
-  def runPinnedArms(armCores: Seq[Int], n: Long,
-      budgetSec: Double = ArmsBudgetSec)
+  def runPinnedArms(armCores: Seq[Int], n: Long)
       : (Seq[Double], Boolean, Seq[ArmSample]) = {
     import scala.jdk.CollectionConverters._
     val taskset = Seq("/usr/bin/taskset", "/bin/taskset")
@@ -461,7 +460,7 @@ object Bench {
       round += 1
       armCores.foreach { cores =>
         // round 1 always runs both arms; later spawns respect the budget
-        if (round == 1 || phaseElapsed < budgetSec) {
+        if (round == 1 || phaseElapsed < ArmsBudgetSec) {
           val armSet = ((nCpusTotal - cores) until nCpusTotal).toSet
           val before = readCpuJiffies()
           val (sec, out) = childArm(cores)
@@ -494,9 +493,9 @@ object Bench {
         }
         settled = quietCovered && effSane
       }
-      if (!settled && phaseElapsed >= budgetSec) {
+      if (!settled && phaseElapsed >= ArmsBudgetSec) {
         budgetHit = true
-        System.err.println(f"[bench] arms budget ($budgetSec%.0fs) hit " +
+        System.err.println(f"[bench] arms budget ($ArmsBudgetSec%.0fs) hit " +
           f"after round $round uncorroborated — stopping; the record " +
           "adjudicates from the samples collected")
       }
@@ -536,21 +535,17 @@ object Bench {
     *    polluted;
     *  - the arms fell back to unpinned in-process mode (no noise evidence).
     */
-  def scalingRecord(armCores: Seq[Int], scaleN: Long,
-      budgetSec: Double = ArmsBudgetSec, note: Option[String] = None)
-      : String = {
-    val (armSecs, pinned, armSamples) =
-      runPinnedArms(armCores, scaleN, budgetSec)
-    renderScalingRecord(armCores, scaleN, armSecs, pinned, armSamples, note)
+  def scalingRecord(armCores: Seq[Int], scaleN: Long): String = {
+    val (armSecs, pinned, armSamples) = runPinnedArms(armCores, scaleN)
+    renderScalingRecord(armCores, scaleN, armSecs, pinned, armSamples)
   }
 
   /** The `"scaling"` JSON object of measured arms, rendered by Jackson, so
-    * any character in its free-text fields (the invalid reason, the
-    * caller's note) stays valid JSON.
+    * any character in its free-text invalid reason stays valid JSON.
     */
   def renderScalingRecord(armCores: Seq[Int], scaleN: Long,
-      armSecs: Seq[Double], pinned: Boolean, armSamples: Seq[ArmSample],
-      note: Option[String]): String = {
+      armSecs: Seq[Double], pinned: Boolean, armSamples: Seq[ArmSample])
+      : String = {
     val scalingEff = armSecs(0) /
       ((armCores.last.toDouble / armCores.head) * armSecs(1))
     val reasons = adjudicationReasons(armCores, scalingEff, pinned, armSamples)
@@ -568,7 +563,6 @@ object Bench {
         if (scalingValid) null else reasons.mkString("; "))
     o.putObject("noise_bounds").put("max_steal_frac", MaxStealFrac)
       .put("max_offarm_busy_frac", MaxOffarmBusyFrac)
-    note.foreach(o.put("note", _))
     val samples = o.putArray("samples")
     armSamples.foreach(s => samples.add(s.node))
     Json.writeValueAsString(o)
@@ -887,23 +881,6 @@ object Bench {
     // cluster-size claim needs both arms in the amortized regime.
     spark.stop()
     val scalingJson = scalingRecord(Seq(1, 4), frontierN)
-    // Second scaling object (r4 verdict #4): a 4→16-core arm under the
-    // SAME hardened protocol (per-run brackets, corroboration, outlier
-    // band), carrying the claim at the parallelism the driver actually
-    // runs (local[32]-class). This box's measured per-core ladder is flat
-    // 1→4 then DRAM/shuffle-bandwidth capped (BENCH.md §2: 8→32 read
-    // 0.42 in r1), so the expected honest outcome here is a VALID record
-    // with sub-0.8 efficiency whose cause is the disclosed single-box
-    // memory ceiling — evidence with dispersion data, not a prose
-    // footnote. Bounded budget: the 1→4 arm is the north-rule sample and
-    // keeps the full budget; this evidence arm's children are ~4× faster
-    // per run, so 600 s covers MinRounds comfortably on a quiet box.
-    val scaling416Json = scalingRecord(Seq(4, 16), frontierN,
-      budgetSec = math.min(600.0, ArmsBudgetSec),
-      note = Some("evidence arm at driver parallelism: per-core ladder " +
-        "flat 1-4 cores then shared-DRAM capped on this VM (BENCH.md " +
-        "§2) - a 4N-executor cluster brings 4x DRAM/NVMe this box does " +
-        "not, so sub-0.8 here measures the box ceiling, not the plan"))
 
     def jmap(m: scala.collection.Map[String, Option[Double]]): ObjectNode = {
       val o = Json.createObjectNode()
@@ -928,7 +905,6 @@ object Bench {
       .set[ObjectNode]("suite_rerun", suiteRerun)
       .set[ObjectNode]("stage_sec", secs(stageSecs))
       .putRawValue("scaling", new RawValue(scalingJson))
-      .putRawValue("scaling_4_16", new RawValue(scaling416Json))
     val line = Json.writeValueAsString(head)
     // build.sbt sets outputStrategy := StdoutOutput, so this line reaches
     // the driver's stdout tail UNPREFIXED (sbt's "[info] " wrapper broke

@@ -173,12 +173,12 @@ object FrontierMain {
     * store's next fetch epoch: streamed and batch ticks share one epoch
     * sequence and one seen set. Each snapshot records the query id and
     * batch id, and a batch the store already holds for this query (a
-    * replay after a restart) is skipped. The store must hold its seen
-    * seed (`initSeen`) first.
+    * replay after a restart) is skipped. Every batch runs the unsalted
+    * rank. The store must hold its seen seed (`initSeen`) first.
     */
   def streamTicks(listings: DataFrame, store: FrontierStore,
       sources: DataFrame, robots: DataFrame, pages: DataFrame,
-      checkpointDir: String, salted: Boolean = false): StreamingQuery =
+      checkpointDir: String): StreamingQuery =
     listings.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -187,7 +187,7 @@ object FrontierMain {
         val queryId = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
         if (!store.lastStreamBatch(queryId).exists(_ >= batchId))
           tick(spark, store, batch, sources, robots, pages, nextEpoch(store),
-            salted, None, Some(queryId -> batchId))
+            salted = false, images = None, stream = Some(queryId -> batchId))
         ()
       }
       .start()

@@ -7,10 +7,9 @@ import graft.model.AudioDoc
 /** Multimodal (audio) column operators — the audio sibling of [[ImageOps]].
   * The payload is an opaque BinaryType column (RIFF/WAV, 16-bit PCM); decode
   * and feature extraction run as partition-local batch functions over the
-  * bytes. Like [[VideoOps]]'s GVID container (and unlike real-codec video,
-  * whose decode stub [[ImageOps.sampleFrames]] documents), the WAV
-  * container needs no external codec: [[parseWav]] is a real RIFF chunk
-  * walker, so the whole path is a genuine implementation.
+  * bytes. Like [[VideoOps]]'s GVID container (and unlike real-codec
+  * video), the WAV container needs no external codec: [[parseWav]] is a
+  * real RIFF chunk walker, so the whole path is a genuine implementation.
   *
   * Feature arithmetic is INTEGER (peak = max |s|, energy = Σ s² as BIGINT,
   * zero-crossings = sign-flip count) so the DuckDB oracle can recompute the

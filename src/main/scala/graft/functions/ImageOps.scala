@@ -4,17 +4,16 @@ import java.awt.image.BufferedImage
 import java.io.ByteArrayInputStream
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.ImageDoc
 
 /** Multimodal (image) column operators. The payload is an opaque
   * BinaryType column with typed metadata (BASELINE.json input_hint schema);
-  * decode / feature-extract / resize run as partition-local batch
-  * functions over the bytes — the Spark-side plumbing (schema,
-  * partitioning, batch shape) is real and tested; only the video path is
-  * stubbed (no codecs in this environment).
+  * decode and feature extraction run as partition-local batch functions
+  * over the bytes — the Spark-side plumbing (schema, partitioning, batch
+  * shape) is real and tested. Video frames are sampled in [[VideoOps]].
   *
   * Scale notes: bytes never enter a shuffle — all ops here are row-local
   * projections (narrow dependencies); scheduling/dedup upstream operate on
@@ -122,47 +121,6 @@ object ImageOps {
         }
       }
     }
-  }
-
-  /** Real resize (Graphics2D bilinear), re-encoded as PNG (lossless so the
-    * resize itself is the only information change).
-    */
-  def resize(bytes: Array[Byte], targetW: Int, targetH: Int): Array[Byte] = {
-    val src = decode(bytes)
-    if (src == null) return null
-    val dst = new BufferedImage(targetW, targetH, BufferedImage.TYPE_INT_RGB)
-    val g = dst.createGraphics()
-    g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-      java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-    g.drawImage(src, 0, 0, targetW, targetH, null)
-    g.dispose()
-    val bos = new java.io.ByteArrayOutputStream()
-    ImageIO.write(dst, "png", bos)
-    bos.toByteArray
-  }
-
-  def resize_udf(targetW: Int, targetH: Int): Column => Column = {
-    val f = udf((b: Array[Byte]) => resize(b, targetW, targetH))
-    c => f(c)
-  }
-
-  /** STUB — timestamp-addressed frame grab for REAL codec containers
-    * (mp4/H.264 …). This environment has no video codecs, so the decode
-    * step is a deterministic fake (xxhash-keyed pseudo-frames); the
-    * signature is the FFmpeg-shaped call a deployment swaps in. The full
-    * PRODUCTION plumbing — container parse, stride sampling, per-frame
-    * feature rows, partition locality, analytic oracle — lives in
-    * [[VideoOps]] over the codec-free GVID container; this stub remains
-    * only to document the codec boundary.
-    */
-  def sampleFrames(videoBytes: Array[Byte], nFrames: Int): Array[Array[Byte]] = {
-    def fakeFrame(i: Int): Array[Byte] = {
-      // ??? — real impl: FFmpegFrameGrabber(videoBytes).grabImage() at
-      // timestamp i * duration / nFrames. Deterministic stand-in below.
-      val h = graft.model.Fixtures.mix(videoBytes.length.toLong, i.toLong)
-      Array.tabulate[Byte](16)(j => ((h >>> (j * 4)) & 0xff).toByte)
-    }
-    Array.tabulate(nFrames)(fakeFrame)
   }
 
   // ------------------------------------------------------ sink invariant

@@ -11,8 +11,7 @@ import graft.model.VideoDoc
   * like any third-party file; its frames are raw gray8 instead of a
   * compressed codec because no codec libraries ship in this environment
   * (disclosed — a real deployment swaps [[decodeFrame]]'s arraycopy for an
-  * FFmpeg/JavaCV grab at the same timestamp, exactly the shape
-  * [[ImageOps.sampleFrames]] documents; everything downstream of the
+  * FFmpeg/JavaCV grab at the same timestamp; everything downstream of the
   * frame bytes is unchanged).
   *
   * Scale shape: decode is partition-local (`mapPartitions` over the

@@ -170,11 +170,6 @@ object Fixtures {
     }
   }
 
-  /** Tick-0 listing (back-compat convenience). */
-  def listItems(spark: SparkSession, nSources: Int, itemsPerSource: Int)
-      : Dataset[ListItem] =
-    listItemsAt(spark, nSources, itemsPerSource, tick = 0)
-
   /** Pre-existing URL-seen state: articles g < depth of each source are
     * already crawled (models the 7-day link cache,
     * reference config.yaml:14-42 + utils/bigquery_client.py:159-231).

@@ -118,9 +118,6 @@ final class CuckooFilter(val numBuckets: Int, val slots: Array[Int])
     rm(b1) || rm(altBucket(b1, fp))
   }
 
-  def occupied: Int = { var n = 0; var i = 0
-    while (i < slots.length) { if (slots(i) != 0) n += 1; i += 1 }; n }
-
   def serialize(): Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(4 + slots.length * 4)
     bb.putInt(numBuckets)

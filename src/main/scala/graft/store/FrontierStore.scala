@@ -1097,25 +1097,13 @@ final class FrontierStore(rootDir: String, val nSegments: Int = 16,
     * EXCLUDED: a baseline re-lists prior history without adding any URL,
     * so including it would double-report everything before the boundary.
     * Law (FrontierStoreSpec): for a retraction-free window, seen(to) ≡
-    * seen(from) ⊎ seenAddedBetween(from, to) as sets, across compactions;
-    * with retractions in the window the consumer subtracts
-    * [[seenRetractedBetween]] (event streams, not a set law).
+    * seen(from) ⊎ seenAddedBetween(from, to) as sets, across compactions.
     */
   def seenAddedBetween(spark: SparkSession, from: Int,
-      to: Option[Int] = None): DataFrame =
-    seenEventsBetween(spark, from, to, KindDelta)
-
-  /** URLs RETRACTED in (from, to] — the companion event stream to
-    * [[seenAddedBetween]] for consumers tracking recrawl eligibility.
-    */
-  def seenRetractedBetween(spark: SparkSession, from: Int,
-      to: Option[Int] = None): DataFrame =
-    seenEventsBetween(spark, from, to, KindRetraction)
-
-  private def seenEventsBetween(spark: SparkSession, from: Int,
-      to: Option[Int], kind: String): DataFrame = {
+      to: Option[Int] = None): DataFrame = {
     val id = to.getOrElse(latestId())
-    val rels = chainWindow(from, id).filter(_.kind == kind).flatMap(_.seenDeltaPath)
+    val rels = chainWindow(from, id).filter(_.kind == KindDelta)
+      .flatMap(_.seenDeltaPath)
     if (rels.isEmpty) emptySeen(spark)
     else rels.map(seenDelta(spark, _)).reduce(_ unionByName _)
   }

@@ -18,7 +18,8 @@ class CrawlTickSpec extends SparkTestBase {
 
   private lazy val fx = {
     import spark.implicits._
-    val listingsDs = Fixtures.listItems(spark, nSources, itemsPerSource)
+    val listingsDs =
+      Fixtures.listItemsAt(spark, nSources, itemsPerSource, tick = 0)
     val sources = Fixtures.sourceSpecs(nSources)
     val robots = Fixtures.robots(nSources)
     val pagesDs = Fixtures.pageStore(spark, nSources, maxTick = 0)

@@ -25,6 +25,33 @@ class FrontierStoreSpec extends SparkTestBase {
       Fixtures.pageStore(spark, nSources, maxTick = 1))
   }
 
+  /** Each segment's filter bytes in a `(seg, bloom)` frame. */
+  private def segmentBytes(df: org.apache.spark.sql.DataFrame)
+      : Map[Long, Array[Byte]] =
+    df.collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bloom")).toMap
+
+  /** Fails unless both sides hold the same segment ids with byte-equal
+    * filters. The message names the ids missing on either side and, for
+    * each differing segment, its first differing byte offset and both
+    * lengths, never the filter bytes themselves.
+    */
+  private def assertSameSegments(got: Map[Long, Array[Byte]],
+      want: Map[Long, Array[Byte]], what: String): Unit = {
+    def ids(k: Set[Long]) = k.toSeq.sorted.mkString("[", ", ", "]")
+    val shared = got.keySet.intersect(want.keySet).toSeq.sorted
+    val differing = shared.flatMap { seg =>
+      val at = java.util.Arrays.mismatch(got(seg), want(seg))
+      if (at < 0) None
+      else Some(s"seg $seg from byte $at (${got(seg).length} B, " +
+        s"expected ${want(seg).length} B)")
+    }
+    val missing = want.keySet -- got.keySet
+    val extra = got.keySet -- want.keySet
+    if (missing.nonEmpty || extra.nonEmpty || differing.nonEmpty)
+      fail(s"$what: segments missing ${ids(missing)}, unexpected " +
+        s"${ids(extra)}, differing ${differing.mkString("[", "; ", "]")}")
+  }
+
   test("two-tick resume from snapshot matches chained simulator exactly") {
     import spark.implicits._
     new FrontierStore(storeDir).delete()
@@ -153,18 +180,10 @@ class FrontierStoreSpec extends SparkTestBase {
 
   test("per-delta blooms OR-merge bitwise-equal to a full-seen rebuild") {
     val store = new FrontierStore(storeDir)
-    val merged = store.segments(spark)
-      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bloom"))
-      .sortBy(_._1)
+    val merged = segmentBytes(store.segments(spark))
     assert(merged.nonEmpty)
-    val rebuilt = graft.seen.UrlSeen.buildSegments(
-        store.seen(spark), "canonical_url", 16, 100000L, 1e-6)
-      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bloom"))
-      .sortBy(_._1)
-    assert(merged.map(_._1).toSeq === rebuilt.map(_._1).toSeq)
-    merged.zip(rebuilt).foreach { case ((s, a), (_, b)) =>
-      assert(java.util.Arrays.equals(a, b), s"segment $s bytes differ")
-    }
+    assertSameSegments(merged, segmentBytes(graft.seen.UrlSeen.buildSegments(
+      store.seen(spark), "canonical_url", 16, 100000L, 1e-6)), "merged blooms")
     // and the store-served segments drive an exact filterUnseen
     val cands = store.seen(spark).limit(50)
     val got = graft.seen.UrlSeen.filterUnseen(
@@ -225,14 +244,10 @@ class FrontierStoreSpec extends SparkTestBase {
       Seq(java.nio.file.Paths.get(storeDir).resolve(m.seenDeltaPath.get).toString))
     assert(store.seen(spark).collect().map(_.getString(0)).toSet === preSeen)
     // blooms still exact vs rebuild
-    val merged = store.segments(spark)
-      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bloom")).sortBy(_._1)
-    val rebuilt = graft.seen.UrlSeen.buildSegments(
-        store.seen(spark), "canonical_url", 16, 100000L, 1e-6)
-      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bloom")).sortBy(_._1)
-    merged.zip(rebuilt).foreach { case ((s, a), (_, b)) =>
-      assert(java.util.Arrays.equals(a, b), s"segment $s differs post-compaction")
-    }
+    assertSameSegments(segmentBytes(store.segments(spark)),
+      segmentBytes(graft.seen.UrlSeen.buildSegments(
+        store.seen(spark), "canonical_url", 16, 100000L, 1e-6)),
+      "post-compaction blooms")
     // article history and time-travel untouched
     assert(store.articles(spark, Some(2)).count() > 0)
   }
@@ -381,17 +396,10 @@ class FrontierStoreSpec extends SparkTestBase {
     // blooms are REBUILT tight (no retracted key left in the filter)
     val mC = store.compact(spark)
     assert(urlSet(store.seen(spark)) === before -- victims.take(1))
-    val merged = store.segments(spark)
-      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bloom"))
-      .sortBy(_._1)
-    val rebuilt = graft.seen.UrlSeen.buildSegments(
-        store.seen(spark), "canonical_url", 16, mC.bloomItems, 1e-6)
-      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bloom"))
-      .sortBy(_._1)
-    merged.zip(rebuilt).foreach { case ((s, a), (_, b)) =>
-      assert(java.util.Arrays.equals(a, b),
-        s"segment $s not rebuilt from the resolved set")
-    }
+    assertSameSegments(segmentBytes(store.segments(spark)),
+      segmentBytes(graft.seen.UrlSeen.buildSegments(
+        store.seen(spark), "canonical_url", 16, mC.bloomItems, 1e-6)),
+      "blooms rebuilt from the resolved set")
   }
 
   test("incremental reads: (from, to] windows partition history exactly, " +
@@ -628,8 +636,7 @@ class FrontierStoreSpec extends SparkTestBase {
     val artsBefore = store.articlesWithTick(spark)
       .select("canonical_url", "crawl_tick").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
-    val segsBefore = store.segments(spark).collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bloom").toSeq).toMap
+    val segsBefore = segmentBytes(store.segments(spark))
 
     val stats = store.expireSnapshots(horizon)
     assert(stats.dirsDeleted > 0 && stats.filesDeleted > 0 &&
@@ -640,9 +647,8 @@ class FrontierStoreSpec extends SparkTestBase {
     assert(store.articlesWithTick(spark)
       .select("canonical_url", "crawl_tick").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet === artsBefore)
-    assert(store.segments(spark).collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bloom").toSeq)
-      .toMap === segsBefore)
+    assertSameSegments(segmentBytes(store.segments(spark)), segsBefore,
+      "segments after expiry")
     // manifests survive as the audit trail even below the horizon
     assert(store.snapshotIds().size >= 5)
     // expired time-travel is loud, not partial
@@ -827,13 +833,11 @@ class FrontierStoreSpec extends SparkTestBase {
       store.commit(spark, r.emitted, r.stats, fetchEpoch = t.toLong)
       r.cleanup()
     }
-    def bytes(rows: Array[org.apache.spark.sql.Row]): Map[Long, Seq[Byte]] =
-      rows.map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bloom").toSeq).toMap
     // the truth: every bloom file of the chain read by Spark, and
     // UrlSeen.buildSegments over each bloom-less add delta's rows read by
     // Spark at the dial its manifest records, OR-merged. A tick's commit
     // writes no bloom file, so its delta's filters come from its rows
-    def viaSpark(s: FrontierStore, id: Int): Map[Long, Seq[Byte]] = {
+    def viaSpark(s: FrontierStore, id: Int): Map[Long, Array[Byte]] = {
       val chain = s.seenChain(id)
       val files = chain.flatMap(_.bloomPath)
         .map(p => spark.read.parquet(s"$dir/$p").select(col("seg").cast("long"), col("bloom")))
@@ -842,18 +846,19 @@ class FrontierStoreSpec extends SparkTestBase {
         .flatMap(m => m.seenDeltaPath.map(p => graft.seen.UrlSeen.buildSegments(
           spark.read.parquet(s"$dir/$p"), "canonical_url", s.nSegments,
           m.bloomItems, 1e-6)))
-      bytes((files ++ built).reduce(_ unionByName _)
+      segmentBytes((files ++ built).reduce(_ unionByName _)
         .groupByKey(_.getLong(0))
         .mapGroups((seg, rows) => seg -> rows.map(_.getAs[Array[Byte]](1))
           .reduce(graft.seen.BloomFilter.mergeSerialized))
-        .toDF("seg", "bloom").collect())
+        .toDF("seg", "bloom"))
     }
     def check(s: FrontierStore, asOf: Option[Int] = None): Unit = {
       val id = asOf.getOrElse(s.snapshotIds().last)
       val segs = s.segments(spark, asOf)
       assert(segs.isLocal, s"segments($asOf) is not served from the driver")
-      val got = bytes(segs.collect())
-      assert(got.nonEmpty && got === viaSpark(s, id), s"segments($asOf) bytes differ")
+      val got = segmentBytes(segs)
+      assert(got.nonEmpty, s"segments($asOf) is empty")
+      assertSameSegments(got, viaSpark(s, id), s"segments($asOf)")
     }
 
     for (t <- 0 until 3) { tick(t); check(store) }
@@ -875,7 +880,9 @@ class FrontierStoreSpec extends SparkTestBase {
     val segs = distributed.segmentsWithin(spark, None, localBytes = 0L)
     assert(!segs.isLocal)
     assert(segs.rdd.getNumPartitions === distributed.nSegments)
-    assert(bytes(segs.collect()) === viaSpark(distributed, distributed.snapshotIds().last))
+    assertSameSegments(segmentBytes(segs),
+      viaSpark(distributed, distributed.snapshotIds().last),
+      "distributed segments")
   }
 
   test("segments sizes its driver merge by the blooms' bytes in memory, not " +
@@ -904,9 +911,8 @@ class FrontierStoreSpec extends SparkTestBase {
     assert(!over.isLocal, "blooms above the budget in memory were merged on the driver")
     val local = store.segments(spark)
     assert(local.isLocal)
-    def bytes(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Byte]] =
-      df.collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bloom").toSeq).toMap
-    assert(bytes(over) === bytes(local))
+    assertSameSegments(segmentBytes(over), segmentBytes(local),
+      "segments over the budget")
     store.delete()
   }
   test("segments over a mixed chain — snapshot 0's bloom, a delta committed " +
@@ -952,16 +958,15 @@ class FrontierStoreSpec extends SparkTestBase {
       Seq(true, true, false, false))
     assert(store.seen(spark).count() === 520L)
 
-    def bytes(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Byte]] =
-      df.collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bloom").toSeq).toMap
-    val rebuilt = bytes(graft.seen.UrlSeen.buildSegments(
+    val rebuilt = segmentBytes(graft.seen.UrlSeen.buildSegments(
       store.seen(spark), "canonical_url", 16, 100000L, 1e-6))
     val local = store.segments(spark)
     assert(local.isLocal)
-    assert(bytes(local) === rebuilt)
+    assertSameSegments(segmentBytes(local), rebuilt, "driver segments")
     val distributed = store.segmentsWithin(spark, None, localBytes = 0L)
     assert(!distributed.isLocal)
-    assert(bytes(distributed) === rebuilt)
+    assertSameSegments(segmentBytes(distributed), rebuilt,
+      "distributed segments")
     store.delete()
   }
 
