@@ -3,11 +3,15 @@ package graft
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
 import com.fasterxml.jackson.databind.util.RawValue
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.model.Fixtures
+import graft.store.FrontierStore
+
 /** Driver benchmark: runs every SparkEntry query plus the frontier
-  * headline job, prints ONE JSON line
+  * headline tick ([[Bench.frontierTick]]), prints ONE JSON line
   * {"metric":…,"value":N,"unit":"sec","queries":{…},"sf":…}.
   */
 object Bench {
@@ -33,82 +37,81 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.local.dir", localDir)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries",
+        FrontierMain.CodegenCacheEntries.toLong)
       .getOrCreate()
   }
 
-  /** The north-rule headline: frontier scheduling + dedup over `n`
-    * synthetic candidate URLs — canonicalize → xxhash64 → Bloom-segment
-    * prefilter → exact confirm anti-join → salted per-host rank → epoch
-    * assignment. Returns the scheduled (unseen) candidates.
+  /** Local cores for a bench session: `SPARK_GRAFT_CPUS`, else this box's
+    * core count (the `local[*]` that `FrontierMain` runs).
     */
-  def frontierJob(spark: SparkSession, n: Long,
-      nSegments: Int = 32): DataFrame = {
-    // Both synthetic inputs are persisted: candidates feed the two probe
-    // branches (bloom-negative pass-through + confirm anti-join) and seen
-    // feeds both the segment build and the confirm join — in a real tick
-    // each is ONE store scan read twice with pruning; here the generation
-    // chain is string-heavy, and recomputing it per consumer would charge
-    // the dedup stage for fixture synthesis.
-    val cand = candidateUrls(spark, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val seen = seenUrls(spark, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val segments = graft.seen.UrlSeen.buildSegments(
-      seen, "canonical_url", nSegments,
-      expectedItemsPerSegment = math.max(1000L, n / nSegments), fpp = 1e-6)
-    val unseen = graft.seen.UrlSeen.filterUnseen(
-      cand, segments, seen, "canonical_url", nSegments)
-      // persist the dedup output before the politeness stages: the salted
-      // rank fans the DAG into rank/offset branches, and without a
-      // materialization point each branch re-derives the whole dedup
-      // pipeline. In a real tick this boundary is the store commit
-      // (FrontierStore writes the unseen delta); disk-backed persist is
-      // its in-job equivalent and scales with executor count.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // politeness: salted per-host rank (order-aligned buckets) → epochs
-    val ranked = graft.politeness.Scheduler.saltedHostRank(
-      unseen, "host",
-      bucketCol = floor(col("uid") / 100000L),
-      orderCols = Seq(col("uid").asc))
-    graft.politeness.Scheduler.assignEpochs(ranked, "host_rank", lit(1000))
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  /** Listing rows per headline tick: `SPARK_GRAFT_FRONTIER_N`, else 2 M —
+    * at 8 M a pinned 1-core arm child (warmup and 3 runs, each with its
+    * set-up) outlasts its 20-minute timeout (BENCH.md §1).
+    */
+  def frontierN: Long = sys.env.get("SPARK_GRAFT_FRONTIER_N").map(_.toLong)
+    .getOrElse(2000000L)
+
+  /** Sources whose first tick lists about `n` rows: a fresh store's tick 0
+    * lists each source's newest `FrontierMain.ItemsPerSource` items
+    * (×SkewFactor for a mega source), no more than it has published.
+    */
+  def sourcesFor(n: Long): Int = {
+    def listed(i: Int): Long = math.min(Fixtures.publishedAt(i, 0),
+      FrontierMain.ItemsPerSource.toLong *
+        (if (Fixtures.isMega(i)) Fixtures.SkewFactor else 1))
+    Iterator.from(0).scanLeft(0L)(_ + listed(_)).indexWhere(_ >= n).max(1)
   }
 
-  private val FixtureHosts = 1000L
-  private def hostOf =
-    concat(lit("h"), pmod(col("uid") * 2654435761L, lit(FixtureHosts)),
-      lit(".example.com"))
-
-  /** `n` synthetic frontier candidates (uid, host, canonical_url): realistic
-    * raw URLs — long path, 8 query params in page order (3 tracking),
-    * fragment — that the canonicalizer strips and sorts per row. raw_url
-    * dies at canonicalization: carrying it through a persist and the
-    * politeness shuffles would double the row payload for nothing.
+  /** One [[frontierTick]]: the listing rows it read, its seconds, the
+    * manifest's `new_articles`, and whether the commit passed the check.
     */
-  def candidateUrls(spark: SparkSession, n: Long): DataFrame = {
-    import graft.functions.UrlFunctions._
-    spark.range(0, n).toDF("uid")
-      .withColumn("host", hostOf)
-      .withColumn("raw_url",
-        concat(lit("HTTPS://WWW."), col("host"), lit("/Section/"),
-          pmod(col("uid"), lit(50L)), lit("/articles/a"), col("uid"),
-          lit("?utm_source=feed&z="), pmod(col("uid"), lit(97L)),
-          lit("&lang=en&utm_medium=rss&id="), col("uid"),
-          lit("&ref=home&utm_campaign=daily&s=1#sec")))
-      .withColumn("canonical_url", canonicalize_url(col("raw_url")))
-      .select("uid", "host", "canonical_url")
+  final case class TickRun(rows: Long, sec: Double, newArticles: Long,
+      ok: Boolean)
+
+  /** The headline: one timed `FrontierMain.tick` (salted = false, as
+    * `FrontierMain.main` runs by default) over a fresh `FrontierStore`
+    * whose first tick lists about `n` rows of `FrontierMain.main`'s
+    * fixtures. Writing the inputs to parquet, `initSeen` and the check run
+    * outside the timed region: no committed URL may be in the seed or
+    * repeat. `inspect` sees the store before it and the inputs are deleted.
+    */
+  def frontierTick(spark: SparkSession, n: Long,
+      inspect: FrontierStore => Unit = _ => ()): TickRun = {
+    import spark.implicits._
+    val nSources = sourcesFor(n)
+    val dir = java.nio.file.Files.createTempDirectory("graft-frontier-tick")
+    def parquet(name: String, df: DataFrame): DataFrame = {
+      val path = dir.resolve(name).toString
+      df.write.parquet(path)
+      spark.read.parquet(path)
+    }
+    try {
+      val store = new FrontierStore(dir.resolve("store").toString)
+      val listings = parquet("listings",
+        Fixtures.listItemsAt(spark, nSources, FrontierMain.ItemsPerSource, 0)
+          .toDF())
+      val sources = parquet("sources", Fixtures.sourceSpecs(nSources).toDF())
+      val robots = parquet("robots", Fixtures.robots(nSources).toDF())
+      val pages = parquet("pages", Fixtures.pageStore(spark, nSources).toDF())
+      val seed = parquet("seed", Fixtures.urlSeenSeed(spark, nSources,
+        Fixtures.DefaultPreSeen).toDF().select("canonical_url"))
+      store.initSeen(spark, seed)
+      val ((m, _), sec) = timed(FrontierMain.tick(spark, store, listings,
+        sources, robots, pages, 0L, salted = false, images = None))
+      val ok = m.articlesPath.fold(m.newArticles == 0L) { _ =>
+        val urls = store.articles(spark).select("canonical_url")
+        val r = urls.agg(count(lit(1)), countDistinct("canonical_url")).head()
+        r.getLong(0) == m.newArticles && r.getLong(1) == m.newArticles &&
+          urls.join(seed, Seq("canonical_url"), "left_semi").isEmpty
+      }
+      inspect(store)
+      TickRun(listings.count(), sec, m.newArticles, ok)
+    } finally FileUtils.deleteDirectory(dir.toFile)
   }
-
-  /** The seen set for [[candidateUrls]]: every third candidate, built
-    * directly in canonical form (same construction → exact-parity probe).
-    * One column, canonical_url.
-    */
-  def seenUrls(spark: SparkSession, n: Long): DataFrame =
-    spark.range(0, n, 3).toDF("uid")
-      .withColumn("host", hostOf)
-      .select(concat(lit("https://www."), col("host"), lit("/Section/"),
-        pmod(col("uid"), lit(50L)), lit("/articles/a"), col("uid"),
-        lit("?id="), col("uid"), lit("&lang=en&ref=home&s=1&z="),
-        pmod(col("uid"), lit(97L))).as("canonical_url"))
 
   // ------------------------------------------------- scaling telemetry ---
 
@@ -170,31 +173,33 @@ object Bench {
       if (per.isEmpty) None else Some(per)
     } catch { case _: Exception => None }
 
+  /** (total, idle + iowait, steal) jiffies summed over the `cpus` that
+    * both /proc/stat snapshots read; None when there are none.
+    */
+  private def jiffyDelta(before: Map[Int, Array[Long]],
+      after: Map[Int, Array[Long]], cpus: Iterable[Int])
+      : Option[(Long, Long, Long)] = {
+    val ds = cpus.toSeq.flatMap { c =>
+      (before.get(c), after.get(c)) match {
+        case (Some(b), Some(a)) if a.length >= 8 && b.length >= 8 =>
+          val d = a.zip(b).map { case (x, y) => x - y }
+          Some((d.take(8).sum, d(3) + d(4), d(7)))
+        case _ => None
+      }
+    }
+    if (ds.isEmpty) None
+    else Some((ds.map(_._1).sum, ds.map(_._2).sum, ds.map(_._3).sum))
+  }
+
   /** (stealFrac over `armCpus`, busyFrac over the complement) between two
     * /proc/stat snapshots. busy = total − idle − iowait; steal = field 7.
     */
   def cpuNoise(before: Map[Int, Array[Long]], after: Map[Int, Array[Long]],
       armCpus: Set[Int]): (Option[Double], Option[Double]) = {
-    def agg(cpus: Iterable[Int]): Option[(Long, Long, Long)] = {
-      val ds = cpus.toSeq.flatMap { c =>
-        (before.get(c), after.get(c)) match {
-          case (Some(b), Some(a)) if a.length >= 8 && b.length >= 8 =>
-            val delta = a.zip(b).map { case (x, y) => x - y }
-            val total = delta.take(8).sum
-            val idle = delta(3) + delta(4)
-            val steal = delta(7)
-            Some((total, idle, steal))
-          case _ => None
-        }
-      }
-      if (ds.isEmpty) None
-      else Some((ds.map(_._1).sum, ds.map(_._2).sum, ds.map(_._3).sum))
-    }
-    val armStats = agg(before.keySet.intersect(armCpus))
-    val offStats = agg(before.keySet.diff(armCpus))
-    val steal = armStats.collect { case (t, _, s) if t > 0 => s.toDouble / t }
-    val offBusy = offStats.collect { case (t, i, _) if t > 0 =>
-      (t - i).toDouble / t }
+    val steal = jiffyDelta(before, after, before.keySet.intersect(armCpus))
+      .collect { case (t, _, s) if t > 0 => s.toDouble / t }
+    val offBusy = jiffyDelta(before, after, before.keySet.diff(armCpus))
+      .collect { case (t, i, _) if t > 0 => (t - i).toDouble / t }
     (steal, offBusy)
   }
 
@@ -217,13 +222,13 @@ object Bench {
   val MinRounds = 2
   val MaxRounds = 6
 
-  /** Wall-clock budget for the whole adaptive-arms phase, seconds
-    * (override: SPARK_GRAFT_SCALING_BUDGET_SEC). The adaptive widening is
-    * open-ended by design — a noisy box keeps earning rounds — but each
-    * round costs minutes (a pinned 1-core child pays Spark startup + 3
-    * timed runs at 1 core), so an hour-long bench is possible exactly when
-    * the environment is too noisy for the extra rounds to help (measured:
-    * a driver-adjacent box burned 51 min of rounds without corroborating).
+  /** Wall-clock budget for the whole adaptive-arms phase, seconds. The
+    * adaptive widening is open-ended by design — a noisy box keeps
+    * earning rounds — but each round costs minutes (a pinned 1-core child
+    * pays Spark startup + 3 timed runs at 1 core), so an hour-long bench
+    * is possible exactly when the environment is too noisy for the extra
+    * rounds to help (measured: a driver-adjacent box burned 51 min of
+    * rounds without corroborating).
     * When the budget is hit, sampling STOPS and the record adjudicates
     * from what was collected — an uncorroborated minimum then marks the
     * record invalid with the stated reason, which is the honest outcome:
@@ -231,9 +236,7 @@ object Bench {
     * other headline rows still land inside the driver's round budget.
     * Round 1 always completes (no samples at all is strictly worse).
     */
-  def ArmsBudgetSec: Double =
-    sys.env.get("SPARK_GRAFT_SCALING_BUDGET_SEC").map(_.toDouble)
-      .getOrElse(1500.0)
+  val ArmsBudgetSec = 1500.0
 
   /** A chosen arm minimum must be CORROBORATED: a second quiet run of the
     * same arm within this fraction of it. /proc/stat steal + off-arm busy
@@ -509,13 +512,8 @@ object Bench {
     // reason. Noisy samples stay in the record (visibly "quiet": false)
     // but only elect when an arm caught no quiet window at all — also
     // invalid downstream.
-    val best = armCores.map { c =>
-      val armRuns = samples.filter(s => s.cores == c && s.sec.isDefined)
-      val pool = if (armRuns.exists(_.quiet)) armRuns.filter(_.quiet)
-        else armRuns
-      corroboratedMin(samples.toSeq, c)
-        .orElse(if (pool.nonEmpty) Some(pool.map(_.sec.get).min) else None)
-    }
+    val best = armCores.map(c =>
+      corroboratedMin(samples.toSeq, c).orElse(quietMin(c)))
     if (best.forall(_.isDefined)) (best.map(_.get), true, samples.toSeq)
     else (armCores.map(c => ScalingBench.arm(c, n)), false, samples.toSeq)
   }
@@ -668,23 +666,11 @@ object Bench {
   def benchNoise(before: Option[Map[Int, Array[Long]]],
       after: Option[Map[Int, Array[Long]]], ownCpu0: Long, ownCpu1: Long,
       wallSec: Double): BenchNoise = {
-    val (steal, busy) = (before, after) match {
-      case (Some(b), Some(a)) =>
-        val cpus = b.keySet.intersect(a.keySet)
-        val ds = cpus.toSeq.flatMap { c =>
-          val (x, y) = (a(c), b(c))
-          if (x.length >= 8 && y.length >= 8) {
-            val d = x.zip(y).map { case (p, q) => p - q }
-            Some((d.take(8).sum, d(3) + d(4), d(7)))
-          } else None
-        }
-        val total = ds.map(_._1).sum
-        if (total > 0)
-          (Some(ds.map(_._3).sum.toDouble / total),
-            Some((total - ds.map(_._2).sum).toDouble / total))
-        else (None, None)
-      case _ => (None, None)
-    }
+    val (steal, busy) = (for {
+      b <- before; a <- after
+      (t, i, st) <- jiffyDelta(b, a, b.keySet) if t > 0
+    } yield (Some(st.toDouble / t), Some((t - i).toDouble / t)))
+      .getOrElse((None, None))
     val nCpus = Runtime.getRuntime.availableProcessors
     val ownFrac =
       if (ownCpu0 >= 0 && ownCpu1 >= 0 && wallSec > 0)
@@ -706,14 +692,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val frontierN = sys.env.getOrElse("SPARK_GRAFT_FRONTIER_N", "8000000").toLong
     val spark = session(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // frontier headline FIRST (throughput metric, north rule) — measured
-    // on a clean heap, before the query suite fragments it. Forced through
-    // the noop sink (full plan incl. politeness windows — no count() pruning).
+    // on a clean heap, before the query suite fragments it. Each run is a
+    // fresh store, so every run does the same work.
     //
     // Warmup at FULL size: the first full-size execution pays JVM heap
     // growth + JIT and measures up to 7× steady state (round-1 driver
@@ -723,53 +707,14 @@ object Bench {
     val noiseT0 = System.nanoTime()
     val noiseJiffies0 = readCpuJiffies()
     val noiseOwn0 = ownCpuNanos
-    force(frontierJob(spark, frontierN)) // warmup: heap growth + codegen + JIT
-    spark.catalog.clearCache() // drop warmup persists — no cross-run reuse
-    val (run1Rows, run1Sec) = timed(force(frontierJob(spark, frontierN)))
-    spark.catalog.clearCache()
-    val (_, run2Sec) = timed(force(frontierJob(spark, frontierN)))
-    spark.catalog.clearCache()
-    val (frontierRows, frontierSec) = (run1Rows, math.min(run1Sec, run2Sec))
-    val urlsPerSec = (frontierN / frontierSec).toLong
-
-    // per-stage attribution (VERDICT r1 #1): absolute time of each prefix
-    // sub-plan at the same n, JIT-warm, so a slow environment shows WHERE.
-    // Stages overlap by construction (each includes its predecessors).
-    // Each stage is warmed once then timed once (same full-size-warmup
-    // rule as above); the generator inputs are NOT persisted here so
-    // gen_canonicalize shows the real per-pass cost and the later stages
-    // show theirs on top of a persisted input (matching frontierJob).
-    val stages = scala.collection.mutable.LinkedHashMap[String, Double]()
-    locally {
-      def candGen = candidateUrls(spark, frontierN)
-      def seenGen = seenUrls(spark, frontierN)
-      def stage(name: String)(df: => DataFrame): Unit = {
-        force(df) // warm
-        stages(name) = timed(force(df))._2
-        spark.catalog.clearCache()
-      }
-      stage("gen_canonicalize")(candGen)
-      stage("bloom_build")(graft.seen.UrlSeen.buildSegments(
-        seenGen, "canonical_url", 32, math.max(1000L, frontierN / 32), 1e-6))
-      locally {
-        val cand = candGen.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val seen = seenGen.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        stage("dedup_exact")(graft.seen.UrlSeen.filterUnseen(
-          cand, graft.seen.UrlSeen.buildSegments(seen, "canonical_url", 32,
-            math.max(1000L, frontierN / 32), 1e-6),
-          seen, "canonical_url", 32))
-        // the 10^10-scale probe (segments too big to broadcast) timed at
-        // the same n: per-task segment streams + zipPartitions probe +
-        // confirm join — the path VERDICT r1 #2 asked to exist in code
-        stage("dedup_copart")(graft.seen.UrlSeen.filterUnseen(
-          cand, graft.seen.UrlSeen.buildSegments(seen, "canonical_url", 32,
-            math.max(1000L, frontierN / 32), 1e-6),
-          seen, "canonical_url", 32, maxBroadcastBytes = 0L))
-      }
-      stages("full_job_best") = frontierSec
-    }
+    val n = frontierN
+    val warmup = frontierTick(spark, n)
+    val (run1, run2) = (frontierTick(spark, n), frontierTick(spark, n))
+    val frontierOk = Seq(warmup, run1, run2).forall(_.ok)
+    val frontierSec = math.min(run1.sec, run2.sec)
+    // per-phase seconds arrive with the product's own phase telemetry
+    val stages = scala.collection.mutable.LinkedHashMap(
+      "full_job_best" -> frontierSec)
 
     // The shingle/minhash parquet cache is a one-time INDEX BUILD shared by
     // the whole near-dup family (4 consumers across 3 driver-independent
@@ -858,29 +803,16 @@ object Bench {
     // cores) — driver-reproducible in ONE run, but each arm in its OWN
     // child JVM, taskset-pinned to exactly its cores with proportional
     // heap (a 4N cluster brings 4N cores AND 4× the memory; pinning also
-    // sizes the child's GC/JIT thread pools to the arm, which a local[N]
-    // session in a 32-CPU JVM does not). In-process arms measured 0.32-
-    // 0.61 "efficiency" — not core scaling but this box's shared-DRAM/GC
-    // ceiling plus a suite-polluted heap; the pinned-JVM methodology is
-    // the honest single-box stand-in for executors that each bring their
-    // own DRAM (BENCH.md §2). Falls back to in-process arms (flagged
-    // "pinned":false) only if taskset or JVM spawn is unavailable.
-    // Arms: 1 vs 4 pinned cores — the N→4N pair that stays inside this
-    // box's linear-resource region. Measured ladder at n=8M (pinned,
-    // 2 GB/core min 4, best-of-3): 1 core 131k URLs/s, 2 → 117k/core,
-    // 4 → 122k/core, 8 → 77k/core, 16 → 49k/core: per-core throughput is
-    // FLAT through 4 cores, then the VM's shared DRAM/shuffle bandwidth
-    // (~0.8M URLs/s total) caps it — a ceiling real clusters don't share
-    // (every node brings its own DRAM and NVMe; shuffle here spills to
-    // tmpfs = the same DRAM). Efficiency is therefore measured where the
-    // box provides proportional resources, and the ceiling is disclosed
-    // in BENCH.md §2 with the full ladder.
-    // Arms at FULL n: at n/2 (a ~11 s four-core run) the fast arm's wall
-    // is ~25% fixed stage latency and efficiency reads 0.72 regardless of
-    // cores; the slow arm amortizes those costs by construction. A
-    // cluster-size claim needs both arms in the amortized regime.
+    // sizes the child's GC/JIT thread pools to the arm). In-process arms
+    // measured 0.32-0.61 "efficiency" — not core scaling but the box's
+    // shared-DRAM/GC ceiling plus a suite-polluted heap; the pinned-JVM
+    // methodology is the single-box stand-in for executors that each bring
+    // their own DRAM (BENCH.md §2). Falls back to in-process arms (flagged
+    // "pinned":false) only if taskset or JVM spawn is unavailable. Arms:
+    // 1 vs 4 pinned cores, both at the headline's full n, so both run in
+    // the regime where fixed per-job latency is amortized.
     spark.stop()
-    val scalingJson = scalingRecord(Seq(1, 4), frontierN)
+    val scalingJson = scalingRecord(Seq(1, 4), n)
 
     def jmap(m: scala.collection.Map[String, Option[Double]]): ObjectNode = {
       val o = Json.createObjectNode()
@@ -891,14 +823,17 @@ object Bench {
       case (k, v) => k -> Some(v) })
     val head = Json.createObjectNode().put("metric", "total")
     head.setAll[ObjectNode](headlineFields(results.toSeq))
+    // a headline tick that fails its check is a failure, not a sample
+    if (!frontierOk) head.withArray("failed").add("frontier_tick")
     head.put("unit", "sec").set[ObjectNode]("queries", jmap(results))
       .put("sf", sfDir)
     cpus.toIntOption.fold(head.put("cpus", cpus))(head.put("cpus", _))
-    head.put("frontier_n", frontierN)
-      .put("frontier_scheduled_rows", frontierRows)
-      .put("frontier_urls_per_sec", urlsPerSec)
-    head.putArray("frontier_runs_sec").add(dec(Some(run1Sec), 3))
-      .add(dec(Some(run2Sec), 3))
+    head.put("frontier_n", run1.rows)
+      .put("frontier_scheduled_rows", run1.newArticles)
+      .put("frontier_urls_per_sec", Option.when(frontierOk)(
+        java.lang.Long.valueOf((run1.rows / frontierSec).toLong)).orNull)
+    head.putArray("frontier_runs_sec").add(dec(Some(run1.sec), 3))
+      .add(dec(Some(run2.sec), 3))
     head.set[ObjectNode]("frontier_stages", secs(stages))
       .setAll[ObjectNode](recalls)
     head.set[ObjectNode]("bench_noise", suiteNoise.node)

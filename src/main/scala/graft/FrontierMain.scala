@@ -84,6 +84,11 @@ object FrontierMain {
     */
   val CodegenCacheEntries = 2000
 
+  /** Newest items each fixture source lists per tick (×SkewFactor for a
+    * mega source).
+    */
+  val ItemsPerSource = 30
+
   private def flag(args: Array[String], name: String): Option[String] =
     args.collectFirst {
       case a if a.startsWith(s"--$name=") => a.stripPrefix(s"--$name=")
@@ -249,7 +254,8 @@ object FrontierMain {
         if (df.columns.contains("tick"))
           df.filter(col("tick") === tick).drop("tick")
         else df
-      }.getOrElse(Fixtures.listItemsAt(spark, nSources, 30, tick).toDF())
+      }.getOrElse(Fixtures.listItemsAt(spark, nSources, ItemsPerSource, tick)
+        .toDF())
       val pages = pagesPath.map(spark.read.parquet(_))
         .getOrElse(Fixtures.pageStore(spark, nSources, maxTick = tick).toDF())
       val (m, nViolations) = FrontierMain.tick(spark, store, listings,

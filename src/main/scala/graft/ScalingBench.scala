@@ -2,18 +2,12 @@ package graft
 
 import com.fasterxml.jackson.databind.node.ObjectNode
 
-/** Scaling-efficiency evidence for the north rule ("throughput scaling
-  * efficiency ≥ 0.8 from N to 4N executors").
-  *
-  * No real cluster exists in this sandbox, so the two cluster sizes are
-  * evidenced as two parallelism levels of the SAME job on the SAME input:
-  * local[N] vs local[4N] (default 8 → 32), fresh SparkSession per arm,
-  * per-arm warmup run (codegen + JIT) before the timed run so JIT state
-  * does not favor the second arm.
-  *
-  *   efficiency = (throughput_4N / throughput_N) / 4
-  *
-  * Prints one JSON line; results are recorded in BENCH.md / BASELINE.md.
+/** One pinned scaling arm of [[Bench]] in its own JVM: `SPARK_GRAFT_ARM`
+  * cores time [[Bench.frontierTick]] at `SPARK_GRAFT_FRONTIER_N` after a
+  * full-size warmup, `SPARK_GRAFT_ARM_RUNS` times, each run bracketed by
+  * its own /proc/stat read over `SPARK_GRAFT_ARM_CPUSET`. Prints one
+  * `scaling_run` line per run, then one `scaling_arm` line with the best.
+  * [[Bench.runPinnedArms]] launches it and sets every variable.
   */
 object ScalingBench {
 
@@ -44,63 +38,39 @@ object ScalingBench {
     val spark = Bench.session(cpus.toString)
     spark.sparkContext.setLogLevel("WARN")
     // warmup at FULL size: the first full-size run pays heap expansion,
-    // page-fault and JIT-tier costs (measured 5× the steady state).
-    // Forced through the noop sink — a bare count() would let Catalyst
-    // prune the politeness windows and time a smaller job (Bench.force).
-    Bench.force(Bench.frontierJob(spark, frontierN))
-    spark.catalog.clearCache() // each timed run starts cold — no reuse
+    // page-fault and JIT-tier costs (measured 5× the steady state)
+    Bench.frontierTick(spark, frontierN)
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_ARM_RUNS", "3").toInt
     // Per-run noise bracketing (r4): each TIMED RUN reads /proc/stat
     // around itself and self-reports steal + off-arm busy fractions. The
-    // parent's whole-child bracket spans warmup + every run (~5 min on
-    // the 1-core arm) — one host burst anywhere in that window used to
-    // poison all of the child's runs; a ~70 s run-level bracket lets the
-    // quiet runs inside a partially-noisy child still count.
+    // parent's whole-child bracket spans warmup + every run, so one host
+    // burst anywhere in that window would poison all of the child's runs;
+    // a run-level bracket (set-up included) lets the quiet runs inside a
+    // partially-noisy child still count. A run whose commit fails the
+    // check is no sample: the arm fails.
     val armCpus = sys.env.get("SPARK_GRAFT_ARM_CPUSET").flatMap(parseCpuRange)
     val secs = (1 to nRuns).map { i =>
       val before = Bench.readCpuJiffies()
-      val (_, s) = Bench.timed(Bench.force(Bench.frontierJob(spark, frontierN)))
+      val run = Bench.frontierTick(spark, frontierN)
       val after = Bench.readCpuJiffies()
-      spark.catalog.clearCache()
+      require(run.ok, s"frontier tick at n=$frontierN failed its check")
       val (steal, offBusy) = (before, after, armCpus) match {
         case (Some(b), Some(a), Some(set)) => Bench.cpuNoise(b, a, set)
         case _ => (None, None)
       }
-      println(runLine(cpus, i, s, steal, offBusy))
-      s
+      println(runLine(cpus, i, run.sec, steal, offBusy))
+      run.sec
     }
     spark.stop()
     secs.min // best-of-n: drops residual JIT/GC noise
   }
 
   def main(args: Array[String]): Unit = {
-    val nSmall = sys.env.getOrElse("SPARK_GRAFT_SCALE_BASE_CPUS", "8").toInt
-    val nLarge = nSmall * 4
-    val frontierN = sys.env.getOrElse("SPARK_GRAFT_FRONTIER_N", "8000000").toLong
-
-    // single-arm mode: run one parallelism level in a dedicated JVM (the
-    // two-arm-in-one-JVM mode makes the second arm inherit the first's
-    // heap garbage; separate invocations measure clean)
-    sys.env.get("SPARK_GRAFT_ARM").foreach { a =>
-      val cpus = a.toInt
-      val sec = arm(cpus, frontierN)
-      println(line(_.put("metric", "scaling_arm").put("cpus", cpus)
-        .put("sec", Bench.dec(Some(sec), 2)).put("frontier_n", frontierN)
-        .put("urls_per_sec", (frontierN / sec).toLong)))
-      return
-    }
-
-    val tSmall = arm(nSmall, frontierN)
-    val tLarge = arm(nLarge, frontierN)
-    val thrSmall = frontierN / tSmall
-    val thrLarge = frontierN / tLarge
-    val efficiency = (thrLarge / thrSmall) / (nLarge.toDouble / nSmall)
-    println(line(_.put("metric", "scaling_efficiency")
-      .put("value", Bench.dec(Some(efficiency), 3)).put("unit", "ratio")
-      .put("frontier_n", frontierN).put("cpus_small", nSmall)
-      .put("cpus_large", nLarge).put("sec_small", Bench.dec(Some(tSmall), 2))
-      .put("sec_large", Bench.dec(Some(tLarge), 2))
-      .put("urls_per_sec_small", thrSmall.toLong)
-      .put("urls_per_sec_large", thrLarge.toLong)))
+    val cpus = sys.env("SPARK_GRAFT_ARM").toInt
+    val frontierN = Bench.frontierN
+    val sec = arm(cpus, frontierN)
+    println(line(_.put("metric", "scaling_arm").put("cpus", cpus)
+      .put("sec", Bench.dec(Some(sec), 2)).put("frontier_n", frontierN)
+      .put("urls_per_sec", (frontierN / sec).toLong)))
   }
 }

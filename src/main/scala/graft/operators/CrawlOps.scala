@@ -415,10 +415,8 @@ object CrawlOps {
   /** OPIC-style priority over a synthetic link graph derived from events
     * (211 parents × 631 children; a child's age/host are functions of its
     * number so the oracle re-derives them): one cash round + recency
-    * boost (Scheduler.opicPriority), ranked per host. The physical
-    * fetch-order layout (sortWithinPartitions) is exercised by
-    * Scheduler.scheduleByPriority in PolitenessSpec; the window rank here
-    * is the deterministic, oracle-comparable equivalent.
+    * boost (Scheduler.opicPriority), ranked per host by a window rank,
+    * which is deterministic and oracle-comparable.
     */
   def opicPriority(spark: SparkSession, sfDir: String): DataFrame = {
     val edges = spark.read.parquet(s"$sfDir/events.parquet")

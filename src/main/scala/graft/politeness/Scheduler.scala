@@ -296,19 +296,6 @@ object Scheduler {
     out
   }
 
-  /** Fetch order as physical layout, not a sorted Dataset: host-hash
-    * partitions with rows ordered (host, priority desc) WITHIN each
-    * partition — `sortWithinPartitions`, no global sort, no driver loop.
-    * Each task iterates its partition in-order = one polite,
-    * priority-ordered fetch stream per partition; a 1000-executor cluster
-    * runs 1000 such streams with zero coordination. Partition-local
-    * ordering is asserted in PolitenessSpec.
-    */
-  def scheduleByPriority(df: DataFrame, hostCol: String, priorityCol: String,
-      nPartitions: Int): DataFrame =
-    df.repartition(nPartitions, col(hostCol))
-      .sortWithinPartitions(col(hostCol), desc(priorityCol))
-
   /** Refresh/recrawl policy — the reference's cron-driven re-scan of known
     * pages, expressed as data: given the crawled-article history (must
     * carry canonical_url, source, fetch_epoch — the tick's emit schema /

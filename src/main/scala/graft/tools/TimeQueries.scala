@@ -13,7 +13,7 @@ object TimeQueries {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Bench.session(Bench.cpus)
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { n =>
       val fn = SparkEntry.queries(n)

@@ -180,4 +180,32 @@ class CrawlTickSpec extends SparkTestBase {
     val bad = emitted.filter(col("id") =!= md5(col("canonical_url"))).count()
     assert(bad === 0L)
   }
+
+  test("Bench.frontierTick commits exactly the reference simulator's emits") {
+    import spark.implicits._
+    val n = 500L
+    val nSources = Bench.sourcesFor(n)
+    var committed = Vector.empty[(String, String, Long, Long)]
+    val run = Bench.frontierTick(spark, n, store => committed =
+      store.articles(spark)
+        .select("canonical_url", "source", "fetch_epoch", "emit_idx")
+        .as[(String, String, Long, Long)].collect().sortBy(_._4).toVector)
+
+    val listings = Fixtures.listItemsAt(spark, nSources,
+      FrontierMain.ItemsPerSource, tick = 0).collect().toSeq
+    val sim = RefSimulator.run(listings, Fixtures.sourceSpecs(nSources),
+      Fixtures.urlSeenSeed(spark, nSources, Fixtures.DefaultPreSeen)
+        .collect().map(_.canonical_url).toSet,
+      Fixtures.robots(nSources),
+      Fixtures.pageStore(spark, nSources, maxTick = 0)
+        .collect().map(p => p.canonical_url -> p).toMap)
+
+    assert((0 until nSources).exists(Fixtures.isMega), "no mega source")
+    assert(run.ok)
+    assert(run.rows === listings.size.toLong)
+    assert(run.newArticles === sim.emits.size.toLong)
+    assert(committed === sim.emits.map(e =>
+      (e.canonicalUrl, e.source, e.fetchEpoch, e.emitIdx)))
+    assert(committed.nonEmpty)
+  }
 }

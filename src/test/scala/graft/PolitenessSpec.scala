@@ -66,31 +66,6 @@ class PolitenessSpec extends SparkTestBase {
       Scheduler.OpicSeedCash))) // dedup'd edge gets full cash; age 40 → no boost
   }
 
-  test("scheduleByPriority: every partition is (host, priority desc)-ordered") {
-    val df = (0 until 5000)
-      .map(i => (s"h${i % 57}.example.com", (i * 2654435761L) % 100000, s"u$i"))
-      .toDF("host", "priority", "url")
-    val laid = Scheduler.scheduleByPriority(df, "host", "priority", 8)
-    // partition-local contract: within each physical partition the rows
-    // iterate grouped by host with priority non-increasing inside a host
-    val violations = laid.select("host", "priority").as[(String, Long)].rdd
-      .mapPartitions { it =>
-        val rows = it.toVector
-        val bad = rows.sliding(2).count {
-          case Vector((h1, p1), (h2, p2)) => h1 == h2 && p2 > p1
-          case _ => false
-        }
-        // each host appears in exactly one contiguous block per partition
-        val blocks = rows.map(_._1).foldLeft(Vector.empty[String]) {
-          case (acc, h) if acc.lastOption.contains(h) => acc
-          case (acc, h) => acc :+ h
-        }
-        val rebroken = blocks.size != blocks.distinct.size
-        Iterator.single(bad + (if (rebroken) 1 else 0))
-      }.sum()
-    assert(violations === 0.0)
-  }
-
   test("parsed robots.txt rules drive the gate end to end") {
     import org.apache.spark.sql.functions.{coalesce, lit}
     val parsed = graft.operators.ScanOps.robotsParse(spark, sf())
