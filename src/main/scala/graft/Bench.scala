@@ -16,41 +16,17 @@ import graft.store.FrontierStore
   */
 object Bench {
 
-  def session(cpus: String): SparkSession = {
-    // Shuffle spill dir: prefer tmpfs — a real N-node cluster brings N
-    // NVMe devices, so per-node shuffle bandwidth scales with the cluster;
-    // a single shared /tmp disk would cap the large arm artificially.
-    // Capacity-guarded: a small /dev/shm (containers often mount 64 MB)
-    // passes the writable check but strangles shuffle writes.
-    val localDir = {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite && shm.getUsableSpace > (16L << 30)) {
-        val d = new java.io.File(shm, "graft-spark-local")
-        d.mkdirs(); d.getAbsolutePath
-      } else System.getProperty("java.io.tmpdir")
-    }
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", localDir)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        FrontierMain.CodegenCacheEntries.toLong)
-      .getOrCreate()
-  }
-
-  /** Local cores for a bench session: `SPARK_GRAFT_CPUS`, else this box's
-    * core count (the `local[*]` that `FrontierMain` runs).
+  /** The default `cores` of [[FrontierMain.session]], which every tool
+    * runs: `SPARK_GRAFT_CPUS`, else this box's core count (the `local[*]`
+    * that `FrontierMain` runs).
     */
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
     Runtime.getRuntime.availableProcessors.toString)
 
   /** Listing rows per headline tick: `SPARK_GRAFT_FRONTIER_N`, else 2 M —
-    * at 8 M a pinned 1-core arm child (warmup and 3 runs, each with its
-    * set-up) outlasts its 20-minute timeout (BENCH.md §1).
+    * at 8 M a pinned 1-core arm child (warmup and 3 runs) outlasted its
+    * 20-minute timeout while every run still rewrote its inputs (BENCH.md
+    * §1).
     */
   def frontierN: Long = sys.env.get("SPARK_GRAFT_FRONTIER_N").map(_.toLong)
     .getOrElse(2000000L)
@@ -72,36 +48,55 @@ object Bench {
   final case class TickRun(rows: Long, sec: Double, newArticles: Long,
       ok: Boolean)
 
-  /** The headline: one timed `FrontierMain.tick` (salted = false, as
-    * `FrontierMain.main` runs by default) over a fresh `FrontierStore`
-    * whose first tick lists about `n` rows of `FrontierMain.main`'s
-    * fixtures. Writing the inputs to parquet, `initSeen` and the check run
-    * outside the timed region: no committed URL may be in the seed or
-    * repeat. `inspect` sees the store before it and the inputs are deleted.
+  /** Parquet dirs of [[frontierTick]]'s inputs by `n`, each written once
+    * per JVM under one temp dir that is deleted when the JVM exits.
+    */
+  private val tickInputs = scala.collection.mutable.Map.empty[Long, String]
+  private lazy val tickInputsRoot = {
+    val d = java.nio.file.Files.createTempDirectory("graft-frontier-inputs")
+    sys.addShutdownHook(FileUtils.deleteQuietly(d.toFile))
+    d
+  }
+
+  /** The dir holding `listings`, `sources`, `robots`, `pages` and `seed` at
+    * `n`: `FrontierMain.main`'s fixtures for the sources whose first tick
+    * lists about `n` rows. Written on the first call for `n`.
+    */
+  private def tickInputsAt(spark: SparkSession, n: Long): String =
+    tickInputs.getOrElseUpdate(n, {
+      import spark.implicits._
+      val nSources = sourcesFor(n)
+      val dir = tickInputsRoot.resolve(s"n$n").toString
+      def write(name: String, df: DataFrame): Unit =
+        df.write.parquet(s"$dir/$name")
+      write("listings", Fixtures.listItemsAt(spark, nSources,
+        FrontierMain.ItemsPerSource, 0).toDF())
+      write("sources", Fixtures.sourceSpecs(nSources).toDF())
+      write("robots", Fixtures.robots(nSources).toDF())
+      write("pages", Fixtures.pageStore(spark, nSources).toDF())
+      write("seed", Fixtures.urlSeenSeed(spark, nSources,
+        Fixtures.DefaultPreSeen).toDF().select("canonical_url"))
+      dir
+    })
+
+  /** The headline: one timed `FrontierMain.tick` over a fresh
+    * `FrontierStore` whose first tick lists about `n` rows. Every run at
+    * `n` in one JVM reads the same input files ([[tickInputsAt]]) and gets
+    * its own store. `initSeen` and the check run outside the timed region:
+    * no committed URL may be in the seed or repeat. `inspect` sees the
+    * store before it is deleted.
     */
   def frontierTick(spark: SparkSession, n: Long,
       inspect: FrontierStore => Unit = _ => ()): TickRun = {
-    import spark.implicits._
-    val nSources = sourcesFor(n)
-    val dir = java.nio.file.Files.createTempDirectory("graft-frontier-tick")
-    def parquet(name: String, df: DataFrame): DataFrame = {
-      val path = dir.resolve(name).toString
-      df.write.parquet(path)
-      spark.read.parquet(path)
-    }
+    val in = tickInputsAt(spark, n)
+    def read(name: String): DataFrame = spark.read.parquet(s"$in/$name")
+    val dir = java.nio.file.Files.createTempDirectory("graft-frontier-store")
     try {
-      val store = new FrontierStore(dir.resolve("store").toString)
-      val listings = parquet("listings",
-        Fixtures.listItemsAt(spark, nSources, FrontierMain.ItemsPerSource, 0)
-          .toDF())
-      val sources = parquet("sources", Fixtures.sourceSpecs(nSources).toDF())
-      val robots = parquet("robots", Fixtures.robots(nSources).toDF())
-      val pages = parquet("pages", Fixtures.pageStore(spark, nSources).toDF())
-      val seed = parquet("seed", Fixtures.urlSeenSeed(spark, nSources,
-        Fixtures.DefaultPreSeen).toDF().select("canonical_url"))
+      val store = new FrontierStore(dir.toString)
+      val (listings, seed) = (read("listings"), read("seed"))
       store.initSeen(spark, seed)
       val ((m, _), sec) = timed(FrontierMain.tick(spark, store, listings,
-        sources, robots, pages, 0L, salted = false, images = None))
+        read("sources"), read("robots"), read("pages"), 0L, images = None))
       val ok = m.articlesPath.fold(m.newArticles == 0L) { _ =>
         val urls = store.articles(spark).select("canonical_url")
         val r = urls.agg(count(lit(1)), countDistinct("canonical_url")).head()
@@ -118,40 +113,41 @@ object Bench {
   /** Noise bounds that adjudicate a scaling sample's validity (r3 verdict
     * #1: the record must carry its own noise evidence — BENCH_r03.json's
     * superlinear 1.029 had nothing in the artifact marking it invalid).
-    * A sample is QUIET when, across the child's full lifetime:
-    *  - steal time on the arm's pinned CPUs ≤ 5% (hypervisor preemption —
-    *    the external-VM noise that inflated whole afternoons of samples);
-    *  - busy fraction on the NON-arm CPUs ≤ 25% (foreign load inside the
-    *    VM; the parent JVM just waits on the child, so a quiet box reads
-    *    a few percent here).
+    * A timed run is QUIET when, over every cpu of the box:
+    *  - steal time ≤ 5% (hypervisor preemption — the external-VM noise
+    *    that inflated whole afternoons of samples);
+    *  - busy time minus the child JVM's own cpu time ≤ 10% (foreign load
+    *    inside the VM; the parent JVM just waits on the child). This is
+    *    [[benchNoise]]'s measure and tickbench's quiet bound, and it holds
+    *    an arm that pins every cpu of the box too.
     */
   val MaxStealFrac = 0.05
-  val MaxOffarmBusyFrac = 0.25
+  val MaxExternalBusyFrac = 0.10
 
-  /** One timed scaling run: seconds plus the /proc/stat noise evidence
-    * bracketing it. Since r4 the bracket is PER RUN, read by the child JVM
+  /** One timed scaling run: seconds plus the noise evidence bracketing it
+    * ([[armNoise]]). Since r4 the bracket is PER RUN, read by the child JVM
     * around each timed execution (ScalingBench.arm) — the parent's
     * whole-child-lifetime bracket (warmup + all runs, ~5 min on the 1-core
     * arm) let a single host burst poison every run in the child. `run` 0 =
-    * whole-child fallback sample (child emitted no per-run telemetry).
-    * `sec` None = the child failed or timed out; noise fields None =
-    * /proc/stat unreadable.
+    * a child that printed no per-run line (it failed first), with no noise
+    * evidence. `sec` None = the child failed or timed out; noise fields
+    * None = /proc/stat unreadable.
     */
   final case class ArmSample(cores: Int, round: Int, run: Int,
       sec: Option[Double],
-      stealFrac: Option[Double], offBusyFrac: Option[Double]) {
+      stealFrac: Option[Double], externalBusyFrac: Option[Double]) {
     // A sample with NO noise evidence (both fields None — /proc/stat
     // unreadable) is NOT quiet: quiet is a positive claim the record uses
     // to elect and corroborate minima, and absence of evidence must mark
     // the record invalid (same rule as the unpinned fallback), not launder
     // it into a "valid" verdict.
     def quiet: Boolean = stealFrac.exists(_ <= MaxStealFrac) &&
-      offBusyFrac.exists(_ <= MaxOffarmBusyFrac)
+      externalBusyFrac.exists(_ <= MaxExternalBusyFrac)
     def node: ObjectNode = Json.createObjectNode()
       .put("cores", cores).put("round", round).put("run", run)
       .put("sec", dec(sec.map(s => (s * 1000).round / 1000.0), 4))
       .put("steal_frac", dec(stealFrac, 4))
-      .put("offarm_busy_frac", dec(offBusyFrac, 4))
+      .put("external_busy_frac", dec(externalBusyFrac, 4))
       .put("quiet", quiet)
     def json: String = Json.writeValueAsString(node)
   }
@@ -191,23 +187,11 @@ object Bench {
     else Some((ds.map(_._1).sum, ds.map(_._2).sum, ds.map(_._3).sum))
   }
 
-  /** (stealFrac over `armCpus`, busyFrac over the complement) between two
-    * /proc/stat snapshots. busy = total − idle − iowait; steal = field 7.
-    */
-  def cpuNoise(before: Map[Int, Array[Long]], after: Map[Int, Array[Long]],
-      armCpus: Set[Int]): (Option[Double], Option[Double]) = {
-    val steal = jiffyDelta(before, after, before.keySet.intersect(armCpus))
-      .collect { case (t, _, s) if t > 0 => s.toDouble / t }
-    val offBusy = jiffyDelta(before, after, before.keySet.diff(armCpus))
-      .collect { case (t, i, _) if t > 0 => (t - i).toDouble / t }
-    (steal, offBusy)
-  }
-
   /** Runs each scaling arm in a dedicated child JVM pinned to its cores
     * (`taskset -c (top range)`) with proportional heap, reusing this JVM's
     * classpath and --add-opens flags; the child runs
     * [[ScalingBench]] in single-arm mode (full-size warmup + 3 timed runs,
-    * each run bracketed by its OWN /proc/stat noise read) and prints one
+    * each run bracketed by its OWN noise read) and prints one
     * JSON line per run. Arms interleave across rounds and each keeps its
     * quiet minimum. Rounds are ADAPTIVE (r4): at least [[MinRounds]], and
     * sampling stops early once every arm's quiet minimum is corroborated
@@ -239,10 +223,10 @@ object Bench {
   val ArmsBudgetSec = 1500.0
 
   /** A chosen arm minimum must be CORROBORATED: a second quiet run of the
-    * same arm within this fraction of it. /proc/stat steal + off-arm busy
+    * same arm within this fraction of it. /proc/stat steal and busy time
     * cannot see memory-bandwidth contention (measured: a concurrent 4-core
-    * Spark job on this 32-cpu box kept off-arm busy at 7–18% — under the
-    * 25% bound — while inflating the pinned 4-core arm 4–20×, yielding a
+    * Spark job on a 32-cpu box kept the cpus outside the arm 7–18% busy
+    * while inflating the pinned 4-core arm 4–20×, yielding a
     * "quiet"-labeled efficiency of 0.243), but genuinely quiet runs repeat
     * within ±3% on this host, so dispersion IS the contention signal: an
     * arm whose quiet runs disagree by more than this tolerance was not
@@ -313,10 +297,10 @@ object Bench {
       quietPool(samples, c).sortBy(_.sec.get).headOption match {
         case Some(s) if !s.quiet =>
           def f2(o: Option[Double]) = o.map(v => f"$v%.3f").getOrElse("n/a")
-          reasons += (if (s.stealFrac.isEmpty && s.offBusyFrac.isEmpty)
+          reasons += (if (s.stealFrac.isEmpty && s.externalBusyFrac.isEmpty)
             s"best $c-core sample carries no noise evidence (/proc/stat unreadable)"
           else s"best $c-core sample under host noise (steal=" +
-            s"${f2(s.stealFrac)}, offarm_busy=${f2(s.offBusyFrac)})")
+            s"${f2(s.stealFrac)}, external_busy=${f2(s.externalBusyFrac)})")
         case Some(_) if !corroborated(samples, c) =>
           reasons += s"uncorroborated $c-core minimum: no quiet run both " +
             s"corroborated within ${(CorroborationTol * 100).toInt}% and " +
@@ -343,8 +327,8 @@ object Bench {
     }.filter(_.path("metric").asText == metric).toSeq
 
   /** The child's per-run telemetry lines → one sample per timed run.
-    * Callers fall back to a single whole-child sample (run 0) carrying the
-    * parent-side bracket when the child printed no per-run lines.
+    * Callers fall back to a single sample (run 0) with no noise evidence
+    * when the child printed no per-run lines.
     */
   def parseRuns(out: String, cores: Int, round: Int): Seq[ArmSample] =
     metricLines(out, "scaling_run")
@@ -353,7 +337,7 @@ object Bench {
       .map { t =>
         def d(key: String) = Some(t.path(key)).filter(_.isNumber).map(_.asDouble)
         ArmSample(cores, round, t.path("run").asInt, d("sec"), d("steal_frac"),
-          d("offarm_busy_frac"))
+          d("external_busy_frac"))
       }
 
   def runPinnedArms(armCores: Seq[Int], n: Long)
@@ -403,9 +387,6 @@ object Bench {
         // in-child runs × 2..6 adaptive rounds = 6-30 timed runs per arm.
         val armRuns = if (cores == armCores.max) 5 else 3
         pb.environment().put("SPARK_GRAFT_ARM_RUNS", armRuns.toString)
-        // the child brackets each timed run with /proc/stat reads over
-        // exactly these cpus (it cannot derive them under taskset)
-        pb.environment().put("SPARK_GRAFT_ARM_CPUSET", cpuRange)
         pb.redirectErrorStream(true)
         // output to a file, not a pipe: a hung child must be killable by
         // waitFor(timeout) without this thread blocking in readAllBytes
@@ -439,7 +420,7 @@ object Bench {
     // wall-clock window — and each arm keeps its best quiet run:
     // one-sided noise only ever inflates a run, so per-arm minima
     // converge on true capability. Each timed run self-brackets with
-    // /proc/stat inside the child (run-level resolution); the noise
+    // its noise read inside the child (run-level resolution); the noise
     // evidence rides into the bench JSON so a run taken under a burst is
     // VISIBLY noisy in the record. Rounds adapt to the box: stop after
     // round ≥ MinRounds once every arm's quiet minimum is CORROBORATED
@@ -448,7 +429,6 @@ object Bench {
     // is physical (≤ 1.0 — superlinear means the small arm's quiet
     // minimum is still inflated); otherwise keep widening the window up
     // to MaxRounds.
-    val nCpusTotal = Runtime.getRuntime.availableProcessors
     val samples = scala.collection.mutable.ArrayBuffer[ArmSample]()
     def quietMin(cores: Int): Option[Double] = {
       val pool = quietPool(samples.toSeq, cores)
@@ -464,21 +444,10 @@ object Bench {
       armCores.foreach { cores =>
         // round 1 always runs both arms; later spawns respect the budget
         if (round == 1 || phaseElapsed < ArmsBudgetSec) {
-          val armSet = ((nCpusTotal - cores) until nCpusTotal).toSet
-          val before = readCpuJiffies()
           val (sec, out) = childArm(cores)
-          val after = readCpuJiffies()
           val perRun = parseRuns(out, cores, round)
           if (perRun.nonEmpty) samples ++= perRun
-          else {
-            // whole-child fallback bracket (old-protocol child or unparsable
-            // output): one sample, run 0, parent-side noise
-            val (steal, offBusy) = (before, after) match {
-              case (Some(b), Some(a)) => cpuNoise(b, a, armSet)
-              case _ => (None, None)
-            }
-            samples += ArmSample(cores, round, 0, sec, steal, offBusy)
-          }
+          else samples += ArmSample(cores, round, 0, sec, None, None)
           System.err.println(f"[bench] arms round $round cpus=$cores " +
             f"best=${sec.getOrElse(-1.0)}%.2fs elapsed=${phaseElapsed}%.0fs")
         } else budgetHit = true
@@ -560,7 +529,7 @@ object Bench {
       .put("invalid_reason",
         if (scalingValid) null else reasons.mkString("; "))
     o.putObject("noise_bounds").put("max_steal_frac", MaxStealFrac)
-      .put("max_offarm_busy_frac", MaxOffarmBusyFrac)
+      .put("max_external_busy_frac", MaxExternalBusyFrac)
     val samples = o.putArray("samples")
     armSamples.foreach(s => samples.add(s.node))
     Json.writeValueAsString(o)
@@ -657,7 +626,7 @@ object Bench {
     def json: String = Json.writeValueAsString(node)
   }
 
-  private def ownCpuNanos: Long =
+  private[graft] def ownCpuNanos: Long =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
       case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
       case _ => -1L
@@ -679,6 +648,19 @@ object Bench {
     BenchNoise(wallSec, steal, busy, ownFrac)
   }
 
+  /** [[benchNoise]] for a run of a taskset-pinned JVM. There
+    * `availableProcessors` counts only the pinned cpus, so this JVM's cpu
+    * time is re-based on every cpu /proc/stat reads, the base of the busy
+    * fraction it is subtracted from.
+    */
+  def armNoise(before: Option[Map[Int, Array[Long]]],
+      after: Option[Map[Int, Array[Long]]], ownCpu0: Long, ownCpu1: Long,
+      wallSec: Double): BenchNoise = {
+    val n = benchNoise(before, after, ownCpu0, ownCpu1, wallSec)
+    before.map(_.size).filter(_ > 0).fold(n)(all => n.copy(ownCpuFrac =
+      n.ownCpuFrac * Runtime.getRuntime.availableProcessors / all))
+  }
+
   /** Force full materialization through the noop sink: a bare count()
     * lets Catalyst prune unreferenced projections AND the final politeness
     * windows — it would time a smaller job than the one claimed.
@@ -692,7 +674,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session(cpus)
+    val spark = FrontierMain.session()
     spark.sparkContext.setLogLevel("WARN")
 
     // frontier headline FIRST (throughput metric, north rule) — measured

@@ -17,7 +17,7 @@ import graft.store.FrontierStore
   * {{{
   * spark-submit --class graft.FrontierMain \
   *   target/scala-2.13/newscrawlerspark_2.13-0.1.0.jar \
-  *   <storeDir> [nSources] [nTicks] [--salted] [--compact-every=K] \
+  *   <storeDir> [nSources] [nTicks] [--compact-every=K] \
   *   [--listings=<parquet>] [--pages=<parquet>] [--sources=<parquet>] \
   *   [--robots=<parquet>] \
   *   [--recrawl-every=K] [--refresh-interval=N] \
@@ -89,6 +89,26 @@ object FrontierMain {
     */
   val ItemsPerSource = 30
 
+  /** The one session every entry point runs: UTC, the codegen cache above,
+    * the graft SQL functions registered, and `local[cores]` only when no
+    * `spark.master` is set (spark-submit sets it; a bare launch such as sbt
+    * `runMain` does not, and `getOrCreate()` without a master throws).
+    * Everything else is Spark's default, as in production. `cores`
+    * defaults to [[Bench.cpus]]; `main` passes `*`, a scaling arm its pin.
+    */
+  def session(cores: String = Bench.cpus): SparkSession = {
+    val builder = SparkSession.builder()
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+    val spark = (if (sys.props.get("spark.master").isEmpty)
+        builder.master(s"local[$cores]") else builder)
+      .getOrCreate()
+    // SQL names for the native expressions, same set the
+    // spark.sql.extensions hook injects (idempotent if both run)
+    graft.functions.GraftFunctions.registerAll(spark)
+    spark
+  }
+
   private def flag(args: Array[String], name: String): Option[String] =
     args.collectFirst {
       case a if a.startsWith(s"--$name=") => a.stripPrefix(s"--$name=")
@@ -139,19 +159,21 @@ object FrontierMain {
   private def nextEpoch(store: FrontierStore): Long =
     store.latest().fold(0L)(m => (m.fetchEpoch + 1).max(0L))
 
-  /** One tick: the seen probe over the store's blooms → `runTick` → with
-    * `images`, the caption-invariant gate → `commit` → release. Returns
-    * the manifest and, with `images`, the count of rows the gate dropped.
+  /** One tick: the seen probe over the store's blooms → `runTick` with the
+    * plain host rank → with `images`, the caption-invariant gate →
+    * `commit` → release. Returns the manifest and, with `images`, the count
+    * of rows the gate dropped. The salted rank gives the same output
+    * (PolitenessSpec) but read 4–8% slower on the fixture's mega source
+    * (BASELINE.md), so salting waits for a measured-skew choice.
     */
   def tick(spark: SparkSession, store: FrontierStore, listings: DataFrame,
       sources: DataFrame, robots: DataFrame, pages: DataFrame,
-      fetchEpoch: Long, salted: Boolean, images: Option[DataFrame],
+      fetchEpoch: Long, images: Option[DataFrame],
       stream: Option[(String, Long)] = None)
       : (FrontierStore.Manifest, Option[Long]) = {
     val probe = SeenProbe.BloomConfirm(
       store.segments(spark), store.seen(spark), store.nSegments)
-    val t = CrawlTick.runTick(spark, listings, sources, probe,
-      robots, pages, salted)
+    val t = CrawlTick.runTick(spark, listings, sources, probe, robots, pages)
     // per-row invariant enforcement AT the sink (north rule: pairs are
     // written WITH the invariant): caption equality vs the image table;
     // violating rows are excluded from the commit and counted. The PSNR
@@ -178,8 +200,8 @@ object FrontierMain {
     * store's next fetch epoch: streamed and batch ticks share one epoch
     * sequence and one seen set. Each snapshot records the query id and
     * batch id, and a batch the store already holds for this query (a
-    * replay after a restart) is skipped. Every batch runs the unsalted
-    * rank. The store must hold its seen seed (`initSeen`) first.
+    * replay after a restart) is skipped. The store must hold its seen seed
+    * (`initSeen`) first.
     */
   def streamTicks(listings: DataFrame, store: FrontierStore,
       sources: DataFrame, robots: DataFrame, pages: DataFrame,
@@ -192,7 +214,7 @@ object FrontierMain {
         val queryId = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
         if (!store.lastStreamBatch(queryId).exists(_ >= batchId))
           tick(spark, store, batch, sources, robots, pages, nextEpoch(store),
-            salted = false, images = None, stream = Some(queryId -> batchId))
+            images = None, stream = Some(queryId -> batchId))
         ()
       }
       .start()
@@ -202,7 +224,6 @@ object FrontierMain {
     val storeDir = pos.headOption.getOrElse("target/frontier-store")
     val nSources = pos.lift(1).map(_.toInt).getOrElse(20)
     val nTicks = pos.lift(2).map(_.toInt).getOrElse(2)
-    val salted = args.contains("--salted")
     val compactEvery = flag(args, "compact-every").map(_.toInt).getOrElse(0)
     val recrawlEvery = flag(args, "recrawl-every").map(_.toInt).getOrElse(0)
     val refreshInterval = flag(args, "refresh-interval").map(_.toLong)
@@ -217,19 +238,8 @@ object FrontierMain {
     val sourcesPath = flag(args, "sources")
     val robotsPath = flag(args, "robots")
 
-    // spark-submit injects the master; set it explicitly for bare launches
-    // (sbt runMain) — getOrCreate() without any master throws (ADVICE r2)
-    val builder = SparkSession.builder()
-      .appName("graft-frontier")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
-    val spark = (if (sys.props.get("spark.master").isEmpty)
-        builder.master("local[*]") else builder)
-      .getOrCreate()
+    val spark = session("*")
     spark.sparkContext.setLogLevel("WARN")
-    // SQL names for the native expressions, same set the
-    // spark.sql.extensions hook injects (idempotent if both run)
-    graft.functions.GraftFunctions.registerAll(spark)
     import spark.implicits._
 
     val store = new FrontierStore(storeDir).init()
@@ -259,7 +269,7 @@ object FrontierMain {
       val pages = pagesPath.map(spark.read.parquet(_))
         .getOrElse(Fixtures.pageStore(spark, nSources, maxTick = tick).toDF())
       val (m, nViolations) = FrontierMain.tick(spark, store, listings,
-        sources, robots, pages, tick.toLong, salted, images)
+        sources, robots, pages, tick.toLong, images)
       val sec = (System.nanoTime() - t0) / 1e9
       println(tickLine(tick, m, nViolations, sec))
       if (recrawlEvery > 0 && (tick + 1) % recrawlEvery == 0) {

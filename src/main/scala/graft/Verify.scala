@@ -1,22 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** The oracle map as one JSON object, written by Jackson: every quote,
+    * backslash and control character in the SQL is escaped, so the
+    * oracle compare's `json.load` (`tools/compare_oracle.py`) reads back
+    * the same strings.
+    */
+  def oracleJson(sql: Seq[(String, String)]): String = {
+    val o = Bench.Json.createObjectNode()
+    sql.foreach { case (k, v) => o.put(k, v) }
+    Bench.Json.writeValueAsString(o)
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = FrontierMain.session()
     spark.sparkContext.setLogLevel("WARN")
-    // SQL surface active on the driver path too (spark-submit jobs get it
-    // via --conf spark.sql.extensions=graft.plans.GraftExtensions)
-    graft.functions.GraftFunctions.registerAll(spark)
     new java.io.File(outDir).mkdirs()
 
     // Fixture dump for the fixture-backed oracles (q_crawl_tick,
@@ -64,21 +66,8 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(e => selected(e._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql.filter(e => selected(e._1)).toSeq))
     spark.stop()
   }
 }

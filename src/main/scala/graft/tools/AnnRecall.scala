@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.FrontierMain
 import graft.operators.TrainingOps
 
 /** Standalone ANN recall measurement: the LSH and image Hamming
@@ -15,12 +14,7 @@ import graft.operators.TrainingOps
 object AnnRecall {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = FrontierMain.session()
     spark.sparkContext.setLogLevel("WARN")
     TrainingOps.lshRecallCurve(spark, sfDir).foreach { case (p, r, c) =>
       println(f"lsh probes=$p recall@10=$r%.3f candidates=$c")

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.{Bench, FrontierMain}
 import graft.model.Fixtures
 
 /** Dumps the deterministic crawl fixtures as parquet so the generic
@@ -21,12 +21,7 @@ object DumpFixtures {
     val out = args.headOption.getOrElse("/tmp/fm-inputs")
     val nSources = args.lift(1).map(_.toInt).getOrElse(12)
     val nTicks = args.lift(2).map(_.toInt).getOrElse(4)
-    val spark = SparkSession.builder()
-      .master(sys.props.getOrElse("spark.master", "local[4]"))
-      .appName("graft-dump-fixtures")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = FrontierMain.session()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -41,7 +36,8 @@ object DumpFixtures {
       .write.mode("overwrite").parquet(s"$out/sources")
     Fixtures.robots(nSources).toDF()
       .write.mode("overwrite").parquet(s"$out/robots")
-    println(s"""{"dumped":"$out","sources":$nSources,"ticks":$nTicks}""")
+    println(Bench.Json.writeValueAsString(Bench.Json.createObjectNode()
+      .put("dumped", out).put("sources", nSources).put("ticks", nTicks)))
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.FrontierMain
 
 /** Plan-inspection runner: `runMain graft.tools.Explain <queryName> [sfDir]`
   * prints the formatted physical plan + a 5-row sample — the feedback loop
@@ -10,12 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q_dedup_bootstrap")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = FrontierMain.session()
     spark.sparkContext.setLogLevel("ERROR")
     val df = graft.SparkEntry.queries(name)(spark, sfDir)
     df.explain("formatted")

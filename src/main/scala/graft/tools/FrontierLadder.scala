@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.Bench
+import graft.{Bench, FrontierMain}
 
 /** Frontier SIZE ladder: the headline tick ([[Bench.frontierTick]]) at
   * growing n (listing rows per tick) on FIXED resources — the linearity
@@ -17,7 +17,7 @@ object FrontierLadder {
   def main(args: Array[String]): Unit = {
     val ns = if (args.nonEmpty) args.map(_.toLong).toSeq
       else Seq(250000L, 500000L, 1000000L, 2000000L)
-    val spark = Bench.session(Bench.cpus)
+    val spark = FrontierMain.session()
     spark.sparkContext.setLogLevel("WARN")
     // one full-size warmup at the LARGEST rung: heap growth + JIT paid
     // once, so every rung measures steady state (BENCH.md §1 discipline)

@@ -1,10 +1,10 @@
 package graft.tools
 
-import graft.{Bench, SparkEntry}
+import graft.{Bench, FrontierMain, SparkEntry}
 
-/** Times a named subset of SparkEntry.queries (all, if none given) at the
-  * Bench session settings — the fast feedback loop for per-query tuning
-  * without paying the full frontier headline.
+/** Times a named subset of SparkEntry.queries (all, if none given) in
+  * the session every entry point runs — the fast feedback loop for
+  * per-query tuning without paying the full frontier headline.
   *
   * Usage: runMain graft.tools.TimeQueries <sfDir> [query ...]
   */
@@ -13,7 +13,7 @@ object TimeQueries {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = Bench.session(Bench.cpus)
+    val spark = FrontierMain.session()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { n =>
       val fn = SparkEntry.queries(n)

@@ -14,10 +14,10 @@ class ScalingTelemetrySpec extends AnyFunSuite {
 
   private val childOut =
     """26/08/18 some spark log noise
-      |{"metric":"scaling_run","cpus":1,"run":1,"sec":76.301,"steal_frac":0.0003,"offarm_busy_frac":0.0004}
+      |{"metric":"scaling_run","cpus":1,"run":1,"sec":76.301,"steal_frac":0.0003,"external_busy_frac":0.0004}
       |[scaling] prose line that must not confuse the parser
-      |{"metric":"scaling_run","cpus":1,"run":2,"sec":72.650,"steal_frac":0.0900,"offarm_busy_frac":0.0100}
-      |{"metric":"scaling_run","cpus":1,"run":3,"sec":71.980,"steal_frac":null,"offarm_busy_frac":null}
+      |{"metric":"scaling_run","cpus":1,"run":2,"sec":72.650,"steal_frac":0.0900,"external_busy_frac":0.0100}
+      |{"metric":"scaling_run","cpus":1,"run":3,"sec":71.980,"steal_frac":null,"external_busy_frac":null}
       |{"metric":"scaling_arm","cpus":1,"sec":71.98,"frontier_n":8000000,"urls_per_sec":111141}
       |""".stripMargin
 
@@ -26,7 +26,7 @@ class ScalingTelemetrySpec extends AnyFunSuite {
     assert(runs.map(_.run) === Seq(1, 2, 3))
     assert(runs.forall(s => s.cores == 1 && s.round == 2 && s.sec.isDefined))
     assert(runs(0).sec.get === 76.301 && runs(0).stealFrac === Some(0.0003))
-    assert(runs(2).stealFrac === None && runs(2).offBusyFrac === None)
+    assert(runs(2).stealFrac === None && runs(2).externalBusyFrac === None)
     // cross-arm leakage guard: asking for a different core count parses none
     assert(Bench.parseRuns(childOut, cores = 4, round = 1).isEmpty)
     // the legacy whole-child line alone yields no per-run samples → the
@@ -36,11 +36,11 @@ class ScalingTelemetrySpec extends AnyFunSuite {
   }
 
   test("quiet predicate enforces the published bounds, one-sided per field") {
-    def s(steal: Option[Double], off: Option[Double]) =
-      Bench.ArmSample(1, 1, 1, Some(10.0), steal, off)
-    assert(s(Some(Bench.MaxStealFrac), Some(Bench.MaxOffarmBusyFrac)).quiet)
+    def s(steal: Option[Double], external: Option[Double]) =
+      Bench.ArmSample(1, 1, 1, Some(10.0), steal, external)
+    assert(s(Some(Bench.MaxStealFrac), Some(Bench.MaxExternalBusyFrac)).quiet)
     assert(!s(Some(Bench.MaxStealFrac + 1e-4), Some(0.0)).quiet)
-    assert(!s(Some(0.0), Some(Bench.MaxOffarmBusyFrac + 1e-4)).quiet)
+    assert(!s(Some(0.0), Some(Bench.MaxExternalBusyFrac + 1e-4)).quiet)
     // missing evidence DISQUALIFIES the sample: quiet is a positive claim
     // used to elect + corroborate minima, and a pinned arm on a box with an
     // unreadable /proc/stat would otherwise self-adjudicate "valid" with
@@ -174,9 +174,44 @@ class ScalingTelemetrySpec extends AnyFunSuite {
       s"""{"metric":"scaling_run","cpus":${a.cores},"run":${a.run},""" +
         s""""sec":${a.sec.get},""" +
         s""""steal_frac":${a.stealFrac.map(_.toString).getOrElse("null")},""" +
-        s""""offarm_busy_frac":${a.offBusyFrac.map(_.toString).getOrElse("null")}}"""
+        s""""external_busy_frac":${a.externalBusyFrac.map(_.toString).getOrElse("null")}}"""
     }.mkString("\n")
     assert(Bench.parseRuns(rewired, 1, 3) === orig)
+  }
+
+  test("an arm holding every cpu of the box, with no foreign load, reads " +
+      "quiet, and the 1->4 record valid") {
+    // a 4-cpu /proc/stat pair over a 10 s run: every cpu 1000 jiffies busy
+    // (all of it the pinned 4-core child's own cpu time), no steal
+    def stat(busy: Int => Long) = (0 until 4).map(c =>
+      c -> Array[Long](busy(c), 0, 0, 1000 - busy(c), 0, 0, 0, 0)).toMap
+    val zero = (0 until 4).map(_ -> Array.fill(8)(0L)).toMap
+    val wall = 10.0
+    def ownNs(cpus: Int) = (cpus * wall * 1e9).toLong
+    val all = Bench.armNoise(Some(zero), Some(stat(_ => 1000L)), 0L,
+      ownNs(4), wall)
+    assert(all.stealFrac.contains(0.0) && all.externalBusyFrac.exists(_ < 1e-9))
+    // the 1-core arm on the same box: its own cpu busy, the other three idle
+    val one = Bench.armNoise(Some(zero), Some(stat(c => if (c == 3) 1000L
+      else 0L)), 0L, ownNs(1), wall)
+    assert(one.externalBusyFrac.exists(_ < 1e-9))
+    // each run goes out on the child's line and back through the parent
+    def runs(cores: Int, noise: Bench.BenchNoise, secs: Double*) =
+      secs.zipWithIndex.flatMap { case (sec, i) => Bench.parseRuns(
+        ScalingBench.runLine(cores, i + 1, sec, noise.stealFrac,
+          noise.externalBusyFrac), cores, 1) }
+    val samples = runs(1, one, 60.0, 60.5) ++ runs(4, all, 17.0, 17.2)
+    assert(samples.size === 4 && samples.forall(_.quiet))
+    val rec = Bench.Json.readTree(Bench.renderScalingRecord(Seq(1, 4),
+      2000000L, Seq(60.0, 17.0), pinned = true, samples))
+    assert(rec.get("valid").asBoolean(), rec.get("invalid_reason").asText())
+    // a foreign process keeping a second cpu busy beside the 1-core arm
+    // is 25% of the box: not quiet
+    val loaded = Bench.armNoise(Some(zero), Some(stat(c => if (c >= 2) 1000L
+      else 0L)), 0L, ownNs(1), wall)
+    assert(loaded.externalBusyFrac.exists(e => math.abs(e - 0.25) < 1e-9))
+    assert(!Bench.ArmSample(1, 1, 1, Some(60.0), loaded.stealFrac,
+      loaded.externalBusyFrac).quiet)
   }
 
   test("benchNoise: suite-phase bracket separates external busy from own " +

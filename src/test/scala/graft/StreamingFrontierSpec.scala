@@ -66,7 +66,7 @@ class StreamingFrontierSpec extends SparkTestBase {
     val (store, _) = seeded(name)
     ticks.zipWithIndex.foreach { case (l, t) =>
       FrontierMain.tick(spark, store, l.toDF(), sources, robots, pages,
-        fetchEpoch = t.toLong, salted = false, images = None)
+        fetchEpoch = t.toLong, images = None)
     }
     store
   }
@@ -406,7 +406,7 @@ class StreamingFrontierSpec extends SparkTestBase {
     try {
       feed(q, input, listings(0))
       FrontierMain.tick(spark, store, listings(1).toDF(), sources, robots,
-        pages, fetchEpoch = 1L, salted = false, images = None)
+        pages, fetchEpoch = 1L, images = None)
       feed(q, input, listings(2))
       assert(store.snapshotIds() === Seq(0, 1, 2, 3))
       assert(store.manifest(2).stream === None)
