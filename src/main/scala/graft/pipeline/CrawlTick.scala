@@ -60,17 +60,20 @@ import graft.politeness.Scheduler
   *    canonical) occurrence rank, source stop index, source save cap): the
   *    fetch join broadcasts pages, which keeps that partitioning; source
   *    cardinality is the fan-out unit. The cross-source rank is the one
-  *    exchange by canonical URL, and its output is the one frame the tick
-  *    caches (see [[TickResult]]); the heavy per-host politeness window
-  *    uses the salted two-stage rank (Scheduler.saltedHostRank) so one
-  *    mega-host never lands in one task;
+  *    exchange by canonical URL, shuffled straight to one partition per
+  *    core (`defaultParallelism`, not `spark.sql.shuffle.partitions`), and
+  *    its output is the one frame the tick caches (see [[TickResult]]);
+  *    the heavy per-host politeness window uses the salted two-stage rank
+  *    (Scheduler.saltedHostRank) so one mega-host never lands in one task;
   *  - the snapshot-seen probe is UrlSeen.flagSeenManaged's one plan, a
-  *    prefilter then an exact confirm, whatever the [[graft.seen.SeenProbe]]:
-  *    SeenProbe.Exact has no prefilter (small scale / oracle parity);
-  *    SeenProbe.BloomConfirm prefilters on Bloom segments (broadcast
-  *    ≤ 1 GiB of segments, co-partitioned zip-probe above, no driver
-  *    collect) — the path FrontierMain feeds from the store's baseline
-  *    blooms plus delta rows. All variants produce the identical truth
+  *    prefilter then one exact existence join against the seen table,
+  *    whatever the [[graft.seen.SeenProbe]]: SeenProbe.Exact has no
+  *    prefilter (small scale / oracle parity); SeenProbe.BloomConfirm
+  *    prefilters on Bloom segments (broadcast ≤ 1 GiB of segments,
+  *    co-partitioned zip-probe above, no driver collect) — the path
+  *    FrontierMain feeds from the store's baseline blooms plus delta rows.
+  *    The probed rows have one consumer, so the probe caches nothing but a
+  *    non-local segments frame. All variants produce the identical truth
   *    table;
   *  - the fetch/page join carries narrow columns only (canonical_url,
   *    image_id, caption); image bytes are joined at the sink, never
@@ -83,9 +86,9 @@ object CrawlTick {
   val EpochMillis = 300000L // 5-min ticks, reference cadence (setup_scheduler.sh:15)
 
   /** Columns: the full tick plan, pre-fetch, plus the probe's cache-release
-    * hook (ADVICE r3): the probe persists intermediates that the caller
-    * must release after the outputs materialize — [[runTick]] folds the
-    * hook into [[TickResult.cleanup]].
+    * hook (ADVICE r3): the probe may persist a non-local segments frame
+    * that the caller must release after the outputs materialize —
+    * [[runTick]] folds the hook into [[TickResult.cleanup]].
     *
     * @param listings  (source, page_idx, item_idx, url, title, ...)
     * @param sources   SourceSpec rows (tiny → broadcast)
@@ -218,8 +221,12 @@ object CrawlTick {
       .withColumn("emit", col("fetch_ok") && col("save_rank") <= col("save_cap"))
 
     // cross-source first-wins (defined semantics #2); the result — one row
-    // per considered listing row — is the tick frame every output reads
+    // per considered listing row — is the tick frame every output reads.
+    // Its exchange is sized here, to one partition per core: the window's
+    // clustering is met, so it adds no exchange, and Pinned's coalesce has
+    // nothing left to merge
     val (tickRows, tickRowsRelease) = Pinned(capped
+      .repartition(spark.sparkContext.defaultParallelism, col("canonical_url"))
       .withColumn("xsrc_rank",
         when(col("emit"), row_number().over(
           Window.partitionBy(col("canonical_url"), col("emit"))

@@ -14,8 +14,13 @@ import org.apache.spark.storage.StorageLevel
   * default) output partitions, and every stage that computes or reads the
   * frame then runs 200 mostly empty tasks. A fixture tick pays that fixed
   * cost thousands of times for a few dozen rows. `coalesce` is narrow (no
-  * extra shuffle) and sits inside the cached plan, so it sizes both the
-  * stage that fills the cache and every scan of it.
+  * extra shuffle) and sits inside the cached plan, so it sizes every scan
+  * of the cache. It does not size the work that fills it when the frame
+  * ends in a shuffle: each coalesced task then reads its share of all the
+  * shuffle's reduce partitions, one fetch per partition. A pinned frame
+  * whose last operator is a shuffle (a window, a join) must therefore be
+  * shuffled to `defaultParallelism` partitions itself, as
+  * `CrawlTick.runTick`'s tick frame is; the coalesce is then a no-op.
   *
   * The result is still an `InMemoryRelation` over the full logical plan:
   * EXPLAIN shows the cached plan, and after the release hook runs the frame

@@ -16,10 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - URLs are canonicalized then hashed with the built-in `xxhash64`;
   *  - the seen set is split into `nSegments` hash-range segments, each a
   *    Bloom filter sized for FPP ≤ 1e-6 (BloomFilter.create);
-  *  - dedup is two-phase: segment-join probe (cheap, prunes ~all truly-new
-  *    URLs) then an exact left-anti join on the Bloom-positive remainder —
-  *    so false positives cost a join row, never a dropped URL. The result
-  *    is exact; the Bloom only bounds the anti-join's build side.
+  *  - dedup is two-phase: segment probe (cheap, prunes ~all truly-new
+  *    URLs) then an exact confirm join against the seen table that only a
+  *    Bloom-positive row can match — so false positives cost a join
+  *    probe, never a dropped URL. The result is exact.
   *
   * Both phases co-partition by `seg` (the same pmod of the same hash), so
   * at cluster scale the probe join is a zero-skew shuffle on a
@@ -223,10 +223,9 @@ object UrlSeen {
   val DefaultMaxBroadcastSegmentBytes: Long = 1L << 30 // 1 GiB
 
   /** Exact unseen-filter: candidates minus seen, Bloom-accelerated — the
-    * [[flagSeen]] plan under a BloomConfirm probe, filtered on its flag.
-    * Catalyst folds the filter into the three-way union: the confirmed-seen
-    * (left-semi) branch becomes an empty relation and drops out, leaving
-    * the Bloom-negative rows plus the left-anti confirm of the positives.
+    * Bloom prefilter sets `__maybe`, then ONE left-anti join on
+    * `__maybe && url = seen url` drops the confirmed-seen rows. A
+    * Bloom-negative row can never match, so it passes through the join.
     *
     * Probe strategy, by total segment size ([[dispatchSegments]]):
     *
@@ -244,9 +243,10 @@ object UrlSeen {
     *    exactly this layout (`data/bloom/snap-K/`), so at scale the
     *    segment side is mostly a parquet scan, not a rebuild.
     *
-    * Either way the result is EXACT: phase 2 confirm-joins the
-    * Bloom-positive remainder against the true seen table (shuffle-hash,
-    * co-partitioned on the url — no sort, no driver-side build).
+    * Either way the result is EXACT: the anti join confirms the
+    * Bloom-positive rows against the true seen table. Spark's own size
+    * rule picks its strategy: a small seen table is broadcast, a large one
+    * is shuffled once per side.
     *
     * @param candidates must carry `urlCol` (canonical URL)
     * @param segments   output of [[buildSegments]] (seg, bloom)
@@ -255,17 +255,25 @@ object UrlSeen {
     */
   def filterUnseen(candidates: DataFrame, segments: DataFrame, seen: DataFrame,
       urlCol: String, nSegments: Int,
-      maxBroadcastBytes: Long = DefaultMaxBroadcastSegmentBytes): DataFrame =
-    flagSeen(candidates,
-        SeenProbe.BloomConfirm(segments, seen, nSegments, maxBroadcastBytes),
-        urlCol, "__seen")
-      .filter(!col("__seen")).drop("__seen")
+      maxBroadcastBytes: Long = DefaultMaxBroadcastSegmentBytes): DataFrame = {
+    val (flagged, _) = flagMaybe(candidates, segments, urlCol, nSegments,
+      maxBroadcastBytes, cuckoo = false, cache = false)
+    flagged.join(seenUrls(seen, urlCol),
+        col("__maybe") && flagged(urlCol) === col("__seen_url"), "left_anti")
+      .drop("__maybe")
+  }
 
   /** Exact-only path (small scale / oracle parity): plain left-anti join. */
   def filterUnseenExact(candidates: DataFrame, seen: DataFrame,
       urlCol: String): DataFrame =
-    candidates.join(seen.select(col(urlCol).as("__seen_url")),
+    candidates.join(seenUrls(seen, urlCol),
       candidates(urlCol) === col("__seen_url"), "left_anti")
+
+  /** The seen table's URLs as the one column `__seen_url`, the build side
+    * of every confirm join.
+    */
+  private def seenUrls(seen: DataFrame, urlCol: String): DataFrame =
+    seen.select(col(urlCol).as("__seen_url"))
 
   /** The size dispatch behind every prefiltered probe: `Left(segment array)`
     * (indexed by seg, null = empty segment) when the segments' total bytes
@@ -313,32 +321,27 @@ object UrlSeen {
     * skipped-counter semantics consume the seen rows too.)
     *
     * Plan-pure: NO persists (there is no release hook to hand back, so it
-    * must not acquire anything). The price is recomputation: the candidate
-    * upstream evaluates up to 3× (neg + semi + anti) and a non-local
-    * segment frame twice (size job + probe job). One-shot callers (single
-    * queries, specs) absorb that; loops (FrontierMain ticks) must use
-    * [[flagSeenManaged]].
+    * must not acquire anything). The price is recomputation: a non-local
+    * segment frame evaluates twice (size job + probe job). One-shot
+    * callers (single queries, specs) absorb that; loops (FrontierMain
+    * ticks) must use [[flagSeenManaged]].
     */
   def flagSeen(candidates: DataFrame, probe: SeenProbe, urlCol: String,
       flagCol: String): DataFrame =
     twoPhaseFlag(candidates, probe, urlCol, flagCol, cache = false)._1
 
-  /** [[flagSeen]] plus an explicit cache-release hook (ADVICE r3): the
-    * plan caches two intermediates through [[graft.plans.Pinned]] —
+  /** [[flagSeen]] plus an explicit cache-release hook (ADVICE r3). The
+    * probe's candidate rows have ONE consumer, the existence join, so they
+    * are never cached. The one frame the plan may cache, through
+    * [[graft.plans.Pinned]], is a segments frame that is not local: the
+    * size job and then the broadcast collect or the co-partitioned probe
+    * job both read it. A local one (the store's driver-merged blooms) is
+    * neither cached nor read by a job ([[dispatchSegments]]), and then the
+    * hook is a no-op.
     *
-    *  - the flagged (candidates + __maybe) frame, because it fans out into
-    *    THREE consumers (the negative branch plus the semi/anti confirm
-    *    pair), which would otherwise re-run the full candidate upstream
-    *    (listings join, canonicalize, robots) three times at first
-    *    materialization;
-    *  - a segments frame that is not local, read by the size job and then
-    *    by the broadcast collect or the co-partitioned probe job. A local
-    *    one (the store's driver-merged blooms) is neither cached nor read
-    *    by a job ([[dispatchSegments]]).
-    *
-    * Both are pinned at one partition per core: AQE never coalesces a
-    * cached plan's final stage, and a distributed segment merge comes out
-    * of a shuffle, so a plain persist would keep `spark.sql.shuffle.partitions`
+    * It is pinned at one partition per core: AQE never coalesces a cached
+    * plan's final stage, and a distributed segment merge comes out of a
+    * shuffle, so a plain persist would keep `spark.sql.shuffle.partitions`
     * (200 in production) partitions of a few rows each and run that many
     * tasks in every stage that fills or reads them.
     *
@@ -350,40 +353,44 @@ object UrlSeen {
       flagCol: String): (DataFrame, () => Unit) =
     twoPhaseFlag(candidates, probe, urlCol, flagCol, cache = true)
 
-  /** The one seen-probe plan: a prefilter sets `__maybe`, then a dup-safe
-    * left-semi/left-anti pair confirms the maybe rows against the true seen
-    * table (shuffle-hash: uniform url keys, no sort, no driver-side build
-    * of a multi-million-row side); `__maybe = false` rows short-circuit to
-    * unseen. The probe picks the prefilter: Bloom or cuckoo segments
-    * ([[flagMaybe]]), or none for Exact (`__maybe = true` on every row).
-    * Exact at any FPP, and a seen table that repeats a url never repeats
-    * a candidate row. With `cache` the segments and the flagged frame are
-    * [[graft.plans.Pinned]] (see [[flagSeenManaged]]); without it nothing
-    * is cached and the hook is a no-op.
+  /** The one seen-probe plan: a prefilter sets `__maybe`, then
+    * `flagCol = __maybe && EXISTS(seen WHERE __seen_url = url)`, which Spark
+    * plans as ONE existence join of the candidates against the true seen
+    * table. Spark's own size rule picks its strategy: a small seen table is
+    * broadcast, a large one is shuffled once per side. The probe picks the
+    * prefilter: Bloom or cuckoo segments ([[flagMaybe]]), or none for Exact
+    * (`__maybe = true` on every row). Exact at any FPP, and a seen table
+    * that repeats a url never repeats a candidate row (an existence join
+    * emits each left row once).
+    *
+    * The outer url is renamed to `__probe_url` for the subquery: a name
+    * the seen side lacks. Under the candidates' own name the reference
+    * would resolve inside the subquery (the seen table has a column of
+    * that name), EXISTS would turn uncorrelated, and every positive would
+    * read "seen" whenever the seen table is non-empty.
+    *
+    * With `cache` a non-local segments frame is [[graft.plans.Pinned]]
+    * (see [[flagSeenManaged]]); without it nothing is cached and the hook
+    * is a no-op.
     */
   private def twoPhaseFlag(candidates: DataFrame, probe: SeenProbe,
       urlCol: String, flagCol: String,
       cache: Boolean): (DataFrame, () => Unit) = {
-    val noop = () => ()
-    val (flagged0, segsRelease) = probe match {
-      case SeenProbe.Exact(_) => (candidates.withColumn("__maybe", lit(true)), noop)
+    val (flagged, release) = probe match {
+      case SeenProbe.Exact(_) =>
+        (candidates.withColumn("__maybe", lit(true)), () => ())
       case SeenProbe.BloomConfirm(segs, _, n, maxBytes) =>
         flagMaybe(candidates, segs, urlCol, n, maxBytes, cuckoo = false, cache)
       case SeenProbe.CuckooConfirm(segs, _, n, maxBytes) =>
         flagMaybe(candidates, segs, urlCol, n, maxBytes, cuckoo = true, cache)
     }
-    val (flagged, flaggedRelease) =
-      if (cache) graft.plans.Pinned(flagged0) else (flagged0, noop)
-    val neg = flagged.filter(!col("__maybe"))
-      .withColumn(flagCol, lit(false)).drop("__maybe")
-    val pos = flagged.filter(col("__maybe")).drop("__maybe")
-    val seenSel = probe.seen.select(col(urlCol).as("__seen_url")).hint("shuffle_hash")
-    def confirm(how: String, seenFlag: Boolean) =
-      pos.join(seenSel, pos(urlCol) === col("__seen_url"), how)
-        .withColumn(flagCol, lit(seenFlag))
-    val out = neg.unionByName(confirm("left_semi", seenFlag = true))
-      .unionByName(confirm("left_anti", seenFlag = false))
-    (out, () => { flaggedRelease(); segsRelease() })
+    val inSeen = seenUrls(probe.seen, urlCol)
+      .where(col("__seen_url") === col("__probe_url").outer()).exists()
+    val out = flagged.withColumnRenamed(urlCol, "__probe_url")
+      .withColumn(flagCol, col("__maybe") && inSeen)
+      .withColumnRenamed("__probe_url", urlCol)
+      .drop("__maybe")
+    (out, release)
   }
 
   /** candidates + boolean `__maybe` from the serialized-filter segments,

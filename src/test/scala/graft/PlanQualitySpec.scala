@@ -1,9 +1,12 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.{ExistenceJoin, LeftAnti, LeftSemi}
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions.{col, concat, lit}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 
 import graft.operators.{AnnIndex, CrawlOps, ScanOps, TrainingOps}
 import graft.operators.AnnIndex._
@@ -398,6 +401,46 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     releaseBc()
     assertNoLeak("broadcast")
     segs.unpersist()
+  }
+
+  test("tick seen-probe confirm is one existence join keyed on the url, on " +
+      "the broadcast and the co-partitioned path") {
+    import spark.implicits._
+    val n = 10
+    val listings = graft.model.Fixtures.listItemsAt(spark, n, 10, tick = 0).toDF()
+    val sources = graft.model.Fixtures.sourceSpecs(n).toDF()
+    val robots = graft.model.Fixtures.robots(n).toDF()
+    // the seen side carries the candidates' url column name: an outer
+    // reference by that name would resolve inside the subquery, and EXISTS
+    // would read "seen is non-empty" (a CollectLimit over the seen scan)
+    val seen = graft.model.Fixtures.urlSeenSeed(spark, n, 4).toDF()
+      .select("canonical_url")
+    val segs = graft.seen.UrlSeen.buildSegments(
+      seen, "canonical_url", 4, expectedItemsPerSegment = 4096L)
+    for (maxBytes <- Seq(graft.seen.UrlSeen.DefaultMaxBroadcastSegmentBytes, 0L)) {
+      val (probed, release) = graft.pipeline.CrawlTick.selectManaged(listings,
+        sources, graft.seen.SeenProbe.BloomConfirm(segs, seen, 4, maxBytes),
+        robots)
+      probed.collect() // the executed (final adaptive) plan
+      val plan = castToImpl(probed).queryExecution.executedPlan
+      val joins = collectWithSubqueries(plan) { case j: BaseJoinExec => j }
+      val existence = joins.filter(_.joinType.isInstanceOf[ExistenceJoin])
+      assert(existence.size === 1,
+        s"not one existence join at $maxBytes:\n" + planString(probed))
+      // the optimizer folds the subquery's rename of the outer url away: the
+      // join keys are the candidates' own url and the seen side's
+      def keys(ks: Seq[Expression]) = ks.flatMap(_.references.map(_.name))
+      assert(keys(existence.head.leftKeys) === Seq("canonical_url") &&
+        keys(existence.head.rightKeys) === Seq("__seen_url"),
+        s"existence join not keyed on the url at $maxBytes:\n" + planString(probed))
+      assert(!joins.exists(j => j.joinType == LeftSemi || j.joinType == LeftAnti),
+        s"a semi/anti confirm join survived at $maxBytes:\n" + planString(probed))
+      val nodes = collectWithSubqueries(plan) { case p => p.nodeName }
+      for (banned <- Seq("Union", "BroadcastNestedLoopJoin", "CollectLimit"))
+        assert(!nodes.contains(banned),
+          s"$banned in the probe plan at $maxBytes:\n" + planString(probed))
+      release()
+    }
   }
 
   test("filterUnseen is the flag plan plus a filter: no left-semi join on " +

@@ -109,8 +109,8 @@ class TickPartitionsSpec extends SparkTestBase {
     }
   }
 
-  test("a tick caches two frames (the probe's flagged rows and the tick " +
-      "frame) and its commit caches none") {
+  test("a tick caches one frame (the tick frame) and its commit caches " +
+      "none") {
     val sc = spark.sparkContext
     val cachedRdds = mutable.Set.empty[Int]
     val listener = new SparkListener {
@@ -138,13 +138,13 @@ class TickPartitionsSpec extends SparkTestBase {
       val pinned = cachedRdds.synchronized(cachedRdds.toSet)
       info(s"cached RDDs from runTick through commit: ${pinned.toSeq.sorted}")
       assert(m.newArticles > 0, "the fixture tick must commit articles")
-      assert(pinned.size <= 2, s"cached RDDs: ${pinned.toSeq.sorted}")
+      assert(pinned.size <= 1, s"cached RDDs: ${pinned.toSeq.sorted}")
     }
   }
 
   test("at 200 shuffle partitions a store-fed tick reads the store's " +
       "metadata and dispatches its probe with no Spark job, and tick + " +
-      "commit launch at most 23 jobs") {
+      "commit launch at most 18 jobs") {
     val sc = spark.sparkContext
     val phaseKey = "graft.spec.phase"
     val jobsByPhase = mutable.Map.empty[String, Int].withDefaultValue(0)
@@ -180,7 +180,7 @@ class TickPartitionsSpec extends SparkTestBase {
       assert(m.newArticles > 0, "the fixture tick must commit articles")
       for (p <- Seq("store.segments", "store.seen", "probe.dispatch"))
         assert(jobs.getOrElse(p, 0) === 0, s"$p launched Spark jobs: $jobs")
-      assert(jobs.values.sum <= 23, s"tick + commit jobs: $jobs")
+      assert(jobs.values.sum <= 18, s"tick + commit jobs: $jobs")
     }
   }
 }
