@@ -80,6 +80,21 @@ object TrainingOps {
   def hash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
+  /** (doc_id, `as`) rows, one per element of the array column `arr` that a
+    * lambda built upstream. A plain `explode` lets `InferFiltersFromGenerate`
+    * add `size(arr) > 0`; pushdown then inlines `arr`'s whole `transform`
+    * into that filter and moves it below any exchange onto the scan, so
+    * the array is built twice, the scan-side copy with the token split
+    * re-run per element. The rule skips outer generators, and a filter on
+    * the generated column cannot move below the `Generate`. The elements
+    * are never null, so dropping the outer's null row gives exactly
+    * `explode`'s rows.
+    */
+  private def explodeBuilt(frame: DataFrame, arr: String,
+      as: String): DataFrame =
+    frame.select(col("doc_id"), explode_outer(col(arr)).as(as))
+      .filter(col(as).isNotNull)
+
   // ===================================================== text analysis ===
 
   /** Exact dedup by content hash (the hash-groupBy family): one group per
@@ -286,8 +301,7 @@ object TrainingOps {
           expr("transform(sequence(0, size(toks) - 2)," +
             " i -> concat(toks[i], ' ', toks[i + 1]))"))
           .otherwise(array().cast("array<string>")).as("bigrams"))
-    val gramStats = base
-      .select(col("doc_id"), explode(col("bigrams")).as("gram"))
+    val gramStats = explodeBuilt(base, "bigrams", "gram")
       .groupBy("doc_id", "gram").agg(count(lit(1)).as("c"))
       .groupBy("doc_id")
       .agg(max("c").as("top_bigram_count"),
@@ -583,9 +597,6 @@ object TrainingOps {
       shinglesOf(nearDupCorpus(spark, sfDir))
     }
 
-  /** The shingle kernel behind [[shingles]] over ANY (doc_id, text)
-    * corpus — distinct word-3-gram 60-bit hashes per doc.
-    */
   /** Winnowing window: each fingerprint is the minimum hash over
     * [[WinnowWindow]] consecutive shingles; any match of length ≥
     * window + shingle − 1 tokens (= 6 here) is GUARANTEED to share a
@@ -683,16 +694,19 @@ object TrainingOps {
       .filter(col("n_shared") >= WinnowMinShared)
   }
 
+  /** The shingle kernel behind [[shingles]] over ANY (doc_id, text)
+    * corpus — distinct word-3-gram 60-bit hashes per doc; a doc of fewer
+    * than 3 tokens has none.
+    */
   def shinglesOf(corpus: DataFrame): DataFrame = {
-    // spread the docs across the session's shuffle partitions BEFORE the
-    // ~200×-per-row explode: the sf corpus is one small parquet file →
-    // one input split, so without this the whole tokenize→shingle→md5
-    // chain runs on a single core (measured 23.5 s of the cold cache
-    // build). At 100 TB the scan is many-split and the repartition cost
-    // is one shuffle of raw doc rows — noise next to the explode.
-    val tok = corpus.repartition(col("doc_id"))
+    // The doc_id repartition cuts the scan's split count loose from the
+    // shingle chain's parallelism on a many-split corpus. On a small one
+    // AQE coalesces it by input bytes: on tickbench data and at sf0.1 the
+    // whole tokenize→shingle→md5→dedup chain runs as ONE post-exchange
+    // task (1.2–2.1 s at sf0.1, 4 cores). Each array is built once, after
+    // the exchange ([[explodeBuilt]]).
+    val sh = corpus.repartition(col("doc_id"))
       .withColumn("t", filter(split(col("text"), "\\s+"), x => x =!= ""))
-    tok
       .withColumn("sh",
         when(size(col("t")) >= 3,
           transform(sequence(lit(1), size(col("t")) - 2),
@@ -701,7 +715,7 @@ object TrainingOps {
               element_at(col("t"), i + 1),
               element_at(col("t"), i + 2))))
           .otherwise(array()))
-      .select(col("doc_id"), explode(col("sh")).as("sh"))
+    explodeBuilt(sh, "sh", "sh")
       .select(col("doc_id"), hash60(col("sh")).as("shh"))
       .dropDuplicates("doc_id", "shh")
   }
@@ -1063,11 +1077,10 @@ object TrainingOps {
     // mass drops from every doc's shingles to the pair-participating
     // subset. The participant id set is pair-bounded (≤ 2·|pairs| longs)
     // → broadcast left-semi, so the prune is a scan-side filter that
-    // never shuffles `sh` (gate in ContainmentSpec). The prune does add
-    // evaluations of the `pairs` subplan (one per broadcast build; AQE
-    // may reuse the identical shuffle stages at runtime but the static
-    // plan does not show it) — measured NET WIN regardless: isolated
-    // sf0.1 warm 10.3 s → 5.3 s, hash unchanged.
+    // never shuffles `sh` (gate in ContainmentSpec). The static plan
+    // shows `pairs` once per consumer, but AQE reuses its exchange: a
+    // warm stage census runs the `pairs` stage once per query (1 task on
+    // tickbench data). Isolated sf0.1 warm 10.3 s → 5.3 s, hash unchanged.
     val participants = pairs.select(col("doc_a").as("doc_id"))
       .unionByName(pairs.select(col("doc_b").as("doc_id")))
       .distinct()
@@ -2823,7 +2836,7 @@ object TrainingOps {
           expr("transform(sequence(0, size(toks) - 2)," +
             " i -> concat(toks[i], ' ', toks[i + 1]))"))
           .otherwise(array().cast("array<string>")).as("bigrams"))
-    val grams = base.select(col("doc_id"), explode(col("bigrams")).as("gram"))
+    val grams = explodeBuilt(base, "bigrams", "gram")
     val lm = grams.filter(col("doc_id") % 10 === 0)
       .groupBy("gram").agg(count(lit(1)).as("c"))
     val scored = grams.join(lm, Seq("gram"), "left")

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.catalyst.plans.{ExistenceJoin, LeftAnti, LeftSemi}
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions.{col, concat, lit}
@@ -443,8 +444,8 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("filterUnseen is the flag plan plus a filter: no left-semi join on " +
-      "the broadcast or the co-partitioned path") {
+  test("filterUnseen is the Bloom prefilter plus one left-anti join: no " +
+      "left-semi join on the broadcast or the co-partitioned path") {
     val all = spark.range(0, 2000)
       .select(concat(lit("https://h"), (col("id") % 7).cast("string"),
         lit(".example.com/a/"), col("id").cast("string")).as("url"),
@@ -461,6 +462,25 @@ class PlanQualitySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       assert(!p.contains("LeftSemi"),
         s"the confirmed-seen branch survived at $maxBytes:\n" + p)
     }
+  }
+
+  test("text kernels build each shingle and bigram array once: no filter " +
+      "holds an array transform") {
+    // a parquet scan, not a local relation: ConvertToLocalRelation would
+    // evaluate any such filter on the driver and leave none in the plan
+    val corpus = TrainingOps.docs(spark, sf()).select("doc_id", "text")
+    val rebuilt = for {
+      (name, df) <- Seq(
+        "shinglesOf" -> TrainingOps.shinglesOf(corpus),
+        "repetitionStatsOf" -> TrainingOps.repetitionStatsOf(corpus),
+        "lmFamiliarityOf" -> TrainingOps.lmFamiliarityOf(corpus))
+      plan = castToImpl(df).queryExecution.optimizedPlan
+      if plan.exists {
+        case f: Filter => f.condition.exists(_.isInstanceOf[ArrayTransform])
+        case _ => false
+      }
+    } yield s"$name re-builds an array in a filter:\n$plan"
+    assert(rebuilt.isEmpty, rebuilt.mkString("\n"))
   }
 
   test("mojibake repair and fallback chain are shuffle-free single scans") {
